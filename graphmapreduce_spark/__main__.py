@@ -104,8 +104,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "graphfile",
         nargs="?",
-        default="/root/reference/graph/rdsmall.graph",
-        help="graph file (reference default: graph/rdsmall.graph)",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "testdata_fixtures",
+            "rdsmall.graph",
+        ),
+        help="graph file (default: the repo's headered edge-list fixture "
+        "testdata_fixtures/rdsmall.graph)",
     )
     p.add_argument(
         "--format", choices=["auto", "edgelist", "metis", "subgraph"],

@@ -22,11 +22,13 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphmapreduce_spark.graph.iterate import Rounds, fixpoint, persisted
 from graphmapreduce_spark.graph.pregel import (
     MAX_ITERATION,
     THRESHOLD,
@@ -34,6 +36,27 @@ from graphmapreduce_spark.graph.pregel import (
     UpdateMode,
 )
 from graphmapreduce_spark.graph.property_graph import PropertyGraph
+
+
+def _both_ways(edges: DataFrame, distinct: bool = False) -> DataFrame:
+    """(src, dst) rows plus every row reversed — the symmetrized edge
+    set; ``distinct`` drops the duplicates that reciprocal pairs make."""
+    e = edges.select("src", "dst")
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    return sym.distinct() if distinct else sym
+
+
+def _induced(edges: DataFrame, ids: DataFrame) -> DataFrame:
+    """The edges with both endpoints in ``ids`` (a one-column id
+    frame), eagerly checkpointed — the peel loops' shrink step."""
+    (c,) = ids.columns
+    return (
+        edges.join(ids.select(F.col(c).alias("src")), "src", "left_semi")
+        .join(ids.select(F.col(c).alias("dst")), "dst", "left_semi")
+        .localCheckpoint(eager=True)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +141,6 @@ def pagerank(
     threshold: float = 1e-6,
     handle_dangling: bool = True,
     check_interval: int = 1,
-    broadcast_ranks: bool = False,
     reference_compat: bool = False,
     weighted: bool = False,
 ) -> DataFrame:
@@ -145,140 +167,160 @@ def pagerank(
     mass is folded into the plan as a broadcast 1-row cross join (no
     driver round-trip), lineage is cut with a lazy ``localCheckpoint``
     that the convergence action itself materializes, and intermediate
-    supersteps chain lazily.
-
-    ``broadcast_ranks`` forces a broadcast hint on the rank side of the
-    message join.  Default OFF: each BroadcastExchange re-executes its
-    (lazily checkpointed) subplan driver-side, which measured ~2× slower
-    than letting AQE convert the join from runtime stats — AQE already
-    broadcasts the rank vector when it is small, for free.  The flag
-    exists for non-AQE deployments only.
+    supersteps chain lazily (``iterate.fixpoint``).  No broadcast hint
+    on the rank side: each BroadcastExchange re-executes its (lazily
+    checkpointed) subplan driver-side, which measured ~2× slower than
+    letting AQE convert the join from runtime stats.
 
     ``check_interval > 1`` skips the convergence test between chunks —
     exact-iteration parity needs max_iter % check_interval == 0; with a
     reachable threshold the loop may overshoot up to interval-1 extra
     (harmless for fixpoint updates, so cover-style only).
     """
-    from pyspark.storagelevel import StorageLevel
-
     if reference_compat:
         damping = REFERENCE_DAMPING
     # materialize edges FIRST — the vertex-count, degree, and every
     # superstep job below all contain the edge plan as a subtree, so the
     # cache manager serves them all from this one materialization
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    edges = graph.edges
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
-    # one job builds the (id, out_degree) state; the vertex count is then
-    # a near-free count() on the checkpointed RDD instead of a separate
-    # scan of the vertex-derivation pipeline
-    if weighted:
-        strength = edges.groupBy(F.col("src").alias("id")).agg(
-            F.sum("weight").alias("out_degree")
+    with persisted(graph.edges):
+        edges = graph.edges
+        # one job builds the (id, out_degree) state; the vertex count is
+        # then a near-free count() on the checkpointed RDD instead of a
+        # separate scan of the vertex-derivation pipeline
+        if weighted:
+            strength = edges.groupBy(F.col("src").alias("id")).agg(
+                F.sum("weight").alias("out_degree")
+            )
+            deg = (
+                graph.vertices.select("id")
+                .join(strength, "id", "left")
+                .withColumn("out_degree", F.coalesce("out_degree", F.lit(0.0)))
+                .localCheckpoint(eager=True)
+            )
+        else:
+            deg = graph.out_degrees().localCheckpoint(eager=True)
+        # one O(1) action reads BOTH the vertex count and the dangling
+        # count off the checkpointed degree table.  When the graph has no
+        # dangling vertices the per-superstep dangling-mass aggregate is
+        # identically 0.0 for EVERY iteration regardless of rank values —
+        # so the agg + broadcast-exchange job it costs per superstep (one
+        # extra job × max_iter) is dropped up front; the rank expression
+        # is bit-identical (base + d/n·0.0 == base in IEEE doubles).
+        n, n_dangling = deg.agg(
+            F.count(F.lit(1)),
+            F.sum((F.col("out_degree") == 0).cast("long")),
+        ).first()
+        handle_dangling = bool(handle_dangling and (n_dangling or 0) > 0)
+        base = F.lit((1.0 - damping) / n)
+        if handle_dangling:
+            base = base + F.lit(damping / n) * F.col("_dangling")
+        # ranks carries its degree to avoid a second join per superstep
+        return _rank_fixpoint(
+            edges,
+            deg.withColumn("rank", F.lit(1.0 / n)),
+            base,
+            damping=damping,
+            dangling=handle_dangling,
+            weighted=weighted,
+            max_iter=max_iter,
+            threshold=threshold,
+            check_interval=check_interval,
+            tag="pagerank",
         )
-        deg = (
-            graph.vertices.select("id")
-            .join(strength, "id", "left")
-            .withColumn("out_degree", F.coalesce("out_degree", F.lit(0.0)))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        deg = graph.out_degrees().localCheckpoint(eager=True)
-    # one O(1) action reads BOTH the vertex count and the dangling
-    # count off the checkpointed degree table.  When the graph has no
-    # dangling vertices the per-superstep dangling-mass aggregate is
-    # identically 0.0 for EVERY iteration regardless of rank values —
-    # so the agg + broadcast-exchange job it costs per superstep (one
-    # extra job × max_iter) is dropped up front; the rank expression is
-    # bit-identical (base + d/n·0.0 == base in IEEE doubles).
-    n, n_dangling = deg.agg(
-        F.count(F.lit(1)),
-        F.sum((F.col("out_degree") == 0).cast("long")),
-    ).first()
-    handle_dangling = bool(handle_dangling and (n_dangling or 0) > 0)
-    # ranks carries its degree to avoid a second join per superstep
-    ranks = deg.withColumn("rank", F.lit(1.0 / n))
 
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
+
+def _rank_fixpoint(
+    edges: DataFrame,
+    ranks: DataFrame,
+    base: Column,
+    *,
+    damping: float,
+    dangling: bool,
+    max_iter: int,
+    threshold: float,
+    check_interval: int,
+    tag: str,
+    weighted: bool = False,
+) -> DataFrame:
+    """The PageRank-family superstep loop shared by `pagerank` and
+    `personalized_pagerank`: rank' = base + d·Σ in-contributions, where
+    ``base`` is the caller's teleport term (it may read the per-superstep
+    ``_dangling`` mass when ``dangling``).  ``ranks`` carries
+    (id, out_degree, rank); returns (id, rank).
+
+    NOTE (r08, measured): this loop deliberately does NOT use
+    pregel.single_job_chunk.  Its loop-carried state is one row per
+    vertex of a contracted graph (500 rows on the benched Z₅₀₀ input) —
+    small enough that AQE's runtime broadcast of the rank side makes the
+    cached edge table never shuffle, which beats the static
+    one-exchange-per-superstep chunk plan (A/B min-of-7 back-to-back:
+    2.61-3.12 s AQE path vs 3.61 s single-job chunks at sf0.1).  The
+    WCC/Pregel loops, whose state is corpus-sized, win the other way.
+    """
+    share = (
+        F.col("rank") * F.col("weight") / F.col("out_degree")
+        if weighted
+        else F.col("rank") / F.col("out_degree")
     )
+    rank_expr = base + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
 
-    _severer, _last_sever = None, 0
-    check_interval = max(1, check_interval)
-    it = 0
-    # NOTE (r08, measured): pagerank deliberately does NOT use
-    # pregel.single_job_chunk.  Its loop-carried state is one row per
-    # vertex of a contracted graph (500 rows on the benched Z₅₀₀ input)
-    # — small enough that AQE's runtime broadcast of the rank side makes
-    # the cached edge table never shuffle, which beats the static
-    # one-exchange-per-superstep chunk plan (A/B min-of-7 back-to-back:
-    # 2.61-3.12 s AQE path vs 3.61 s single-job chunks at sf0.1).  The
-    # WCC/Pregel loops, whose state is corpus-sized, win the other way.
-    while it < max_iter:
-        steps = min(check_interval, max_iter - it)
-        new = ranks
-        for _ in range(steps):
-            src_side = F.broadcast(new) if broadcast_ranks else new
-            share = (
-                F.col("rank") * F.col("weight") / F.col("out_degree")
-                if weighted
-                else F.col("rank") / F.col("out_degree")
+    def step(new: DataFrame, _) -> DataFrame:
+        contribs = (
+            new.filter(F.col("out_degree") > 0)
+            .join(edges, new["id"] == edges["src"])
+            .select(F.col("dst").alias("id"), share.alias("contrib"))
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("in_sum"))
+        )
+        stepped = new.select(
+            "id", "out_degree", F.col("rank").alias("_old")
+        ).join(contribs, "id", "left")
+        if dangling:
+            dmass = new.select(
+                F.coalesce(
+                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))),
+                    F.lit(0.0),
+                ).alias("_dangling")
             )
-            contribs = (
-                src_side.filter(F.col("out_degree") > 0)
-                .join(edges, src_side["id"] == edges["src"])
-                .select(F.col("dst").alias("id"), share.alias("contrib"))
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("in_sum"))
-            )
-            if handle_dangling:
-                dmass = new.select(
-                    F.coalesce(
-                        F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("_dangling")
-                )
-                base = (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping / n) * F.col("_dangling")
-                )
-            else:
-                dmass = None
-                base = F.lit((1.0 - damping) / n)
-            rank_expr = base + F.lit(damping) * F.coalesce(
-                "in_sum", F.lit(0.0)
-            )
-            stepped = new.select(
-                "id", "out_degree", F.col("rank").alias("_old")
-            ).join(contribs, "id", "left")
-            if dmass is not None:
-                stepped = stepped.crossJoin(F.broadcast(dmass))
-            new = stepped.select(
-                "id",
-                "out_degree",
-                rank_expr.alias("rank"),
-                F.abs(rank_expr - F.col("_old")).alias("delta"),
-            ).localCheckpoint(eager=False)
-        it += steps
-        # the sole action per chunk: computes max(delta) AND materializes
-        # the lazy checkpoints above it in the same job
-        max_delta = new.agg(F.max("delta")).first()[0] or 0.0
-        ranks = new
-        if max_delta <= threshold:
-            break
-        if it - _last_sever >= _SEVER_INTERVAL:
-            # chained checkpoints degrade past ~16 supersteps (measured;
-            # graph/sever.py) — matters for max_iter > 16 runs
-            if _severer is None:
-                _severer = _LineageSeverer(ranks.sparkSession, tag="pagerank")
-            ranks = _severer.sever(ranks)
-            _last_sever = it
-    if we_cached:
-        edges.unpersist()
-    return ranks.select("id", "rank")
+            stepped = stepped.crossJoin(F.broadcast(dmass))
+        return stepped.select(
+            "id",
+            "out_degree",
+            rank_expr.alias("rank"),
+            F.abs(rank_expr - F.col("_old")).alias("delta"),
+        )
+
+    res = fixpoint(
+        ranks,
+        step,
+        max_iter=max_iter,
+        threshold=threshold,
+        check_interval=check_interval,
+        tag=tag,
+    )
+    return res.state.select("id", "rank")
+
+
+def _min_label(vertices: DataFrame, edges: DataFrame, **opts):
+    """Frontier min-label propagation: every vertex ends labeled with
+    the smallest id that reaches it along ``edges`` (a ``PregelResult``;
+    ``opts`` go to ``Pregel``).  Labels stay long end-to-end: a double
+    round-trip would corrupt ids above 2^53 (hash-derived 64-bit ids
+    are normal at scale) and silently merge distinct components."""
+
+    def messages(active: DataFrame, e: DataFrame) -> DataFrame:
+        return active.join(e, active["id"] == e["src"]).select(
+            F.col("dst").alias("id"), F.col("value").alias("msg")
+        )
+
+    return Pregel(
+        make_messages=messages,
+        agg=F.min("msg"),
+        update=lambda old, agg: F.least(old, F.coalesce(agg, old)),
+        threshold=0.5,
+        active_frontier=True,
+        **opts,
+    ).run(vertices.select("id", F.col("id").alias("value")), edges)
 
 
 # ---------------------------------------------------------------------------
@@ -319,49 +361,23 @@ def connected_components(
     restores the bare frontier loop (callers that KNOW the topology,
     e.g. the dedup recipe's bounded-diameter cluster graphs, skip the
     budget bookkeeping)."""
-    from pyspark.storagelevel import StorageLevel
-
-    # cache the base edges: the symmetrized table, the vertex init, and
-    # the vertex-set derivation all contain this plan as a subtree
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    if we_cached:
-        # lazy: the first Pregel job materializes this cache while
-        # computing the symmetrized table — an upfront count() would be
-        # a whole extra pass over the edge-derivation pipeline
-        graph.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    sym = graph.edges.select("src", "dst").unionByName(
-        graph.edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    )
+    sym = _both_ways(graph.edges)
     und = PropertyGraph(
         graph.vertices, sym, num_partitions=graph.num_partitions
     )
-    # labels stay long (no double round-trip): ids above 2^53 would lose
-    # precision in a double and silently merge distinct components
-    init = und.vertices.select("id", F.col("id").alias("value"))
-
-    def messages(active: DataFrame, edges: DataFrame) -> DataFrame:
-        return active.join(edges, active["id"] == edges["src"]).select(
-            F.col("dst").alias("id"), F.col("value").alias("msg")
+    # cache the base edges too: the symmetrized table, the vertex init,
+    # and the vertex-set derivation all contain this plan as a subtree.
+    # Pregel caches und.edges itself: it carries the repartition of the
+    # symmetrized table, which would otherwise re-execute every
+    # superstep (measured ~30% slower)
+    with persisted(graph.edges):
+        res = _min_label(
+            und.vertices,
+            und.edges,
+            max_iter=min(max_iter, auto_budget) if auto else max_iter,
+            check_interval=check_interval,
+            broadcast_vertices=broadcast_vertices,
         )
-
-    pregel = Pregel(
-        make_messages=messages,
-        agg=F.min("msg"),
-        update=lambda old, agg: F.least(old, F.coalesce(agg, old)),
-        threshold=0.5,
-        max_iter=min(max_iter, auto_budget) if auto else max_iter,
-        active_frontier=True,
-        check_interval=check_interval,
-        broadcast_vertices=broadcast_vertices,
-        # keep the default persist: und.edges carries the repartition of
-        # the symmetrized table — unpersisted, that exchange would
-        # re-execute every superstep (measured ~30% slower)
-    )
-    res = pregel.run(init, und.edges)
-    if we_cached:
-        graph.edges.unpersist()
     if auto and not res.converged:
         # budget miss = diameter > auto_budget: hand off to the
         # O(log n)-round contraction path instead of iterating toward
@@ -413,30 +429,18 @@ def connected_components_contract(
     the driver); raises if ``max_rounds`` rounds don't converge rather
     than returning wrong labels.
     """
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
     e = (
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _severer = None
+    rounds = Rounds(e.sparkSession, "ccstar")
     converged = False
     for _cc_rnd in range(max_rounds):
-        if _cc_rnd and _cc_rnd % _SEVER_INTERVAL == 0:
-            # graph/sever.py: keep the per-round checkpoint chain below
-            # the measured ~16-round cliff
-            if _severer is None:
-                _severer = _LineageSeverer(e.sparkSession, tag="ccstar")
-            e = _severer.sever(e)
+        e = rounds.carry(_cc_rnd, e)
         # --- large-star ---------------------------------------------
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        sym = _both_ways(e)
         mins = sym.groupBy("src").agg(F.min("dst").alias("_mn")).select(
             "src", F.least(F.col("src"), F.col("_mn")).alias("m")
         )
@@ -536,58 +540,28 @@ def strongly_connected_components(
     still recurse ``max_outer`` deep — hence the loud default.
     """
 
-    def _min_label(vertices: DataFrame, edges: DataFrame) -> DataFrame:
-        # labels stay long end-to-end: a double cast would corrupt ids
-        # above 2^53 (hash-derived 64-bit ids are normal at scale)
-        init = vertices.select("id", F.col("id").alias("value"))
-
-        def messages(active: DataFrame, e: DataFrame) -> DataFrame:
-            return active.join(e, active["id"] == e["src"]).select(
-                F.col("dst").alias("id"), F.col("value").alias("msg")
-            )
-
-        pregel = Pregel(
-            make_messages=messages,
-            agg=F.min("msg"),
-            update=lambda old, agg: F.least(old, F.coalesce(agg, old)),
-            threshold=0.5,
-            max_iter=MAX_ITERATION,
-            active_frontier=True,
-        )
-        return pregel.run(init, edges).vertices
-
     remaining_v = graph.vertices.select("id").localCheckpoint(eager=True)
     remaining_e = graph.edges.select("src", "dst").localCheckpoint(eager=True)
     assigned: DataFrame | None = None
     rounds = 0
-
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
-    _severer = None
+    # deep chain graphs can run many pivot rounds
+    carrier = Rounds(remaining_v.sparkSession, "scc")
     for _scc_rnd in range(max_outer):
-        if _scc_rnd and _scc_rnd % _SEVER_INTERVAL == 0:
-            # see graph/sever.py — keep the per-round checkpoint chain
-            # below the measured ~16-round cliff (deep chain graphs can
-            # run many pivot rounds)
-            if _severer is None:
-                _severer = _LineageSeverer(
-                    remaining_v.sparkSession, tag="scc"
-                )
-            remaining_v = _severer.sever(remaining_v)
-            remaining_e = _severer.sever(remaining_e)
-            if assigned is not None:
-                assigned = _severer.sever(assigned)
+        remaining_v, remaining_e, assigned = carrier.carry(
+            _scc_rnd, remaining_v, remaining_e, assigned
+        )
         if remaining_v.limit(1).count() == 0:
             break
         rounds += 1
-        fwd = _min_label(remaining_v, remaining_e).withColumnRenamed("value", "f")
+        fwd = _min_label(remaining_v, remaining_e).vertices.withColumnRenamed(
+            "value", "f"
+        )
         rev = remaining_e.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        bwd = _min_label(remaining_v, rev).withColumnRenamed("value", "b")
+        bwd = _min_label(remaining_v, rev).vertices.withColumnRenamed(
+            "value", "b"
+        )
         # checkpointed: feeds BOTH the peel filter and the class-edge
         # cut below — without this the two Pregel label runs recompute
         both = fwd.join(bwd, "id").localCheckpoint(eager=True)
@@ -850,33 +824,13 @@ def boruvka_mst(graph: PropertyGraph, max_rounds: int = 64) -> DataFrame:
         "id", F.col("id").alias("comp")
     ).localCheckpoint(eager=True)
     mst: DataFrame | None = None
-
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
-    _severer = None
+    # every=1: Borůvka's round multiplies comp's estimated stats through
+    # ec's double join plus the pointer-jump SELF-joins — the BigInt
+    # bit-length grows ~17× per round, and by ~round 10 at sf0.1
+    # BigInteger.checkRange throws (graph/sever.py, second pathology)
+    rounds = Rounds(comp.sparkSession, "boruvka", every=1)
     for _bv_rnd in range(max_rounds):
-        if _bv_rnd:
-            # sever the loop-carried frames EVERY round, not every
-            # SEVER_INTERVAL: localCheckpoint truncates lineage but
-            # PROPAGATES ESTIMATED STATS (LogicalRDD rewrites
-            # sizeInBytes from the pre-checkpoint plan), and Borůvka's
-            # round multiplies comp's estimate through ec's double
-            # join plus the pointer-jump SELF-joins — the BigInt
-            # bit-length grows ~17× per round, so by round ~6 at
-            # sf0.1 the driver grinds multi-megabit
-            # BigInteger.multiply inside stats estimation and by
-            # ~round 10 BigInteger.checkRange throws ("BigInteger
-            # would overflow supported range").  The parquet
-            # round-trip resets stats to REAL file sizes each round
-            # (vertex-sized tables — the write is negligible).
-            if _severer is None:
-                _severer = _LineageSeverer(comp.sparkSession, tag="boruvka")
-            comp = _severer.sever(comp)
-            if mst is not None:
-                mst = _severer.sever(mst)
+        comp, mst = rounds.carry(_bv_rnd, comp, mst)
         ec = (
             e.join(comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "cs"), "src")
             .join(comp.withColumnRenamed("id", "dst").withColumnRenamed("comp", "cd"), "dst")
@@ -1084,20 +1038,12 @@ def k_core(
     the input edges are already a simple canonical (a<b) orientation —
     at 100 TB that is one full shuffle saved.
     """
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL,
-        LineageSeverer,
-    )
-
-    sym = graph.edges.select("src", "dst").unionByName(
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if not assume_simple:
-        sym = sym.distinct()
-    edges = sym.localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("core_degree"))
-    severer = None
+    edges = _both_ways(graph.edges, distinct=not assume_simple)
+    edges = edges.localCheckpoint(eager=True)
+    rounds = Rounds(edges.sparkSession, "kcore")
     for rnd in range(max_iter):
+        edges = rounds.carry(rnd, edges)
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("core_degree"))
         low = deg.filter(F.col("core_degree") < k).select("src")
         if low.isEmpty():
             break
@@ -1106,18 +1052,8 @@ def k_core(
             .select("src")
             .localCheckpoint(eager=True)
         )
-        edges = (
-            edges.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if (rnd + 1) % SEVER_INTERVAL == 0:
-            # deep peels chain one checkpoint per round; past ~16 the
-            # chain degrades exponentially (measured; graph/sever.py)
-            if severer is None:
-                severer = LineageSeverer(edges.sparkSession, tag="kcore")
-            edges = severer.sever(edges)
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("core_degree"))
+        edges = _induced(edges, keep)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("core_degree"))
     return deg.select(F.col("src").alias("id"), "core_degree")
 
 
@@ -1131,11 +1067,6 @@ def _louvain_local_moving(edges: DataFrame, max_rounds: int) -> DataFrame:
     symmetric-row representation for free) but is EXCLUDED from the
     move messages — a self-loop moves with its vertex, contributing
     equally to every candidate's score, so it cancels in the argmax."""
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL,
-        LineageSeverer,
-    )
-
     edges = edges.localCheckpoint(eager=True)
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").alias("k")
@@ -1145,9 +1076,10 @@ def _louvain_local_moving(edges: DataFrame, max_rounds: int) -> DataFrame:
     comm = deg.select("id", F.col("id").alias("c")).localCheckpoint(
         eager=True
     )
-    severer = None
+    rounds = Rounds(comm.sparkSession, "louvain")
     stalled = 0
     for rnd in range(max_rounds):
+        comm = rounds.carry(rnd, comm)
         sigma = (
             comm.join(deg, "id").groupBy("c").agg(F.sum("k").alias("sigma"))
         )
@@ -1257,12 +1189,6 @@ def _louvain_local_moving(edges: DataFrame, max_rounds: int) -> DataFrame:
             stalled += 1
             if stalled >= 2:  # a full even+odd cycle with no move
                 break
-        if (rnd + 1) % SEVER_INTERVAL == 0:
-            # see graph/sever.py: chained per-round checkpoints degrade
-            # exponentially past ~16 rounds — sever the community state
-            if severer is None:
-                severer = LineageSeverer(comm.sparkSession, tag="louvain")
-            comm = severer.sever(comm)
     return comm
 
 
@@ -1430,27 +1356,19 @@ def coreness(
     cross-invariant.
     """
     spark = graph.edges.sparkSession
-    sym = graph.edges.select("src", "dst").unionByName(
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if not assume_simple:
-        sym = sym.distinct()
-    edges = sym.localCheckpoint(eager=True)
+    edges = _both_ways(graph.edges, distinct=not assume_simple)
+    edges = edges.localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 
     if method == "hindex":
         # h-index of a sorted-desc value array xs: #{i : xs[i] >= i}
         # (1-based) — computed as a codegen expression, no UDF
-        from graphmapreduce_spark.graph.sever import (
-            SEVER_INTERVAL,
-            LineageSeverer,
-        )
-
-        severer = None
         est = deg.select(
             "src", F.col("deg").cast("long").alias("c")
         ).localCheckpoint(eager=True)
+        rounds = Rounds(spark, "coreness")
         for _hx_rnd in range(max_iter):
+            est = rounds.carry(_hx_rnd, est)
             nbr = edges.join(
                 est.withColumnRenamed("src", "dst").withColumnRenamed(
                     "c", "nc"
@@ -1479,14 +1397,6 @@ def coreness(
             est = new
             if done:
                 break
-            if (_hx_rnd + 1) % SEVER_INTERVAL == 0:
-                # see graph/sever.py: keep the checkpoint chain below
-                # the measured ~16-round degradation cliff
-                if severer is None:
-                    severer = LineageSeverer(
-                        est.sparkSession, tag="coreness"
-                    )
-                est = severer.sever(est)
         return (
             graph.vertices.select("id")
             .join(
@@ -1499,16 +1409,15 @@ def coreness(
             .fillna(0, subset=["coreness"])
         )
 
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL,
-        LineageSeverer,
-    )
-
     out_schema = "id long, coreness long"
     peeled = spark.createDataFrame([], out_schema)
-    severer = None
+    # peeled rides along the severs so its lazy union over many rounds'
+    # frontiers stays shallow too
+    rounds = Rounds(spark, "peel")
     k = 1
     for _peel_rnd in range(max_iter):
+        edges, peeled = rounds.carry(_peel_rnd, edges, peeled)
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         # ONE driver action per round: emptiness check + the smallest
         # surviving degree (for the empty-level jump) from one agg
         n, mn = deg.agg(F.count(F.lit(1)), F.min("deg")).first()
@@ -1533,20 +1442,8 @@ def coreness(
             .select("src")
             .localCheckpoint(eager=True)
         )
-        edges = (
-            edges.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if (_peel_rnd + 1) % SEVER_INTERVAL == 0:
-            # see graph/sever.py: keep checkpoint chains below the
-            # measured ~16-round cliff (peeled rides along so its lazy
-            # union over many rounds' frontiers stays shallow too)
-            if severer is None:
-                severer = LineageSeverer(spark, tag="peel")
-            edges = severer.sever(edges)
-            peeled = severer.sever(peeled)
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        edges = _induced(edges, keep)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # survivors of the last completed carve (only when max_iter hit
     # with edges remaining) plus isolated vertices
     rest = deg.select(
@@ -1578,82 +1475,26 @@ def personalized_pagerank(
 ) -> DataFrame:
     """Returns (id, rank) with restart distribution uniform over
     ``sources``.  Ranks sum to ~1 over the reachable set."""
-    from pyspark.storagelevel import StorageLevel
-
     if not sources:
         raise ValueError("sources must be non-empty")
     srcs = sorted(set(int(s) for s in sources))
     e_v = 1.0 / len(srcs)
 
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    edges = graph.edges
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
-    deg = graph.out_degrees().localCheckpoint(eager=True)
-    restart = F.when(F.col("id").isin(srcs), F.lit(e_v)).otherwise(0.0)
-    ranks = deg.withColumn("rank", restart)
-
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
-    _severer, _last_sever = None, 0
-    check_interval = max(1, check_interval)
-    it = 0
-    while it < max_iter:
-        steps = min(check_interval, max_iter - it)
-        new = ranks
-        for _ in range(steps):
-            contribs = (
-                new.filter(F.col("out_degree") > 0)
-                .join(edges, new["id"] == edges["src"])
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("out_degree")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("in_sum"))
-            )
-            dmass = new.select(
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))),
-                    F.lit(0.0),
-                ).alias("_dangling")
-            )
-            rank_expr = (
-                (F.lit(1.0 - damping) + F.lit(damping) * F.col("_dangling"))
-                * restart
-                + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-            )
-            new = (
-                new.select("id", "out_degree", F.col("rank").alias("_old"))
-                .join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "id",
-                    "out_degree",
-                    rank_expr.alias("rank"),
-                    F.abs(rank_expr - F.col("_old")).alias("delta"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        it += steps
-        max_delta = new.agg(F.max("delta")).first()[0] or 0.0
-        ranks = new
-        if max_delta <= threshold:
-            break
-        if it - _last_sever >= _SEVER_INTERVAL:
-            # see graph/sever.py — keep the chunk-checkpoint chain
-            # below the measured ~16-round cliff
-            if _severer is None:
-                _severer = _LineageSeverer(ranks.sparkSession, tag="ppr")
-            ranks = _severer.sever(ranks)
-            _last_sever = it
-    if we_cached:
-        edges.unpersist()
-    return ranks.select("id", "rank")
+    with persisted(graph.edges):
+        deg = graph.out_degrees().localCheckpoint(eager=True)
+        restart = F.when(F.col("id").isin(srcs), F.lit(e_v)).otherwise(0.0)
+        return _rank_fixpoint(
+            graph.edges,
+            deg.withColumn("rank", restart),
+            (F.lit(1.0 - damping) + F.lit(damping) * F.col("_dangling"))
+            * restart,
+            damping=damping,
+            dangling=True,
+            max_iter=max_iter,
+            threshold=threshold,
+            check_interval=check_interval,
+            tag="ppr",
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1671,46 +1512,35 @@ def label_propagation(
 ) -> DataFrame:
     """Returns (id, label): community = fixed-point-ish of 'adopt the
     most frequent neighbor label, ties to the smallest label'."""
-    from pyspark.storagelevel import StorageLevel
-
     edges = graph.edges.select("src", "dst")
     if symmetrize:
         # distinct IS required here (unlike WCC, whose min-agg absorbs
         # duplicates): a reciprocal directed pair must not double the
         # neighbor's vote.  One extra shuffle, amortized over rounds by
         # the persist below.
-        edges = edges.unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        ).distinct()
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
+        edges = _both_ways(graph.edges, distinct=True)
     labels = graph.vertices.select("id", F.col("id").alias("label"))
-    for _ in range(max_iter):
-        cnt = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # min of (-c, label) == (max count, then smallest label)
-        best = cnt.groupBy("id").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), "label"))["label"].alias(
-                "new_label"
+    with persisted(edges, base=graph.edges):
+        for _ in range(max_iter):
+            cnt = (
+                edges.join(labels, edges["src"] == labels["id"])
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-        )
-        labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_label", "label").alias("label"),
+            # min of (-c, label) == (max count, then smallest label)
+            best = cnt.groupBy("id").agg(
+                F.min(F.struct((-F.col("c")).alias("nc"), "label"))[
+                    "label"
+                ].alias("new_label")
             )
-            .localCheckpoint(eager=True)
-        )
-    if we_cached:
-        edges.unpersist()
+            labels = (
+                labels.join(best, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("new_label", "label").alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return labels
 
 
@@ -1722,6 +1552,23 @@ def label_propagation(
 # edge set, eager localCheckpoint lineage truncation, one O(1) driver
 # action (the peel-frontier empty check).
 # ---------------------------------------------------------------------------
+def _triangle_support(edges: DataFrame) -> DataFrame:
+    """(a, b, support) for every canonical edge: the number of
+    triangles of ``edges`` it closes (each triangle credits its three
+    edges), eagerly checkpointed."""
+    tri = _enumerate_triangles(edges)
+    support = (
+        tri.select("a", "b")
+        .unionAll(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
+        .unionAll(tri.select("a", F.col("c").alias("b")))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("support"))
+    )
+    return edges.join(support, ["a", "b"], "left").select(
+        "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+    ).localCheckpoint(eager=True)
+
+
 def k_truss(graph: PropertyGraph, k: int, max_iter: int = 50) -> DataFrame:
     """(a, b, support) — the canonical (a<b) edges of the k-truss with
     their triangle support inside the truss.
@@ -1748,32 +1595,11 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 50) -> DataFrame:
     )
     # full triangle enumeration exactly ONCE (the expensive wedge join);
     # every later round only touches triangles adjacent to removals
-    tri = _enumerate_triangles(edges)
-    support = (
-        tri.select("a", "b")
-        .unionAll(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
-        .unionAll(tri.select("a", F.col("c").alias("b")))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
-    scored = edges.join(support, ["a", "b"], "left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).alias("support")
-    ).localCheckpoint(eager=True)
+    scored = _triangle_support(edges)
     n_edges = scored.count()
-
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
-    _severer = None
+    rounds = Rounds(scored.sparkSession, "ktruss")
     for _tr_rnd in range(max_iter):
-        if _tr_rnd and _tr_rnd % _SEVER_INTERVAL == 0:
-            # see graph/sever.py — deep peels chain checkpoints past
-            # the measured ~16-round cliff
-            if _severer is None:
-                _severer = _LineageSeverer(scored.sparkSession, tag="ktruss")
-            scored = _severer.sever(scored)
+        scored = rounds.carry(_tr_rnd, scored)
         removed = (
             scored.filter(F.col("support") < need)
             .select("a", "b")
@@ -1789,20 +1615,7 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 50) -> DataFrame:
             # would touch most triangles anyway — recount on the
             # smaller survivor graph instead (re-orienting: degrees
             # change as edges peel)
-            edges = survivors.localCheckpoint(eager=True)
-            tri = _enumerate_triangles(edges)
-            support = (
-                tri.select("a", "b")
-                .unionAll(
-                    tri.select(F.col("b").alias("a"), F.col("c").alias("b"))
-                )
-                .unionAll(tri.select("a", F.col("c").alias("b")))
-                .groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            scored = edges.join(support, ["a", "b"], "left").select(
-                "a", "b", F.coalesce("support", F.lit(0)).alias("support")
-            ).localCheckpoint(eager=True)
+            scored = _triangle_support(survivors.localCheckpoint(eager=True))
             continue
         # sparse round (the peel's tail): INCREMENTAL maintenance —
         # enumerate only the current graph's triangles containing >=1
@@ -1904,32 +1717,18 @@ def maximal_matching(
     the chain cliff; one O(1) driver emptiness probe.  Raises if
     ``max_iter`` rounds don't drain the edge set — a silently partial
     matching is not maximal."""
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SI,
-        LineageSeverer as _LS,
-    )
-
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
+    edges = (
+        _both_ways(graph.edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    edges = sym
     matched_parts = []
-    severer = None
+    rounds = Rounds(edges.sparkSession, "matching")
     for rnd in range(max_iter):
         if edges.isEmpty():
             break
-        if rnd and rnd % _SI == 0:
-            if severer is None:
-                severer = _LS(edges.sparkSession, tag="matching")
-            edges = severer.sever(edges)
+        edges = rounds.carry(rnd, edges)
         prop = edges.groupBy("src").agg(F.min("dst").alias("to"))
         mutual = (
             prop.join(
@@ -1971,10 +1770,7 @@ def maximal_matching(
                 F.col("src").alias("a"), F.col("dst").alias("b")
             ).limit(0)
         )
-    out = matched_parts[0]
-    for p in matched_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, matched_parts)
 
 
 def maximal_independent_set(graph: PropertyGraph, max_iter: int = 60) -> DataFrame:
@@ -1994,13 +1790,8 @@ def maximal_independent_set(graph: PropertyGraph, max_iter: int = 60) -> DataFra
     """
     from graphmapreduce_spark.functions.text import md5_hash60
 
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
+    edges = (
+        _both_ways(graph.edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -2008,30 +1799,14 @@ def maximal_independent_set(graph: PropertyGraph, max_iter: int = 60) -> DataFra
     active = graph.vertices.select(
         "id", md5_hash60(F.concat(F.col("id").cast("string"), F.lit(":mis"))).alias("pri")
     ).localCheckpoint(eager=True)
-    edges = sym
     mis_parts = []
-
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL as _SEVER_INTERVAL,
-        LineageSeverer as _LineageSeverer,
-    )
-
-    _severer = None
+    rounds = Rounds(active.sparkSession, "mis")
     for _mis_rnd in range(max_iter):
-        if _mis_rnd and _mis_rnd % _SEVER_INTERVAL == 0:
-            # see graph/sever.py — keep the per-round checkpoint chain
-            # below the measured ~16-round cliff
-            if _severer is None:
-                _severer = _LineageSeverer(active.sparkSession, tag="mis")
-            active = _severer.sever(active)
-            edges = _severer.sever(edges)
+        active, edges = rounds.carry(_mis_rnd, active, edges)
         if active.isEmpty():
             if not mis_parts:  # empty graph
                 return graph.vertices.select("id").limit(0)
-            out = mis_parts[0]
-            for p in mis_parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return reduce(DataFrame.unionByName, mis_parts)
         nb_min = (
             edges.join(active.withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
@@ -2053,11 +1828,7 @@ def maximal_independent_set(graph: PropertyGraph, max_iter: int = 60) -> DataFra
         active = active.join(removed, "id", "left_anti").localCheckpoint(
             eager=True
         )
-        edges = (
-            edges.join(active.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(active.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        edges = _induced(edges, active.select("id"))
     raise RuntimeError(f"maximal_independent_set did not finish in {max_iter} rounds")
 
 
@@ -2101,10 +1872,7 @@ def deterministic_walks(
         )
         cur = hop.localCheckpoint(eager=True)
         out.append(cur.select("start", F.lit(t).alias("step"), "node"))
-    res = out[0]
-    for p in out[1:]:
-        res = res.unionByName(p)
-    return res
+    return reduce(DataFrame.unionByName, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2229,11 +1997,6 @@ def greedy_coloring(graph: PropertyGraph, max_colors: int = 64) -> DataFrame:
     keeping the per-round chain below the measured ~16-checkpoint
     cliff.  Raises if ``max_colors`` rounds leave vertices uncolored
     (a silently partial coloring is not a coloring)."""
-    from graphmapreduce_spark.graph.sever import (
-        SEVER_INTERVAL,
-        LineageSeverer,
-    )
-
     verts = graph.vertices.select("id").distinct().localCheckpoint(
         eager=True
     )
@@ -2244,30 +2007,18 @@ def greedy_coloring(graph: PropertyGraph, max_colors: int = 64) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     parts = []
-    severer = None
+    rounds = Rounds(verts.sparkSession, "coloring")
     for color in range(max_colors):
         if verts.isEmpty():
             break
-        if color and color % SEVER_INTERVAL == 0:
-            if severer is None:
-                severer = LineageSeverer(verts.sparkSession, tag="coloring")
-            verts = severer.sever(verts)
-            edges = severer.sever(edges)
+        verts, edges = rounds.carry(color, verts, edges)
         sub = PropertyGraph(verts, edges, prepartition=False)
         mis = maximal_independent_set(sub).localCheckpoint(eager=True)
         parts.append(mis.withColumn("color", F.lit(color)))
         verts = verts.join(mis, "id", "left_anti").localCheckpoint(
             eager=True
         )
-        edges = (
-            edges.join(
-                verts.select(F.col("id").alias("src")), "src", "left_semi"
-            )
-            .join(
-                verts.select(F.col("id").alias("dst")), "dst", "left_semi"
-            )
-            .localCheckpoint(eager=True)
-        )
+        edges = _induced(edges, verts)
     else:
         if not verts.isEmpty():
             raise RuntimeError(
@@ -2277,10 +2028,7 @@ def greedy_coloring(graph: PropertyGraph, max_colors: int = 64) -> DataFrame:
         return graph.vertices.select(
             "id", F.lit(0).alias("color")
         ).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def adamic_adar(
@@ -2461,64 +2209,58 @@ def hits(
     renormalize at checkpoints.  Per-step state is one row per vertex,
     far below message volume, at any cluster size.
     """
-    from pyspark.storagelevel import StorageLevel
+    with persisted(graph.edges) as cached:
+        edges = graph.edges
+        v = graph.vertices.select("id").localCheckpoint(eager=True)
 
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    edges = graph.edges
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
-    v = graph.vertices.select("id").localCheckpoint(eager=True)
-
-    hub = v.select("id", F.lit(1.0).alias("hub"))
-    auth = v.select("id", F.lit(0.0).alias("auth"))
-    interval = max(1, check_interval)
-    for it in range(1, max_iter + 1):
-        araw = (
-            edges.join(hub, edges["src"] == hub["id"])
-            .select(F.col("dst").alias("id"), F.col("hub").alias("_c"))
-            .groupBy("id")
-            .agg(F.sum("_c").alias("_raw"))
+        hub = v.select("id", F.lit(1.0).alias("hub"))
+        auth = v.select("id", F.lit(0.0).alias("auth"))
+        interval = max(1, check_interval)
+        for it in range(1, max_iter + 1):
+            araw = (
+                edges.join(hub, edges["src"] == hub["id"])
+                .select(F.col("dst").alias("id"), F.col("hub").alias("_c"))
+                .groupBy("id")
+                .agg(F.sum("_c").alias("_raw"))
+            )
+            auth = v.join(araw, "id", "left").select(
+                "id", F.coalesce("_raw", F.lit(0.0)).alias("auth")
+            )
+            checkpoint_now = it % interval == 0 and it < max_iter
+            if checkpoint_now:
+                # cut auth BEFORE deriving hub from it — checkpointing
+                # after would leave hub's captured lineage pointing at the
+                # pre-checkpoint auth plan, re-executing the whole chunk
+                auth = auth.localCheckpoint(eager=True)
+            hraw = (
+                edges.join(auth, edges["dst"] == auth["id"])
+                .select(F.col("src").alias("id"), F.col("auth").alias("_c"))
+                .groupBy("id")
+                .agg(F.sum("_c").alias("_raw"))
+            )
+            hub = v.join(hraw, "id", "left").select(
+                "id", F.coalesce("_raw", F.lit(0.0)).alias("hub")
+            )
+            if checkpoint_now:
+                hub = hub.localCheckpoint(eager=True)
+        # single final normalization: one joined pass, norms as one
+        # broadcast 1-row agg over the joined (auth, hub) state
+        joined = auth.join(hub, "id").localCheckpoint(eager=True)
+        norms = joined.agg(
+            F.sqrt(F.sum(F.col("auth") * F.col("auth"))).alias("_na"),
+            F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("_nh"),
         )
-        auth = v.join(araw, "id", "left").select(
-            "id", F.coalesce("_raw", F.lit(0.0)).alias("auth")
+        out = joined.crossJoin(F.broadcast(norms)).select(
+            "id",
+            F.when(F.col("_na") > 0, F.col("auth") / F.col("_na"))
+            .otherwise(F.lit(0.0))
+            .alias("auth"),
+            F.when(F.col("_nh") > 0, F.col("hub") / F.col("_nh"))
+            .otherwise(F.lit(0.0))
+            .alias("hub"),
         )
-        checkpoint_now = it % interval == 0 and it < max_iter
-        if checkpoint_now:
-            # cut auth BEFORE deriving hub from it — checkpointing after
-            # would leave hub's captured lineage pointing at the
-            # pre-checkpoint auth plan, re-executing the whole chunk
-            auth = auth.localCheckpoint(eager=True)
-        hraw = (
-            edges.join(auth, edges["dst"] == auth["id"])
-            .select(F.col("src").alias("id"), F.col("auth").alias("_c"))
-            .groupBy("id")
-            .agg(F.sum("_c").alias("_raw"))
-        )
-        hub = v.join(hraw, "id", "left").select(
-            "id", F.coalesce("_raw", F.lit(0.0)).alias("hub")
-        )
-        if checkpoint_now:
-            hub = hub.localCheckpoint(eager=True)
-    # single final normalization: one joined pass, norms as one
-    # broadcast 1-row agg over the joined (auth, hub) state
-    joined = auth.join(hub, "id").localCheckpoint(eager=True)
-    norms = joined.agg(
-        F.sqrt(F.sum(F.col("auth") * F.col("auth"))).alias("_na"),
-        F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("_nh"),
-    )
-    out = joined.crossJoin(F.broadcast(norms)).select(
-        "id",
-        F.when(F.col("_na") > 0, F.col("auth") / F.col("_na"))
-        .otherwise(F.lit(0.0))
-        .alias("auth"),
-        F.when(F.col("_nh") > 0, F.col("hub") / F.col("_nh"))
-        .otherwise(F.lit(0.0))
-        .alias("hub"),
-    )
-    if we_cached:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
+        if cached:
+            out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -2566,45 +2308,35 @@ def multi_source_levels(
     anti-join key (s, id) spreads every source's frontier across the
     same hash partitioning — no per-source driver loop, |sources|×
     fewer Spark jobs than sequential BFS runs."""
-    from pyspark.storagelevel import StorageLevel
-
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
     edges = graph.edges.select("src", "dst")
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
     src_list = [int(s) for s in sources]
-    frontier = (
-        graph.vertices.filter(F.col("id").isin(src_list))
-        .select(F.col("id").alias("s"), "id", F.lit(0).alias("level"))
-        .localCheckpoint(eager=True)
-    )
-    out = [frontier]
-    seen = frontier.select("s", "id")
-    depth = 0
-    while depth < max_depth:
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select("s", F.col("dst").alias("id"))
-            .distinct()
-            .join(seen, ["s", "id"], "left_anti")
-            .withColumn("level", F.lit(depth + 1))
+    with persisted(edges, base=graph.edges):
+        frontier = (
+            graph.vertices.filter(F.col("id").isin(src_list))
+            .select(F.col("id").alias("s"), "id", F.lit(0).alias("level"))
             .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        out.append(nxt)
-        seen = seen.unionByName(nxt.select("s", "id")).localCheckpoint(
-            eager=True
-        )
-        frontier = nxt
-        depth += 1
-    if we_cached:
-        edges.unpersist()
-    allp = out[0]
-    for p in out[1:]:
-        allp = allp.unionByName(p)
-    return allp
+        out = [frontier]
+        seen = frontier.select("s", "id")
+        depth = 0
+        while depth < max_depth:
+            nxt = (
+                frontier.join(edges, frontier["id"] == edges["src"])
+                .select("s", F.col("dst").alias("id"))
+                .distinct()
+                .join(seen, ["s", "id"], "left_anti")
+                .withColumn("level", F.lit(depth + 1))
+                .localCheckpoint(eager=True)
+            )
+            if nxt.isEmpty():
+                break
+            out.append(nxt)
+            seen = seen.unionByName(nxt.select("s", "id")).localCheckpoint(
+                eager=True
+            )
+            frontier = nxt
+            depth += 1
+    return reduce(DataFrame.unionByName, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2682,124 +2414,113 @@ def _brandes_sweep(
     backward sweep).  Returns None for an empty sweep.  The final agg
     is materialized (eager checkpoint) BEFORE the edge cache drops, so
     callers never re-execute the sweep."""
-    from pyspark.storagelevel import StorageLevel
-
     if not sources:
         raise ValueError("the Brandes sweep needs at least one source")
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    if we_cached:
-        # persist graph.edges ITSELF, not a projection of it: the cache
-        # manager substitutes persisted plans by exact subtree match, so
-        # caching the full edge table lets the frontier job (whose
-        # vertex set from_edges derives from the same subtree) read the
-        # cache instead of re-running the upstream scan + dedup.  Lazy:
-        # the first forward-level join populates it while computing.
-        graph.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = graph.edges.select("src", "dst")
+    # persist graph.edges ITSELF, not a projection of it: the cache
+    # manager substitutes persisted plans by exact subtree match, so
+    # caching the full edge table lets the frontier job (whose vertex set
+    # from_edges derives from the same subtree) read the cache instead of
+    # re-running the upstream scan + dedup.
+    with persisted(graph.edges):
+        edges = graph.edges.select("src", "dst")
 
-    src_list = [int(s) for s in sources]
-    frontier = (
-        graph.vertices.filter(F.col("id").isin(src_list))
-        .select(F.col("id").alias("s"), "id", F.lit(1.0).alias("sigma"))
-        .localCheckpoint(eager=False)
-    )
-    level_tables = [frontier]
-    seen = frontier.select("s", "id")
-    depth = 0
-    while depth < max_depth:
-        # lazy checkpoint + count(): ONE job per level both materializes
-        # the level table (severing lineage) and answers the emptiness
-        # probe — the eager-checkpoint + isEmpty pair cost two.  `seen`
-        # is a union of ≤ max_depth checkpointed leaves, already flat;
-        # re-checkpointing it per level was a third O(|seen|) job.
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .join(seen, ["s", "id"], "left_anti")
-            .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
+        src_list = [int(s) for s in sources]
+        frontier = (
+            graph.vertices.filter(F.col("id").isin(src_list))
+            .select(F.col("id").alias("s"), "id", F.lit(1.0).alias("sigma"))
             .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
-            break
-        level_tables.append(nxt)
-        seen = seen.unionByName(nxt.select("s", "id"))
-        frontier = nxt
-        depth += 1
-    # backward sweep: δ at each source's deepest level is 0 — those
-    # vertices still belong in the output (reached; score 0)
-    deltas = level_tables[-1].select(
-        "s", "id", "sigma", F.lit(0.0).alias("delta")
-    )
-    acc, eacc = [], []
-    if len(level_tables) > 1:
-        acc.append(deltas.select("s", "id", "delta"))
-    for lvl in range(len(level_tables) - 2, -1, -1):
-        cur = level_tables[lvl]
-        w = deltas.select(
-            F.col("s").alias("_ws"),
-            F.col("id").alias("_wid"),
-            F.col("sigma").alias("_wsigma"),
-            F.col("delta").alias("_wdelta"),
+        level_tables = [frontier]
+        seen = frontier.select("s", "id")
+        depth = 0
+        while depth < max_depth:
+            # lazy checkpoint + count(): ONE job per level both materializes
+            # the level table (severing lineage) and answers the emptiness
+            # probe — the eager-checkpoint + isEmpty pair cost two.  `seen`
+            # is a union of ≤ max_depth checkpointed leaves, already flat;
+            # re-checkpointing it per level was a third O(|seen|) job.
+            nxt = (
+                frontier.join(edges, frontier["id"] == edges["src"])
+                .select("s", F.col("dst").alias("id"), "sigma")
+                .join(seen, ["s", "id"], "left_anti")
+                .groupBy("s", "id")
+                .agg(F.sum("sigma").alias("sigma"))
+                .localCheckpoint(eager=False)
+            )
+            if nxt.count() == 0:
+                break
+            level_tables.append(nxt)
+            seen = seen.unionByName(nxt.select("s", "id"))
+            frontier = nxt
+            depth += 1
+        # backward sweep: δ at each source's deepest level is 0 — those
+        # vertices still belong in the output (reached; score 0)
+        deltas = level_tables[-1].select(
+            "s", "id", "sigma", F.lit(0.0).alias("delta")
         )
-        terms = (
-            cur.join(edges, cur["id"] == edges["src"])
-            .join(
-                w,
-                (F.col("dst") == F.col("_wid"))
-                & (cur["s"] == F.col("_ws")),
-            )
-            .select(
-                cur["s"].alias("s"),
-                cur["id"].alias("id"),
-                F.col("dst"),
-                (
-                    F.col("sigma")
-                    / F.col("_wsigma")
-                    * (F.lit(1.0) + F.col("_wdelta"))
-                ).alias("_c"),
-            )
-        )
-        if want == "edge":
-            # the per-edge terms ARE the edge-betweenness contributions;
-            # lineage: checkpointed cur/deltas + cached edges only
-            eacc.append(
-                terms.select("s", F.col("id").alias("src"), "dst", "_c")
-            )
-        contrib = terms.groupBy("s", "id").agg(F.sum("_c").alias("_d"))
-        # lazy: no action runs inside the backward sweep, so the whole
-        # deepest-first chain materializes in the ONE final-agg job (each
-        # level persisted on first compute, shared by the next level and
-        # by acc/eacc) instead of one eager job per level
-        deltas = (
-            cur.join(contrib, ["s", "id"], "left")
-            .select(
-                "s",
-                "id",
-                "sigma",
-                F.coalesce("_d", F.lit(0.0)).alias("delta"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if lvl > 0:  # the source itself never scores
+        acc, eacc = [], []
+        if len(level_tables) > 1:
             acc.append(deltas.select("s", "id", "delta"))
-    result = None
-    if want == "vertex" and acc:
-        u = acc[0]
-        for p in acc[1:]:
-            u = u.unionByName(p)
-        result = u.groupBy("id").agg(F.sum("delta").alias("betweenness"))
-    elif want == "edge" and eacc:
-        u = eacc[0]
-        for p in eacc[1:]:
-            u = u.unionByName(p)
-        result = u.groupBy("src", "dst").agg(
-            F.sum("_c").alias("betweenness")
-        )
-    if result is not None:
-        result = result.localCheckpoint(eager=True)
-    if we_cached:
-        graph.edges.unpersist()
+        for lvl in range(len(level_tables) - 2, -1, -1):
+            cur = level_tables[lvl]
+            w = deltas.select(
+                F.col("s").alias("_ws"),
+                F.col("id").alias("_wid"),
+                F.col("sigma").alias("_wsigma"),
+                F.col("delta").alias("_wdelta"),
+            )
+            terms = (
+                cur.join(edges, cur["id"] == edges["src"])
+                .join(
+                    w,
+                    (F.col("dst") == F.col("_wid"))
+                    & (cur["s"] == F.col("_ws")),
+                )
+                .select(
+                    cur["s"].alias("s"),
+                    cur["id"].alias("id"),
+                    F.col("dst"),
+                    (
+                        F.col("sigma")
+                        / F.col("_wsigma")
+                        * (F.lit(1.0) + F.col("_wdelta"))
+                    ).alias("_c"),
+                )
+            )
+            if want == "edge":
+                # the per-edge terms ARE the edge-betweenness contributions;
+                # lineage: checkpointed cur/deltas + cached edges only
+                eacc.append(
+                    terms.select("s", F.col("id").alias("src"), "dst", "_c")
+                )
+            contrib = terms.groupBy("s", "id").agg(F.sum("_c").alias("_d"))
+            # lazy: no action runs inside the backward sweep, so the whole
+            # deepest-first chain materializes in the ONE final-agg job (each
+            # level persisted on first compute, shared by the next level and
+            # by acc/eacc) instead of one eager job per level
+            deltas = (
+                cur.join(contrib, ["s", "id"], "left")
+                .select(
+                    "s",
+                    "id",
+                    "sigma",
+                    F.coalesce("_d", F.lit(0.0)).alias("delta"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            if lvl > 0:  # the source itself never scores
+                acc.append(deltas.select("s", "id", "delta"))
+        result = None
+        if want == "vertex" and acc:
+            u = reduce(DataFrame.unionByName, acc)
+            result = u.groupBy("id").agg(F.sum("delta").alias("betweenness"))
+        elif want == "edge" and eacc:
+            u = reduce(DataFrame.unionByName, eacc)
+            result = u.groupBy("src", "dst").agg(
+                F.sum("_c").alias("betweenness")
+            )
+        if result is not None:
+            result = result.localCheckpoint(eager=True)
     return result
 
 
@@ -2894,37 +2615,14 @@ def katz_centrality(
     dangling handling: one in-edge join + hash agg per superstep,
     ``check_interval`` supersteps chained lazily per eager checkpoint.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    edges = graph.edges
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
-    v = graph.vertices.select("id").localCheckpoint(eager=True)
-    x = v.select("id", F.lit(beta).alias("katz"))
-    interval = max(1, check_interval)
-    for it in range(1, max_iter + 1):
-        msgs = (
-            edges.join(x, edges["src"] == x["id"])
-            .select(F.col("dst").alias("id"), F.col("katz").alias("_c"))
-            .groupBy("id")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        x = v.join(msgs, "id", "left").select(
-            "id",
-            (
-                F.lit(beta)
-                + F.lit(alpha) * F.coalesce("_in", F.lit(0.0))
-            ).alias("katz"),
-        )
-        if it % interval == 0 and it < max_iter:
-            x = x.localCheckpoint(eager=True)
-    out = x
-    if we_cached:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
-    return out
+    return _power_iteration(
+        graph,
+        beta,
+        lambda in_sum: F.lit(beta) + F.lit(alpha) * in_sum,
+        lambda x: x.select("id", F.col("x").alias("katz")),
+        max_iter,
+        check_interval,
+    )
 
 
 def eigenvector_centrality(
@@ -2939,39 +2637,53 @@ def eigenvector_centrality(
     checkpoint.  Returns (id, eigenvector); vertices outside every
     cycle's in-basin decay to 0, the standard directed-graph caveat.
     """
-    from pyspark.storagelevel import StorageLevel
 
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    edges = graph.edges
-    if we_cached:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)  # lazy: the
-        # first consumer job populates the cache while computing
-    v = graph.vertices.select("id").localCheckpoint(eager=True)
-    x = v.select("id", F.lit(1.0).alias("x"))
-    interval = max(1, check_interval)
-    for it in range(1, max_iter + 1):
-        msgs = (
-            edges.join(x, edges["src"] == x["id"])
-            .select(F.col("dst").alias("id"), F.col("x").alias("_c"))
-            .groupBy("id")
-            .agg(F.sum("_c").alias("_in"))
+    def normalized(x: DataFrame) -> DataFrame:
+        x = x.localCheckpoint(eager=True)
+        norm = x.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("_n"))
+        return x.crossJoin(F.broadcast(norm)).select(
+            "id",
+            F.when(F.col("_n") > 0, F.col("x") / F.col("_n"))
+            .otherwise(F.lit(0.0))
+            .alias("eigenvector"),
         )
-        x = v.join(msgs, "id", "left").select(
-            "id", F.coalesce("_in", F.lit(0.0)).alias("x")
-        )
-        if it % interval == 0 and it < max_iter:
-            x = x.localCheckpoint(eager=True)
-    x = x.localCheckpoint(eager=True)
-    norm = x.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("_n"))
-    out = x.crossJoin(F.broadcast(norm)).select(
-        "id",
-        F.when(F.col("_n") > 0, F.col("x") / F.col("_n"))
-        .otherwise(F.lit(0.0))
-        .alias("eigenvector"),
+
+    return _power_iteration(
+        graph, 1.0, lambda in_sum: in_sum, normalized, max_iter, check_interval
     )
-    if we_cached:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
+
+
+def _power_iteration(
+    graph: PropertyGraph,
+    x0: float,
+    update,
+    finish,
+    max_iter: int,
+    check_interval: int,
+) -> DataFrame:
+    """x ← update(Σ_{u→v} x(u)) from x ≡ ``x0``, ``max_iter`` times, then
+    ``finish(x)`` — the loop shared by Katz and eigenvector centrality.
+    ``check_interval`` supersteps chain lazily per eager checkpoint."""
+    with persisted(graph.edges) as cached:
+        edges = graph.edges
+        v = graph.vertices.select("id").localCheckpoint(eager=True)
+        x = v.select("id", F.lit(x0).alias("x"))
+        interval = max(1, check_interval)
+        for it in range(1, max_iter + 1):
+            msgs = (
+                edges.join(x, edges["src"] == x["id"])
+                .select(F.col("dst").alias("id"), F.col("x").alias("_c"))
+                .groupBy("id")
+                .agg(F.sum("_c").alias("_in"))
+            )
+            x = v.join(msgs, "id", "left").select(
+                "id", update(F.coalesce("_in", F.lit(0.0))).alias("x")
+            )
+            if it % interval == 0 and it < max_iter:
+                x = x.localCheckpoint(eager=True)
+        out = finish(x)
+        if cached:
+            out = out.localCheckpoint(eager=True)
     return out
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphmapreduce_spark.graph.iterate import persisted
 from graphmapreduce_spark.graph.property_graph import PropertyGraph
 
 
@@ -59,64 +60,60 @@ def locality_partition(
     ``balance_slack``: a part may exceed the ideal size ``V/p`` by this
     fraction before the load penalty outweighs any neighbor plurality.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    we_cached = graph.edges.storageLevel == StorageLevel.NONE
-    if we_cached:
-        graph.edges.persist(StorageLevel.MEMORY_AND_DISK).count()
-    # symmetrize: locality is an undirected property
-    sym = graph.edges.select("src", "dst").unionByName(
-        graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    n = graph.num_vertices()
-    ideal = n / num_parts
-    parts = graph.vertices.select(
-        "id", (F.pmod(F.xxhash64("id"), F.lit(num_parts))).cast("int").alias("part")
-    ).localCheckpoint(eager=True)
-
-    best_cut = edge_cut(sym, parts) // 2
-    for _ in range(max_iter):
-        # per-vertex histogram of neighbor parts
-        nbr_parts = (
-            sym.join(
-                parts.select(F.col("id").alias("dst"), F.col("part")), "dst"
-            )
-            .groupBy(F.col("src").alias("id"), "part")
-            .agg(F.count(F.lit(1)).alias("n_nbrs"))
+    with persisted(graph.edges) as cached:
+        if cached:
+            graph.edges.count()
+        # symmetrize: locality is an undirected property
+        sym = graph.edges.select("src", "dst").unionByName(
+            graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # current part sizes → load penalty per candidate part
-        sizes = parts.groupBy("part").agg(F.count(F.lit(1)).alias("sz"))
-        scored = nbr_parts.join(F.broadcast(sizes), "part").select(
-            "id",
-            "part",
-            (
-                F.col("n_nbrs")
-                - F.greatest(
-                    (F.col("sz") - F.lit(ideal * (1.0 + balance_slack)))
-                    / F.lit(ideal),
-                    F.lit(0.0),
+        n = graph.num_vertices()
+        ideal = n / num_parts
+        parts = graph.vertices.select(
+            "id", (F.pmod(F.xxhash64("id"), F.lit(num_parts))).cast("int").alias("part")
+        ).localCheckpoint(eager=True)
+
+        best_cut = edge_cut(sym, parts) // 2
+        for _ in range(max_iter):
+            # per-vertex histogram of neighbor parts
+            nbr_parts = (
+                sym.join(
+                    parts.select(F.col("id").alias("dst"), F.col("part")), "dst"
                 )
-                * F.col("n_nbrs")
-            ).alias("score"),
-        )
-        # argmax by (score, part) — deterministic tiebreak
-        choice = scored.groupBy("id").agg(
-            F.max(F.struct("score", "part")).alias("best")
-        )
-        new_parts = (
-            parts.join(choice, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("best.part"), F.col("part")).alias("part"),
+                .groupBy(F.col("src").alias("id"), "part")
+                .agg(F.count(F.lit(1)).alias("n_nbrs"))
             )
-            .localCheckpoint(eager=True)
-        )
-        new_cut = edge_cut(sym, new_parts) // 2
-        if new_cut >= best_cut:
-            break
-        best_cut, parts = new_cut, new_parts
-    if we_cached:
-        graph.edges.unpersist()
+            # current part sizes → load penalty per candidate part
+            sizes = parts.groupBy("part").agg(F.count(F.lit(1)).alias("sz"))
+            scored = nbr_parts.join(F.broadcast(sizes), "part").select(
+                "id",
+                "part",
+                (
+                    F.col("n_nbrs")
+                    - F.greatest(
+                        (F.col("sz") - F.lit(ideal * (1.0 + balance_slack)))
+                        / F.lit(ideal),
+                        F.lit(0.0),
+                    )
+                    * F.col("n_nbrs")
+                ).alias("score"),
+            )
+            # argmax by (score, part) — deterministic tiebreak
+            choice = scored.groupBy("id").agg(
+                F.max(F.struct("score", "part")).alias("best")
+            )
+            new_parts = (
+                parts.join(choice, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce(F.col("best.part"), F.col("part")).alias("part"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            new_cut = edge_cut(sym, new_parts) // 2
+            if new_cut >= best_cut:
+                break
+            best_cut, parts = new_cut, new_parts
     return parts
 
 

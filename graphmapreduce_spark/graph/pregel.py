@@ -23,11 +23,12 @@ Scale notes:
 - The message join shuffles vertex state to the (pre-partitioned, big)
   edge table — not the other way round.  ``groupBy('id')`` gets map-side
   partial aggregation for algebraic aggregates automatically.
-- Lineage is truncated every ``checkpoint_interval`` supersteps with
-  ``localCheckpoint`` — without it the plan doubles per iteration and the
-  driver dies re-optimizing it (the one genuinely iterative-specific
-  engineering concern; the reference's equivalent state is just mutated
-  arrays).
+- Lineage is truncated every superstep with a lazy ``localCheckpoint``
+  — without it the plan doubles per iteration and the driver dies
+  re-optimizing it (the one genuinely iterative-specific engineering
+  concern; the reference's equivalent state is just mutated arrays).
+  The chunking, checkpointing, severing and edge caching all live in
+  ``graph/iterate.py``; ``Pregel`` is one client of its ``fixpoint``.
 - ``active_frontier=True`` implements the optimization the reference left
   disabled as a TODO (send only active vertices, ``graph.h:760-762``):
   only vertices whose value changed last superstep produce messages.
@@ -36,13 +37,14 @@ Scale notes:
 from __future__ import annotations
 
 import enum
-import time
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graphmapreduce_spark.graph.iterate import fixpoint, persisted
 
 THRESHOLD = 1e-4  # ref gmr.h:25
 MAX_ITERATION = 10_000  # ref gmr.h:28
@@ -70,18 +72,8 @@ def single_job_chunk(spark, enabled: bool = True):
     hash partitioning), so the static plan keeps the one-exchange-per-
     superstep shape; what AQE contributed — runtime broadcast of the
     tiny state side — is worth less than the per-superstep driver
-    round-trips it costs (A/B in OPTIMIZATION_r08.md).  Escape hatch:
-    ``spark.graphmapreduce.iterative.singleJobChunks=false`` restores
-    the AQE-planned per-superstep execution.
+    round-trips it costs (A/B in OPTIMIZATION_r08.md).
     """
-    enabled = enabled and (
-        str(
-            spark.conf.get(
-                "spark.graphmapreduce.iterative.singleJobChunks", "true"
-            )
-        ).lower()
-        == "true"
-    )
     prev = str(spark.conf.get("spark.sql.adaptive.enabled", "true"))
     if not enabled or prev.lower() == "false":
         yield False
@@ -160,11 +152,9 @@ class Pregel:
         update: UpdateMode | Callable[[Column, Column], Column],
         threshold: float = THRESHOLD,
         max_iter: int = MAX_ITERATION,
-        checkpoint_interval: int = 1,
         active_frontier: bool = False,
         check_interval: int = 1,
         broadcast_vertices: bool = False,
-        persist_edges: bool = True,
         track_shuffle: bool = False,
     ):
         self.make_messages = make_messages
@@ -172,23 +162,15 @@ class Pregel:
         self.update = update
         self.threshold = threshold
         self.max_iter = max_iter
-        self.checkpoint_interval = max(1, checkpoint_interval)
         self.active_frontier = active_frontier
         # check_interval > 1 chains that many supersteps into ONE Spark
-        # job (lazy checkpoints + a single convergence action), testing
-        # the vote-to-halt only at chunk boundaries.  Overshoot past the
-        # fixpoint is up to interval-1 supersteps — safe for idempotent
-        # (cover/min/max-style) updates, NOT for accu.
-        self.check_interval = max(1, check_interval)
+        # job, testing the vote-to-halt only at chunk boundaries (see
+        # iterate.fixpoint) — safe for idempotent updates, NOT for accu.
+        self.check_interval = check_interval
         # broadcast the (small) vertex-state side into the message join
         # so the cached, pre-partitioned edge table never moves; leave
         # False when vertex state won't fit in one executor's memory.
         self.broadcast_vertices = broadcast_vertices
-        # persist_edges=False when the caller passes edges that are a
-        # cheap narrow derivation of an already-cached table (e.g. a
-        # symmetrizing union): re-deriving per superstep beats paying a
-        # second materialization + double cache residency.
-        self.persist_edges = persist_edges
         # report per-chunk shuffle bytes in PregelResult.shuffle_deltas
         # (the reference's running totalRecvBytes).  Off by default: the
         # AppStatusStore read is a driver-side O(stages-so-far) walk per
@@ -204,21 +186,15 @@ class Pregel:
         return self.update(old, agg)
 
     def run(self, vertices: DataFrame, edges: DataFrame) -> PregelResult:
-        from pyspark.storagelevel import StorageLevel
-
         # Materialize the edge table once: every superstep's message join
         # and every convergence action would otherwise re-execute the
         # whole edge-derivation pipeline (scan + shuffles) from scratch.
-        # MEMORY_AND_DISK so big graphs spill instead of recomputing.
-        we_cached = (
-            self.persist_edges and edges.storageLevel == StorageLevel.NONE
-        )
-        if we_cached:
-            # lazy: the first chunk's message join materializes the
-            # cache while computing (later supersteps in the same job
-            # already read the cached blocks); an eager count() here
-            # would be one extra full pass over the edge pipeline
-            edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        # Cached before the vertex init below, whose plan may contain
+        # the edge plan as a subtree.
+        with persisted(edges):
+            return self._iterate(vertices, edges)
+
+    def _iterate(self, vertices: DataFrame, edges: DataFrame) -> PregelResult:
         v = vertices.select("id", "value").withColumn(
             "delta", F.lit(float("inf"))
         )
@@ -248,101 +224,68 @@ class Pregel:
         use_single_job = (
             not self.broadcast_vertices and v.count() >= min_single
         )
-        deltas: list[float] = []
-        step_secs: list[float] = []
         shuffle_deltas: list[dict[str, int]] = []
         tracker = None
         if self.track_shuffle:
             from graphmapreduce_spark.metrics import ShuffleTracker
 
-            tracker = ShuffleTracker(vertices.sparkSession)
-        from graphmapreduce_spark.graph.sever import (
-            SEVER_INTERVAL,
-            LineageSeverer,
-        )
+            tracker = ShuffleTracker(spark)
 
-        severer = None
-        last_sever = 0
-        converged = False
-        it = 0
-        while it < self.max_iter and not converged:
-            t_step = time.perf_counter()
-            steps = min(self.check_interval, self.max_iter - it)
-            new = v
-            # suspend AQE for the chunk: every per-superstep
-            # localCheckpoint below then constructs WITHOUT executing
-            # its stages, and the convergence action drives the whole
-            # chunk as ONE job (see single_job_chunk)
-            with single_job_chunk(spark, enabled=use_single_job) as single_job:
-                for _ in range(steps):
-                    active = (
-                        new.filter(F.col("delta") > self.threshold)
-                        if self.active_frontier
-                        else new
-                    )
-                    state = active.select("id", "value")
-                    if self.broadcast_vertices:
-                        state = F.broadcast(state)
-                    elif single_job:
-                        # static plan: hash-join with the SMALL state
-                        # side as build — no per-superstep sort (SMJ)
-                        # and no driver-blocking broadcast collect
-                        state = state.hint("shuffle_hash")
-                    msgs = self.make_messages(state, edges)
-                    aggd = msgs.groupBy("id").agg(self.agg.alias("_agg"))
-                    if single_job:
-                        aggd = aggd.hint("shuffle_hash")
-                    new_value = self._update_expr(
-                        F.col("_old"), F.col("_agg")
-                    )
-                    # inf-to-inf transitions (e.g. still-unreached SSSP
-                    # vertices) must read as delta 0, not NaN (inf - inf).
-                    delta = F.when(
-                        new_value == F.col("_old"), F.lit(0.0)
-                    ).otherwise(F.abs(new_value - F.col("_old")))
-                    new = (
-                        new.select("id", F.col("value").alias("_old"))
-                        .join(aggd, "id", "left")
-                        .select(
-                            "id",
-                            new_value.alias("value"),
-                            delta.alias("delta"),
-                        )
-                    )
-                    it += 1
-                    if it % self.checkpoint_interval == 0:
-                        # lazy checkpoint: the convergence action below
-                        # both computes max(delta) AND materializes every
-                        # pending checkpoint in this chunk — one Spark
-                        # job per chunk
-                        new = new.localCheckpoint(eager=False)
-                # the convergence barrier — sole driver-side scalar per
-                # chunk (ref gmr.cpp:224-232 piggybacked vote-to-halt)
-                max_delta = new.agg(F.max("delta")).first()[0]
-            deltas.append(float(max_delta) if max_delta is not None else 0.0)
-            step_secs.append(round(time.perf_counter() - t_step, 4))
+        @contextmanager
+        def chunk():
+            # suspend AQE for the chunk: every per-superstep lazy
+            # localCheckpoint then constructs WITHOUT executing its
+            # stages, and the convergence action drives the whole chunk
+            # as ONE job (see single_job_chunk)
+            with single_job_chunk(spark, enabled=use_single_job) as single:
+                yield single
             if tracker is not None:
                 shuffle_deltas.append(tracker.delta())
-            v = new
-            if max_delta is None or max_delta <= self.threshold:
-                converged = True
-            elif it - last_sever >= SEVER_INTERVAL:
-                # chained localCheckpoints degrade past ~16 supersteps
-                # (measured; see graph/sever.py) — give the state a
-                # zero-ancestry plan periodically.  The state was just
-                # materialized by the convergence action, so the write
-                # reads hot blocks.
-                if severer is None:
-                    severer = LineageSeverer(v.sparkSession, tag="pregel")
-                v = severer.sever(v)
-                last_sever = it
-        if we_cached:
-            edges.unpersist()
+
+        def superstep(new: DataFrame, single_job: bool) -> DataFrame:
+            active = (
+                new.filter(F.col("delta") > self.threshold)
+                if self.active_frontier
+                else new
+            )
+            state = active.select("id", "value")
+            if self.broadcast_vertices:
+                state = F.broadcast(state)
+            elif single_job:
+                # static plan: hash-join with the SMALL state side as
+                # build — no per-superstep sort (SMJ) and no
+                # driver-blocking broadcast collect
+                state = state.hint("shuffle_hash")
+            msgs = self.make_messages(state, edges)
+            aggd = msgs.groupBy("id").agg(self.agg.alias("_agg"))
+            if single_job:
+                aggd = aggd.hint("shuffle_hash")
+            new_value = self._update_expr(F.col("_old"), F.col("_agg"))
+            # inf-to-inf transitions (e.g. still-unreached SSSP
+            # vertices) must read as delta 0, not NaN (inf - inf).
+            delta = F.when(new_value == F.col("_old"), F.lit(0.0)).otherwise(
+                F.abs(new_value - F.col("_old"))
+            )
+            return (
+                new.select("id", F.col("value").alias("_old"))
+                .join(aggd, "id", "left")
+                .select("id", new_value.alias("value"), delta.alias("delta"))
+            )
+
+        res = fixpoint(
+            v,
+            superstep,
+            max_iter=self.max_iter,
+            threshold=self.threshold,
+            check_interval=self.check_interval,
+            tag="pregel",
+            chunk=chunk,
+        )
         return PregelResult(
-            vertices=v.select("id", "value"),
-            iterations=it,
-            converged=converged,
-            deltas=deltas,
-            superstep_seconds=step_secs,
+            vertices=res.state.select("id", "value"),
+            iterations=res.iterations,
+            converged=res.converged,
+            deltas=res.deltas,
+            superstep_seconds=res.seconds,
             shuffle_deltas=shuffle_deltas,
         )

@@ -15,12 +15,13 @@ the state a plan with ZERO RDD ancestry.
 
 ``LineageSeverer`` provides that: a parquet write + fresh re-scan (the
 new frame's plan is a plain file scan).  A sever every
-``SEVER_INTERVAL`` rounds keeps every checkpoint chain shorter than
-the ~16-round cliff, which the repro shows is sufficient (flat through
-25 rounds).  Cost: one small-table write per interval — the state
-tables in these loops (vertex values, community labels, core degrees)
-are the SMALL side of each superstep by design, so the write is noise
-next to one superstep's shuffle; on a cluster, point
+``SEVER_INTERVAL`` rounds (the cadence ``graph/iterate.py::Rounds``
+applies for every loop in ``graph/``) keeps every checkpoint chain
+shorter than the ~16-round cliff, which the repro shows is sufficient
+(flat through 25 rounds).  Cost: one small-table write per interval —
+the state tables in these loops (vertex values, community labels, core
+degrees) are the SMALL side of each superstep by design, so the write
+is noise next to one superstep's shuffle; on a cluster, point
 ``spark.graphmapreduce.severDir`` at shared storage.
 
 Second measured pathology (round 6, root-caused via jstack on the
@@ -36,8 +37,8 @@ geometrically per round: the driver ends up grinding multi-megabit
 ``BigInteger.checkRange`` throws "BigInteger would overflow supported
 range".  The parquet re-scan resets stats to REAL file sizes, so the
 discriminator is: rounds that SELF-join the carried frame must sever
-EVERY round (``boruvka_mst``); linear message-join rounds are fine at
-``SEVER_INTERVAL``.
+EVERY round (``boruvka_mst``: ``Rounds(..., every=1)``); linear
+message-join rounds are fine at ``SEVER_INTERVAL``.
 """
 
 from __future__ import annotations
@@ -47,7 +48,6 @@ import os
 import shutil
 import tempfile
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame
 
@@ -55,9 +55,11 @@ from pyspark.sql import DataFrame
 # checkpoints (edge materialization etc.) that share the same session
 SEVER_INTERVAL = 10
 
-# live severers, cleaned up at interpreter exit (weakrefs: a GC'd
-# severer whose close() already ran must not be re-closed)
-_LIVE: "weakref.WeakSet[LineageSeverer]" = weakref.WeakSet()
+# every severer not yet closed, cleaned up at interpreter exit.  Strong
+# references: severers are loop locals, so a weak registry would lose
+# them (and leak their scratch dirs) as soon as the loop returns, while
+# the frames they produced may still be read from those dirs.
+_LIVE: "set[LineageSeverer]" = set()
 
 
 @atexit.register
@@ -91,27 +93,18 @@ class LineageSeverer:
         else:
             self.dir = tempfile.mkdtemp(prefix=f"gmr_sever_{tag}_")
             self._local = True
-        self._history: list[str] = []
-        self._closed = False
         _LIVE.add(self)
 
     def sever(self, df: DataFrame) -> DataFrame:
         path = os.path.join(self.dir, uuid.uuid4().hex)
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        self._history.append(path)
-        return out
+        return self.spark.read.parquet(path)
 
     def close(self) -> None:
         """Best-effort removal of the scratch dir (idempotent).  Only
         call once no frame returned by ``sever`` will be used again."""
-        if self._closed:
+        if self not in _LIVE:
             return
-        self._closed = True
-        self._history.clear()
-        self._rm(self.dir)
         _LIVE.discard(self)
-
-    def _rm(self, path: str) -> None:
         if self._local:
-            shutil.rmtree(path, ignore_errors=True)
+            shutil.rmtree(self.dir, ignore_errors=True)

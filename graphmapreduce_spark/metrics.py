@@ -44,19 +44,24 @@ class PhaseTimer:
         return {k: round(v, 4) for k, v in self.phases.items()}
 
 
-def shuffle_metrics(spark: SparkSession) -> dict[str, int]:
-    """Cumulative shuffle traffic across all stages of this application —
-    the analog of the reference's ``totalRecvBytes`` (``gmr.cpp:318-319``).
+def shuffle_metrics(
+    spark: SparkSession, after_stage_id: int = -1
+) -> dict[str, int]:
+    """Cumulative shuffle traffic across the stages of this application
+    with id > ``after_stage_id`` — the analog of the reference's
+    ``totalRecvBytes`` (``gmr.cpp:318-319``).
 
     Reads the JVM ``AppStatusStore`` stage list (works with the UI
     disabled; no REST round-trip, no extra listener).  Returns::
 
         {"shuffle_read_bytes", "shuffle_write_bytes",
          "shuffle_read_records", "shuffle_write_records",
-         "stages", "active_jobs"}
+         "stages", "max_stage_id", "active_jobs"}
 
-    Values are cumulative since application start; use ``ShuffleTracker``
-    for per-phase deltas.  On any JVM-API mismatch the byte counters are
+    The store keeps only the last ``spark.ui.retainedStages`` stages, so
+    in a long-lived session the totals since application start shrink
+    as old stages are evicted; ``ShuffleTracker`` therefore sums only
+    the stages above its watermark for per-phase deltas.  On any JVM-API mismatch the byte counters are
     reported as 0 rather than failing the caller (metrics must never
     break the computation).
     """
@@ -67,6 +72,7 @@ def shuffle_metrics(spark: SparkSession) -> dict[str, int]:
         "shuffle_read_records": 0,
         "shuffle_write_records": 0,
         "stages": 0,
+        "max_stage_id": -1,
         "active_jobs": len(sc.statusTracker().getActiveJobsIds()),
     }
 
@@ -81,6 +87,9 @@ def shuffle_metrics(spark: SparkSession) -> dict[str, int]:
             it = stages.iterator()
             while it.hasNext():
                 s = it.next()
+                acc["max_stage_id"] = max(acc["max_stage_id"], s.stageId())
+                if s.stageId() <= after_stage_id:
+                    continue
                 acc["shuffle_read_bytes"] += s.shuffleReadBytes()
                 acc["shuffle_write_bytes"] += s.shuffleWriteBytes()
                 acc["shuffle_read_records"] += s.shuffleReadRecords()
@@ -115,23 +124,6 @@ def shuffle_metrics(spark: SparkSession) -> dict[str, int]:
         prev = cur
     out.update(prev)
     return out
-
-
-def _max_stage_id(spark: SparkSession) -> int:
-    """Highest completed stage id in the AppStatusStore (-1 if none)."""
-    try:
-        sc = spark.sparkContext
-        jvm = sc._jvm
-        store = sc._jsc.sc().statusStore()
-        empty = jvm.java.util.Collections.emptyList()
-        noq = sc._gateway.new_array(jvm.double, 0)
-        best = -1
-        it = store.stageList(empty, False, False, noq, empty).iterator()
-        while it.hasNext():
-            best = max(best, it.next().stageId())
-        return best
-    except Exception:  # pragma: no cover - JVM API drift safety net
-        return -1
 
 
 def max_task_shuffle_read(
@@ -199,13 +191,13 @@ class ShuffleTracker:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._last = shuffle_metrics(spark)
-        self._stage_watermark = _max_stage_id(spark)
+        self._stage_watermark = shuffle_metrics(spark)["max_stage_id"]
 
     def delta(self) -> dict[str, int]:
-        cur = shuffle_metrics(self.spark)
-        d = {k: max(0, cur[k] - self._last[k]) for k in self._KEYS}
-        self._last = cur
+        # only stages above the watermark: subtracting cumulative sums
+        # breaks once the AppStatusStore starts evicting old stages
+        cur = shuffle_metrics(self.spark, after_stage_id=self._stage_watermark)
+        d = {k: cur[k] for k in self._KEYS}
         # shuffle_metrics drained the listener bus above, so the store
         # is as current as it gets for the task-level read too
         hottest = max_task_shuffle_read(
@@ -213,7 +205,7 @@ class ShuffleTracker:
         )
         d["max_task_shuffle_read_bytes"] = hottest["bytes"]
         d["max_task_shuffle_read_records"] = hottest["records"]
-        self._stage_watermark = _max_stage_id(self.spark)
+        self._stage_watermark = max(self._stage_watermark, cur["max_stage_id"])
         return d
 
 

@@ -1,7 +1,24 @@
 """CLI launcher parity (ref startgmr.sh:14-69, gmr.cpp:52-105,176-188):
 `python -m graphmapreduce_spark <algorithm> <graphfile>` runs the named
-algorithm on the reference's own graph fixtures and reproduces the
-golden pytest values."""
+algorithm on small committed graph fixtures in the reference's three
+on-disk formats and reproduces the golden pytest values.
+
+Fixtures (``testdata_fixtures/``, 1-based vertex ids):
+
+- ``small.graph`` — METIS adjacency, header ``10 10``: 10 vertices, 10
+  undirected edges 1-{2,3,4,5,10}, 2-{3,6,7}, 3-{8,9}.  Connected;
+  vertex 1 has the top degree (5); the only cycle is the triangle
+  {1,2,3}; every other vertex is a degree-1 leaf.
+- ``small.graph.subgraph.0`` — the same topology as one fmt-1111
+  subgraph partition (``vid vwgt (nbor part wgt)*`` rows, 3-token
+  header).
+- ``rdsmall.graph`` — edge list WITH the 2-line count header (12
+  vertices, 24 edges): the 12-cycle 1-2-…-12-1, both directions.
+- ``3line.graph`` — edge list without a header: 1→2, 2→3, 3→2.
+- ``grid.graph`` / ``rdgrid.graph`` — the 2×3 grid (rows 1-2-3 and
+  4-5-6, rungs 1-4, 2-5, 3-6) as METIS adjacency (header ``6 7``) and
+  as a headerless edge list (14 directed rows).
+"""
 
 import os
 import subprocess
@@ -9,20 +26,20 @@ import sys
 
 from graphmapreduce_spark.__main__ import _detect_format
 
-REF = "/root/reference/graph"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIX = os.path.join(REPO, "testdata_fixtures")
 
 
 def test_format_autodetect_on_reference_fixtures():
     # METIS adjacency: header `nvtxs nedges`, body line per vertex
-    assert _detect_format(f"{REF}/small.graph") == "metis"
-    assert _detect_format(f"{REF}/4elt.graph") == "metis"
-    # edge lists: 2-line count header (rdsmall) or none (3line, rd4elt)
-    assert _detect_format(f"{REF}/rdsmall.graph") == "edgelist"
-    assert _detect_format(f"{REF}/3line.graph") == "edgelist"
-    assert _detect_format(f"{REF}/rd4elt.graph") == "edgelist"
+    assert _detect_format(f"{FIX}/small.graph") == "metis"
+    assert _detect_format(f"{FIX}/grid.graph") == "metis"
+    # edge lists: 2-line count header (rdsmall) or none (3line, rdgrid)
+    assert _detect_format(f"{FIX}/rdsmall.graph") == "edgelist"
+    assert _detect_format(f"{FIX}/3line.graph") == "edgelist"
+    assert _detect_format(f"{FIX}/rdgrid.graph") == "edgelist"
     # pre-partitioned subgraph files
-    assert _detect_format(f"{REF}/small.graph.subgraph.0") == "subgraph"
+    assert _detect_format(f"{FIX}/small.graph.subgraph.0") == "subgraph"
 
 
 def test_cli_trianglecount_small_graph_golden():
@@ -31,7 +48,7 @@ def test_cli_trianglecount_small_graph_golden():
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     out = subprocess.run(
         [sys.executable, "-m", "graphmapreduce_spark",
-         "trianglecount", f"{REF}/small.graph"],
+         "trianglecount", f"{FIX}/small.graph"],
         capture_output=True, text=True, timeout=300, cwd=REPO, env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -45,7 +62,7 @@ def test_cli_ktruss_small_graph_golden():
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     out = subprocess.run(
         [sys.executable, "-m", "graphmapreduce_spark",
-         "ktruss", f"{REF}/small.graph", "--k", "3"],
+         "ktruss", f"{FIX}/small.graph", "--k", "3"],
         capture_output=True, text=True, timeout=300, cwd=REPO, env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -63,7 +80,7 @@ def test_cli_harmonic_default_sources():
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     out = subprocess.run(
         [sys.executable, "-m", "graphmapreduce_spark",
-         "harmonic", f"{REF}/small.graph"],
+         "harmonic", f"{FIX}/small.graph"],
         capture_output=True, text=True, timeout=300, cwd=REPO, env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -78,7 +95,7 @@ def test_cli_pagerank_output_parquet(tmp_path):
     out_dir = str(tmp_path / "pr")
     r = subprocess.run(
         [sys.executable, "-m", "graphmapreduce_spark",
-         "pagerank", f"{REF}/small.graph", "--max-iter", "20",
+         "pagerank", f"{FIX}/small.graph", "--max-iter", "20",
          "--output", out_dir],
         capture_output=True, text=True, timeout=300, cwd=REPO, env=env,
     )
@@ -91,7 +108,7 @@ def test_cli_pagerank_output_parquet(tmp_path):
 
 def test_cli_every_remaining_algorithm_branch():
     """EVERY remaining --algorithm choice launches end-to-end on the
-    reference fixture (round-4 ADVICE lesson, completed round 5: the
+    small fixture (round-4 ADVICE lesson, completed round 5: the
     two CLI crashes both lived in branches no test had ever entered).
     Together with the dedicated goldens above this covers the full
     argparse choices list."""
@@ -111,7 +128,7 @@ def test_cli_every_remaining_algorithm_branch():
     ):
         out = subprocess.run(
             [sys.executable, "-m", "graphmapreduce_spark",
-             algo, f"{REF}/small.graph", *extra],
+             algo, f"{FIX}/small.graph", *extra],
             capture_output=True, text=True, timeout=300, cwd=REPO,
             env=env,
         )
@@ -124,8 +141,8 @@ def test_cli_every_remaining_algorithm_branch():
 
 
 def test_cli_new_centralities_run():
-    """Every round-4 centrality launches end-to-end on the reference's
-    small fixture (the ADVICE lesson: an advertised CLI branch without
+    """Every round-4 centrality launches end-to-end on the small
+    fixture (the ADVICE lesson: an advertised CLI branch without
     a test can ship crashing)."""
     import pytest
 
@@ -137,7 +154,7 @@ def test_cli_new_centralities_run():
     ):
         out = subprocess.run(
             [sys.executable, "-m", "graphmapreduce_spark",
-             algo, f"{REF}/small.graph", "--sources", "1,2"],
+             algo, f"{FIX}/small.graph", "--sources", "1,2"],
             capture_output=True, text=True, timeout=300, cwd=REPO, env=env,
         )
         assert out.returncode == 0, (algo, out.stderr[-2000:])

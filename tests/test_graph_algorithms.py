@@ -944,6 +944,57 @@ def test_lineage_severer_close_and_atexit_registration(spark):
     assert not os.path.exists(s2.dir)
 
 
+def test_lineage_severer_dir_removed_at_exit_after_gc(spark):
+    """A severer is a loop local: after its loop returns, only the
+    frames it produced (read from its dir) outlive it.  The atexit hook
+    must still remove the dir (regression: a weak registry dropped the
+    garbage-collected severer, and its dir leaked past process exit)."""
+    import gc
+    import os
+
+    from graphmapreduce_spark.graph import sever as sv
+
+    def loop_local() -> str:
+        s = sv.LineageSeverer(spark, tag="testgc")
+        s.sever(spark.range(3))
+        return s.dir
+
+    d = loop_local()
+    gc.collect()
+    assert os.path.isdir(d)
+    sv._close_all()
+    assert not os.path.exists(d)
+
+
+def test_sever_only_before_a_round_that_runs(spark, monkeypatch):
+    """Severs happen at the START of a round, so the cap never buys one
+    nobody reads: 10 pagerank supersteps sever 0 times, 11 sever once
+    (before superstep 11).  Borůvka severs every round after the first:
+    on the path 1-2-3-4 (weights 1, 5, 1) round 0 merges {1,2} and
+    {3,4}, round 1 merges them, round 2 finds no crossing edge — rounds
+    1 and 2 each sever comp and mst."""
+    from graphmapreduce_spark.graph.sever import LineageSeverer
+
+    calls = []
+    orig = LineageSeverer.sever
+
+    def counting(self, df):
+        calls.append(df)
+        return orig(self, df)
+
+    monkeypatch.setattr(LineageSeverer, "sever", counting)
+    g = make_graph(spark, PATH5 + [(5, 1, 1.0), (2, 4, 1.0)])
+    alg.pagerank(g, max_iter=10, threshold=0.0).collect()
+    assert len(calls) == 0
+    alg.pagerank(g, max_iter=11, threshold=0.0).collect()
+    assert len(calls) == 1
+    calls.clear()
+    path = make_graph(spark, [(1, 2, 1.0), (2, 3, 5.0), (3, 4, 1.0)])
+    mst = {(r["src"], r["dst"]) for r in alg.boruvka_mst(path).collect()}
+    assert mst == {(1, 2), (2, 3), (3, 4)}
+    assert len(calls) == 4
+
+
 def test_maximal_matching_invariants_and_goldens(spark):
     """Mutual-minimum handshake matching: disjoint edges, MAXIMALITY
     (no surviving edge between two unmatched vertices), and exact

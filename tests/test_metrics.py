@@ -52,6 +52,44 @@ def test_shuffle_tracker_deltas(spark):
     assert d2["shuffle_read_bytes"] == 0
 
 
+def test_shuffle_tracker_survives_stage_eviction():
+    """Once the AppStatusStore evicts stages past
+    ``spark.ui.retainedStages``, a delta of cumulative sums shrinks and
+    clamps to 0.  The tracker sums only the stages above its watermark,
+    so a tracked shuffle still reports its bytes.  Run in a fresh
+    process: retainedStages is fixed when the session starts."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = """
+import sys
+sys.path.insert(0, %r)
+from graphmapreduce_spark.metrics import ShuffleTracker
+from graphmapreduce_spark.session import get_spark
+spark = get_spark(master="local[2]", shuffle_partitions=2,
+                  extra_conf={"spark.ui.retainedStages": "20"})
+def shuffle(keys):
+    df = spark.range(20000).selectExpr(f"id %% {keys} AS k")
+    df.groupBy("k").count().collect()
+for _ in range(20):
+    shuffle(5000)  # large shuffles fill the store
+tracker = ShuffleTracker(spark)
+for _ in range(15):
+    shuffle(7)  # small ones evict them
+print("DELTA", tracker.delta()["shuffle_read_bytes"])
+spark.stop()
+""" % repo
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = [x for x in out.stdout.splitlines() if x.startswith("DELTA")][0]
+    assert int(line.split()[1]) > 0
+
+
 def test_pregel_reports_superstep_seconds(spark):
     edges = spark.createDataFrame(
         [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)], "src long, dst long, weight double"

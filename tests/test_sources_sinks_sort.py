@@ -114,16 +114,22 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_edgelist_datasource_matches_text_reader(spark):
-    """Custom Python DataSource ('edgelist' format) parses the reference
-    fixture identically to the spark.read.text composition, including
-    with byte-range splits small enough to force boundary realignment."""
+    """Custom Python DataSource ('edgelist' format) parses the headered
+    edge-list fixture (``testdata_fixtures/rdsmall.graph``: 2-line count
+    header, then the 12-cycle in both directions) identically to the
+    spark.read.text composition, including with byte-range splits small
+    enough to force boundary realignment."""
     from graphmapreduce_spark.sources import read_edge_list
     from graphmapreduce_spark.sources.edgelist_datasource import (
         EdgeListDataSource,
     )
 
     spark.dataSource.register(EdgeListDataSource)
-    path = "/root/reference/graph/rdsmall.graph"
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "testdata_fixtures",
+        "rdsmall.graph",
+    )
 
     via_text = read_edge_list(
         spark, path, one_based_shift=False

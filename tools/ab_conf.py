@@ -7,7 +7,7 @@ N times with ``--conf KEY=false``, N with ``=true``, then N with
 warmup as bench.py.
 
 Usage:
-  python tools/ab_conf.py --conf spark.graphmapreduce.iterative.singleJobChunks \
+  python tools/ab_conf.py --conf spark.sql.adaptive.enabled \
       -n 5 q34_wcc q32_pagerank
 """
 
