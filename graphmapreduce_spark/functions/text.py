@@ -412,7 +412,7 @@ def hashed_ngram_score(
     # variables — referencing the raw `words(...)` expression inside the
     # per-index bigram lambda re-evaluates the split per element, which
     # is quadratic per document (measured 23 s for 5k docs vs 0.9 s
-    # bound; same trick as minhash_signature's id-array binding)
+    # bound)
     w0 = words(F.lower(F.col(col) if isinstance(col, str) else col))
     return F.transform(
         F.array(w0),

@@ -16,6 +16,10 @@ SURVEY.md §2.2 last row):
 
 All of it is joins/groupBys over built-in expressions; the only
 quadratic step is within-bucket pair generation, bounded by bucket size.
+The shingle-set generators share one candidate → verify shape:
+`_shingle_ids` (hashed shingle sets), `_verify_jaccard` (exact Jaccard
+of candidate pairs), `_knee_bands` (default banding), and
+`_shingle_index` / `_shared_shingle_counts` (inverted-index joins).
 Keep-policy is deterministic everywhere: the smallest id survives.
 """
 
@@ -30,6 +34,7 @@ from pyspark.sql import functions as F
 
 from graphmapreduce_spark.functions import text as T
 from graphmapreduce_spark.functions import vectors as V
+from graphmapreduce_spark.operators._spread import spread_by
 
 # 31-bit Mersenne prime — modular universal hashing for MinHash.
 # Coefficients and shingle ids both stay < 2^31, so a*x + b < 2^62 never
@@ -49,47 +54,6 @@ def _hash_coeffs(num_hashes: int, seed: int):
     a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64)
     b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
     return a, b
-
-
-def minhash_signature(
-    col: Column | str,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> Column:
-    """MinHash signature as array<long> over character shingles
-    (expression form — one row in, one array out).
-
-    Universal hashing h_i(x) = (a_i * x + b_i) mod p over xxhash64
-    shingle ids.  Coefficients come from a fixed-seed RNG so signatures
-    are reproducible across runs/sessions.
-
-    Note: shingle ids are computed once and the per-function min folds
-    run over that array.  For corpus-scale signing prefer
-    ``minhash_signatures`` (explode + map-side-combined min aggregates).
-    """
-    a, b = _hash_coeffs(num_hashes, seed)
-    shingles = T.char_shingles(col, n=shingle_n, distinct=True)
-    ids = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-    def mins(id_arr: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        id_arr,
-                        lambda x: F.pmod(
-                            F.lit(int(a[i])) * x + F.lit(int(b[i])),
-                            F.lit(_MERSENNE),
-                        ),
-                    )
-                )
-                for i in range(num_hashes)
-            ]
-        )
-
-    # materialize the id array once per row via a lambda binding
-    return F.transform(F.array(ids), mins)[0]
 
 
 def minhash_signatures(
@@ -117,8 +81,6 @@ def minhash_signatures(
     # a corpus read from few files would otherwise shingle serially
     # (input-parallelism-gated — no corpus shuffle when the scan already
     # parallelizes; operators/_spread.py)
-    from graphmapreduce_spark.operators._spread import spread_by
-
     exploded = (
         spread_by(df.select(id_col, text_col), F.col(id_col))
         .select(
@@ -280,6 +242,67 @@ def lsh_candidate_pairs(
     return pairs.distinct()
 
 
+# hash-mod sampled-verify prefilter margin: pairs whose sampled Jaccard
+# falls below threshold − this skip the full intersection
+_VERIFY_SAMPLE_MARGIN = 0.1
+
+
+def _knee_bands(num_hashes: int, threshold: float) -> int:
+    """Largest divisor banding whose S-curve knee sits at ``threshold``
+    (the q46 rule, shared by all banded generators)."""
+    bands = 1
+    for b in range(1, num_hashes + 1):
+        if num_hashes % b:
+            continue
+        r = num_hashes // b
+        if (1.0 / b) ** (1.0 / r) >= threshold:
+            bands = b
+    return max(bands, 1)
+
+
+def _shingle_ids(shingles: Column, hash_fn: str) -> Column:
+    """The verify-side shingle set: the distinct hashed ids of a shingle
+    array.  Value-identical to raw-shingle Jaccard in the full 60/64-bit
+    hash space (within-doc collision p < 1e-12 — NOT the 31-bit
+    signature space, whose ~2e-4/doc collision rate would visibly
+    shrink sets), and ~40% narrower than string arrays."""
+    return F.array_distinct(
+        F.transform(shingles, lambda s: T._hash_col(s, hash_fn))
+    )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact |A∩B| / |A∪B| of two array columns."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+    prefilter: Column | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs — the last step of every
+    candidate generator.  ``a`` and ``b`` are the pair sides, each
+    (key, shingle-id array, extra columns...) whose key names one of
+    ``cands``' two columns; ``cands`` joins ``a`` then ``b``, the
+    optional ``prefilter`` runs on the joined rows, and pairs with
+    Jaccard ≥ ``threshold`` come out as (key_a, key_b, jaccard rounded
+    to 6 places)."""
+    (ka, sa), (kb, sb) = a.columns[:2], b.columns[:2]
+    joined = cands.join(a, ka).join(b, kb)
+    if prefilter is not None:
+        joined = joined.filter(prefilter)
+    return (
+        joined.withColumn("jaccard", _jaccard(sa, sb))
+        .filter(F.col("jaccard") >= threshold)
+        .select(ka, kb, F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def minhash_lsh_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -293,7 +316,6 @@ def minhash_lsh_near_dup_pairs(
     max_bucket_size: int | None = None,
     est_margin: float | None = None,
     verify_sample_mod: int | None = None,
-    verify_sample_margin: float = 0.1,
 ) -> DataFrame:
     """Near-duplicate pairs with exact-Jaccard verification of LSH
     candidates.  Returns (id_a, id_b, jaccard) with id_a < id_b.
@@ -305,14 +327,14 @@ def minhash_lsh_near_dup_pairs(
     sample — both documents of a pair sample the SAME shingles, the
     classic bottom-sketch property), the Jaccard of the sampled sets
     estimates the true Jaccard with sd ≈ √(J(1−J)·mod/|A∪B|), and
-    pairs whose sampled estimate falls below
-    ``threshold − verify_sample_margin`` skip the full verify.  On
-    corpora whose candidate sets are dominated by moderate-similarity
-    false positives this removes most of the intersection work at
-    1/mod of the array width (measured: the sf1 rehearsal verify
-    28.3 s → ~8 s at mod=4).  Pairs with an empty sampled union pass
-    through to the full verify (no false drops on tiny documents).
-    Deterministic given the hash, hence oracle-replicable in SQL.
+    pairs whose sampled estimate falls below ``threshold − 0.1`` skip
+    the full verify.  On corpora whose candidate sets are dominated by
+    moderate-similarity false positives this removes most of the
+    intersection work at 1/mod of the array width (measured: the sf1
+    rehearsal verify 28.3 s → ~8 s at mod=4).  Pairs with a sampled
+    union below 8·mod pass through to the full verify (no false drops
+    on short documents).  Deterministic given the hash, hence
+    oracle-replicable in SQL.
 
     ``max_bucket_size`` (opt-in; e.g. 4096 for corpus-scale runs) caps
     degenerate band buckets via star expansion (see
@@ -337,10 +359,11 @@ def minhash_lsh_near_dup_pairs(
     (default) keeps the oracle-exact contract.
 
     Verification itself intersects 60-bit HASHED shingle sets (the same
-    ids the signatures are built from), not raw shingle strings: the
-    Jaccard value is identical unless two distinct shingles of one
-    document collide in 60 bits (p < 1e-12 per document), and long
-    arrays intersect ~2× faster while shuffling ~40% fewer bytes.
+    ids the signatures are built from, `_shingle_ids`), not raw shingle
+    strings: the Jaccard value is identical unless two distinct
+    shingles of one document collide in 60 bits (p < 1e-12 per
+    document), and long arrays intersect ~2× faster while shuffling
+    ~40% fewer bytes.
 
     ``bands`` defaults to the largest b with (1/b)^(b/num_hashes) ≥
     threshold — i.e. the banding whose S-curve knee sits at the requested
@@ -349,32 +372,35 @@ def minhash_lsh_near_dup_pairs(
     materialized for candidate ids, never for the whole corpus.
     """
     if bands is None:
-        bands = 1
-        for b in range(1, num_hashes + 1):
-            if num_hashes % b:
-                continue
-            r = num_hashes // b
-            if (1.0 / b) ** (1.0 / r) >= threshold:
-                bands = b
-        bands = max(bands, 1)
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn
-    ).withColumnRenamed(id_col, "_id")
-    # Production (staged) path only — see the `staged` comment below:
-    # materialize signatures ONCE: downstream they are scanned up to
-    # four times (banding for the self-join — twice without exchange
-    # reuse — plus the est-margin sides), and every scan would re-run
-    # the whole shingle-explode + num_hashes-min-agg pipeline from the
-    # corpus.  The table is (id, num_hashes longs) — the narrowest
-    # artifact of the whole recipe, so its materialization cost is a
-    # fraction of ONE recomputation; localCheckpoint (not persist) is
-    # GC-scoped, so repeated calls don't accumulate session cache.
-    if (
+        bands = _knee_bands(num_hashes, threshold)
+    # The production path (any of the candidate-thinning knobs set —
+    # the q576 recipe) is STAGED: signatures and the surviving pair
+    # table are each materialized once, and shingle sets are built for
+    # CANDIDATE ids only.  The uncapped exact-contract path (q46: every
+    # knob None) keeps the original single lazy plan: its candidate set
+    # is by-design super-linear (VERDICT r06), so materializing it + the
+    # id-set semi-join costs MORE than the exchange reuse Catalyst
+    # already finds in the one-plan shape (measured 4.5 s → 9.9 s at
+    # sf0.1 when staged — the staging is a win only when candidates are
+    # thinned).
+    staged = (
         max_bucket_size is not None
         or est_margin is not None
         or verify_sample_mod is not None
-    ):
-        # lazy: materialized by the first action that reaches it (the
+    )
+    sigs = minhash_signatures(
+        df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn
+    ).withColumnRenamed(id_col, "_id")
+    if staged:
+        # materialize signatures ONCE: downstream they are scanned up to
+        # four times (banding for the self-join — twice without exchange
+        # reuse — plus the est-margin sides), and every scan would re-run
+        # the whole shingle-explode + num_hashes-min-agg pipeline from the
+        # corpus.  The table is (id, num_hashes longs) — the narrowest
+        # artifact of the whole recipe, so its materialization cost is a
+        # fraction of ONE recomputation; localCheckpoint (not persist) is
+        # GC-scoped, so repeated calls don't accumulate session cache.
+        # Lazy: materialized by the first action that reaches it (the
         # verify/cluster chain), then every later scan reads the
         # checkpointed blocks — eager cost one standalone driver job
         sigs = sigs.localCheckpoint(eager=False)
@@ -406,66 +432,30 @@ def minhash_lsh_near_dup_pairs(
             .filter(agree >= F.lit(cut * num_hashes))
             .select("id_a", "id_b")
         )
-    # The production path (any of the candidate-thinning knobs set —
-    # the q576 recipe) is STAGED: the surviving pair table is
-    # materialized once (both the id prefilter below and the verify
-    # joins scan it, and each scan would re-run the banded self-join +
-    # est-margin signature joins), shingle sets are built for CANDIDATE
-    # ids only (an inner join on the pair table restricts to those ids
-    # anyway, but Spark would still shingle the whole corpus on both
-    # join sides), spread across cores before the per-shingle hash
-    # fan-out (few-file corpora scan as few partitions), and
-    # materialized ONCE — the a/b verify sides and the two sampled
-    # sides would otherwise each re-shingle from the raw text.
-    #
-    # The uncapped exact-contract path (q46: every knob None) keeps the
-    # original single lazy plan: its candidate set is by-design
-    # super-linear (VERDICT r06), so materializing it + the id-set
-    # semi-join costs MORE than the exchange reuse Catalyst already
-    # finds in the one-plan shape (measured 4.5 s → 9.9 s at sf0.1 when
-    # staged — the staging is a win only when candidates are thinned).
-    staged = (
-        max_bucket_size is not None
-        or est_margin is not None
-        or verify_sample_mod is not None
-    )
+    # Shingle sets are spread across cores before the per-shingle hash
+    # fan-out (few-file corpora scan as few partitions; on the one-plan
+    # path both verify sides derive from this one exchange via
+    # ReusedExchange — measured 4.1 s → 2.9 s at sf0.1 for q46;
+    # input-parallelism-gated, operators/_spread.py).
+    sh_src = df.select(F.col(id_col).alias("_sid"), F.col(text_col))
     if staged:
+        # the staged path materializes the surviving pair table once
+        # (both the id prefilter below and the verify joins scan it, and
+        # each scan would re-run the banded self-join + est-margin
+        # signature joins) and shingles CANDIDATE ids only (an inner
+        # join on the pair table restricts to those ids anyway, but
+        # Spark would still shingle the whole corpus on both join sides)
         cands = cands.localCheckpoint(eager=False)
         cand_ids = (
             cands.select(F.col("id_a").alias("_sid"))
             .unionByName(cands.select(F.col("id_b").alias("_sid")))
             .distinct()
         )
-        from graphmapreduce_spark.operators._spread import spread_by
-
-        sh_src = spread_by(
-            df.select(F.col(id_col).alias("_sid"), F.col(text_col))
-            .join(cand_ids, "_sid", "left_semi"),
-            F.col("_sid"),
-        )
-    else:
-        # no staging, but still spread rows before the shingle fan-out:
-        # both verify sides derive from this one exchange
-        # (ReusedExchange), so a few-file corpus no longer shingles
-        # serially (measured 4.1 s → 2.9 s at sf0.1 for q46;
-        # input-parallelism-gated, operators/_spread.py)
-        from graphmapreduce_spark.operators._spread import spread_by
-
-        sh_src = spread_by(
-            df.select(F.col(id_col).alias("_sid"), F.col(text_col)),
-            F.col("_sid"),
-        )
-    # verify on hashed shingle-id sets — value-identical to raw-shingle
-    # Jaccard (full 60/64-bit hash space: within-doc collision p < 1e-12,
-    # NOT the 31-bit signature space, whose ~2e-4/doc collision rate
-    # would visibly shrink sets) and ~40% narrower than string arrays
-    sh = sh_src.select(
+        sh_src = sh_src.join(cand_ids, "_sid", "left_semi")
+    sh = spread_by(sh_src, F.col("_sid")).select(
         "_sid",
-        F.array_distinct(
-            F.transform(
-                T.char_shingles(text_col, n=shingle_n, distinct=True),
-                lambda s: T._hash_col(s, hash_fn),
-            )
+        _shingle_ids(
+            T.char_shingles(text_col, n=shingle_n, distinct=True), hash_fn
         ).alias("_sh"),
     )
     # both paths lazily checkpoint the hashed shingle arrays: the a/b
@@ -475,76 +465,32 @@ def minhash_lsh_near_dup_pairs(
     # halves it, and on the uncapped one-plan path it is the ONLY
     # materialization (full staging measured worse there, see above)
     sh = sh.localCheckpoint(eager=False)
+    # with verify_sample_mod the sampled set rides along as a third
+    # column of each pair side — ONE join per side (a separate sampled
+    # table costs two extra joins over the pair table for nothing), and
+    # the sampled prefilter runs ahead of the full intersection inside
+    # the same codegen stage
+    sampled, prefilter = None, None
     if verify_sample_mod is not None:
-        # attach the sampled AND full shingle arrays in ONE join per
-        # pair side (the sampled set is a projection of the full array,
-        # so a separate sm table costs two extra joins over the pair
-        # table for nothing); the sampled prefilter then runs ahead of
-        # the full intersection inside the same codegen stage
         m = int(verify_sample_mod)
-        cut2 = max(0.0, threshold - verify_sample_margin)
-        sh2 = sh.select(
-            "_sid",
-            "_sh",
-            F.filter(
-                "_sh", lambda h: F.pmod(h, F.lit(m)) == 0
-            ).alias("_shs"),
-        )
-        a = sh2.select(
-            F.col("_sid").alias("id_a"),
-            F.col("_sh").alias("sh_a"),
-            F.col("_shs").alias("sm_a"),
-        )
-        b = sh2.select(
-            F.col("_sid").alias("id_b"),
-            F.col("_sh").alias("sh_b"),
-            F.col("_shs").alias("sm_b"),
-        )
-        uni = F.size(F.array_union("sm_a", "sm_b"))
-        sampled_j = (
-            F.size(F.array_intersect("sm_a", "sm_b")).cast("double") / uni
-        )
+        sampled = F.filter("_sh", lambda h: F.pmod(h, F.lit(m)) == 0)
         # short docs pass through un-prefiltered: with a sampled union
         # below ~8·mod the sampling sd (≈ sqrt(J(1-J)/uni)) exceeds the
         # margin and true near-dups would be false-dropped (e.g.
         # |A∪B|≈50, mod=4, J=0.8 → sd≈0.11 > 0.1); the exact verify
-        # below still filters them, so this costs recall nothing
-        min_uni = 8 * m
-        prefilter = (uni < F.lit(min_uni)) | (sampled_j >= cut2)
-        joined = (
-            cands.join(a, "id_a").join(b, "id_b").filter(prefilter)
-        )
-    else:
-        a = sh.select(
-            F.col("_sid").alias("id_a"), F.col("_sh").alias("sh_a")
-        )
-        b = sh.select(
-            F.col("_sid").alias("id_b"), F.col("_sh").alias("sh_b")
-        )
-        joined = cands.join(a, "id_a").join(b, "id_b")
-    verified = (
-        joined.withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return verified
+        # still filters them, so this costs recall nothing
+        cut2 = max(0.0, threshold - _VERIFY_SAMPLE_MARGIN)
+        prefilter = (
+            F.size(F.array_union("sm_a", "sm_b")) < F.lit(8 * m)
+        ) | (_jaccard("sm_a", "sm_b") >= cut2)
 
+    def side(k: str) -> DataFrame:
+        cols = [F.col("_sid").alias(f"id_{k}"), F.col("_sh").alias(f"sh_{k}")]
+        if sampled is not None:
+            cols.append(sampled.alias(f"sm_{k}"))
+        return sh.select(*cols)
 
-def _knee_bands(num_hashes: int, threshold: float) -> int:
-    """Largest divisor banding whose S-curve knee sits at ``threshold``
-    (the q46 rule, shared by all banded generators)."""
-    bands = 1
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b:
-            continue
-        r = num_hashes // b
-        if (1.0 / b) ** (1.0 / r) >= threshold:
-            bands = b
-    return max(bands, 1)
+    return _verify_jaccard(cands, side("a"), side("b"), threshold, prefilter)
 
 
 def build_near_dup_index(
@@ -576,11 +522,8 @@ def build_near_dup_index(
     ).select(F.col("_id").alias("corpus_id"), "band", "bucket")
     shingles_df = corpus.select(
         F.col(id_col).alias("corpus_id"),
-        F.array_distinct(
-            F.transform(
-                T.char_shingles(text_col, n=shingle_n, distinct=True),
-                lambda s: T._hash_col(s, hash_fn),
-            )
+        _shingle_ids(
+            T.char_shingles(text_col, n=shingle_n, distinct=True), hash_fn
         ).alias("_sh_corpus_id"),
     )
     return {
@@ -666,58 +609,34 @@ def incremental_near_dup_pairs(
             "incremental_near_dup_pairs needs either a corpus DataFrame"
             " or a corpus_index from build_near_dup_index"
         )
-    if corpus_index is not None:
-        num_hashes = corpus_index["num_hashes"]
-        bands = corpus_index["bands_n"]
-        shingle_n = corpus_index["shingle_n"]
-        seed = corpus_index["seed"]
-        hash_fn = corpus_index["hash_fn"]
-        cb = corpus_index["bands"]
-        corpus_sh = corpus_index["shingles"]
-    else:
-        if bands is None:
-            bands = _knee_bands(num_hashes, threshold)
-        idx = build_near_dup_index(
+    if corpus_index is None:
+        corpus_index = build_near_dup_index(
             corpus, id_col, text_col, threshold, num_hashes, bands,
             shingle_n, seed, hash_fn,
         )
-        cb = idx["bands"]
-        corpus_sh = idx["shingles"]
-    exact = hash_fn == "md5"
-
+    # banding parameters come from the index so batch and corpus buckets
+    # stay compatible
+    num_hashes = corpus_index["num_hashes"]
+    shingle_n = corpus_index["shingle_n"]
+    hash_fn = corpus_index["hash_fn"]
     bb = _band_rows(
         minhash_signatures(
-            batch, id_col, text_col, num_hashes, shingle_n, seed, hash_fn
+            batch, id_col, text_col, num_hashes, shingle_n,
+            corpus_index["seed"], hash_fn,
         ),
-        id_col, "sig", num_hashes, bands, exact,
+        id_col, "sig", num_hashes, corpus_index["bands_n"], hash_fn == "md5",
     ).select(F.col("_id").alias("batch_id"), "band", "bucket")
-    cands = bb.join(cb, ["band", "bucket"]).select(
+    cands = bb.join(corpus_index["bands"], ["band", "bucket"]).select(
         "batch_id", "corpus_id"
     ).distinct()
-
     batch_sh = batch.select(
         F.col(id_col).alias("batch_id"),
-        F.array_distinct(
-            F.transform(
-                T.char_shingles(text_col, n=shingle_n, distinct=True),
-                lambda s: T._hash_col(s, hash_fn),
-            )
+        _shingle_ids(
+            T.char_shingles(text_col, n=shingle_n, distinct=True), hash_fn
         ).alias("_sh_batch_id"),
     )
-    return (
-        cands.join(batch_sh, "batch_id")
-        .join(corpus_sh, "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.size(
-                F.array_intersect("_sh_batch_id", "_sh_corpus_id")
-            ).cast("double")
-            / F.size(F.array_union("_sh_batch_id", "_sh_corpus_id")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "batch_id", "corpus_id", F.round("jaccard", 6).alias("jaccard")
-        )
+    return _verify_jaccard(
+        cands, batch_sh, corpus_index["shingles"], threshold
     )
 
 
@@ -786,8 +705,9 @@ def dedup_clusters(
     fraction of a 100 TB corpus.  The closure is size-adaptive, the
     same budget logic Spark applies to broadcast joins:
 
-    - If the materialized pair table is within
-      ``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows (default
+    - If the pairs it will cluster (those whose ids both cast to a
+      long) number within
+      ``spark.graphmapreduce.clusterBroadcastMaxPairs`` (default
       1M ≈ 16 MB of long pairs — well under the broadcast-relation
       budget the session already grants every BHJ build side), the
       closure runs as an exact min-id union-find over the collected
@@ -832,7 +752,7 @@ def dedup_clusters(
     cap = int(
         spark.conf.get("spark.graphmapreduce.clusterBroadcastMaxPairs", "1000000")
     )
-    if edges.count() <= cap:
+    if nn.count() <= cap:
         # driver union-find — exactly the data volume a broadcast-join
         # build side would collect.  Collect through Arrow (toPandas):
         # two flat int64 buffers instead of per-pair Row objects, so the
@@ -1037,6 +957,46 @@ def simhash_near_dup_pairs(
     )
 
 
+def _shingle_index(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """The shingle inverted index of a corpus: per-doc distinct shingle
+    arrays ``sh`` (id, sh) and the index rows ``inv`` (id, g) exploded
+    from them."""
+    sh = df.select(
+        F.col(id_col).alias("id"),
+        T.char_shingles(text_col, n=n, distinct=True).alias("sh"),
+    )
+    return sh, sh.select("id", F.explode("sh").alias("g"))
+
+
+def _shingle_self_join(inv: DataFrame) -> DataFrame:
+    """The inverted-index self-join: one (id_a, id_b) row, id_a < id_b,
+    per indexed shingle the two documents share."""
+    a, b = inv.alias("a"), inv.alias("b")
+    return a.join(
+        b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
+    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+
+
+def _shared_shingle_counts(sh: DataFrame, inv: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, na, nb): ``inter`` shingles of ``inv`` shared
+    by the pair, counted by one groupBy over the self-join, plus both
+    documents' full set sizes from ``sh`` — full shingle arrays never
+    ship to pairs; only the scalar set sizes join in, so the pair table
+    stays narrow."""
+    sizes = sh.select("id", F.size("sh").alias("n_sh"))
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
+    return (
+        _shingle_self_join(inv)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -1049,8 +1009,7 @@ def ngram_jaccard_pairs(
 
     Candidate pairs AND their shared-shingle counts come from one
     groupBy over the inverted-index self-join (count = |A∩B| over the
-    indexed shingles) — full shingle arrays never ship to pairs; only
-    the scalar set sizes join in, so the pair table stays narrow.
+    indexed shingles, `_shared_shingle_counts`).
 
     ``max_df`` caps shingle document frequency in the index: a shingle
     appearing in more than ``max_df`` docs produces O(df²) join rows and
@@ -1071,12 +1030,7 @@ def ngram_jaccard_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold.
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        T.char_shingles(text_col, n=n, distinct=True).alias("sh"),
-    )
-    sizes = sh.select("id", F.size("sh").alias("n_sh"))
-    inv = sh.select("id", F.explode("sh").alias("g"))
+    sh, inv = _shingle_index(df, id_col, text_col, n)
     hot_by_doc = None
     if max_df is not None:
         hot = (
@@ -1089,24 +1043,14 @@ def ngram_jaccard_pairs(
         # output.  The probe is strictly cheaper than carrying three
         # dead pruning branches through the main job when the hot set
         # is empty.
-        if hot.limit(1).count() == 0:
-            hot_by_doc = None
-        else:
+        if hot.limit(1).count() > 0:
             hot_by_doc = (
                 inv.join(F.broadcast(hot), "g")
                 .groupBy("id")
                 .agg(F.collect_list("g").alias("hot_sh"))
             )
             inv = inv.join(F.broadcast(hot), "g", "left_anti")
-    a, b = inv.alias("a"), inv.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
-    pairs = pairs.join(sa, "id_a").join(sb, "id_b")
+    pairs = _shared_shingle_counts(sh, inv)
     if hot_by_doc is not None:
         ha = hot_by_doc.select(F.col("id").alias("id_a"), F.col("hot_sh").alias("hot_a"))
         hb = hot_by_doc.select(F.col("id").alias("id_b"), F.col("hot_sh").alias("hot_b"))
@@ -1178,7 +1122,6 @@ def remove_boilerplate_segments(
     delimiter: str = r"\n{2,}",
     min_df: int = 2,
     rejoin: str = "\n\n",
-    max_hot: int | None = 100_000,
 ) -> DataFrame:
     """Corpus-level boilerplate removal (RefinedWeb-style): split each
     doc into segments, drop every segment whose trimmed form appears in
@@ -1191,19 +1134,15 @@ def remove_boilerplate_segments(
 
     Scale shape: posexplode -> per-segment doc-frequency agg (two
     shuffles over segment text, map-side combinable) -> anti-join of
-    the hot set, broadcast-hinted when the CALLER asserts it is small
-    via ``max_hot`` (boilerplate vocabularies usually are; pass None to
-    let AQE/shuffle handle an unbounded hot set) -> one groupBy(id) to
-    reassemble.  No UDF, no driver data path.  ``max_hot`` is ONLY a
-    planning hint — no hot segment is ever dropped, so results never
-    depend on it.
+    the hot set, broadcast-hinted (boilerplate vocabularies are small)
+    -> one groupBy(id) to reassemble.  No UDF, no driver data path.
     """
     seg = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), delimiter)).alias("pos", "seg"),
     ).filter(F.trim(F.col("seg")) != "")
     key = F.trim(F.col("seg"))
-    hot = (
+    hot = F.broadcast(
         seg.select(key.alias("k"), F.col(id_col))
         .distinct()
         .groupBy("k")
@@ -1211,8 +1150,6 @@ def remove_boilerplate_segments(
         .filter(F.col("df") >= min_df)
         .select("k")
     )
-    if max_hot is not None:
-        hot = F.broadcast(hot)
     kept = seg.join(hot, key == F.col("k"), "left_anti")
     return kept.groupBy(id_col).agg(
         F.concat_ws(
@@ -1343,7 +1280,6 @@ def ngram_containment_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    max_df: int | None = None,
 ) -> DataFrame:
     """n-gram CONTAINMENT join — the asymmetric complement of
     `ngram_jaccard_pairs`: containment(A in B) = |A∩B| / |A|, the
@@ -1352,42 +1288,16 @@ def ngram_containment_pairs(
     and symmetric Jaccard stays low because the union is dominated by
     the large side.
 
-    Same inverted-index plan as the Jaccard join (shared-shingle counts
-    from one groupBy over the index self-join; only scalar set sizes
-    join onto the narrow pair table), same ``max_df`` hot-shingle
-    guard (here a hard cap: dropped shingles reduce counts — pass
-    ``None`` for the exact oracle-checked contract).
+    Same inverted-index plan as the uncapped Jaccard join
+    (`_shared_shingle_counts`: shared-shingle counts from one groupBy
+    over the index self-join; only scalar set sizes join onto the
+    narrow pair table); scores are exact.
 
     Returns (id_a, id_b, cont_a_in_b, cont_b_in_a) for pairs where
     EITHER direction reaches ``threshold``; id_a < id_b.
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        T.char_shingles(text_col, n=n, distinct=True).alias("sh"),
-    )
-    sizes = sh.select("id", F.size("sh").alias("n_sh"))
-    inv = sh.select("id", F.explode("sh").alias("g"))
-    if max_df is not None:
-        hot = (
-            inv.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("g")
-        )
-        inv = inv.join(F.broadcast(hot), "g", "left_anti")
-    a, b = inv.alias("a"), inv.alias("b")
-    pairs = (
-        a.join(
-            b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
     out = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shared_shingle_counts(*_shingle_index(df, id_col, text_col, n))
         .withColumn(
             "cont_a_in_b", F.col("inter").cast("double") / F.col("na")
         )
@@ -1434,11 +1344,7 @@ def ngram_jaccard_pairs_prefix(
     first, prefix-only inverted index self-join, then exact verification
     on full 60-bit-hashed shingle sets for the (small) candidate set.
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        T.char_shingles(text_col, n=n, distinct=True).alias("sh"),
-    )
-    inv = sh.select("id", F.explode("sh").alias("g"))
+    sh, inv = _shingle_index(df, id_col, text_col, n)
     dfreq = inv.groupBy("g").agg(F.count(F.lit(1)).alias("_df"))
     from pyspark.sql.window import Window as W
 
@@ -1454,34 +1360,11 @@ def ngram_jaccard_pairs_prefix(
     )
     prefix_len = F.col("_na") - F.ceil(F.lit(threshold) * F.col("_na")) + 1
     pref = ranked.filter(F.col("_rn") <= prefix_len).select("id", "g")
-    cands = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    hashed = sh.select(
-        "id",
-        F.array_distinct(
-            F.transform("sh", lambda s: T._hash_col(s, "md5"))
-        ).alias("_sh"),
-    )
+    cands = _shingle_self_join(pref).distinct()
+    hashed = sh.select("id", _shingle_ids(F.col("sh"), "md5").alias("_sh"))
     a = hashed.select(F.col("id").alias("id_a"), F.col("_sh").alias("sh_a"))
     b = hashed.select(F.col("id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_jaccard(cands, a, b, threshold)
 
 
 def duplicate_ngram_spans(
@@ -1519,8 +1402,6 @@ def duplicate_ngram_spans(
     # the exchange (ReusedExchange), so the hashing parallelizes in all
     # three consumers of the gram stream.  Input-parallelism-gated
     # (operators/_spread.py): a many-file corpus skips the shuffle.
-    from graphmapreduce_spark.operators._spread import spread_by
-
     df = spread_by(df.select(id_col, text_col), F.col(id_col))
     # bind the token array ONCE via a lambda variable (the per-index
     # slice lambda would otherwise re-evaluate the split per element —

@@ -125,10 +125,12 @@ def dedup_corpus(
          whose signature-estimated Jaccard is below
          threshold−margin before the shingle-set verify.  Both knobs
          are deterministic given the seed, hence oracle-replicable.
-      3. cluster: min-label connected components over the verified
-         pair graph (`dedup_clusters`) — O(cluster diameter)
-         supersteps on a pair table that is a tiny fraction of the
-         corpus.
+      3. cluster: connected components over the verified pair graph
+         (`dedup_clusters`), labeled by the component's min id.  Up to
+         ``spark.graphmapreduce.clusterBroadcastMaxPairs`` valid pairs
+         (default 1M) the closure is a driver union-find over the
+         collected pairs; above it, Pregel min-label propagation in
+         O(cluster diameter) supersteps.
       4. map-back: doc → exact rep → cluster label, one left join on
          the representative id, coalescing unique docs to themselves.
 

@@ -3550,9 +3550,7 @@ def q158_containment_join(spark, sf_dir):
     Jaccard under-fires because the union is dominated by the longer
     document.  Same inverted-index plan as q45."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return D.ngram_containment_pairs(
-        d, "doc_id", "text", n=3, threshold=0.8, max_df=None
-    )
+    return D.ngram_containment_pairs(d, "doc_id", "text", n=3, threshold=0.8)
 
 
 @register(

@@ -115,7 +115,7 @@ def test_minhash_lsh_sampled_verify_prefilter(docs):
     )
     pre = D.minhash_lsh_near_dup_pairs(
         docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
-        verify_sample_mod=4, verify_sample_margin=0.1,
+        verify_sample_mod=4,
     )
     e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
     p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
@@ -782,6 +782,67 @@ def test_incremental_near_dup_index_reuse(spark, docs, tmp_path):
     assert via_index == direct and len(direct) > 0
 
 
+def test_incremental_and_self_join_verify_agree(spark):
+    """Batch-vs-corpus and whole-corpus LSH share the knee banding, the
+    exact md5 buckets and the Jaccard verify, so the incremental pairs
+    are exactly the whole-corpus pairs that cross the split, with the
+    same scores."""
+    fox = "the quick brown fox jumps over the lazy dog"
+    spark_txt = "spark engines plan queries with catalyst rules and codegen"
+    rows = [
+        (1, fox),
+        (2, fox + " again"),
+        (3, fox.replace("lazy", "sleepy")),
+        (4, spark_txt),
+        (5, spark_txt.replace("codegen", "whole stage codegen")),
+        (6, "an unrelated note about tide tables and harbour pilots"),
+        (7, "the lazy dog jumps over the quick brown fox"),
+        (8, spark_txt + " today"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    corpus, batch = docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0")
+    kw = dict(threshold=0.5, num_hashes=32, hash_fn="md5")
+    inc = {
+        (min(r["batch_id"], r["corpus_id"]),
+         max(r["batch_id"], r["corpus_id"]), r["jaccard"])
+        for r in D.incremental_near_dup_pairs(
+            corpus, batch, "doc_id", "text", **kw
+        ).collect()
+    }
+    whole = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", **kw
+        ).collect()
+    }
+    cross = {p for p in whole if (p[0] % 2) != (p[1] % 2)}
+    assert inc == cross and len(inc) > 0
+
+
+def test_dedup_clusters_cap_counts_only_valid_pairs(spark, monkeypatch):
+    """The union-find vs Pregel choice counts the pairs that will be
+    clustered: rows whose ids cast to NULL are dropped by both paths,
+    so they must not push a small valid pair set over the cap."""
+    from graphmapreduce_spark.graph import algorithms
+
+    def no_pregel(*a, **k):
+        raise AssertionError("3 valid pairs must not take the Pregel path")
+
+    monkeypatch.setattr(algorithms, "connected_components", no_pregel)
+    pairs = spark.createDataFrame(
+        [("1", "2"), ("2", "3"), ("7", "8")]
+        + [("x", "9"), ("9", "y"), ("a", "b"), ("", "4"), ("5", "z")],
+        "id_a string, id_b string",
+    )
+    key = "spark.graphmapreduce.clusterBroadcastMaxPairs"
+    spark.conf.set(key, "3")
+    try:
+        got = {r["id"]: r["cluster"] for r in D.dedup_clusters(pairs).collect()}
+    finally:
+        spark.conf.unset(key)
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
 def test_sampled_verify_passes_short_docs_through(spark):
     """ADVICE r05: with a sampled union below ~8·mod the prefilter's
     sampling sd exceeds the margin, so SHORT docs must bypass it —
@@ -796,8 +857,7 @@ def test_sampled_verify_passes_short_docs_through(spark):
     kw = dict(threshold=0.5, num_hashes=32, bands=16)
     exact = D.minhash_lsh_near_dup_pairs(docs, "doc_id", "text", **kw)
     pre = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", verify_sample_mod=4,
-        verify_sample_margin=0.1, **kw
+        docs, "doc_id", "text", verify_sample_mod=4, **kw
     )
     e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
     p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
