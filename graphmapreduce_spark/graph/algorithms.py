@@ -21,14 +21,22 @@ Reference quirks deliberately normalized (SURVEY.md §7.4):
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from graphmapreduce_spark.graph.iterate import Rounds, fixpoint, persisted
+from graphmapreduce_spark.graph.iterate import (
+    LocalGraph,
+    Rounds,
+    fixpoint,
+    local_fixpoint,
+    persisted,
+    planned,
+)
 from graphmapreduce_spark.graph.pregel import (
     MAX_ITERATION,
     THRESHOLD,
@@ -75,7 +83,35 @@ def sssp(
     """Single-source shortest paths.  Returns (id, distance); unreachable
     vertices keep +inf.  Frontier-filtered: only vertices whose distance
     improved last superstep relax their out-edges (the optimization the
-    reference left disabled — ``graph.h:760-762``)."""
+    reference left disabled — ``graph.h:760-762``).  A graph within the
+    driver budget runs the same relaxation as numpy on the driver
+    (``_min_plus_local``; tier (a), see ``graph/iterate.py``)."""
+    with persisted(graph.edges):
+        lg = LocalGraph.collect(graph, weighted=True)
+        if lg is not None:
+            init = np.where(lg.valid & (lg.key == source), 0.0, np.inf)
+            dist = _min_plus_local(
+                lg,
+                init,
+                threshold=threshold,
+                max_iter=max_iter,
+                check_interval=check_interval,
+            )
+            return lg.frame("distance", dist)
+        return _sssp_pregel(
+            graph, source, threshold, max_iter, check_interval,
+            broadcast_vertices,
+        )
+
+
+def _sssp_pregel(
+    graph: PropertyGraph,
+    source: int,
+    threshold: float,
+    max_iter: int,
+    check_interval: int,
+    broadcast_vertices: bool,
+) -> DataFrame:
     init = graph.vertices.select(
         "id",
         F.when(F.col("id") == source, 0.0)
@@ -105,6 +141,47 @@ def sssp(
     )
     res = pregel.run(init, graph.edges)
     return res.vertices.select("id", F.col("value").alias("distance"))
+
+
+def _min_plus_local(
+    lg: LocalGraph,
+    value: np.ndarray,
+    *,
+    threshold: float,
+    max_iter: int,
+    check_interval: int,
+) -> np.ndarray:
+    """Tier (a) of the frontier relaxation ``sssp`` runs through
+    ``Pregel``: per superstep the active vertices (``delta >
+    threshold``; all at the start) whose value is neither NaN nor +inf
+    send value + weight along their out-edges, ``np.fmin.at`` takes
+    each vertex's least message, and the update is ``fmin(old, msg)`` —
+    Spark's ``min``/``least`` order NaN above every number, which is
+    ``fmin``'s rule.  An unchanged value (inf → inf too) has delta 0,
+    else |new − old|.  Edges with an endpoint that is not a vertex
+    carry nothing.  Returns the final values."""
+    live = (lg.src >= 0) & (lg.dst >= 0)
+    src, dst, weight = lg.src[live], lg.dst[live], lg.weight[live]
+
+    def step(state):
+        old, delta = state
+        send = (delta > threshold) & ~np.isnan(old) & (old != np.inf)
+        m = send[src]
+        msg = np.full(len(old), np.inf)
+        np.fmin.at(msg, dst[m], old[src[m]] + weight[m])
+        new = np.fmin(old, msg)
+        with np.errstate(invalid="ignore"):
+            delta = np.where(new == old, 0.0, np.abs(new - old))
+        return (new, delta), delta
+
+    res = local_fixpoint(
+        (value, np.full(len(value), np.inf)),
+        step,
+        max_iter=max_iter,
+        threshold=threshold,
+        check_interval=check_interval,
+    )
+    return res.state[0]
 
 
 # ---------------------------------------------------------------------------
@@ -176,6 +253,11 @@ def pagerank(
     exact-iteration parity needs max_iter % check_interval == 0; with a
     reachable threshold the loop may overshoot up to interval-1 extra
     (harmless for fixpoint updates, so cover-style only).
+
+    A graph within the driver budget skips all of the above: it is
+    collected once and the same supersteps run as numpy on the driver
+    (``_rank_local``; tier (a), see ``graph/iterate.py``).  An empty
+    graph returns an empty (id, rank) frame.
     """
     if reference_compat:
         damping = REFERENCE_DAMPING
@@ -184,9 +266,6 @@ def pagerank(
     # cache manager serves them all from this one materialization
     with persisted(graph.edges):
         edges = graph.edges
-        # one job builds the (id, out_degree) state; the vertex count is
-        # then a near-free count() on the checkpointed RDD instead of a
-        # separate scan of the vertex-derivation pipeline
         if weighted:
             strength = edges.groupBy(F.col("src").alias("id")).agg(
                 F.sum("weight").alias("out_degree")
@@ -195,10 +274,33 @@ def pagerank(
                 graph.vertices.select("id")
                 .join(strength, "id", "left")
                 .withColumn("out_degree", F.coalesce("out_degree", F.lit(0.0)))
-                .localCheckpoint(eager=True)
             )
         else:
-            deg = graph.out_degrees().localCheckpoint(eager=True)
+            deg = graph.out_degrees()
+        deg = planned(deg)
+        lg = LocalGraph.collect(graph, weighted)
+        if lg is not None:
+            n = lg.n
+            out = lg.out_degree(weighted)
+            if n == 0:
+                return lg.frame("rank", out)
+            dangling = handle_dangling and bool((out == 0).any())
+            return _rank_local(
+                lg,
+                np.full(n, 1.0 / n),
+                out,
+                lambda mass: (1.0 - damping) / n + damping / n * mass,
+                damping=damping,
+                dangling=dangling,
+                weighted=weighted,
+                max_iter=max_iter,
+                threshold=threshold,
+                check_interval=check_interval,
+            )
+        # one job builds the (id, out_degree) state; the vertex count is
+        # then a near-free count() on the checkpointed RDD instead of a
+        # separate scan of the vertex-derivation pipeline
+        deg = deg.localCheckpoint(eager=True)
         # one O(1) action reads BOTH the vertex count and the dangling
         # count off the checkpointed degree table.  When the graph has no
         # dangling vertices the per-superstep dangling-mass aggregate is
@@ -210,6 +312,8 @@ def pagerank(
             F.count(F.lit(1)),
             F.sum((F.col("out_degree") == 0).cast("long")),
         ).first()
+        if n == 0:
+            return deg.select("id", F.lit(0.0).alias("rank"))
         handle_dangling = bool(handle_dangling and (n_dangling or 0) > 0)
         base = F.lit((1.0 - damping) / n)
         if handle_dangling:
@@ -248,6 +352,9 @@ def _rank_fixpoint(
     ``_dangling`` mass when ``dangling``).  ``ranks`` carries
     (id, out_degree, rank); returns (id, rank).
 
+    This is the distributed tier; graphs within the driver budget never
+    reach it (``_rank_local`` runs the same superstep on the driver).
+
     NOTE (r08, measured): this loop deliberately does NOT use
     pregel.single_job_chunk.  Its loop-carried state is one row per
     vertex of a contracted graph (500 rows on the benched Z₅₀₀ input) —
@@ -256,6 +363,9 @@ def _rank_fixpoint(
     one-exchange-per-superstep chunk plan (A/B min-of-7 back-to-back:
     2.61-3.12 s AQE path vs 3.61 s single-job chunks at sf0.1).  The
     WCC/Pregel loops, whose state is corpus-sized, win the other way.
+    Such small states now take tier (a) at the default budget (driver
+    budget 0 brings them back here); the note holds for states between
+    the budget and the AQE path's broadcast limit.
     """
     share = (
         F.col("rank") * F.col("weight") / F.col("out_degree")
@@ -299,6 +409,49 @@ def _rank_fixpoint(
         tag=tag,
     )
     return res.state.select("id", "rank")
+
+
+def _rank_local(
+    lg: LocalGraph,
+    rank: np.ndarray,
+    deg: np.ndarray,
+    base: Callable[[float], np.ndarray | float],
+    *,
+    damping: float,
+    dangling: bool,
+    max_iter: int,
+    threshold: float,
+    check_interval: int,
+    weighted: bool = False,
+) -> DataFrame:
+    """Tier (a) of `_rank_fixpoint`: the same superstep as numpy on the
+    collected graph.  A vertex with ``deg > 0`` sends rank·w/deg (or
+    rank/deg) along each out-edge to a vertex; ``np.bincount`` sums them
+    per dst; rank' = base(mass) + d·in_sum, where ``base`` is the
+    caller's teleport term and mass the rank on ``deg == 0`` vertices
+    (0 unless ``dangling``); delta = |rank' − rank|.  Returns (id,
+    rank)."""
+    live = (lg.src >= 0) & (lg.dst >= 0)
+    live[live] = deg[lg.src[live]] > 0
+    src, dst = lg.src[live], lg.dst[live]
+    src_deg = deg[src]
+    weight = lg.weight[live] if weighted else None
+    sinks = deg == 0
+
+    def step(r):
+        share = r[src] * weight / src_deg if weighted else r[src] / src_deg
+        in_sum = np.bincount(dst, weights=share, minlength=len(r))
+        new = base(r[sinks].sum() if dangling else 0.0) + damping * in_sum
+        return new, np.abs(new - r)
+
+    res = local_fixpoint(
+        rank,
+        step,
+        max_iter=max_iter,
+        threshold=threshold,
+        check_interval=check_interval,
+    )
+    return lg.frame("rank", res.state)
 
 
 def _min_label(vertices: DataFrame, edges: DataFrame, **opts):
@@ -1481,7 +1634,22 @@ def personalized_pagerank(
     e_v = 1.0 / len(srcs)
 
     with persisted(graph.edges):
-        deg = graph.out_degrees().localCheckpoint(eager=True)
+        deg = planned(graph.out_degrees())
+        lg = LocalGraph.collect(graph, weighted=False)
+        if lg is not None:
+            restart = np.where(lg.valid & np.isin(lg.key, srcs), e_v, 0.0)
+            return _rank_local(
+                lg,
+                restart,
+                lg.out_degree(),
+                lambda mass: ((1.0 - damping) + damping * mass) * restart,
+                damping=damping,
+                dangling=True,
+                max_iter=max_iter,
+                threshold=threshold,
+                check_interval=check_interval,
+            )
+        deg = deg.localCheckpoint(eager=True)
         restart = F.when(F.col("id").isin(srcs), F.lit(e_v)).otherwise(0.0)
         return _rank_fixpoint(
             graph.edges,

@@ -21,6 +21,19 @@ lineage, and votes to halt:
   PageRank family: ``check_interval`` supersteps chained behind lazy
   ``localCheckpoint``s, then ONE ``max(delta)`` action per chunk that
   both tests the vote-to-halt and materializes the chunk.
+
+Loops run on one of two tiers:
+
+- (a) **driver-local**: a graph whose edge and vertex tables both fit
+  the driver budget (``driver_local``) is collected once via Arrow
+  (``LocalGraph``) and the loop runs as numpy on the driver
+  (``local_fixpoint``, the twin of ``fixpoint``) — GMR's own shape, a
+  superstep as array code over the vertices one process owns
+  (``gmr.h:282-367``).  No Spark job, checkpoint or sever per
+  superstep.  ``pagerank``, ``personalized_pagerank``, ``sssp`` and
+  ``bfs`` take it;
+- (b)/(c) **distributed**: every other loop, and the same four above
+  the budget — Spark supersteps through ``fixpoint`` and ``Rounds``.
 """
 
 from __future__ import annotations
@@ -29,9 +42,14 @@ import time
 from collections.abc import Callable
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
+from typing import Any
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from graphmapreduce_spark.graph.sever import SEVER_INTERVAL, LineageSeverer
@@ -54,6 +72,17 @@ def persisted(df: DataFrame, base: DataFrame | None = None):
     finally:
         if cached:
             df.unpersist()
+
+
+def planned(df: DataFrame) -> DataFrame:
+    """``df`` with its size estimate taken now.  A frame built over a
+    persisted edge table is estimated from the source plan while the
+    cache is empty and from the cached size once it is filled.  Loops
+    whose first action used to fill the cache take their state's
+    estimate here, before tier (a)'s gate fills it, so their broadcast
+    choices stay what they were without the gate."""
+    df._jdf.queryExecution().optimizedPlan().stats()
+    return df
 
 
 class Rounds:
@@ -83,7 +112,8 @@ class Rounds:
 
 @dataclass
 class Fixpoint:
-    state: DataFrame
+    # a DataFrame from ``fixpoint``; ``local_fixpoint``'s numpy state
+    state: Any
     iterations: int
     converged: bool
     deltas: list[float]
@@ -141,3 +171,161 @@ def fixpoint(
         deltas.append(float(max_delta) if max_delta is not None else 0.0)
         converged = max_delta is None or max_delta <= threshold
     return Fixpoint(state, it, converged, deltas, seconds)
+
+
+def local_fixpoint(
+    state,
+    step: Callable,
+    *,
+    max_iter: int,
+    threshold: float,
+    check_interval: int = 1,
+) -> Fixpoint:
+    """Tier (a)'s twin of ``fixpoint``: ``step(state) -> (state, delta)``
+    runs one superstep as numpy, ``delta`` one float per vertex.  The
+    vote ``max(delta) <= threshold`` is taken at the same chunk
+    boundaries as ``fixpoint`` (every ``check_interval`` supersteps and
+    at ``max_iter``), so both tiers overshoot and stop on the same
+    supersteps.  As with Spark's ``max``, no vertices votes to halt and
+    a NaN delta votes to go on."""
+    check_interval = max(1, check_interval)
+    deltas: list[float] = []
+    seconds: list[float] = []
+    it = 0
+    converged = False
+    while it < max_iter and not converged:
+        t0 = time.perf_counter()
+        for _ in range(min(check_interval, max_iter - it)):
+            state, delta = step(state)
+            it += 1
+        max_delta = float(delta.max()) if delta.size else None
+        seconds.append(round(time.perf_counter() - t0, 4))
+        deltas.append(max_delta if max_delta is not None else 0.0)
+        converged = max_delta is None or max_delta <= threshold
+    return Fixpoint(state, it, converged, deltas, seconds)
+
+
+DRIVER_BUDGET_KEY = "spark.graphmapreduce.clusterBroadcastMaxPairs"
+
+
+def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
+    """Tier (a)'s one gate: ``df`` collected to the driver via Arrow when
+    its rows fit the driver budget, else ``None``.
+
+    The budget is ``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows
+    (default 1M ≈ 16 MB of long pairs — well under the broadcast-relation
+    budget the session already grants every BHJ build side); ``0`` turns
+    tier (a) off.  ``rows`` is ``df``'s row count when the caller has
+    it (then only a frame that fits is collected); without it, at most
+    budget + 1 rows are collected and a frame with more returns ``None``.
+    """
+    cap = int(df.sparkSession.conf.get(DRIVER_BUDGET_KEY, "1000000"))
+    if cap <= 0 or (rows is not None and rows > cap):
+        return None
+    if rows is not None:
+        return df.toArrow()
+    table = df.limit(cap + 1).toArrow()
+    return table if table.num_rows <= cap else None
+
+
+def _count_rows(df: DataFrame) -> int:
+    """``df.count()`` as one RDD count job: under AQE ``DataFrame.count``
+    plans a two-stage aggregate, two more jobs on top of the one that
+    fills ``df``'s cache."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _positions(col: pa.Array, keys: np.ndarray, order: np.ndarray) -> np.ndarray:
+    """Position in the vertex table of each id in ``col``; -1 for a null
+    id or one that is not a vertex.  ``keys`` are the non-null vertex
+    ids sorted, ``order`` their positions."""
+    x = pc.fill_null(col, 0).to_numpy()
+    if not len(keys):
+        return np.full(len(x), -1, dtype=np.int64)
+    i = np.minimum(np.searchsorted(keys, x), len(keys) - 1)
+    hit = col.is_valid().to_numpy(zero_copy_only=False) & (keys[i] == x)
+    return np.where(hit, order[i], -1)
+
+
+@dataclass
+class LocalGraph:
+    """A graph collected for tier (a).  ``ids`` keeps the vertex ids as
+    Arrow for the output (a null id stays null); ``key``/``valid`` are
+    the same ids as numpy.  Each edge's ``src``/``dst`` is a position in
+    ``ids``, -1 where the endpoint is null or not a vertex — the
+    endpoints the distributed tier's joins drop."""
+
+    spark: SparkSession
+    id_field: StructField
+    ids: pa.Array
+    key: np.ndarray
+    valid: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    weight: np.ndarray | None
+
+    @classmethod
+    def collect(cls, graph, weighted: bool) -> "LocalGraph | None":
+        """``graph`` collected when both its tables fit the driver
+        budget, else ``None``.  Call inside ``persisted(graph.edges)``:
+        the edge count is the job that fills the cache the distributed
+        tier's loop reads.  Graphs with duplicate vertex ids or, when
+        ``weighted``, null or non-finite weights also return ``None`` —
+        they stay on the distributed tier."""
+        cols = ["src", "dst", "weight"] if weighted else ["src", "dst"]
+        edges = driver_local(
+            graph.edges.select(*cols), _count_rows(graph.edges)
+        )
+        if edges is None:
+            return None
+        vertices = driver_local(graph.vertices.select("id"))
+        if vertices is None:
+            return None
+        ids = vertices.column("id").combine_chunks()
+        key = pc.fill_null(ids, 0).to_numpy()
+        valid = ids.is_valid().to_numpy(zero_copy_only=False)
+        order = np.flatnonzero(valid)
+        order = order[np.argsort(key[order], kind="stable")]
+        keys = key[order]
+        if ids.null_count > 1 or np.any(keys[1:] == keys[:-1]):
+            return None
+        weight = None
+        if weighted:
+            w = edges.column("weight").combine_chunks()
+            weight = pc.fill_null(w, 0.0).to_numpy()
+            if w.null_count or not np.isfinite(weight).all():
+                return None
+        return cls(
+            spark=graph.spark,
+            id_field=graph.vertices.schema["id"],
+            ids=ids,
+            key=key,
+            valid=valid,
+            src=_positions(edges.column("src").combine_chunks(), keys, order),
+            dst=_positions(edges.column("dst").combine_chunks(), keys, order),
+            weight=weight,
+        )
+
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
+    def out_degree(self, weighted: bool = False) -> np.ndarray:
+        """Out-degree (out-strength when ``weighted``) per vertex: every
+        edge whose src is a vertex counts, whatever its dst — as the
+        distributed tier's ``groupBy(src)`` joined to the vertices."""
+        out = self.src >= 0
+        return np.bincount(
+            self.src[out],
+            weights=self.weight[out] if weighted else None,
+            minlength=self.n,
+        ).astype(np.float64)
+
+    def frame(self, name: str, values: np.ndarray) -> DataFrame:
+        """(id, ``name``) as one small local DataFrame, with the
+        distributed tier's schema."""
+        schema = StructType(
+            [self.id_field, StructField(name, DoubleType(), False)]
+        )
+        table = pa.table({"id": self.ids, name: pa.array(values, pa.float64())})
+        return self.spark.createDataFrame(table, schema)

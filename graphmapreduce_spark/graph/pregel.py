@@ -32,6 +32,13 @@ Scale notes:
 - ``active_frontier=True`` implements the optimization the reference left
   disabled as a TODO (send only active vertices, ``graph.h:760-762``):
   only vertices whose value changed last superstep produce messages.
+
+This is the distributed tier.  Graphs within the driver budget
+(``iterate.driver_local``) run ``sssp``/``bfs`` as a numpy frontier
+kernel on the driver instead (``algorithms._min_plus_local``), with the
+same active set, update and vote; ``Pregel.run`` serves the graphs
+above the budget and the loops without a driver kernel (WCC/SCC's
+``_min_label``, Brandes levels).
 """
 
 from __future__ import annotations

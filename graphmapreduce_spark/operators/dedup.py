@@ -706,12 +706,11 @@ def dedup_clusters(
     same budget logic Spark applies to broadcast joins:
 
     - If the pairs it will cluster (those whose ids both cast to a
-      long) number within
-      ``spark.graphmapreduce.clusterBroadcastMaxPairs`` (default
-      1M ≈ 16 MB of long pairs — well under the broadcast-relation
-      budget the session already grants every BHJ build side), the
-      closure runs as an exact min-id union-find over the collected
-      pairs and ships back as one small mapping table.  An iterative
+      long) fit the driver budget that ``graph/iterate.py::driver_local``
+      owns (``spark.graphmapreduce.clusterBroadcastMaxPairs``, default
+      1M ≈ 16 MB of long pairs; 0 turns it off), the closure runs as an
+      exact min-id union-find over the pairs collected via Arrow and
+      ships back as one small mapping table.  An iterative
       Pregel loop on a graph this size is pure superstep overhead:
       every superstep costs a full stage wave regardless of row count
       (measured: ~6 s for a 241-pair graph at sf0.1 vs ~0.3 s via the
@@ -729,6 +728,7 @@ def dedup_clusters(
     fallback never recomputes the (expensive) pair derivation.
     """
     from graphmapreduce_spark.graph.algorithms import connected_components
+    from graphmapreduce_spark.graph.iterate import driver_local
     from graphmapreduce_spark.graph.property_graph import PropertyGraph
 
     spark = pairs.sparkSession
@@ -749,13 +749,11 @@ def dedup_clusters(
     nn = edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    cap = int(
-        spark.conf.get("spark.graphmapreduce.clusterBroadcastMaxPairs", "1000000")
-    )
-    if nn.count() <= cap:
+    local = driver_local(nn, nn.count())
+    if local is not None:
         # driver union-find — exactly the data volume a broadcast-join
-        # build side would collect.  Collect through Arrow (toPandas):
-        # two flat int64 buffers instead of per-pair Row objects, so the
+        # build side would collect.  Collected through Arrow: two flat
+        # int64 buffers instead of per-pair Row objects, so the
         # transfer itself is ~16 B/pair; the dominant driver footprint
         # is the union-find dict (≤ 2 ints per distinct id — measured
         # 172 MiB at the 1M-pair cap with 2M distinct ids, inside the
@@ -763,7 +761,6 @@ def dedup_clusters(
         # side)
         import pandas as pd
 
-        pdf = nn.toPandas()
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -775,7 +772,7 @@ def dedup_clusters(
             return root
 
         for a, b in zip(
-            pdf["src"].to_numpy().tolist(), pdf["dst"].to_numpy().tolist()
+            local.column("src").to_pylist(), local.column("dst").to_pylist()
         ):
             if a not in parent:
                 parent[a] = a

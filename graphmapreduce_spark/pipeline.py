@@ -126,9 +126,10 @@ def dedup_corpus(
          threshold−margin before the shingle-set verify.  Both knobs
          are deterministic given the seed, hence oracle-replicable.
       3. cluster: connected components over the verified pair graph
-         (`dedup_clusters`), labeled by the component's min id.  Up to
-         ``spark.graphmapreduce.clusterBroadcastMaxPairs`` valid pairs
-         (default 1M) the closure is a driver union-find over the
+         (`dedup_clusters`), labeled by the component's min id.  Within
+         the driver budget (``graph/iterate.py::driver_local``:
+         ``spark.graphmapreduce.clusterBroadcastMaxPairs`` valid pairs,
+         default 1M) the closure is a driver union-find over the
          collected pairs; above it, Pregel min-label propagation in
          O(cluster diameter) supersteps.
       4. map-back: doc → exact rep → cluster label, one left join on

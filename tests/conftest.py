@@ -1,6 +1,7 @@
 import os
 import sys
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
@@ -72,3 +73,47 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _driver_budget(spark, value):
+    """Set the driver budget of ``graph/`` for the block, then restore
+    it; ``None`` keeps the current value."""
+    from graphmapreduce_spark.graph.iterate import DRIVER_BUDGET_KEY
+
+    prev = spark.conf.get(DRIVER_BUDGET_KEY, None)
+    if value is not None:
+        spark.conf.set(DRIVER_BUDGET_KEY, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(DRIVER_BUDGET_KEY)
+        else:
+            spark.conf.set(DRIVER_BUDGET_KEY, prev)
+
+
+@pytest.fixture
+def distributed_tier(spark):
+    """Keep the test's graph loops on the distributed tier: budget 0
+    turns the driver-local tier off."""
+    yield from _driver_budget(spark, "0")
+
+
+@pytest.fixture(scope="module")
+def distributed_tier_module(spark):
+    """``distributed_tier`` for every test of a module."""
+    yield from _driver_budget(spark, "0")
+
+
+@pytest.fixture
+def graph_tiers(spark):
+    """``for tier in graph_tiers():`` runs a test body on both tiers of
+    ``graph/``: "driver" (the default budget) then "distributed"
+    (budget 0)."""
+
+    def tiers():
+        for tier, budget in (("driver", None), ("distributed", "0")):
+            with contextmanager(_driver_budget)(spark, budget):
+                yield tier
+
+    return tiers

@@ -19,6 +19,7 @@ from tools.check_oracle import (  # noqa: E402
     duck_bucket,
     duck_describe,
     legacy_cell,
+    parse_args,
     spark_bucket,
     strict_cell,
     type_surface_diff,
@@ -97,3 +98,19 @@ def test_duck_describe_surfaces_hugeint_statically():
     assert duck_bucket(got["s"]) == "hugeint"
     assert duck_bucket(got["sb"]) == "int"
     con.close()
+
+
+def test_conf_flag_is_repeatable_and_kept_apart_from_queries():
+    """``--conf key=value`` (repeatable) goes to the session conf, not
+    to the positional sf_dir/query list."""
+    import pytest
+
+    pos, flags, conf = parse_args([
+        "/data/sf0.01", "--conf", "a.b=0", "q32_pagerank",
+        "--types-only", "--conf", "c=x=y",
+    ])
+    assert pos == ["/data/sf0.01", "q32_pagerank"]
+    assert flags == {"--types-only"}
+    assert conf == {"a.b": "0", "c": "x=y"}
+    with pytest.raises(SystemExit):
+        parse_args(["--conf", "novalue"])

@@ -251,10 +251,16 @@ def test_kmeans_sorted_clustered_input_recovers_all_clusters(spark):
     assert len(set(labels)) == 3, labels
 
 
-def test_pregel_check_interval_equivalent(spark):
+def test_pregel_check_interval_equivalent(spark, graph_tiers):
     """Chunked vote-to-halt (check_interval>1) must land on the same
     fixpoint as per-superstep checking for idempotent (min/cover)
-    updates — overshoot past convergence changes nothing."""
+    updates — overshoot past convergence changes nothing.  Checked on
+    both tiers of graph/."""
+    for _ in graph_tiers():
+        _check_interval_equivalent(spark)
+
+
+def _check_interval_equivalent(spark):
     g = make_graph(spark, PATH5)
     base = {r["id"]: r["distance"] for r in alg.sssp(g, source=1).collect()}
     chunk = {
@@ -966,7 +972,9 @@ def test_lineage_severer_dir_removed_at_exit_after_gc(spark):
     assert not os.path.exists(d)
 
 
-def test_sever_only_before_a_round_that_runs(spark, monkeypatch):
+def test_sever_only_before_a_round_that_runs(
+    spark, monkeypatch, distributed_tier
+):
     """Severs happen at the START of a round, so the cap never buys one
     nobody reads: 10 pagerank supersteps sever 0 times, 11 sever once
     (before superstep 11).  Borůvka severs every round after the first:
@@ -1137,7 +1145,7 @@ def test_cc_auto_off_truncates_like_before(spark):
     assert len(comps) > 1  # truncated: not yet a single component
 
 
-def test_pregel_single_job_chunk_equivalent(spark):
+def test_pregel_single_job_chunk_equivalent(spark, distributed_tier):
     """The size-adaptive single-job chunk path (AQE suspended during
     chunk construction, shuffle-hash-hinted joins, one action per
     chunk) must land on the same fixpoint as the per-superstep AQE

@@ -22,6 +22,10 @@ from graphmapreduce_spark.metrics import ShuffleTracker
 N = 120_000
 BUDGET_S = 240.0
 
+# 120k vertices fit the driver budget; these tests measure the
+# distributed tier's supersteps
+pytestmark = pytest.mark.usefixtures("distributed_tier_module")
+
 
 @pytest.fixture(scope="module")
 def big_graph(spark):

@@ -22,6 +22,10 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
        --legacy      old 9-significant-digit comparison (debug aid)
        --types-only  static type-surface sweep only (fast; no query
                      execution — Spark analysis + DuckDB DESCRIBE)
+       --conf key=value
+                     Spark conf for the session (repeatable), e.g.
+                     ``--conf spark.graphmapreduce.clusterBroadcastMaxPairs=0``
+                     runs the graph loops on the distributed tier
 """
 
 from __future__ import annotations
@@ -232,11 +236,30 @@ def duck_describe(con, sql):
     return [(r[0], r[1]) for r in rows]
 
 
+def parse_args(args: list[str]) -> tuple[list[str], set[str], dict[str, str]]:
+    """(positional args, flags, ``--conf`` settings) of the command line."""
+    positional: list[str] = []
+    flags: set[str] = set()
+    conf: dict[str, str] = {}
+    it = iter(args)
+    for a in it:
+        if a == "--conf":
+            setting = next(it, "")
+            key, sep, value = setting.partition("=")
+            if not key or not sep:
+                raise SystemExit(f"--conf expects key=value, got {setting!r}")
+            conf[key] = value
+        elif a.startswith("--"):
+            flags.add(a)
+        else:
+            positional.append(a)
+    return positional, flags, conf
+
+
 def main():
-    argv = [a for a in sys.argv[1:]]
-    legacy = "--legacy" in argv
-    types_only = "--types-only" in argv
-    argv = [a for a in argv if not a.startswith("--")]
+    argv, flags, conf = parse_args(sys.argv[1:])
+    legacy = "--legacy" in flags
+    types_only = "--types-only" in flags
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     cell = legacy_cell if legacy else strict_cell
@@ -254,6 +277,7 @@ def main():
         extra_conf={
             "spark.driver.maxResultSize": "8g",
             "spark.driver.memory": "24g",
+            **conf,
         },
     )
     con = duckdb.connect()
