@@ -80,7 +80,8 @@ def planned(df: DataFrame) -> DataFrame:
     cache is empty and from the cached size once it is filled.  Loops
     whose first action used to fill the cache take their state's
     estimate here, before tier (a)'s gate fills it, so their broadcast
-    choices stay what they were without the gate."""
+    choices stay what they were without the gate
+    (``tests/test_graph_tiers.py::test_rank_superstep_broadcasts_the_rank_side``)."""
     df._jdf.queryExecution().optimizedPlan().stats()
     return df
 
@@ -218,6 +219,14 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     tier (a) off.  ``rows`` is ``df``'s row count when the caller has
     it (then only a frame that fits is collected); without it, at most
     budget + 1 rows are collected and a frame with more returns ``None``.
+
+    The budget bounds driver memory, not speed: at its edge tier (a)
+    is still the faster tier.  Measured with ``tools/graph_tier_ab.py``
+    (graph-bsp's pagerank + sssp cycle, 4 cores, 3 paired runs): 1M
+    edges over 125k vertices 6.0 s vs 17.7 s distributed, 1M edges over
+    1M vertices 16.8 s vs 30.6 s, with at most 134 MiB of numpy and
+    48 MiB of Arrow on the driver; a numpy superstep there costs
+    8-37 ms.
     """
     cap = int(df.sparkSession.conf.get(DRIVER_BUDGET_KEY, "1000000"))
     if cap <= 0 or (rows is not None and rows > cap):
@@ -231,7 +240,8 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
 def _count_rows(df: DataFrame) -> int:
     """``df.count()`` as one RDD count job: under AQE ``DataFrame.count``
     plans a two-stage aggregate, two more jobs on top of the one that
-    fills ``df``'s cache."""
+    fills ``df``'s cache.  The RDD is fixed at ``df``'s first action, so
+    ``df`` must be a frame built after the cache it should fill."""
     return df._jdf.queryExecution().toRdd().count()
 
 
@@ -272,10 +282,14 @@ class LocalGraph:
         tier's loop reads.  Graphs with duplicate vertex ids or, when
         ``weighted``, null or non-finite weights also return ``None`` —
         they stay on the distributed tier."""
-        cols = ["src", "dst", "weight"] if weighted else ["src", "dst"]
-        edges = driver_local(
-            graph.edges.select(*cols), _count_rows(graph.edges)
+        # a new frame per call: a frame looks its plan up in the cache
+        # once, so counting ``graph.edges`` itself would, on a second
+        # call, count through the previous call's dropped cache and
+        # leave this call's empty
+        edges = graph.edges.select(
+            *(["src", "dst", "weight"] if weighted else ["src", "dst"])
         )
+        edges = driver_local(edges, _count_rows(edges))
         if edges is None:
             return None
         vertices = driver_local(graph.vertices.select("id"))

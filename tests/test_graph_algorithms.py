@@ -34,23 +34,26 @@ TWO_CC = [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (5, 6, 1.0), (6, 7, 1.0), (7, 8
 CYCLE = [(1, 2, 1.0), (2, 3, 1.0), (3, 2, 1.0)]
 
 
-def test_sssp_path(spark):
-    g = make_graph(spark, PATH5)
-    d = {r["id"]: r["distance"] for r in alg.sssp(g, 1).collect()}
-    assert d == {1: 0.0, 2: 1.0, 3: 3.0, 4: 6.0, 5: 10.0}
+def test_sssp_path(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, PATH5)
+        d = {r["id"]: r["distance"] for r in alg.sssp(g, 1).collect()}
+        assert d == {1: 0.0, 2: 1.0, 3: 3.0, 4: 6.0, 5: 10.0}
 
 
-def test_sssp_unreachable(spark):
-    g = make_graph(spark, TWO_CC)
-    d = {r["id"]: r["distance"] for r in alg.sssp(g, 1).collect()}
-    assert d[4] == 3.0
-    assert math.isinf(d[5]) and math.isinf(d[8])
+def test_sssp_unreachable(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, TWO_CC)
+        d = {r["id"]: r["distance"] for r in alg.sssp(g, 1).collect()}
+        assert d[4] == 3.0
+        assert math.isinf(d[5]) and math.isinf(d[8])
 
 
-def test_bfs_levels(spark):
-    g = make_graph(spark, TWO_CC)
-    lv = {r["id"]: r["level"] for r in alg.bfs(g, 5).collect()}
-    assert lv == {1: -1, 2: -1, 3: -1, 4: -1, 5: 0, 6: 1, 7: 2, 8: 3}
+def test_bfs_levels(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, TWO_CC)
+        lv = {r["id"]: r["level"] for r in alg.bfs(g, 5).collect()}
+        assert lv == {1: -1, 2: -1, 3: -1, 4: -1, 5: 0, 6: 1, 7: 2, 8: 3}
 
 
 def test_triangle_count_k4(spark):
@@ -71,20 +74,22 @@ def test_wcc_two_components(spark):
     assert c == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 5}
 
 
-def test_pagerank_cycle_sums_to_one(spark):
-    g = make_graph(spark, CYCLE)
-    pr = alg.pagerank(g, damping=0.85, max_iter=50, threshold=1e-10)
-    rows = {r["id"]: r["rank"] for r in pr.collect()}
-    assert abs(sum(rows.values()) - 1.0) < 1e-6
-    # spider trap 2↔3 absorbs most mass; 1 only gets teleport share
-    assert rows[1] < rows[2] < rows[3] or rows[1] < rows[3]
+def test_pagerank_cycle_sums_to_one(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, CYCLE)
+        pr = alg.pagerank(g, damping=0.85, max_iter=50, threshold=1e-10)
+        rows = {r["id"]: r["rank"] for r in pr.collect()}
+        assert abs(sum(rows.values()) - 1.0) < 1e-6
+        # spider trap 2↔3 absorbs most mass; 1 only gets teleport share
+        assert rows[1] < rows[2] < rows[3] or rows[1] < rows[3]
 
 
-def test_pagerank_uniform_on_symmetric(spark):
-    g = make_graph(spark, K4)
-    pr = {r["id"]: r["rank"] for r in alg.pagerank(g, max_iter=30).collect()}
-    for v in pr.values():
-        assert abs(v - 0.25) < 1e-6
+def test_pagerank_uniform_on_symmetric(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, K4)
+        pr = {r["id"]: r["rank"] for r in alg.pagerank(g, max_iter=30).collect()}
+        for v in pr.values():
+            assert abs(v - 0.25) < 1e-6
 
 
 def test_scc_cycle(spark):
@@ -496,27 +501,28 @@ def test_diameter_double_sweep_goldens(spark):
     assert diameter_double_sweep(star).first()["diameter_lb"] == 2
 
 
-def test_personalized_pagerank_localizes_to_seed(spark):
+def test_personalized_pagerank_localizes_to_seed(spark, graph_tiers):
     """Two disjoint triangles; restarting at vertex 1 puts ALL mass in
     its triangle and none in the other; rank sums to ~1."""
     from graphmapreduce_spark.graph.algorithms import personalized_pagerank
     from graphmapreduce_spark.graph.property_graph import PropertyGraph
 
-    tri_a = [(1, 2), (2, 3), (3, 1)]
-    tri_b = [(10, 11), (11, 12), (12, 10)]
-    g = PropertyGraph.from_edges(
-        spark.createDataFrame(tri_a + tri_b, "src long, dst long")
-    )
-    pr = {
-        r["id"]: r["rank"]
-        for r in personalized_pagerank(
-            g, sources=[1], max_iter=30, threshold=1e-10
-        ).collect()
-    }
-    assert abs(sum(pr.values()) - 1.0) < 1e-6
-    assert pr[10] == pr[11] == pr[12] == 0.0
-    assert pr[1] > pr[2] > 0  # seed holds the most mass
-    assert pr[3] > 0
+    for _ in graph_tiers():
+        tri_a = [(1, 2), (2, 3), (3, 1)]
+        tri_b = [(10, 11), (11, 12), (12, 10)]
+        g = PropertyGraph.from_edges(
+            spark.createDataFrame(tri_a + tri_b, "src long, dst long")
+        )
+        pr = {
+            r["id"]: r["rank"]
+            for r in personalized_pagerank(
+                g, sources=[1], max_iter=30, threshold=1e-10
+            ).collect()
+        }
+        assert abs(sum(pr.values()) - 1.0) < 1e-6
+        assert pr[10] == pr[11] == pr[12] == 0.0
+        assert pr[1] > pr[2] > 0  # seed holds the most mass
+        assert pr[3] > 0
 
 
 def test_label_propagation_two_cliques(spark):
@@ -726,37 +732,38 @@ def test_scc_chain_of_two_cycles_decomposes_logarithmically(spark):
     assert rounds <= 6, f"chain of {k} SCCs took {rounds} rounds"
 
 
-def test_weighted_pagerank_hand_computed(spark):
+def test_weighted_pagerank_hand_computed(spark, graph_tiers):
     """2-node closed form: A->B w=1, B->A w=1 is symmetric (rank 1/2
     each) regardless of weights on a symmetric graph; an asymmetric
     weighted star concentrates rank on the heavier target."""
     from graphmapreduce_spark.graph.property_graph import PropertyGraph
 
-    # A(1) splits rank 3:1 between B(2) and C(3); B,C return to A.
-    e = spark.createDataFrame(
-        [(1, 2, 3.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0)],
-        "src long, dst long, weight double",
-    )
-    g = PropertyGraph.from_edges(e)
-    pr = {r["id"]: r["rank"] for r in alg.pagerank(
-        g, damping=0.85, max_iter=40, threshold=1e-12, weighted=True
-    ).collect()}
-    assert abs(sum(pr.values()) - 1.0) < 1e-6
-    assert pr[2] > pr[3]  # heavier edge -> more rank
-    # closed form at fixpoint: r2 = base + d*(3/4)*r1, r3 = base + d*(1/4)*r1
-    base = 0.15 / 3
-    assert abs((pr[2] - base) / (pr[3] - base) - 3.0) < 1e-3
-    # uniform weights must reproduce the unweighted result exactly
-    eu = spark.createDataFrame(
-        [(1, 2, 2.0), (1, 3, 2.0), (2, 1, 2.0), (3, 1, 2.0)],
-        "src long, dst long, weight double",
-    )
-    gu = PropertyGraph.from_edges(eu)
-    w = {r["id"]: r["rank"] for r in alg.pagerank(
-        gu, max_iter=20, weighted=True).collect()}
-    u = {r["id"]: r["rank"] for r in alg.pagerank(
-        gu, max_iter=20, weighted=False).collect()}
-    assert all(abs(w[k] - u[k]) < 1e-9 for k in u)
+    for _ in graph_tiers():
+        # A(1) splits rank 3:1 between B(2) and C(3); B,C return to A.
+        e = spark.createDataFrame(
+            [(1, 2, 3.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0)],
+            "src long, dst long, weight double",
+        )
+        g = PropertyGraph.from_edges(e)
+        pr = {r["id"]: r["rank"] for r in alg.pagerank(
+            g, damping=0.85, max_iter=40, threshold=1e-12, weighted=True
+        ).collect()}
+        assert abs(sum(pr.values()) - 1.0) < 1e-6
+        assert pr[2] > pr[3]  # heavier edge -> more rank
+        # closed form at fixpoint: r2 = base + d*(3/4)*r1, r3 = base + d*(1/4)*r1
+        base = 0.15 / 3
+        assert abs((pr[2] - base) / (pr[3] - base) - 3.0) < 1e-3
+        # uniform weights must reproduce the unweighted result exactly
+        eu = spark.createDataFrame(
+            [(1, 2, 2.0), (1, 3, 2.0), (2, 1, 2.0), (3, 1, 2.0)],
+            "src long, dst long, weight double",
+        )
+        gu = PropertyGraph.from_edges(eu)
+        w = {r["id"]: r["rank"] for r in alg.pagerank(
+            gu, max_iter=20, weighted=True).collect()}
+        u = {r["id"]: r["rank"] for r in alg.pagerank(
+            gu, max_iter=20, weighted=False).collect()}
+        assert all(abs(w[k] - u[k]) < 1e-9 for k in u)
 
 
 def test_hits_bipartite_golden(spark):

@@ -6,14 +6,18 @@ graph as Spark supersteps.  Each case below runs under the default
 budget and under budget 0, which turns tier (a) off: distances and
 levels must be equal, ranks equal to a relative 1e-12, schemas equal."""
 
+import itertools
 import math
+from contextlib import nullcontext
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from graphmapreduce_spark.graph import PropertyGraph
 from graphmapreduce_spark.graph import algorithms as alg
 from graphmapreduce_spark.graph import iterate, pregel
+from graphmapreduce_spark.sources import read_edge_list
 
 EDGES = "src long, dst long, weight double"
 
@@ -257,3 +261,80 @@ def test_local_fixpoint_votes_like_fixpoint(spark):
         )
         assert local.deltas == dist.deltas
         assert local.state[0] == dist.state.first()["v"]
+
+
+def test_reused_graph_derives_its_edges_once_per_call(spark, graph_tiers):
+    """Each call caches the graph's edges for its loop and derives them
+    exactly once, also after an earlier call over the same graph object
+    dropped its own cache: pagerank, sssp, then pagerank again on one
+    graph, on both tiers."""
+    derived = spark.sparkContext.accumulator(0)
+
+    def weight(src):
+        derived.add(1)
+        return 1.0
+
+    edges = spark.range(6).select(
+        F.col("id").alias("src"),
+        ((F.col("id") + 1) % 6).alias("dst"),
+        F.udf(weight, "double")("id").alias("weight"),
+    )
+    # no pre-partition shuffle: its map outputs outlive a dropped cache
+    # and would serve a re-derivation without running the udf
+    g = PropertyGraph.from_edges(edges, prepartition=False)
+    for tier in graph_tiers():
+        for name, run in (
+            ("pagerank", lambda: alg.pagerank(g, max_iter=3)),
+            ("sssp", lambda: alg.sssp(g, source=0)),
+            ("pagerank", lambda: alg.pagerank(g, max_iter=3)),
+        ):
+            before = derived.value
+            run().collect()
+            assert derived.value - before == 6, (tier, name)
+
+
+def _hash_broadcast_sides(plan):
+    """The subtree under each hash-join BroadcastExchange of a plan's
+    text."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    return [
+        "\n".join(
+            itertools.takewhile(lambda m: depth(m) > depth(line), lines[i + 1:])
+        )
+        for i, line in enumerate(lines)
+        if "BroadcastExchange HashedRelationBroadcastMode" in line
+    ]
+
+
+def test_rank_superstep_broadcasts_the_rank_side(
+    spark, tmp_path, monkeypatch, distributed_tier
+):
+    """The gate's edge count fills the edge cache before the distributed
+    loop plans its first superstep.  ``iterate.planned`` keeps the degree
+    state's size estimate from before that, so the superstep's hash join
+    broadcasts the (id, out_degree) side and streams the cached edges;
+    estimated from the filled cache, this graph's join would broadcast
+    the edge table instead."""
+    rng = np.random.default_rng(1)
+    path = tmp_path / "edges.txt"
+    np.savetxt(path, rng.integers(1, 1001, (8000, 2)), fmt="%d")
+    plans = []
+
+    def first_step(state, step, **kw):
+        with kw.get("chunk", nullcontext)() as mode:
+            plans.append(step(state, mode)._jdf.queryExecution().executedPlan())
+        return iterate.fixpoint(state, step, **kw)
+
+    monkeypatch.setattr(alg, "fixpoint", first_step)
+    g = read_edge_list(spark, str(path))
+    alg.pagerank(g, max_iter=1, threshold=0.0).collect()
+    alg.personalized_pagerank(g, [1], max_iter=1, threshold=0.0).collect()
+    assert len(plans) == 2
+    for plan in plans:
+        sides = _hash_broadcast_sides(plan.toString())
+        assert sides and all("out_degree" in s for s in sides), plan
+        assert not any("InMemoryTableScan" in s for s in sides), plan

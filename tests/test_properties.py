@@ -52,13 +52,14 @@ def _brute_sssp(edges, weights, source):
 
 @given(edges=edge_sets)
 @SLOW
-def test_sssp_matches_bellman_ford(spark, edges):
-    weights = {e: 1.0 + (e[0] * 7 + e[1] * 3) % 5 for e in edges}
-    g = _graph(spark, edges, weights)
-    got = {r["id"]: r["distance"] for r in alg.sssp(g, source=1).collect()}
-    want = _brute_sssp(edges, weights, 1)
-    for v, d in want.items():
-        assert got[v] == d, (v, got[v], d, sorted(edges))
+def test_sssp_matches_bellman_ford(spark, graph_tiers, edges):
+    for _ in graph_tiers():
+        weights = {e: 1.0 + (e[0] * 7 + e[1] * 3) % 5 for e in edges}
+        g = _graph(spark, edges, weights)
+        got = {r["id"]: r["distance"] for r in alg.sssp(g, source=1).collect()}
+        want = _brute_sssp(edges, weights, 1)
+        for v, d in want.items():
+            assert got[v] == d, (v, got[v], d, sorted(edges))
 
 
 @given(edges=edge_sets)

@@ -52,26 +52,28 @@ def test_edge_list_rdsmall_counts(spark):
     assert g.edges.count() == 24
 
 
-def test_bfs_levels_on_small_graph(spark):
+def test_bfs_levels_on_small_graph(spark, graph_tiers):
     """Hand-computed: from vertex 1, neighbors {2,3,4,5,10} are level 1;
     {6,7} (via 2) and {8,9} (via 3) are level 2."""
-    g = read_metis(spark, f"{REF}/small.graph")
-    lv = {r["id"]: r["level"] for r in alg.bfs(g, source=1).collect()}
-    assert lv[1] == 0
-    for v in (2, 3, 4, 5, 10):
-        assert lv[v] == 1, v
-    for v in (6, 7, 8, 9):
-        assert lv[v] == 2, v
+    for _ in graph_tiers():
+        g = read_metis(spark, f"{REF}/small.graph")
+        lv = {r["id"]: r["level"] for r in alg.bfs(g, source=1).collect()}
+        assert lv[1] == 0
+        for v in (2, 3, 4, 5, 10):
+            assert lv[v] == 1, v
+        for v in (6, 7, 8, 9):
+            assert lv[v] == 2, v
 
 
-def test_pagerank_on_small_graph_sums_to_one(spark):
-    g = read_metis(spark, f"{REF}/small.graph")
-    pr = alg.pagerank(g, damping=0.85, max_iter=30, threshold=1e-10)
-    total = pr.agg(F.sum("rank")).first()[0]
-    assert abs(total - 1.0) < 1e-6
-    ranks = {r["id"]: r["rank"] for r in pr.collect()}
-    # vertex 1 has the highest degree (5) -> highest rank
-    assert max(ranks, key=ranks.get) == 1
+def test_pagerank_on_small_graph_sums_to_one(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = read_metis(spark, f"{REF}/small.graph")
+        pr = alg.pagerank(g, damping=0.85, max_iter=30, threshold=1e-10)
+        total = pr.agg(F.sum("rank")).first()[0]
+        assert abs(total - 1.0) < 1e-6
+        ranks = {r["id"]: r["rank"] for r in pr.collect()}
+        # vertex 1 has the highest degree (5) -> highest rank
+        assert max(ranks, key=ranks.get) == 1
 
 
 def test_triangle_count_small_graph(spark):

@@ -1,0 +1,130 @@
+"""A/B of the two execution tiers of ``graph/`` on one graph size.
+
+Runs graph-bsp's cycle (``read_edge_list``, ``pagerank`` for 10
+supersteps, ``sssp`` from vertex 1, both collected via Arrow) on a
+graph-bsp-shaped graph of the given size, in alternating pairs: tier (a)
+at the default driver budget, the distributed tier at budget 0.  Prints
+one JSON line: per-tier wall seconds (median and quartiles), the pairs
+tier (a) won, the largest rank and distance differences between the
+tiers, and tier (a)'s driver-side peak memory: numpy allocations seen by
+tracemalloc in one extra untimed run, and pyarrow's pool high-water
+mark.
+
+Usage:
+  python tools/graph_tier_ab.py --vertices 125000 --edges 1000000 -n 3
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import sys
+import tempfile
+import time
+import tracemalloc
+
+import numpy as np
+import pyarrow as pa
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from graphmapreduce_spark.graph import algorithms as alg  # noqa: E402
+from graphmapreduce_spark.graph.iterate import DRIVER_BUDGET_KEY  # noqa: E402
+from graphmapreduce_spark.session import get_spark  # noqa: E402
+from graphmapreduce_spark.sources import graph_readers  # noqa: E402
+from perfbench import gen  # noqa: E402
+
+TIERS = {"driver": None, "distributed": "0"}
+
+
+def cycle(spark, path: str) -> dict:
+    """graph-bsp's cycle; (id, value) arrays sorted by id per algorithm."""
+    g = graph_readers.read_edge_list(spark, path)
+    out = {}
+    for name, df in (
+        ("pagerank", lambda: alg.pagerank(
+            g, damping=0.85, max_iter=10, threshold=0.0
+        )),
+        ("sssp", lambda: alg.sssp(g, source=1)),
+    ):
+        t = df().toArrow()
+        order = np.argsort(t.column(0).to_numpy())
+        out[name] = (t.column(0).to_numpy()[order], t.column(1).to_numpy()[order])
+    return out
+
+
+def run(spark, path: str, tier: str) -> tuple[float, dict]:
+    if TIERS[tier] is None:
+        spark.conf.unset(DRIVER_BUDGET_KEY)
+    else:
+        spark.conf.set(DRIVER_BUDGET_KEY, TIERS[tier])
+    t0 = time.perf_counter()
+    out = cycle(spark, path)
+    return time.perf_counter() - t0, out
+
+
+def quartiles(xs: list[float]) -> list[float]:
+    return [round(float(q), 3) for q in np.percentile(xs, [25, 50, 75])]
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--vertices", type=int, required=True)
+    ap.add_argument("--edges", type=int, required=True)
+    ap.add_argument("-n", type=int, default=3, help="pairs")
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--cpus", type=int, default=4)
+    args = ap.parse_args()
+    spark = get_spark(
+        app_name="gmr-graph-tier-ab",
+        master=f"local[{args.cpus}]",
+        shuffle_partitions=args.cpus,
+    )
+    with tempfile.TemporaryDirectory() as work:
+        path = os.path.join(work, "edges.txt")
+        src, dst = gen.make_graph(args.seed, args.vertices, args.edges, 2)
+        gen.write_edge_list(path, src, dst)
+        run(spark, path, "distributed")  # warm-up: JIT, file cache
+        secs = {t: [] for t in TIERS}
+        outs = {}
+        for i in range(args.n):
+            for tier in list(TIERS)[:: 1 if i % 2 == 0 else -1]:
+                s, outs[tier] = run(spark, path, tier)
+                secs[tier].append(s)
+        a, b = outs["driver"], outs["distributed"]
+        assert all(np.array_equal(a[k][0], b[k][0]) for k in a)
+        rank_rel = np.max(np.abs(a["pagerank"][1] / b["pagerank"][1] - 1))
+        finite = np.isfinite(b["sssp"][1])
+        dist_same = np.array_equal(a["sssp"][1], b["sssp"][1])
+        tracemalloc.start()
+        run(spark, path, "driver")
+        numpy_peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+    spark.stop()
+    print(json.dumps({
+        "vertices": args.vertices,
+        "edges": args.edges,
+        "cpus": args.cpus,
+        "pairs": args.n,
+        "seconds_q1_median_q3": {t: quartiles(v) for t, v in secs.items()},
+        "driver_wins": sum(
+            d < s for d, s in zip(secs["driver"], secs["distributed"])
+        ),
+        "pagerank_max_rel_diff": float(rank_rel),
+        "sssp_equal": bool(dist_same),
+        "sssp_reached": int(finite.sum()),
+        "driver_peak_mib": {
+            "numpy_tracemalloc": round(numpy_peak / 2**20, 1),
+            # high-water mark of the whole run, both tiers' collects
+            "pyarrow_pool": round(
+                (pa.default_memory_pool().max_memory() or 0) / 2**20, 1
+            ),
+        },
+    }))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
