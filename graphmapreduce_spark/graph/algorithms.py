@@ -25,6 +25,7 @@ from collections.abc import Callable, Sequence
 from functools import reduce
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -480,59 +481,68 @@ def _min_label(vertices: DataFrame, edges: DataFrame, **opts):
 # Connected components (WCC) — ref stub algorithms.h:195.
 # Iterative min-label propagation over the symmetrized edge set.
 # ---------------------------------------------------------------------------
+# min-label supersteps before `connected_components` hands a graph that has
+# not converged (diameter above this) to star contraction
+MIN_LABEL_BUDGET = 20
+
+
 def connected_components(
     graph: PropertyGraph,
     max_iter: int = MAX_ITERATION,
     check_interval: int = 1,
-    broadcast_vertices: bool = False,
-    auto: bool = True,
-    auto_budget: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, component) where component = min vertex id in the component.
 
-    Symmetrizes WITHOUT deduplication: the min-message aggregation is
-    idempotent under duplicate edges and map-side combine absorbs them,
-    so the distinct-edges shuffle of ``undirected()`` would be pure
-    overhead here.
+    A graph within the driver budget is closed on the driver
+    (``_min_label_local``; tier (a), see ``graph/iterate.py``) in
+    O(log n) rounds on any topology.  Above it, min-label propagation
+    runs over the symmetrized edges WITHOUT deduplication (the
+    min-message aggregation is idempotent under duplicates and map-side
+    combine absorbs them, so ``undirected()``'s distinct shuffle would
+    be pure overhead).  That takes O(diameter) supersteps, so a long
+    path/ring would grind (measured: a 1M-vertex ring extrapolates to
+    ~179 h vs 72.6 s by star contraction), and probing the diameter up
+    front costs O(diameter) rounds itself.  So min-label runs for at
+    most ``MIN_LABEL_BUDGET`` (or ``max_iter``) supersteps: low-diameter
+    graphs (social/web/dedup graphs, diameter ≲ 20) converge inside it
+    with less work per round than contraction; on a miss the partial
+    labels are dropped (contraction collapses label chains
+    geometrically anyway) and ``connected_components_contract`` takes
+    over.
 
-    ``auto`` (default on) is the high-diameter escape hatch: min-label
-    propagation is O(diameter) supersteps, so a long path/ring through
-    the default path would grind (measured: a 1M-vertex ring
-    extrapolates to ~179 h here vs 72.6 s by star contraction).  Rather
-    than paying two BFS sweeps up front to PROBE the diameter (the
-    probe itself is O(diameter) rounds — it can't be cheaper than the
-    thing it predicts), min-label runs under an ``auto_budget``
-    superstep budget; on low-diameter graphs (the common case — social/
-    web/dedup graphs have diameter ≲ 20) it converges inside the budget
-    and does strictly less work per round than contraction, and on a
-    budget miss the job hands off to ``connected_components_contract``
-    (O(log n) rounds on ANY topology) instead of iterating toward the
-    horizon.  The partial labels are discarded at handoff — contraction
-    rounds already collapse label chains geometrically, so seeding
-    would save less than the bookkeeping costs.  ``auto=False``
-    restores the bare frontier loop (callers that KNOW the topology,
-    e.g. the dedup recipe's bounded-diameter cluster graphs, skip the
-    budget bookkeeping)."""
+    ``stats`` receives ``path`` (``"local"``, ``"minlabel"`` or
+    ``"contract"``) and the rounds or supersteps it took."""
     sym = _both_ways(graph.edges)
     und = PropertyGraph(
         graph.vertices, sym, num_partitions=graph.num_partitions
     )
     # cache the base edges too: the symmetrized table, the vertex init,
     # and the vertex-set derivation all contain this plan as a subtree.
-    # Pregel caches und.edges itself: it carries the repartition of the
-    # symmetrized table, which would otherwise re-execute every
-    # superstep (measured ~30% slower)
-    with persisted(graph.edges):
+    # und.edges carries the repartition of the symmetrized table, which
+    # would otherwise re-execute every superstep (measured ~30% slower);
+    # it is cached before the gate's count fills the base cache, because
+    # a cache takes its size estimate when it is created, and estimated
+    # from the filled base a small graph's superstep broadcasts the edge
+    # table instead of the label state
+    with persisted(graph.edges), persisted(und.edges):
+        lg = LocalGraph.collect(graph, weighted=False)
+        if lg is not None:
+            comp, rounds = _min_label_local(lg)
+            if stats is not None:
+                stats["path"] = "local"
+                stats["rounds"] = rounds
+            return lg.frame(
+                "component", comp, lg.id_field.dataType, lg.id_field.nullable
+            )
         res = _min_label(
             und.vertices,
             und.edges,
-            max_iter=min(max_iter, auto_budget) if auto else max_iter,
+            max_iter=min(max_iter, MIN_LABEL_BUDGET),
             check_interval=check_interval,
-            broadcast_vertices=broadcast_vertices,
         )
-    if auto and not res.converged:
-        # budget miss = diameter > auto_budget: hand off to the
+    if not res.converged:
+        # budget miss = diameter > MIN_LABEL_BUDGET: hand off to the
         # O(log n)-round contraction path instead of iterating toward
         # the horizon (see docstring)
         if stats is not None:
@@ -543,6 +553,34 @@ def connected_components(
         stats["path"] = "minlabel"
         stats["minlabel_supersteps"] = res.iterations
     return res.vertices.select("id", F.col("value").alias("component"))
+
+
+def _min_label_local(lg: LocalGraph) -> tuple[pa.Array, int]:
+    """Tier (a) of WCC: per vertex the min id that reaches it over the
+    edges taken both ways, and the rounds it took.  Min-hooking over
+    vertices ranked by id: each round every root with an edge to
+    another tree hooks onto the smallest such root (parents only point
+    to smaller ranks, so no cycle forms), then pointer jumping links
+    every vertex to its root.  Every tree with an edge out merges each
+    round, so the rounds are O(log n) whatever the diameter.  Edges with
+    a non-vertex endpoint carry nothing; a null id labels itself null.
+    Labels are taken from the Arrow ids, so they stay exact longs."""
+    order = np.lexsort((lg.key, ~lg.valid))  # ids ascending, null last
+    rank = np.empty(lg.n, dtype=np.int64)
+    rank[order] = np.arange(lg.n)
+    live = (lg.src >= 0) & (lg.dst >= 0)
+    u, v = rank[lg.src[live]], rank[lg.dst[live]]
+    parent = np.arange(lg.n)
+    rounds = 0
+    while (cross := parent[u] != parent[v]).any():
+        # an edge inside one tree stays inside it: drop it for good
+        u, v = u[cross], v[cross]
+        pu, pv = parent[u], parent[v]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+        rounds += 1
+    return lg.ids.take(order[parent[rank]]), rounds
 
 
 # ---------------------------------------------------------------------------

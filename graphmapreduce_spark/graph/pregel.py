@@ -36,8 +36,9 @@ Scale notes:
 This is the distributed tier.  Graphs within the driver budget
 (``iterate.driver_local``) run ``sssp``/``bfs`` as a numpy frontier
 kernel on the driver instead (``algorithms._min_plus_local``), with the
-same active set, update and vote; ``Pregel.run`` serves the graphs
-above the budget and the loops without a driver kernel (WCC/SCC's
+same active set, update and vote, and WCC as a numpy closure
+(``algorithms._min_label_local``); ``Pregel.run`` serves the graphs
+above the budget and the loops without a driver kernel (SCC's
 ``_min_label``, Brandes levels).
 """
 
@@ -208,7 +209,7 @@ class Pregel:
         v = v.localCheckpoint(eager=True)
         spark = v.sparkSession
         # Size-adaptive chunk execution (same budget philosophy as the
-        # dedup_clusters union-find path): loops over a LARGE vertex
+        # driver-local tier, iterate.driver_local): loops over a LARGE vertex
         # state run each convergence chunk as one static-planned job
         # (single_job_chunk — measured 1.3-1.4× on the 21k-vertex WCC at
         # sf0.1), while a SMALL state keeps the AQE path, whose runtime

@@ -702,36 +702,20 @@ def dedup_clusters(
     non-transitive variant).
 
     Scale shape: the pair graph holds only near-dup ids — a small
-    fraction of a 100 TB corpus.  The closure is size-adaptive, the
-    same budget logic Spark applies to broadcast joins:
-
-    - If the pairs it will cluster (those whose ids both cast to a
-      long) fit the driver budget that ``graph/iterate.py::driver_local``
-      owns (``spark.graphmapreduce.clusterBroadcastMaxPairs``, default
-      1M ≈ 16 MB of long pairs; 0 turns it off), the closure runs as an
-      exact min-id union-find over the pairs collected via Arrow and
-      ships back as one small mapping table.  An iterative
-      Pregel loop on a graph this size is pure superstep overhead:
-      every superstep costs a full stage wave regardless of row count
-      (measured: ~6 s for a 241-pair graph at sf0.1 vs ~0.3 s via the
-      broadcast path — and on a real cluster each superstep is a
-      cluster-wide barrier).
-    - Above the cap — corpora whose near-dup pair set itself is beyond
-      broadcast scale — the distributed path is unchanged: min-label
-      propagation via the Pregel driver, one hash join + min-agg per
-      superstep, lineage truncated per chunk, converging in O(cluster
-      diameter) supersteps (dup clusters are short chains in practice).
-
-    Both paths produce the identical (id, cluster = min id in the
-    connected component) mapping; the count action that picks the path
-    also materializes the pair table's lazy checkpoint, so the Pregel
-    fallback never recomputes the (expensive) pair derivation.
+    fraction of a 100 TB corpus.  The closure is
+    ``graph/algorithms.py::connected_components`` over it, so a pair
+    graph within the driver budget (pairs and distinct ids) is closed
+    on the driver — a superstep loop on a graph this size is pure
+    overhead (measured ~6 s for a 241-pair graph at sf0.1 vs ~0.3 s on
+    the driver) — and a larger one by Pregel min-label propagation in
+    O(cluster diameter) supersteps.  Pairs with an id that does not
+    cast to a long are dropped.  The edge count that picks the tier
+    also materializes the pair table's lazy checkpoint, so neither tier
+    recomputes the (expensive) pair derivation.
     """
     from graphmapreduce_spark.graph.algorithms import connected_components
-    from graphmapreduce_spark.graph.iterate import driver_local
     from graphmapreduce_spark.graph.property_graph import PropertyGraph
 
-    spark = pairs.sparkSession
     # try_cast: under ANSI SQL (the Spark 4 default) a plain cast THROWS
     # on a malformed id; try_cast yields NULL instead, and the filter
     # below drops those rows
@@ -740,60 +724,18 @@ def dedup_clusters(
         F.col(id_b).try_cast("long").alias("dst"),
     ).localCheckpoint(eager=False)
     # ids that cast to NULL (non-numeric string ids through the public
-    # API) are dropped: the distributed path's equi-joins never match a
-    # null id anyway, and the union-find below would otherwise crash
-    # comparing None < int.  The filter sits ABOVE the checkpoint so
-    # predicate pushdown stops at the RDD boundary — pushing
-    # isnotnull(cast(id)) into the deep verified-pairs plan measured
-    # +1 s of pure re-planning per invocation at sf0.1.
+    # API) are dropped: the closure's joins never match a null id, and
+    # the pair graph's vertex set would otherwise hold a null id.  The
+    # filter sits ABOVE the checkpoint so predicate pushdown stops at the
+    # RDD boundary — pushing isnotnull(cast(id)) into the deep
+    # verified-pairs plan measured +1 s of pure re-planning per
+    # invocation at sf0.1.
     nn = edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    local = driver_local(nn, nn.count())
-    if local is not None:
-        # driver union-find — exactly the data volume a broadcast-join
-        # build side would collect.  Collected through Arrow: two flat
-        # int64 buffers instead of per-pair Row objects, so the
-        # transfer itself is ~16 B/pair; the dominant driver footprint
-        # is the union-find dict (≤ 2 ints per distinct id — measured
-        # 172 MiB at the 1M-pair cap with 2M distinct ids, inside the
-        # broadcast budget the session already grants every BHJ build
-        # side)
-        import pandas as pd
-
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(
-            local.column("src").to_pylist(), local.column("dst").to_pylist()
-        ):
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN ROOT so the final root is the component
-                # min — the documented smallest-id canonical convention
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        ids = list(parent)
-        out = pd.DataFrame(
-            {"id": ids, "cluster": [find(x) for x in ids]},
-            dtype="int64",
-        )
-        return spark.createDataFrame(out, "id long, cluster long")
-    graph = PropertyGraph.from_edges(nn)
-    comp = connected_components(graph, max_iter=max_iter, check_interval=4)
+    comp = connected_components(
+        PropertyGraph.from_edges(nn), max_iter=max_iter, check_interval=4
+    )
     return comp.select(F.col("id"), F.col("component").alias("cluster"))
 
 

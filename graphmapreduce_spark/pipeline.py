@@ -126,12 +126,13 @@ def dedup_corpus(
          threshold−margin before the shingle-set verify.  Both knobs
          are deterministic given the seed, hence oracle-replicable.
       3. cluster: connected components over the verified pair graph
-         (`dedup_clusters`), labeled by the component's min id.  Within
-         the driver budget (``graph/iterate.py::driver_local``:
-         ``spark.graphmapreduce.clusterBroadcastMaxPairs`` valid pairs,
-         default 1M) the closure is a driver union-find over the
-         collected pairs; above it, Pregel min-label propagation in
-         O(cluster diameter) supersteps.
+         (`dedup_clusters`, i.e. ``graph/algorithms.py::
+         connected_components``), labeled by the component's min id.
+         Within the driver budget (``graph/iterate.py::driver_local``:
+         ``spark.graphmapreduce.clusterBroadcastMaxPairs`` valid pairs
+         and distinct ids, default 1M) the closure runs on the driver
+         over the collected pairs; above it, Pregel min-label
+         propagation in O(cluster diameter) supersteps.
       4. map-back: doc → exact rep → cluster label, one left join on
          the representative id, coalescing unique docs to themselves.
 
@@ -203,8 +204,9 @@ def dedup_corpus(
     if id_type in ("bigint", "int", "smallint", "tinyint"):
         clusters = dedup_clusters(pairs, max_iter=max_iter)
     else:
-        # string / uuid doc ids: the Pregel clustering needs LONG
-        # vertex ids, so rank the representatives into an ORDER-
+        # string / uuid doc ids: the clustering (connected components
+        # over the pair graph) needs LONG vertex ids, so rank the
+        # representatives into an ORDER-
         # PRESERVING long surrogate (distributed sample-sort — no
         # hashing, hence zero collision risk at any corpus size, and
         # min-surrogate == min-id so the smallest-id canonical

@@ -319,8 +319,8 @@ def test_dedup_clusters_transitive_closure(spark):
 def test_dedup_clusters_pregel_fallback_matches_broadcast_path(spark):
     """The size-adaptive closure must produce the identical mapping on
     both sides of the broadcast cap: a deep chain + a star + a cycle,
-    run once under the cap (driver union-find) and once with the cap
-    forced to 0 (distributed Pregel min-label)."""
+    run once under the cap (driver tier of ``connected_components``)
+    and once with the cap forced to 0 (distributed Pregel min-label)."""
     rows = (
         [(i, i + 1) for i in range(1, 9)]  # chain 1..9 (diameter 8)
         + [(100, k) for k in (101, 102, 103)]  # star
@@ -820,22 +820,25 @@ def test_incremental_and_self_join_verify_agree(spark):
 
 
 def test_dedup_clusters_cap_counts_only_valid_pairs(spark, monkeypatch):
-    """The union-find vs Pregel choice counts the pairs that will be
+    """The driver vs Pregel choice counts the pairs that will be
     clustered: rows whose ids cast to NULL are dropped by both paths,
-    so they must not push a small valid pair set over the cap."""
-    from graphmapreduce_spark.graph import algorithms
+    so they must not push a small valid pair set over the cap.  The cap
+    also bounds the distinct ids: 3 valid pairs over 5 ids fit a cap of
+    5, the 8 raw pairs do not."""
+    from graphmapreduce_spark.graph import algorithms, pregel
 
     def no_pregel(*a, **k):
         raise AssertionError("3 valid pairs must not take the Pregel path")
 
-    monkeypatch.setattr(algorithms, "connected_components", no_pregel)
+    monkeypatch.setattr(algorithms, "_min_label", no_pregel)
+    monkeypatch.setattr(pregel.Pregel, "run", no_pregel)
     pairs = spark.createDataFrame(
         [("1", "2"), ("2", "3"), ("7", "8")]
         + [("x", "9"), ("9", "y"), ("a", "b"), ("", "4"), ("5", "z")],
         "id_a string, id_b string",
     )
     key = "spark.graphmapreduce.clusterBroadcastMaxPairs"
-    spark.conf.set(key, "3")
+    spark.conf.set(key, "5")
     try:
         got = {r["id"]: r["cluster"] for r in D.dedup_clusters(pairs).collect()}
     finally:
@@ -961,9 +964,9 @@ def test_lsh_bucket_cap_plan_has_no_window(spark):
 
 
 def test_dedup_clusters_drops_null_ids(spark):
-    """Non-numeric string ids cast to NULL; the union-find path must
-    drop them instead of crashing on None < int, and the mapping must
-    cover exactly the valid ids (ADVICE r07)."""
+    """Non-numeric string ids cast to NULL; the driver path must drop
+    them instead of labelling a null id, and the mapping must cover
+    exactly the valid ids (ADVICE r07)."""
     pairs = spark.createDataFrame(
         [("1", "2"), ("2", "3"), ("x", "9"), ("7", None)],
         "id_a string, id_b string",

@@ -68,10 +68,11 @@ def test_triangle_count_path_has_none(spark):
     assert alg.triangle_count(g) == 0
 
 
-def test_wcc_two_components(spark):
-    g = make_graph(spark, TWO_CC)
-    c = {r["id"]: r["component"] for r in alg.connected_components(g).collect()}
-    assert c == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 5}
+def test_wcc_two_components(spark, graph_tiers):
+    for _ in graph_tiers():
+        g = make_graph(spark, TWO_CC)
+        c = {r["id"]: r["component"] for r in alg.connected_components(g).collect()}
+        assert c == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 5}
 
 
 def test_pagerank_cycle_sums_to_one(spark, graph_tiers):
@@ -166,25 +167,26 @@ def test_scc_incomplete_raises(spark):
     assert c == {1: -1, 2: -1}
 
 
-def test_component_labels_exceed_double_mantissa(spark):
+def test_component_labels_exceed_double_mantissa(spark, graph_tiers):
     """Ids above 2^53 are not representable in a double; labels must
     survive exactly (they are kept long end-to-end)."""
-    base = 1 << 60
-    rows = [
-        (base + 1, base + 2, 1.0),
-        (base + 3, base + 4, 1.0),
-    ]
-    g = make_graph(spark, rows)
-    c = {r["id"]: r["component"] for r in alg.connected_components(g).collect()}
-    # a double round-trip would collapse base+1 and base+3 to the same
-    # label and merge the two components
-    assert c[base + 1] == c[base + 2] == base + 1
-    assert c[base + 3] == c[base + 4] == base + 3
-    s = {
-        r["id"]: r["component"]
-        for r in alg.strongly_connected_components(g).collect()
-    }
-    assert len(set(s.values())) == 4
+    for _ in graph_tiers():
+        base = 1 << 60
+        rows = [
+            (base + 1, base + 2, 1.0),
+            (base + 3, base + 4, 1.0),
+        ]
+        g = make_graph(spark, rows)
+        c = {r["id"]: r["component"] for r in alg.connected_components(g).collect()}
+        # a double round-trip would collapse base+1 and base+3 to the same
+        # label and merge the two components
+        assert c[base + 1] == c[base + 2] == base + 1
+        assert c[base + 3] == c[base + 4] == base + 3
+        s = {
+            r["id"]: r["component"]
+            for r in alg.strongly_connected_components(g).collect()
+        }
+        assert len(set(s.values())) == 4
 
 
 def test_matmul_identity(spark):
@@ -1060,21 +1062,22 @@ def _labels(df):
     return sorted((r["id"], r["component"]) for r in df.collect())
 
 
-def test_cc_contract_matches_min_label_on_random_graphs(spark):
+def test_cc_contract_matches_min_label_on_random_graphs(spark, graph_tiers):
     """Same (id, component=min id) contract as connected_components,
     checked on three seeded random graphs."""
     import random
 
-    for seed in (7, 42, 99):
-        rng = random.Random(seed)
-        rows = [
-            (rng.randrange(40), rng.randrange(40), 1.0) for _ in range(60)
-        ]
-        rows = [(a, b, w) for a, b, w in rows if a != b] or [(0, 1, 1.0)]
-        g = make_graph(spark, rows)
-        want = _labels(alg.connected_components(g))
-        got = _labels(alg.connected_components_contract(g))
-        assert got == want, f"seed {seed}"
+    for _ in graph_tiers():
+        for seed in (7, 42, 99):
+            rng = random.Random(seed)
+            rows = [
+                (rng.randrange(40), rng.randrange(40), 1.0) for _ in range(60)
+            ]
+            rows = [(a, b, w) for a, b, w in rows if a != b] or [(0, 1, 1.0)]
+            g = make_graph(spark, rows)
+            want = _labels(alg.connected_components(g))
+            got = _labels(alg.connected_components_contract(g))
+            assert got == want, f"seed {seed}"
 
 
 def test_cc_contract_long_path_few_rounds(spark):
@@ -1107,11 +1110,11 @@ def test_cc_contract_raises_without_fixpoint(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected_components(auto=True) — round-budget handoff between the
-# min-label frontier loop (low diameter) and star contraction (high
-# diameter), VERDICT r06 task 4
+# connected_components above the driver budget — round-budget handoff
+# between the min-label frontier loop (low diameter) and star contraction
+# (high diameter), VERDICT r06 task 4
 # ---------------------------------------------------------------------------
-def test_cc_auto_low_diameter_stays_on_min_label(spark):
+def test_cc_auto_low_diameter_stays_on_min_label(spark, distributed_tier):
     """Diameter-3 chains converge well inside the default budget: the
     auto path must stay on min-label (no contraction rounds) and match
     the golden labels."""
@@ -1126,30 +1129,22 @@ def test_cc_auto_low_diameter_stays_on_min_label(spark):
     assert "rounds" not in stats  # contraction never ran
 
 
-def test_cc_auto_high_diameter_hands_off_to_contraction(spark):
+def test_cc_auto_high_diameter_hands_off_to_contraction(
+    spark, monkeypatch, distributed_tier
+):
     """A 120-vertex path (diameter 119) under a 5-superstep budget must
     hand off to star contraction and still produce exact labels."""
+    monkeypatch.setattr(alg, "MIN_LABEL_BUDGET", 5)
     rows = [(i, i + 1, 1.0) for i in range(1, 120)]
     g = make_graph(spark, rows)
     stats = {}
-    out = alg.connected_components(g, auto_budget=5, stats=stats)
+    out = alg.connected_components(g, stats=stats)
     comps = {r["component"] for r in out.collect()}
     assert comps == {1}
     assert out.count() == 120
     assert stats["path"] == "contract"
     assert stats["minlabel_supersteps"] <= 5
     assert stats["rounds"] > 0  # contraction rounds recorded
-
-
-def test_cc_auto_off_truncates_like_before(spark):
-    """auto=False restores the bare frontier loop: a budgeted run on a
-    long path returns partial labels (the pre-auto contract) rather
-    than falling back."""
-    rows = [(i, i + 1, 1.0) for i in range(1, 60)]
-    g = make_graph(spark, rows)
-    out = alg.connected_components(g, max_iter=3, auto=False)
-    comps = {r["component"] for r in out.collect()}
-    assert len(comps) > 1  # truncated: not yet a single component
 
 
 def test_pregel_single_job_chunk_equivalent(spark, distributed_tier):

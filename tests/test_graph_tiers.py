@@ -1,10 +1,11 @@
 """The two execution tiers of ``graph/`` give the same answers.
 
-``pagerank``, ``personalized_pagerank``, ``sssp`` and ``bfs`` run a graph
-within the driver budget as numpy on the driver (tier (a)) and any other
-graph as Spark supersteps.  Each case below runs under the default
-budget and under budget 0, which turns tier (a) off: distances and
-levels must be equal, ranks equal to a relative 1e-12, schemas equal."""
+``pagerank``, ``personalized_pagerank``, ``sssp``, ``bfs`` and
+``connected_components`` run a graph within the driver budget as numpy
+on the driver (tier (a)) and any other graph as Spark supersteps.  Each
+case below runs under the default budget and under budget 0, which turns
+tier (a) off: distances, levels and components must be equal, ranks
+equal to a relative 1e-12, schemas equal, nullability included."""
 
 import itertools
 import math
@@ -83,6 +84,19 @@ def _negative(spark):
     )
 
 
+def _loops_and_big_ids(spark):
+    """Self-loops, duplicate edges, and ids above 2^53 that one double
+    cannot tell apart (B+1, B+3): component labels must stay exact
+    longs."""
+    b = 1 << 60
+    return _from_edges(
+        spark,
+        [(1, 2, 1.0), (2, 1, 1.0), (2, 1, 1.0), (1, 1, 1.0), (b + 5, b + 5, 1.0),
+         (b + 3, b + 1, 2.0), (b + 3, b + 1, 2.0), (b + 3, b + 2, 1.0),
+         (2, 3, 1.0), (3, 3, 1.0)],
+    )
+
+
 def _unreachable(spark):
     """Two chains: from 1, vertices 5-8 stay at +inf."""
     return _from_edges(
@@ -97,6 +111,7 @@ CASES = {
     "foreign_endpoints": _foreign_endpoints,
     "null_endpoints": _null_endpoints,
     "dangling": _dangling,
+    "loops_and_big_ids": _loops_and_big_ids,
     "negative_weights": _negative,
     "unreachable": _unreachable,
 }
@@ -114,6 +129,7 @@ RUNS = {
     ),
     "sssp": lambda g: alg.sssp(g, source=1),
     "bfs": lambda g: alg.bfs(g, source=1),
+    "wcc": lambda g: alg.connected_components(g),
 }
 
 
@@ -155,7 +171,7 @@ def test_tiers_agree(spark, graph_tiers, case):
     for run, fn in RUNS.items():
         _assert_same(
             _on_both_tiers(graph_tiers, lambda: fn(g)),
-            exact=run.startswith(("sssp", "bfs")),
+            exact=run.startswith(("sssp", "bfs", "wcc")),
         )
 
 
@@ -187,6 +203,37 @@ def test_pagerank_empty_graph_on_both_tiers(spark, graph_tiers):
     assert local.schema == dist.schema
 
 
+def test_wcc_empty_graph_on_both_tiers(spark, graph_tiers):
+    g = _from_edges(spark, [])
+    (local, lrows), (dist, drows) = _on_both_tiers(
+        graph_tiers, lambda: alg.connected_components(g)
+    )
+    assert lrows == [] and drows == []
+    assert local.columns == dist.columns == ["id", "component"]
+    assert local.schema == dist.schema
+
+
+def test_wcc_long_shuffled_path_on_driver_tier(spark):
+    """A 100 000-vertex path over shuffled ids (i -> i·7919 mod 1 000 003)
+    closes on the driver tier in O(log n) rounds, far below its diameter,
+    with the labels of the distributed star contraction."""
+    n, mult, prime = 100_000, 7919, 1_000_003
+    ids = F.col("id") * mult % prime
+    edges = spark.range(n - 1).select(
+        ids.alias("src"),
+        ((F.col("id") + 1) * mult % prime).alias("dst"),
+        F.lit(1.0).alias("weight"),
+    )
+    g = PropertyGraph.from_edges(edges)
+    stats = {}
+    got = alg.connected_components(g, stats=stats).collect()
+    assert stats["path"] == "local"
+    assert stats["rounds"] <= 2 * math.log2(n)
+    want = alg.connected_components_contract(g).collect()
+    assert len(got) == n
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 @pytest.fixture
 def no_distributed_loop(monkeypatch):
     def boom(*_a, **_k):
@@ -199,13 +246,14 @@ def no_distributed_loop(monkeypatch):
 
 def test_small_graphs_route_to_driver_tier(spark, no_distributed_loop):
     """Under the default budget a tiny graph runs no Spark superstep:
-    with ``Pregel.run`` and ``fixpoint`` raising, all four still return."""
+    with ``Pregel.run`` and ``fixpoint`` raising, all five still return."""
     g = _from_edges(spark, [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0)])
     pr = _by_id(alg.pagerank(g).collect())
     assert math.isclose(sum(pr.values()), 1.0, rel_tol=1e-9)
     assert _by_id(alg.personalized_pagerank(g, [1]).collect()).keys() == {1, 2, 3}
     assert _by_id(alg.sssp(g, 1).collect()) == {1: 0.0, 2: 1.0, 3: 3.0}
     assert _by_id(alg.bfs(g, 1).collect()) == {1: 0, 2: 1, 3: 2}
+    assert _by_id(alg.connected_components(g).collect()) == {1: 1, 2: 1, 3: 1}
 
 
 def test_unsupported_inputs_stay_distributed(spark, monkeypatch):
@@ -338,3 +386,33 @@ def test_rank_superstep_broadcasts_the_rank_side(
         sides = _hash_broadcast_sides(plan.toString())
         assert sides and all("out_degree" in s for s in sides), plan
         assert not any("InMemoryTableScan" in s for s in sides), plan
+
+
+def test_wcc_superstep_broadcasts_the_label_side(
+    spark, monkeypatch, distributed_tier
+):
+    """``connected_components`` caches its symmetrized edges before the
+    gate's count fills the base edge cache, so that cache keeps the size
+    estimate it had without the gate: on this small graph the first
+    min-label superstep broadcasts the active label state and streams
+    the cached edges; estimated from the filled base cache, it would
+    broadcast the edge table instead."""
+    plans = []
+
+    def first_step(state, step, **kw):
+        if not plans:
+            with kw.get("chunk", nullcontext)() as mode:
+                plans.append(
+                    step(state, mode)._jdf.queryExecution().executedPlan()
+                )
+        return iterate.fixpoint(state, step, **kw)
+
+    monkeypatch.setattr(pregel, "fixpoint", first_step)
+    g = _from_edges(
+        spark, [(i, (i * 3 + 1) % 300, 1.0) for i in range(300) if i % 7]
+    )
+    alg.connected_components(g).collect()
+    sides = _hash_broadcast_sides(plans[0].toString())
+    label = ["ExistingRDD" in s and "InMemoryTableScan" not in s for s in sides]
+    edges = ["InMemoryTableScan" in s and "ExistingRDD" not in s for s in sides]
+    assert any(label) and not any(edges), plans[0]

@@ -78,31 +78,32 @@ def test_triangle_count_matches_bruteforce(spark, edges):
 
 @given(edges=edge_sets)
 @SLOW
-def test_wcc_matches_union_find(spark, edges):
-    parent = {}
+def test_wcc_matches_union_find(spark, graph_tiers, edges):
+    for _ in graph_tiers():
+        parent = {}
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    nodes = {v for e in edges for v in e}
-    want = {}
-    for v in nodes:
-        root = find(v)
-        want.setdefault(root, set()).add(v)
-    want_sets = {frozenset(s) for s in want.values()}
+        for a, b in edges:
+            parent[find(a)] = find(b)
+        nodes = {v for e in edges for v in e}
+        want = {}
+        for v in nodes:
+            root = find(v)
+            want.setdefault(root, set()).add(v)
+        want_sets = {frozenset(s) for s in want.values()}
 
-    g = _graph(spark, edges)
-    comp = {}
-    for r in alg.connected_components(g).collect():
-        comp.setdefault(r["component"], set()).add(r["id"])
-    got_sets = {frozenset(s) for s in comp.values()}
-    assert got_sets == want_sets, sorted(edges)
+        g = _graph(spark, edges)
+        comp = {}
+        for r in alg.connected_components(g).collect():
+            comp.setdefault(r["component"], set()).add(r["id"])
+        got_sets = {frozenset(s) for s in comp.values()}
+        assert got_sets == want_sets, sorted(edges)
 
 
 def test_winsorize_bounds_and_clipping(spark):

@@ -1,14 +1,15 @@
 """A/B of the two execution tiers of ``graph/`` on one graph size.
 
 Runs graph-bsp's cycle (``read_edge_list``, ``pagerank`` for 10
-supersteps, ``sssp`` from vertex 1, both collected via Arrow) on a
-graph-bsp-shaped graph of the given size, in alternating pairs: tier (a)
-at the default driver budget, the distributed tier at budget 0.  Prints
-one JSON line: per-tier wall seconds (median and quartiles), the pairs
-tier (a) won, the largest rank and distance differences between the
-tiers, and tier (a)'s driver-side peak memory: numpy allocations seen by
-tracemalloc in one extra untimed run, and pyarrow's pool high-water
-mark.
+supersteps, ``sssp`` from vertex 1) plus ``connected_components``, each
+collected via Arrow, on a graph-bsp-shaped graph of the given size, in
+alternating pairs: tier (a) at the default driver budget, the
+distributed tier at budget 0.  Prints one JSON line: per-tier wall
+seconds of the whole cycle and of each algorithm (quartiles), the pairs
+tier (a) won, the largest rank difference between the tiers and whether
+distances and components are equal, and tier (a)'s driver-side peak
+memory: numpy allocations seen by tracemalloc in one extra untimed run
+(whole cycle and per algorithm), and pyarrow's pool high-water mark.
 
 Usage:
   python tools/graph_tier_ab.py --vertices 125000 --edges 1000000 -n 3
@@ -39,30 +40,38 @@ from perfbench import gen  # noqa: E402
 TIERS = {"driver": None, "distributed": "0"}
 
 
-def cycle(spark, path: str) -> dict:
-    """graph-bsp's cycle; (id, value) arrays sorted by id per algorithm."""
+def cycle(spark, path: str) -> tuple[dict, dict, dict]:
+    """graph-bsp's cycle plus WCC: (id, value) arrays sorted by id, wall
+    seconds, and (only while tracemalloc traces) peak bytes, each per
+    algorithm."""
     g = graph_readers.read_edge_list(spark, path)
-    out = {}
+    out, secs, peaks = {}, {}, {}
     for name, df in (
         ("pagerank", lambda: alg.pagerank(
             g, damping=0.85, max_iter=10, threshold=0.0
         )),
         ("sssp", lambda: alg.sssp(g, source=1)),
+        ("wcc", lambda: alg.connected_components(g)),
     ):
+        t0 = time.perf_counter()
         t = df().toArrow()
+        secs[name] = time.perf_counter() - t0
+        if tracemalloc.is_tracing():
+            peaks[name] = tracemalloc.get_traced_memory()[1]
+            tracemalloc.reset_peak()
         order = np.argsort(t.column(0).to_numpy())
         out[name] = (t.column(0).to_numpy()[order], t.column(1).to_numpy()[order])
-    return out
+    return out, secs, peaks
 
 
-def run(spark, path: str, tier: str) -> tuple[float, dict]:
+def run(spark, path: str, tier: str) -> tuple[float, dict, dict, dict]:
     if TIERS[tier] is None:
         spark.conf.unset(DRIVER_BUDGET_KEY)
     else:
         spark.conf.set(DRIVER_BUDGET_KEY, TIERS[tier])
     t0 = time.perf_counter()
-    out = cycle(spark, path)
-    return time.perf_counter() - t0, out
+    out, secs, peaks = cycle(spark, path)
+    return time.perf_counter() - t0, out, secs, peaks
 
 
 def quartiles(xs: list[float]) -> list[float]:
@@ -88,19 +97,23 @@ def main() -> int:
         gen.write_edge_list(path, src, dst)
         run(spark, path, "distributed")  # warm-up: JIT, file cache
         secs = {t: [] for t in TIERS}
+        alg_secs = {t: {} for t in TIERS}
         outs = {}
         for i in range(args.n):
             for tier in list(TIERS)[:: 1 if i % 2 == 0 else -1]:
-                s, outs[tier] = run(spark, path, tier)
+                s, outs[tier], per_alg, _ = run(spark, path, tier)
                 secs[tier].append(s)
+                for name, x in per_alg.items():
+                    alg_secs[tier].setdefault(name, []).append(x)
         a, b = outs["driver"], outs["distributed"]
         assert all(np.array_equal(a[k][0], b[k][0]) for k in a)
         rank_rel = np.max(np.abs(a["pagerank"][1] / b["pagerank"][1] - 1))
         finite = np.isfinite(b["sssp"][1])
         dist_same = np.array_equal(a["sssp"][1], b["sssp"][1])
+        wcc_same = np.array_equal(a["wcc"][1], b["wcc"][1])
         tracemalloc.start()
-        run(spark, path, "driver")
-        numpy_peak = tracemalloc.get_traced_memory()[1]
+        _, _, _, alg_peaks = run(spark, path, "driver")
+        numpy_peak = max(alg_peaks.values())
         tracemalloc.stop()
     spark.stop()
     print(json.dumps({
@@ -109,14 +122,23 @@ def main() -> int:
         "cpus": args.cpus,
         "pairs": args.n,
         "seconds_q1_median_q3": {t: quartiles(v) for t, v in secs.items()},
+        "algorithm_seconds_q1_median_q3": {
+            t: {name: quartiles(v) for name, v in per.items()}
+            for t, per in alg_secs.items()
+        },
         "driver_wins": sum(
             d < s for d, s in zip(secs["driver"], secs["distributed"])
         ),
         "pagerank_max_rel_diff": float(rank_rel),
         "sssp_equal": bool(dist_same),
         "sssp_reached": int(finite.sum()),
+        "wcc_equal": bool(wcc_same),
+        "wcc_components": int(len(np.unique(b["wcc"][1]))),
         "driver_peak_mib": {
             "numpy_tracemalloc": round(numpy_peak / 2**20, 1),
+            "numpy_tracemalloc_by_algorithm": {
+                name: round(x / 2**20, 1) for name, x in alg_peaks.items()
+            },
             # high-water mark of the whole run, both tiers' collects
             "pyarrow_pool": round(
                 (pa.default_memory_pool().max_memory() or 0) / 2**20, 1

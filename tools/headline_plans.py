@@ -1,11 +1,11 @@
-"""Dump `.explain('formatted')` for headline queries into plans/r08/.
+"""Dump `.explain('formatted')` for headline queries into a plan directory.
 
-Usage: python tools/r08_plans.py <suffix: before|after> [query ...]
+Usage: python tools/headline_plans.py <out_dir> <suffix: before|after> [query ...]
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
 with the SAME session parameters as bench.py, so the captured plans are
 the benched plans.  Each query is executed once (noop sink) first so the
 AQE-final annotations are present, then the pre-execution formatted plan
-is written to plans/r08/<name>_<suffix>.txt.
+is written to <out_dir>/<name>_<suffix>.txt (e.g. out_dir plans/r08).
 """
 
 from __future__ import annotations
@@ -34,23 +34,24 @@ HEADLINE = [
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or HEADLINE
+    label = os.path.basename(os.path.normpath(out_dir))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r08",
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
-        app_name="gmr-spark-plans-r08",
+        app_name=f"gmr-spark-plans-{label}",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
     )
     qs = workload.queries()
     for name in names:
-        spark.sparkContext.setJobDescription(f"r08 plan: {name}")
+        spark.sparkContext.setJobDescription(f"{label} plan: {name}")
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         buf = io.StringIO()

@@ -1,9 +1,10 @@
 """High-diameter WCC probe: star contraction vs min-label propagation
 on a pure ring — the topology class where propagation is hopeless.
 
-`connected_components` (frontier min-label) costs O(diameter)
-supersteps: on an n-vertex ring the minimum label needs ~n/2 supersteps
-to reach the far side.  `connected_components_contract` (alternating
+The distributed tier of `connected_components` (frontier min-label,
+`_min_label` over the symmetrized edges) costs O(diameter) supersteps:
+on an n-vertex ring the minimum label needs ~n/2 supersteps to reach
+the far side.  `connected_components_contract` (alternating
 large/small star) costs O(log n) rounds on ANY topology.  This probe
 makes that difference a measured table instead of an asymptotic claim:
 
@@ -11,9 +12,11 @@ makes that difference a measured table instead of an asymptotic claim:
   no driver edge list);
 - runs contraction to the fixpoint: wall, rounds, and a correctness
   pin (every label must be 1 — one component, minimum id 1);
-- runs min-label for a FIXED superstep budget, derives s/superstep,
-  and extrapolates the wall that the required n/2 supersteps would
-  cost (running it for real would take days — that is the point).
+- runs the bare min-label loop for a FIXED superstep budget (no
+  driver tier, no handoff to contraction), divides its wall by the
+  supersteps it ran, and extrapolates the wall that the required n/2
+  supersteps would cost (running it for real would take days — that is
+  the point).
 
 Usage:
     python tools/wcc_diameter_probe.py [--n 1000000] [--budget 30]
@@ -77,15 +80,19 @@ def main() -> int:
           f" (all {n} labels == 1)", file=sys.stderr)
 
     t0 = time.perf_counter()
-    part = alg.connected_components(
-        g, max_iter=args.budget, check_interval=args.budget
+    und = PropertyGraph(
+        g.vertices, alg._both_ways(g.edges), num_partitions=g.num_partitions
     )
-    part.count()  # materialize the budgeted run
+    res = alg._min_label(
+        und.vertices, und.edges,
+        max_iter=args.budget, check_interval=args.budget,
+    )
+    res.vertices.count()  # materialize the budgeted run
     budget_wall = time.perf_counter() - t0
-    per_step = budget_wall / args.budget
+    per_step = budget_wall / res.iterations
     needed = n // 2  # ring diameter: supersteps for the min to reach
     extrapolated = per_step * needed
-    print(f"# min-label: {budget_wall:.1f}s for {args.budget} supersteps"
+    print(f"# min-label: {budget_wall:.1f}s for {res.iterations} supersteps"
           f" -> {per_step:.2f}s/superstep x {needed} needed"
           f" = ~{extrapolated/3600:.0f}h", file=sys.stderr)
 
@@ -93,7 +100,7 @@ def main() -> int:
         "n": n,
         "contract_wall_s": round(contract_wall, 1),
         "contract_rounds": stats["rounds"],
-        "minlabel_budget_supersteps": args.budget,
+        "minlabel_budget_supersteps": res.iterations,
         "minlabel_budget_wall_s": round(budget_wall, 1),
         "minlabel_s_per_superstep": round(per_step, 2),
         "minlabel_supersteps_needed": needed,
