@@ -4,11 +4,17 @@ All pure Column expressions (codegen-friendly, no UDFs): tokenization,
 quality statistics, token counting, language identification, document
 fingerprinting, character shingles.  Each has an exact ANSI-SQL
 equivalent so the DuckDB oracle can verify it (see
-``graphmapreduce_spark.plans.workload``).
+``graphmapreduce_spark.plans.workload``).  The two shingle hashes also
+have numpy twins (``md5_hash60_np``, ``xxhash64_np``) for kernels that
+hash whole Arrow batches.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -210,6 +216,114 @@ def _hash_col(c: Column, hash_fn: str) -> Column:
     if hash_fn == "md5":
         return md5_hash60(c)
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+# numpy twins of ``_hash_col``'s two hashes, for Arrow-batch kernels:
+# each takes a non-null Arrow string array and returns the int64 values
+# the Column form gives for the same strings
+def _hash_np(values: pa.Array, hash_fn: str) -> np.ndarray:
+    if hash_fn == "xxhash64":
+        return xxhash64_np(values)
+    if hash_fn == "md5":
+        return md5_hash60_np(values)
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def _utf8(values: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(byte offsets, UTF-8 bytes) of a string array."""
+    values = values.cast(pa.large_string())
+    _, offsets, data = values.buffers()
+    offsets = np.frombuffer(offsets, dtype=np.int64)
+    offsets = offsets[values.offset : values.offset + len(values) + 1]
+    if data is None:
+        return offsets, np.zeros(0, dtype=np.uint8)
+    return offsets, np.frombuffer(data, dtype=np.uint8)
+
+
+def md5_hash60_np(values: pa.Array) -> np.ndarray:
+    """``md5_hash60`` of each string: the first 60 bits of the md5 of
+    its UTF-8 bytes."""
+    offsets, data = _utf8(values)
+    buf, bounds = data.tobytes(), offsets.tolist()
+    digests = b"".join(
+        hashlib.md5(buf[lo:hi]).digest()[:8]
+        for lo, hi in zip(bounds[:-1], bounds[1:])
+    )
+    return (np.frombuffer(digests, dtype=">u8") >> np.uint64(4)).astype(np.int64)
+
+
+_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = (
+    np.uint64(p)
+    for p in (
+        0x9E3779B185EBCA87,
+        0xC2B2AE3D27D4EB4F,
+        0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63,
+        0x27D4EB2F165667C5,
+    )
+)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh_round(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _XXH_P2, 31) * _XXH_P1
+
+
+def _le_word(b: np.ndarray, p: int, width: int) -> np.ndarray:
+    """Little-endian ``width``-byte word at byte ``p`` of each row of
+    ``b``, as ``uint64``."""
+    w = np.ascontiguousarray(b[:, p : p + width])
+    return w.view(f"<u{width}")[:, 0].astype(np.uint64)
+
+
+def xxhash64_np(values: pa.Array) -> np.ndarray:
+    """Spark's ``xxhash64`` of each string: XXH64 with seed 42 over its
+    UTF-8 bytes.  Strings of one byte length are hashed together —
+    32-byte stripes, then 8-byte words, a 4-byte word and single bytes,
+    then the avalanche — as ``uint64`` lanes that wrap on overflow."""
+    offsets, data = _utf8(values)
+    lens = np.diff(offsets)
+    out = np.empty(len(lens), dtype=np.uint64)
+    s = np.uint64(42)  # Spark's xxhash64 seed
+    with np.errstate(over="ignore"):
+        for n in np.unique(lens).tolist():
+            rows = np.flatnonzero(lens == n)
+            b = data[offsets[rows, None] + np.arange(n)]
+            p = 0
+            if n >= 32:
+                v = [s + _XXH_P1 + _XXH_P2, s + _XXH_P2, s, s - _XXH_P1]
+                v = [np.full(len(rows), x, dtype=np.uint64) for x in v]
+                while p + 32 <= n:
+                    v = [
+                        _xxh_round(x, _le_word(b, p + 8 * i, 8))
+                        for i, x in enumerate(v)
+                    ]
+                    p += 32
+                h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+                for x in v:
+                    h = (h ^ _xxh_round(np.uint64(0), x)) * _XXH_P1 + _XXH_P4
+            else:
+                h = np.full(len(rows), s + _XXH_P5, dtype=np.uint64)
+            h = h + np.uint64(n)
+            while p + 8 <= n:
+                h = h ^ _xxh_round(np.uint64(0), _le_word(b, p, 8))
+                h = _rotl(h, 27) * _XXH_P1 + _XXH_P4
+                p += 8
+            if p + 4 <= n:
+                h = h ^ (_le_word(b, p, 4) * _XXH_P1)
+                h = _rotl(h, 23) * _XXH_P2 + _XXH_P3
+                p += 4
+            while p < n:
+                h = h ^ (b[:, p].astype(np.uint64) * _XXH_P5)
+                h = _rotl(h, 11) * _XXH_P1
+                p += 1
+            h = (h ^ (h >> np.uint64(33))) * _XXH_P2
+            h = (h ^ (h >> np.uint64(29))) * _XXH_P3
+            out[rows] = h ^ (h >> np.uint64(32))
+    return out.view(np.int64)
 
 
 def rolling_hashes(

@@ -608,23 +608,25 @@ def connected_components_contract(
       smaller-side neighbors (and itself) to their minimum — stars
       flatten.
 
-    At the fixpoint the edge set is a star forest (child → component
-    minimum), read off as the label table; vertices absent from it
-    (roots, isolated) label themselves.  Rounds are O(log n) in the
-    component size regardless of diameter — use this instead of
-    `connected_components` when the graph may contain long paths
-    (road networks, provenance chains, event successions); on
-    low-diameter graphs the min-label frontier variant does less work
-    per round and stays the default.  Convergence is detected by an
+    Edges with an endpoint outside the vertex table are dropped first,
+    as the min-label path drops them: such an id neither merges
+    components nor gets a label.  At the fixpoint the edge set is a
+    star forest (child → component minimum), read off as the label
+    table; vertices absent from it (roots, isolated) label themselves.
+    Rounds are O(log n) in the component size regardless of diameter —
+    use this instead of `connected_components` when the graph may
+    contain long paths (road networks, provenance chains, event
+    successions); on low-diameter graphs the min-label frontier variant
+    does less work per round and stays the default.  Convergence is detected by an
     edge-set fixpoint probe (`exceptAll ... limit(1)` — O(1) rows to
     the driver); raises if ``max_rounds`` rounds don't converge rather
     than returning wrong labels.
     """
-    e = (
+    e = _induced(
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        graph.vertices.select("id"),
     )
     rounds = Rounds(e.sparkSession, "ccstar")
     converged = False

@@ -211,6 +211,11 @@ def local_fixpoint(
 DRIVER_BUDGET_KEY = "spark.graphmapreduce.clusterBroadcastMaxPairs"
 
 
+def driver_budget(spark: SparkSession) -> int:
+    """Tier (a)'s row budget (``DRIVER_BUDGET_KEY``; ``0`` turns it off)."""
+    return int(spark.conf.get(DRIVER_BUDGET_KEY, "1000000"))
+
+
 def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     """Tier (a)'s one gate: ``df`` collected to the driver via Arrow when
     its rows fit the driver budget, else ``None``.
@@ -222,17 +227,20 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     it (then only a frame that fits is collected); without it, at most
     budget + 1 rows are collected and a frame with more returns ``None``.
 
-    The budget bounds driver memory, not speed: at its edge tier (a)
-    is still the faster tier.  Measured with ``tools/graph_tier_ab.py``
-    (graph-bsp's pagerank + sssp cycle, 4 cores, 3 paired runs): 1M
-    edges over 125k vertices 6.0 s vs 17.7 s distributed, 1M edges over
-    1M vertices 16.8 s vs 30.6 s, with at most 134 MiB of numpy and
-    48 MiB of Arrow on the driver; a numpy superstep there costs
-    8-37 ms.  ``connected_components`` on the same graphs (2 pairs and
-    1 pair): 3.1 s vs 5.9 s and 8.2 s vs 8.8 s, at most 75 and 148 MiB
-    of numpy during the call.
+    The budget is a driver-memory cap, not a speed crossover.  At its
+    edge tier (a) is faster over graph-bsp's whole cycle, though not
+    for every algorithm.  Measured with ``tools/graph_tier_ab.py``
+    (pagerank + sssp, 4 cores, 3 paired runs): 1M edges over 125k
+    vertices 6.0 s vs 17.7 s distributed, 1M edges over 1M vertices
+    16.8 s vs 30.6 s, with at most 134 MiB of numpy and 48 MiB of Arrow
+    on the driver; a numpy superstep there costs 8-37 ms.  Per
+    algorithm, at 1M edges over 1M vertices (1 pair, 4 cores), ``sssp``
+    alone took 8.27 s on tier (a) and 6.79 s distributed, while the
+    cycle took 25.1 s vs 41.1 s.  ``connected_components`` on the same
+    graphs (2 pairs and 1 pair): 3.1 s vs 5.9 s and 8.2 s vs 8.8 s, at
+    most 75 and 148 MiB of numpy during the call.
     """
-    cap = int(df.sparkSession.conf.get(DRIVER_BUDGET_KEY, "1000000"))
+    cap = driver_budget(df.sparkSession)
     if cap <= 0 or (rows is not None and rows > cap):
         return None
     if rows is not None:
@@ -283,9 +291,11 @@ class LocalGraph:
         """``graph`` collected when both its tables fit the driver
         budget, else ``None``.  Call inside ``persisted(graph.edges)``:
         the edge count is the job that fills the cache the distributed
-        tier's loop reads.  Graphs with duplicate vertex ids or, when
-        ``weighted``, null or non-finite weights also return ``None`` —
-        they stay on the distributed tier."""
+        tier's loop reads.  A ``from_edges`` graph's vertex ids are
+        taken from the collected edges; any other graph's vertex table
+        is collected under the budget.  Graphs with duplicate vertex
+        ids or, when ``weighted``, null or non-finite weights also
+        return ``None`` — they stay on the distributed tier."""
         # a new frame per call: a frame looks its plan up in the cache
         # once, so counting ``graph.edges`` itself would, on a second
         # call, count through the previous call's dropped cache and
@@ -296,10 +306,19 @@ class LocalGraph:
         edges = driver_local(edges, _count_rows(edges))
         if edges is None:
             return None
-        vertices = driver_local(graph.vertices.select("id"))
-        if vertices is None:
-            return None
-        ids = vertices.column("id").combine_chunks()
+        if graph.vertices_from_endpoints:
+            # the vertex ids are the distinct endpoints, so they come
+            # from the collected edges, not from a second collect; like
+            # ``distinct()``, ``unique`` keeps one null
+            ends = edges.column("src").chunks + edges.column("dst").chunks
+            ids = pc.unique(pa.chunked_array(ends, edges.schema.field("src").type))
+            if len(ids) > driver_budget(graph.spark):
+                return None
+        else:
+            vertices = driver_local(graph.vertices.select("id"))
+            if vertices is None:
+                return None
+            ids = vertices.column("id").combine_chunks()
         key = pc.fill_null(ids, 0).to_numpy()
         valid = ids.is_valid().to_numpy(zero_copy_only=False)
         order = np.flatnonzero(valid)

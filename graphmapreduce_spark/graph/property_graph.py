@@ -78,6 +78,7 @@ class PropertyGraph:
             if vertices is not None
             else None
         )
+        self._endpoint_vertices = None
 
     # -- constructors -------------------------------------------------
 
@@ -111,7 +112,18 @@ class PropertyGraph:
             .distinct()
         )
         g.vertices = ids.withColumn("value", F.lit(float(default_value)))
+        g._endpoint_vertices = g.vertices
         return g
+
+    @property
+    def vertices_from_endpoints(self) -> bool:
+        """True when the vertex ids are exactly the distinct edge
+        endpoints: a ``from_edges`` graph whose vertex table was not
+        replaced."""
+        return (
+            self._endpoint_vertices is not None
+            and self.vertices is self._endpoint_vertices
+        )
 
     # -- helpers ------------------------------------------------------
 

@@ -26,11 +26,14 @@ Keep-policy is deterministic everywhere: the smallest id survives.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from itertools import chain
 
 import numpy as np
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from graphmapreduce_spark.functions import text as T
 from graphmapreduce_spark.functions import vectors as V
@@ -65,45 +68,97 @@ def minhash_signatures(
     seed: int = 42,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Corpus-scale MinHash signing: explode distinct shingles to
-    (id, shingle_hash) rows, then one groupBy(id) with ``num_hashes``
-    min() aggregates — each shingle is hashed exactly once, the mins
-    partial-combine map-side, and parallelism follows the corpus
-    partitioning instead of per-row expression width.
+    """Corpus-scale MinHash signing as one ``mapInArrow`` pass over
+    (id, text): each Arrow batch goes through a numpy kernel
+    (``_minhash_batches``): no per-shingle rows and no aggregate.
 
-    ``hash_fn='md5'`` derives shingle ids from the portable 60-bit md5
-    hash so a SQL oracle can replicate signatures exactly.
+    Per document the kernel takes the distinct ``shingle_n``-character
+    slices (code points, as ``functions.text.char_shingles``), hashes
+    each distinct shingle of a block once, all in one call of the numpy
+    twin of ``hash_fn`` (``functions.text._hash_np``: XXH64 seed 42, or
+    the portable 60-bit md5 a SQL oracle replicates), reduces each
+    hash ``pmod 2^31-1``, and takes the minimum of
+    ``(a·h + b) pmod 2^31-1`` per hash function over the document's
+    shingles.  Documents are shingled and reduced in blocks of at most
+    ``_SIG_BLOCK_CELLS`` (hash, shingle) cells — 64 MiB of int64, 2^18
+    shingles at 32 hashes — so a batch of long documents holds one
+    block's shingles (plus at most one document's) and one block's hash
+    matrix at a time.
 
-    Returns (id_col, sig array<long>).
+    Returns (id_col, sig array<long>) with one row per input row that
+    has at least one shingle: null text and text shorter than
+    ``shingle_n`` get no row.  Rows that share an id (a null id too)
+    keep one signature each; ids are not merged.
     """
     a, b = _hash_coeffs(num_hashes, seed)
-    # spread rows across cores BEFORE the ~|text| fan-out of the explode:
-    # a corpus read from few files would otherwise shingle serially
+    # spread rows across cores before the per-document kernel: a corpus
+    # read from few files would otherwise sign serially
     # (input-parallelism-gated — no corpus shuffle when the scan already
     # parallelizes; operators/_spread.py)
-    exploded = (
-        spread_by(df.select(id_col, text_col), F.col(id_col))
-        .select(
-            F.col(id_col),
-            F.explode(
-                T.char_shingles(text_col, n=shingle_n, distinct=True)
-            ).alias("_s"),
-        )
-        .withColumn(
-            "_h", F.pmod(T._hash_col(F.col("_s"), hash_fn), F.lit(_MERSENNE))
-        )
+    src = spread_by(df.select(id_col, text_col), F.col(id_col))
+    schema = StructType(
+        [src.schema[id_col], StructField("sig", ArrayType(LongType()), False)]
     )
-    aggd = exploded.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.pmod(F.lit(int(a[i])) * F.col("_h") + F.lit(int(b[i])), F.lit(_MERSENNE))
-            ).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
+
+    def sign(batches):
+        return _minhash_batches(batches, shingle_n, hash_fn, a, b)
+
+    return src.mapInArrow(sign, schema)
+
+
+# (hash, shingle) cells per block of the signature kernel: the int64
+# hash matrix of one block is at most 64 MiB
+_SIG_BLOCK_CELLS = 1 << 23
+
+
+def _minhash_batches(batches, n: int, hash_fn: str, a: np.ndarray, b: np.ndarray):
+    """``minhash_signatures``' kernel over (id, text) Arrow batches:
+    documents are collected until their distinct shingles fill a block,
+    then the block is signed (``_minhash_block``)."""
+    block = max(1, _SIG_BLOCK_CELLS // len(a))
+    for batch in batches:
+        ids, texts = batch.column(0), batch.column(1).to_pylist()
+        rows, sets, size = [], [], 0
+        for i, t in enumerate(texts):
+            if t is not None and len(t) >= n:
+                rows.append(i)
+                sets.append({t[j : j + n] for j in range(len(t) - n + 1)})
+                size += len(sets[-1])
+            if rows and (size >= block or i == len(texts) - 1):
+                yield pa.RecordBatch.from_arrays(
+                    [ids.take(rows), _minhash_block(sets, hash_fn, a, b, block)],
+                    [batch.schema.names[0], "sig"],
+                )
+                rows, sets, size = [], [], 0
+
+
+def _minhash_block(
+    sets: list, hash_fn: str, a: np.ndarray, b: np.ndarray, block: int
+) -> pa.ListArray:
+    """The signatures of documents given as shingle sets.  The hash
+    matrix is built ``block`` shingles at a time (a document larger
+    than a block spans several), each block's per-document minima
+    taken by ``np.minimum.reduceat`` and folded into the signatures."""
+    counts = np.fromiter(map(len, sets), dtype=np.int64, count=len(sets))
+    # each distinct shingle of the block is hashed once
+    shingles = pc.dictionary_encode(
+        pa.array(list(chain.from_iterable(sets)), pa.string())
     )
-    return aggd.select(
-        id_col, F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    h = T._hash_np(shingles.dictionary, hash_fn) % _MERSENNE
+    h = h[shingles.indices.to_numpy()]
+    doc = np.repeat(np.arange(len(sets)), counts)
+    sig = np.full((len(a), len(sets)), _MERSENNE, dtype=np.int64)
+    for lo in range(0, len(h), block):
+        hb, db = h[lo : lo + block], doc[lo : lo + block]
+        starts = np.flatnonzero(np.r_[True, db[1:] != db[:-1]])
+        m = a[:, None] * hb
+        m += b[:, None]
+        m %= _MERSENNE
+        d = db[starts]
+        sig[:, d] = np.minimum(sig[:, d], np.minimum.reduceat(m, starts, axis=1))
+    k = len(a)
+    offsets = np.arange(0, (len(sets) + 1) * k, k, dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, pa.array(sig.T.ravel()))
 
 
 def _band_rows(
@@ -395,14 +450,15 @@ def minhash_lsh_near_dup_pairs(
         # materialize signatures ONCE: downstream they are scanned up to
         # four times (banding for the self-join — twice without exchange
         # reuse — plus the est-margin sides), and every scan would re-run
-        # the whole shingle-explode + num_hashes-min-agg pipeline from the
-        # corpus.  The table is (id, num_hashes longs) — the narrowest
-        # artifact of the whole recipe, so its materialization cost is a
-        # fraction of ONE recomputation; localCheckpoint (not persist) is
-        # GC-scoped, so repeated calls don't accumulate session cache.
-        # Lazy: materialized by the first action that reaches it (the
-        # verify/cluster chain), then every later scan reads the
-        # checkpointed blocks — eager cost one standalone driver job
+        # the signature kernel over the corpus.  The table is (id,
+        # num_hashes longs) — the narrowest artifact of the whole recipe,
+        # so its materialization cost is a fraction of ONE recomputation;
+        # localCheckpoint (not persist) is GC-scoped, so repeated calls
+        # don't accumulate session cache.  Lazy: materialized by the
+        # first action that reaches it (the verify/cluster chain), then
+        # every later scan reads the checkpointed blocks.  Under AQE the
+        # call still runs any shuffle map stage below it (the spread) as
+        # a job of its own
         sigs = sigs.localCheckpoint(eager=False)
     cands = lsh_candidate_pairs(
         sigs, "_id", "sig", num_hashes, bands,

@@ -157,7 +157,9 @@ def dedup_corpus(
         .groupBy("_ck")
         .agg(F.min(id_col).alias("_rep"))
         # lazy: the first downstream action (the LSH/cluster chain)
-        # materializes it; eager here was one extra blocking driver job
+        # materializes it.  Under AQE the call still runs the shuffle
+        # map stage below it (the groupBy's) as one job; eager would
+        # also run the final stage here
         .localCheckpoint(eager=False)
     )
     exact_map = (
@@ -182,8 +184,9 @@ def dedup_corpus(
             ).select(id_col, text_col),
             F.col(id_col),
         )
-        # lazy for the same reason as `reps`: materialized on first use,
-        # shared by every later consumer, no standalone driver job
+        # lazy as `reps` is: materialized on first use and shared by
+        # every later consumer; under AQE the call still runs the
+        # shuffle map stages below it (the spread's) as jobs of their own
         .localCheckpoint(eager=False)
     )
     pairs = minhash_lsh_near_dup_pairs(

@@ -1008,3 +1008,130 @@ def test_spread_by_gates_on_input_parallelism(spark, tmp_path):
         .optimizedPlan().toString()
     )
     assert "RepartitionByExpression" in plan_mem
+
+
+def _explode_min_signatures(df, id_col, text_col, num_hashes, shingle_n, hash_fn):
+    """Reference MinHash signatures in the SQL form: explode the distinct
+    shingles, hash each, then one ``min`` aggregate per hash function
+    grouped by id."""
+    a, b = D._hash_coeffs(num_hashes, 42)
+    m = F.lit(D._MERSENNE)
+    h = F.pmod(T._hash_col(F.col("_s"), hash_fn), m)
+    rows = df.select(
+        id_col, F.explode(T.char_shingles(text_col, n=shingle_n)).alias("_s")
+    )
+    return rows.groupBy(id_col).agg(
+        F.array(
+            *[F.min(F.pmod(F.lit(int(a[i])) * h + F.lit(int(b[i])), m))
+              for i in range(num_hashes)]
+        ).alias("sig")
+    )
+
+
+def _random_texts(seed, n):
+    import random
+
+    rng = random.Random(seed)
+    alphabet = "abcde xyz é漢😀\t"
+    return [""] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 100)))
+        for _ in range(n)
+    ]
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_hash_twins_equal_hash_col(spark, hash_fn):
+    """The numpy twin of each shingle hash gives ``_hash_col``'s value on
+    empty, ASCII, non-ASCII and non-BMP strings of 0-100 characters
+    (0-400 UTF-8 bytes: every XXH64 step runs)."""
+    import pyarrow as pa
+
+    texts = _random_texts(7, 1000)
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, s string")
+    want = [
+        r[0] for r in df.orderBy("i").select(T._hash_col(F.col("s"), hash_fn))
+        .collect()
+    ]
+    assert T._hash_np(pa.array(texts), hash_fn).tolist() == want
+
+
+SIG_DOCS = [
+    ("a", "the quick brown fox jumps over the lazy dog"),
+    ("b", "the quick brown fox jumps over the lazy cat"),
+    ("c", None),
+    ("d", "ab"),  # shorter than shingle_n
+    ("e", "abc"),  # exactly one shingle
+    ("f", "aaaaaaaaaa"),  # one distinct shingle, repeated
+    ("g", "naïve café 漢字 😀😀😀 emoji"),  # code points, not bytes
+    ("h", "spark " * 60),
+]
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_minhash_signatures_equal_explode_min_reference(spark, hash_fn):
+    """The Arrow kernel gives the explode + ``min`` aggregate's
+    signatures, with its schema; null text and text shorter than
+    ``shingle_n`` get no row."""
+    docs = spark.createDataFrame(
+        SIG_DOCS + [(f"r{i}", t) for i, t in enumerate(_random_texts(3, 40))],
+        "doc_id string, text string",
+    )
+    got = D.minhash_signatures(docs, "doc_id", "text", 16, 3, 42, hash_fn)
+    want = _explode_min_signatures(docs, "doc_id", "text", 16, 3, hash_fn)
+    assert got.schema == want.schema
+    rows = sorted((r[0], tuple(r[1])) for r in got.collect())
+    assert rows == sorted((r[0], tuple(r[1])) for r in want.collect())
+    assert {"c", "d"}.isdisjoint(i for i, _ in rows)
+    assert {"a", "e", "f", "g", "h"} <= {i for i, _ in rows}
+
+
+def test_minhash_signatures_one_row_per_document(spark):
+    """Documents that share an id (null included) keep one signature
+    each, equal to the signature of the document alone; ids are not
+    merged into one signature over the union of their shingles."""
+    t1, t2 = "the quick brown fox", "lazy dogs sleep all day"
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [(1, t1), (1, t2), (2, t2), (None, t1), (None, t2)], schema
+    )
+    alone = _explode_min_signatures(
+        spark.createDataFrame([(1, t1), (2, t2)], schema),
+        "doc_id", "text", 8, 3, "xxhash64",
+    ).collect()
+    sig = {t1 if r[0] == 1 else t2: tuple(r[1]) for r in alone}
+    got = D.minhash_signatures(docs, "doc_id", "text", 8, 3).collect()
+
+    def key(r):
+        return (r[0] is None, r)
+
+    assert sorted(((r[0], tuple(r[1])) for r in got), key=key) == sorted(
+        [(1, sig[t1]), (1, sig[t2]), (2, sig[t2]),
+         (None, sig[t1]), (None, sig[t2])],
+        key=key,
+    )
+
+
+def test_minhash_kernel_blocks_equal_one_pass(monkeypatch):
+    """Signing in blocks smaller than a document (one document spans
+    several blocks, blocks split documents) gives the one-block
+    signatures."""
+    import pyarrow as pa
+
+    texts = ["x", None] + _random_texts(5, 30)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts)), pa.int64()), pa.array(texts)],
+        ["doc_id", "text"],
+    )
+    a, b = D._hash_coeffs(8, 42)
+
+    def sign():
+        out = pa.Table.from_batches(
+            list(D._minhash_batches([batch], 3, "xxhash64", a, b))
+        )
+        return list(zip(out["doc_id"].to_pylist(), out["sig"].to_pylist()))
+
+    whole = sign()
+    monkeypatch.setattr(D, "_SIG_BLOCK_CELLS", 8 * 7)
+    blocked = sign()
+    assert len(whole) == sum(t is not None and len(t) >= 3 for t in texts)
+    assert blocked == whole

@@ -1147,6 +1147,27 @@ def test_cc_auto_high_diameter_hands_off_to_contraction(
     assert stats["rounds"] > 0  # contraction rounds recorded
 
 
+def test_cc_contract_drops_non_vertex_endpoints(
+    spark, monkeypatch, distributed_tier
+):
+    """Contraction takes only the edges with both endpoints in the vertex
+    table, as min-label does: 7 and 8 are not vertices, so 3 and 4 stay
+    apart and neither 7 nor 8 gets a row."""
+    v = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 9)], "id long")
+    e = spark.createDataFrame(
+        [(1, 2), (3, 7), (7, 4), (8, 1)], "src long, dst long"
+    )
+    g = PropertyGraph(v, e)
+    want = {(1, 1), (2, 1), (3, 3), (4, 4), (9, 9)}
+    stats = {}
+    got = {tuple(r) for r in alg.connected_components(g, stats=stats).collect()}
+    assert stats["path"] == "minlabel" and got == want
+    monkeypatch.setattr(alg, "MIN_LABEL_BUDGET", 0)
+    stats = {}
+    got = {tuple(r) for r in alg.connected_components(g, stats=stats).collect()}
+    assert stats["path"] == "contract" and got == want
+
+
 def test_pregel_single_job_chunk_equivalent(spark, distributed_tier):
     """The size-adaptive single-job chunk path (AQE suspended during
     chunk construction, shuffle-hash-hinted joins, one action per

@@ -278,6 +278,46 @@ def test_unsupported_inputs_stay_distributed(spark, monkeypatch):
     assert ranks == pytest.approx({1: 0.5, 2: 0.5})
 
 
+def test_from_edges_vertex_ids_come_from_the_edges(spark, monkeypatch):
+    """A ``from_edges`` graph's vertex ids are its distinct endpoints, so
+    ``LocalGraph.collect`` takes them from the collected edges (one
+    null kept) instead of collecting the vertex table; the ids still
+    count against the budget.  A graph with its own vertex table keeps
+    the vertex collect."""
+    gated = []
+    orig = iterate.driver_local
+
+    def recording(df, rows=None):
+        gated.append(df.columns)
+        return orig(df, rows)
+
+    monkeypatch.setattr(iterate, "driver_local", recording)
+    g = _null_endpoints(spark)
+    with iterate.persisted(g.edges):
+        lg = iterate.LocalGraph.collect(g, weighted=False)
+    assert gated == [["src", "dst"]]
+    assert sorted(lg.ids.to_pylist(), key=lambda i: (i is None, i)) == [
+        1, 2, 3, 4, None
+    ]
+    gated.clear()
+    g = _isolated(spark)
+    with iterate.persisted(g.edges):
+        lg = iterate.LocalGraph.collect(g, weighted=False)
+    assert gated == [["src", "dst"], ["id"]] and lg.n == 7
+    # 3 edges fit a budget of 4, their 6 endpoints do not
+    g = _from_edges(spark, [(1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)])
+    prev = spark.conf.get(iterate.DRIVER_BUDGET_KEY, None)
+    spark.conf.set(iterate.DRIVER_BUDGET_KEY, "4")
+    try:
+        with iterate.persisted(g.edges):
+            assert iterate.LocalGraph.collect(g, weighted=False) is None
+    finally:
+        if prev is None:
+            spark.conf.unset(iterate.DRIVER_BUDGET_KEY)
+        else:
+            spark.conf.set(iterate.DRIVER_BUDGET_KEY, prev)
+
+
 def test_local_fixpoint_votes_like_fixpoint(spark):
     """The numpy twin stops on the same superstep as ``fixpoint`` for a
     geometric decay under chunked votes, overshoot included."""
