@@ -87,8 +87,25 @@ def sssp(
     reference left disabled — ``graph.h:760-762``).  A graph within the
     driver budget runs the same relaxation as numpy on the driver
     (``_min_plus_local``; tier (a), see ``graph/iterate.py``)."""
+    return _shortest_paths(
+        graph, source, threshold, max_iter, check_interval,
+        broadcast_vertices, unit=False,
+    )
+
+
+def _shortest_paths(
+    graph: PropertyGraph,
+    source: int,
+    threshold: float,
+    max_iter: int,
+    check_interval: int,
+    broadcast_vertices: bool,
+    unit: bool,
+) -> DataFrame:
+    """(id, distance) from ``source`` on either tier; ``unit`` counts
+    every edge as 1 whatever its weight (``bfs``)."""
     with persisted(graph.edges):
-        lg = LocalGraph.collect(graph, weighted=True)
+        lg = LocalGraph.collect(graph, weighted=not unit)
         if lg is not None:
             init = np.where(lg.valid & (lg.key == source), 0.0, np.inf)
             dist = _min_plus_local(
@@ -101,7 +118,7 @@ def sssp(
             return lg.frame("distance", dist)
         return _sssp_pregel(
             graph, source, threshold, max_iter, check_interval,
-            broadcast_vertices,
+            broadcast_vertices, unit,
         )
 
 
@@ -112,6 +129,7 @@ def _sssp_pregel(
     max_iter: int,
     check_interval: int,
     broadcast_vertices: bool,
+    unit: bool,
 ) -> DataFrame:
     init = graph.vertices.select(
         "id",
@@ -120,13 +138,15 @@ def _sssp_pregel(
         .alias("value"),
     )
 
+    length = F.lit(1.0) if unit else F.col("weight")
+
     def messages(active: DataFrame, edges: DataFrame) -> DataFrame:
         return (
             active.filter(~F.isnan("value") & (F.col("value") != float("inf")))
             .join(edges, active["id"] == edges["src"])
             .select(
                 F.col("dst").alias("id"),
-                (F.col("value") + F.col("weight")).alias("msg"),
+                (F.col("value") + length).alias("msg"),
             )
         )
 
@@ -160,9 +180,11 @@ def _min_plus_local(
     Spark's ``min``/``least`` order NaN above every number, which is
     ``fmin``'s rule.  An unchanged value (inf → inf too) has delta 0,
     else |new − old|.  Edges with an endpoint that is not a vertex
-    carry nothing.  Returns the final values."""
+    carry nothing; without ``lg.weight`` every edge weighs 1.  Returns
+    the final values."""
     live = (lg.src >= 0) & (lg.dst >= 0)
-    src, dst, weight = lg.src[live], lg.dst[live], lg.weight[live]
+    src, dst = lg.src[live], lg.dst[live]
+    weight = np.ones(len(src)) if lg.weight is None else lg.weight[live]
 
     def step(state):
         old, delta = state
@@ -190,13 +212,10 @@ def _min_plus_local(
 # ---------------------------------------------------------------------------
 def bfs(graph: PropertyGraph, source: int, max_iter: int = MAX_ITERATION) -> DataFrame:
     """Breadth-first levels from ``source``.  (id, level); -1 = unreachable."""
-    unit = PropertyGraph(
-        graph.vertices,
-        graph.edges.withColumn("weight", F.lit(1.0)),
-        num_partitions=graph.num_partitions,
-        prepartition=False,
+    d = _shortest_paths(
+        graph, source, threshold=0.5, max_iter=max_iter, check_interval=1,
+        broadcast_vertices=False, unit=True,
     )
-    d = sssp(unit, source, threshold=0.5, max_iter=max_iter)
     return d.select(
         "id",
         F.when(F.col("distance") == float("inf"), F.lit(-1))

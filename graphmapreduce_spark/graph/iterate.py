@@ -25,14 +25,16 @@ lineage, and votes to halt:
 Loops run on one of two tiers:
 
 - (a) **driver-local**: a graph whose edge and vertex tables both fit
-  the driver budget (``driver_local``) is collected once via Arrow
-  (``LocalGraph``) and the loop runs as numpy on the driver
-  (``local_fixpoint``, the twin of ``fixpoint``) — GMR's own shape, a
-  superstep as array code over the vertices one process owns
+  the driver budget (``driver_local``) is collected via Arrow once per
+  graph object — the first fitting call keeps the snapshot on the
+  ``PropertyGraph`` (``LocalGraph.collect``), as GMR loads a graph once
+  (``initGraph``) for every later round — and the loop runs as numpy on
+  the driver (``local_fixpoint``, the twin of ``fixpoint``): GMR's own
+  shape, a superstep as array code over the vertices one process owns
   (``gmr.h:282-367``).  No Spark job, checkpoint or sever per
-  superstep.  ``pagerank``, ``personalized_pagerank``, ``sssp``,
-  ``bfs`` and ``connected_components`` (so ``dedup_clusters`` too) take
-  it;
+  superstep, and none at all for a later call on the same graph.
+  ``pagerank``, ``personalized_pagerank``, ``sssp``, ``bfs`` and
+  ``connected_components`` (so ``dedup_clusters`` too) take it;
 - (b)/(c) **distributed**: every other loop, and the same five above
   the budget — Spark supersteps through ``fixpoint`` and ``Rounds``.
 """
@@ -226,6 +228,11 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     tier (a) off.  ``rows`` is ``df``'s row count when the caller has
     it (then only a frame that fits is collected); without it, at most
     budget + 1 rows are collected and a frame with more returns ``None``.
+    A graph is collected once: ``LocalGraph.collect`` keeps the first
+    fitting collect on the graph object and serves later calls from it
+    while it still fits the budget, so tier (a) reads the graph as of
+    that call, like a Spark cache; rebuild the graph to see changed
+    input.
 
     The budget is a driver-memory cap, not a speed crossover.  At its
     edge tier (a) is faster over graph-bsp's whole cycle, though not
@@ -249,11 +256,12 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     return table if table.num_rows <= cap else None
 
 
-def _count_rows(df: DataFrame) -> int:
+def count_rows(df: DataFrame) -> int:
     """``df.count()`` as one RDD count job: under AQE ``DataFrame.count``
     plans a two-stage aggregate, two more jobs on top of the one that
-    fills ``df``'s cache.  The RDD is fixed at ``df``'s first action, so
-    ``df`` must be a frame built after the cache it should fill."""
+    fills ``df``'s cache or lazy checkpoint.  The RDD is fixed at
+    ``df``'s first action, so ``df`` must be a frame built after the
+    cache it should fill."""
     return df._jdf.queryExecution().toRdd().count()
 
 
@@ -267,6 +275,53 @@ def _positions(col: pa.Array, keys: np.ndarray, order: np.ndarray) -> np.ndarray
     i = np.minimum(np.searchsorted(keys, x), len(keys) - 1)
     hit = col.is_valid().to_numpy(zero_copy_only=False) & (keys[i] == x)
     return np.where(hit, order[i], -1)
+
+
+@dataclass
+class _Snapshot:
+    """Tier (a)'s copy of one graph: the collected (src, dst, weight)
+    edge table and vertex ids, and the ``edges`` / ``vertices`` frames
+    they were collected from."""
+
+    edges: DataFrame
+    vertices: DataFrame
+    table: pa.Table
+    ids: pa.Array
+
+    def of(self, graph) -> bool:
+        """Collected from ``graph``'s current frames."""
+        return self.edges is graph.edges and self.vertices is graph.vertices
+
+    def fits(self, cap: int) -> bool:
+        return 0 < cap and max(self.table.num_rows, len(self.ids)) <= cap
+
+    @classmethod
+    def take(cls, graph) -> "_Snapshot | None":
+        """``graph`` collected when both its tables fit the driver
+        budget, else ``None``.  The edge count is the job that fills the
+        cache the distributed tier's loop reads."""
+        # a new frame per call: a frame looks its plan up in the cache
+        # once, so counting ``graph.edges`` itself would, on a second
+        # call, count through the previous call's dropped cache and
+        # leave this call's empty
+        edges = graph.edges.select("src", "dst", "weight")
+        table = driver_local(edges, count_rows(edges))
+        if table is None:
+            return None
+        if graph.vertices_from_endpoints:
+            # the vertex ids are the distinct endpoints, so they come
+            # from the collected edges, not from a second collect; like
+            # ``distinct()``, ``unique`` keeps one null
+            ends = table.column("src").chunks + table.column("dst").chunks
+            ids = pc.unique(pa.chunked_array(ends, table.schema.field("src").type))
+            if len(ids) > driver_budget(graph.spark):
+                return None
+        else:
+            vertices = driver_local(graph.vertices.select("id"))
+            if vertices is None:
+                return None
+            ids = vertices.column("id").combine_chunks()
+        return cls(graph.edges, graph.vertices, table, ids)
 
 
 @dataclass
@@ -288,37 +343,38 @@ class LocalGraph:
 
     @classmethod
     def collect(cls, graph, weighted: bool) -> "LocalGraph | None":
-        """``graph`` collected when both its tables fit the driver
+        """``graph`` on tier (a) when both its tables fit the driver
         budget, else ``None``.  Call inside ``persisted(graph.edges)``:
         the edge count is the job that fills the cache the distributed
-        tier's loop reads.  A ``from_edges`` graph's vertex ids are
-        taken from the collected edges; any other graph's vertex table
-        is collected under the budget.  Graphs with duplicate vertex
-        ids or, when ``weighted``, null or non-finite weights also
-        return ``None`` — they stay on the distributed tier."""
-        # a new frame per call: a frame looks its plan up in the cache
-        # once, so counting ``graph.edges`` itself would, on a second
-        # call, count through the previous call's dropped cache and
-        # leave this call's empty
-        edges = graph.edges.select(
-            *(["src", "dst", "weight"] if weighted else ["src", "dst"])
-        )
-        edges = driver_local(edges, _count_rows(edges))
-        if edges is None:
-            return None
-        if graph.vertices_from_endpoints:
-            # the vertex ids are the distinct endpoints, so they come
-            # from the collected edges, not from a second collect; like
-            # ``distinct()``, ``unique`` keeps one null
-            ends = edges.column("src").chunks + edges.column("dst").chunks
-            ids = pc.unique(pa.chunked_array(ends, edges.schema.field("src").type))
-            if len(ids) > driver_budget(graph.spark):
+        tier's loop reads.
+
+        The first call that fits keeps a snapshot of the graph on it
+        (the collected edge table and vertex ids, ``_Snapshot``), and
+        later calls on the same graph build from it with no Spark job
+        while ``graph.edges`` and ``graph.vertices`` are the frames it
+        was taken from and it still fits the budget, which every call
+        reads again (``0`` sends the call to the distributed tier and
+        keeps the snapshot for later).  Like a Spark cache, tier (a)
+        therefore reads the graph as of its first fitting call: input
+        that changed under the same frames is not seen, so rebuild the
+        graph (or reassign ``edges`` / ``vertices``) to see it.  The
+        snapshot lives as long as the graph object (at most the budget
+        in edge rows and in vertex ids).
+
+        A ``from_edges`` graph's vertex ids are taken from the collected
+        edges; any other graph's vertex table is collected under the
+        budget.  Graphs with duplicate vertex ids or, when ``weighted``,
+        null or non-finite weights also return ``None`` — they stay on
+        the distributed tier."""
+        snap = graph._local
+        if snap is not None and not snap.of(graph):
+            snap = graph._local = None
+        if snap is None or not snap.fits(driver_budget(graph.spark)):
+            snap = _Snapshot.take(graph)
+            if snap is None:
                 return None
-        else:
-            vertices = driver_local(graph.vertices.select("id"))
-            if vertices is None:
-                return None
-            ids = vertices.column("id").combine_chunks()
+            graph._local = snap
+        ids = snap.ids
         key = pc.fill_null(ids, 0).to_numpy()
         valid = ids.is_valid().to_numpy(zero_copy_only=False)
         order = np.flatnonzero(valid)
@@ -326,6 +382,7 @@ class LocalGraph:
         keys = key[order]
         if ids.null_count > 1 or np.any(keys[1:] == keys[:-1]):
             return None
+        edges = snap.table
         weight = None
         if weighted:
             w = edges.column("weight").combine_chunks()

@@ -78,7 +78,10 @@ class PropertyGraph:
             if vertices is not None
             else None
         )
-        self._endpoint_vertices = None
+        self._endpoint_pair = None
+        # tier (a)'s snapshot of this graph, kept by
+        # ``graph/iterate.py::LocalGraph.collect``
+        self._local = None
 
     # -- constructors -------------------------------------------------
 
@@ -112,17 +115,19 @@ class PropertyGraph:
             .distinct()
         )
         g.vertices = ids.withColumn("value", F.lit(float(default_value)))
-        g._endpoint_vertices = g.vertices
+        g._endpoint_pair = (g.edges, g.vertices)
         return g
 
     @property
     def vertices_from_endpoints(self) -> bool:
         """True when the vertex ids are exactly the distinct edge
-        endpoints: a ``from_edges`` graph whose vertex table was not
-        replaced."""
+        endpoints: a ``from_edges`` graph whose edge and vertex tables
+        were not replaced."""
+        pair = self._endpoint_pair
         return (
-            self._endpoint_vertices is not None
-            and self.vertices is self._endpoint_vertices
+            pair is not None
+            and pair[0] is self.edges
+            and pair[1] is self.vertices
         )
 
     # -- helpers ------------------------------------------------------

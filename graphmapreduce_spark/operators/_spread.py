@@ -22,10 +22,12 @@ signal available:
   the total ROW-GROUP count decides: Spark assigns byte-range splits, but
   a split only produces rows when it contains a row-group start, so row
   groups — not byte splits — bound real scan parallelism;
-- unreadable footers (remote object stores, non-parquet sources) fall
-  back to the file count; NO files (in-memory test frames, checkpointed
-  RDDs) keep the spread — the safe default for exactly the single-blob
-  layouts the spread exists to fix.
+- footers are opened through ``pyarrow.fs`` from the file's URI, so
+  any filesystem pyarrow can open (local, HDFS, S3, GCS, ...) takes the
+  row-group branch; unreadable footers (a filesystem pyarrow cannot
+  reach, non-parquet sources) fall back to the file count; NO files
+  (in-memory test frames, checkpointed RDDs) keep the spread — the safe
+  default for exactly the single-blob layouts the spread exists to fix.
 """
 
 from __future__ import annotations
@@ -45,12 +47,14 @@ def _scan_splits(df: DataFrame, n: int) -> int | None:
     if len(files) >= n:
         return len(files)
     try:
+        import pyarrow.fs as pafs
         import pyarrow.parquet as pq
 
         total = 0
         for f in files:
-            path = f.split("://", 1)[1] if f.startswith("file:") else f
-            total += pq.ParquetFile(path).metadata.num_row_groups
+            fs, path = pafs.FileSystem.from_uri(f)
+            with fs.open_input_file(path) as fh:
+                total += pq.ParquetFile(fh).metadata.num_row_groups
             if total >= n:
                 break
         return total

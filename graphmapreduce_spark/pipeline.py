@@ -169,24 +169,19 @@ def dedup_corpus(
     )
     # materialize once: the LSH stage scans representatives three ways
     # (signatures, sampled shingles, full shingles) — without the
-    # checkpoint each scan would re-run the exact-dedup shuffle.
-    # Repartition BEFORE the checkpoint: the semi-join output inherits
-    # the scan partitioning (a few-file corpus checkpoints into a few
-    # blocks), and every downstream shingle/signature pass would run at
-    # that parallelism; spreading by id here costs one narrow shuffle
-    # of (id, text) and parallelizes all of them.
-    from graphmapreduce_spark.operators._spread import spread_by
-
+    # checkpoint each scan would re-run the exact-dedup shuffle.  Not
+    # spread by id here: each of those passes spreads its own input
+    # (`operators/_spread.py`; a checkpoint has no input files and
+    # reports no partitioning, so a spread before it would be shuffled
+    # again), and `_with_index` spreads what it reads.
     rep_docs = (
-        spread_by(
-            docs.join(
-                reps.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
-            ).select(id_col, text_col),
-            F.col(id_col),
+        docs.join(
+            reps.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
         )
+        .select(id_col, text_col)
         # lazy as `reps` is: materialized on first use and shared by
         # every later consumer; under AQE the call still runs the
-        # shuffle map stages below it (the spread's) as jobs of their own
+        # shuffle map stages below it as jobs of their own
         .localCheckpoint(eager=False)
     )
     pairs = minhash_lsh_near_dup_pairs(
@@ -335,13 +330,17 @@ def _with_index(
     built over the kept docs' text instead (one extra scan of the KEPT
     subset only; exact-dup members share text, so either member's
     shingles are identical)."""
+    from graphmapreduce_spark.operators._spread import spread_by
     from graphmapreduce_spark.operators.dedup import build_near_dup_index
 
     kept = (
         mapping.select(F.col("canonical_id").alias(id_col)).distinct()
     )
     if prefer is None:
-        src = rep_docs
+        # spread as the signature pass spreads it: the two repartitions
+        # by id collapse into one there, and the shingle pass reads the
+        # spread rows too
+        src = spread_by(rep_docs, F.col(id_col))
     else:
         src = docs.join(kept, id_col, "left_semi").select(id_col, text_col)
     index = build_near_dup_index(

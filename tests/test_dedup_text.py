@@ -895,6 +895,43 @@ def test_dedup_corpus_prefer_with_string_ids(spark):
     }
 
 
+def test_dedup_corpus_spreads_representatives_once(spark, monkeypatch):
+    """The representatives' (id, text) are spread by id once, by the
+    signature pass, not also before their checkpoint (a checkpoint
+    reports no partitioning, so that spread was shuffled again); the
+    candidates' shingle pass spreads its subset, and with
+    ``emit_index=True`` both index frames still read spread rows."""
+    from graphmapreduce_spark.pipeline import dedup_corpus
+
+    plans = []
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+
+    def recording(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, eager)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    base = "the quick brown fox jumps over the lazy dog " * 6
+    corpus = spark.createDataFrame(
+        [(1, base), (2, base), (3, base + " EXTRA TAIL"), (4, "other " * 20)],
+        "doc_id long, text string",
+    )
+    _, idx = dedup_corpus(
+        corpus, "doc_id", "text", threshold=0.5, num_hashes=32,
+        shingle_n=5, hash_fn="md5", max_bucket_size=64, emit_index=True,
+    )
+    spread = "REPARTITION_BY_NUM"
+    signed = [p for p in plans if "MapInArrow" in p]
+    assert len(signed) == 1 and signed[0].count(spread) == 1
+    # the other spread is the candidates' shingle pass (``_sid``)
+    assert all(spread not in p for p in plans if "MapInArrow" not in p
+               and "_sid" not in p), plans
+    for name in ("bands", "shingles"):
+        plan = idx[name]._jdf.queryExecution().executedPlan().toString()
+        assert plan.count(spread) == 1, (name, plan)
+
+
 def test_dedup_corpus_emit_index_roundtrip(spark, tmp_path):
     """dedup_corpus(emit_index=True): the byproduct index covers
     exactly the kept canonicals, parquet round-trips through
@@ -963,6 +1000,46 @@ def test_lsh_bucket_cap_plan_has_no_window(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_lsh_bucket_cap_fallback_matches_broadcast(spark, graph_tiers):
+    """The oversized-bucket list is broadcast once for both routing
+    joins within the driver budget, and both joins are shuffled on
+    (band, bucket) above it (budget 0); the candidate pairs are the
+    same."""
+    import random
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(40)]
+    rows = [(i, "one boilerplate line shared by every copy") for i in range(30)]
+    # near-duplicates: each random text and a copy with one word changed
+    for j in range(12):
+        t = " ".join(rng.choices(words, k=30))
+        rows += [(100 + 2 * j, t), (101 + 2 * j, t.replace(t.split()[3], "zz", 1))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = D.minhash_signatures(
+        docs, "doc_id", "text", num_hashes=32
+    ).localCheckpoint()
+    got = {}
+    for tier in graph_tiers():
+        capped = D.lsh_candidate_pairs(
+            sigs, "doc_id", "sig", num_hashes=32, bands=8, max_bucket_size=5
+        )
+        got[tier] = sorted(tuple(r) for r in capped.collect())
+        plan = capped._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        routing = [
+            ln for ln in final.splitlines() if "Join" in ln and "_hband" in ln
+        ]
+        join = "BroadcastHashJoin" if tier == "driver" else "ShuffledHashJoin"
+        assert len(routing) >= 2 and all(join in ln for ln in routing), plan
+        if tier == "driver":
+            # one broadcast of the list; the other join reuses it
+            assert final.count("Scan ExistingRDD[_hband") == 1, plan
+    assert got["driver"] == got["distributed"]
+    # the 30 copies form one star, anchored at the min id
+    assert [p for p in got["driver"] if p[0] < 30] == [(0, i) for i in range(1, 30)]
+    assert len(got["driver"]) > 29
+
+
 def test_dedup_clusters_drops_null_ids(spark):
     """Non-numeric string ids cast to NULL; the driver path must drop
     them instead of labelling a null id, and the mapping must cover
@@ -1008,6 +1085,32 @@ def test_spread_by_gates_on_input_parallelism(spark, tmp_path):
         .optimizedPlan().toString()
     )
     assert "RepartitionByExpression" in plan_mem
+
+
+def test_scan_splits_reads_footers_through_pyarrow_fs(spark, tmp_path):
+    """``_scan_splits`` opens parquet footers from the scan's file URIs
+    through ``pyarrow.fs``: one ``file://`` parquet of 6 row groups, in
+    a directory whose name the URI percent-encodes, counts 6 splits,
+    not its 1 file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphmapreduce_spark.operators._spread import _scan_splits
+
+    d = tmp_path / "row groups"
+    d.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": list(range(600)), "text": ["t"] * 600}),
+        d / "part.parquet",
+        row_group_size=100,
+    )
+    df = spark.read.parquet(str(d))
+    (uri,) = df.inputFiles()
+    assert uri.startswith("file:") and "%20" in uri
+    assert _scan_splits(df, 100) == 6
+    # counting stops once the footers reach the wanted parallelism
+    assert _scan_splits(df, 4) == 6
+    assert _scan_splits(df, 1) == 1
 
 
 def _explode_min_signatures(df, id_col, text_col, num_hashes, shingle_n, hash_fn):

@@ -9,7 +9,7 @@ equal to a relative 1e-12, schemas equal, nullability included."""
 
 import itertools
 import math
-from contextlib import nullcontext
+from contextlib import contextmanager, nullcontext
 
 import numpy as np
 import pytest
@@ -295,7 +295,7 @@ def test_from_edges_vertex_ids_come_from_the_edges(spark, monkeypatch):
     g = _null_endpoints(spark)
     with iterate.persisted(g.edges):
         lg = iterate.LocalGraph.collect(g, weighted=False)
-    assert gated == [["src", "dst"]]
+    assert gated == [["src", "dst", "weight"]]
     assert sorted(lg.ids.to_pylist(), key=lambda i: (i is None, i)) == [
         1, 2, 3, 4, None
     ]
@@ -303,7 +303,7 @@ def test_from_edges_vertex_ids_come_from_the_edges(spark, monkeypatch):
     g = _isolated(spark)
     with iterate.persisted(g.edges):
         lg = iterate.LocalGraph.collect(g, weighted=False)
-    assert gated == [["src", "dst"], ["id"]] and lg.n == 7
+    assert gated == [["src", "dst", "weight"], ["id"]] and lg.n == 7
     # 3 edges fit a budget of 4, their 6 endpoints do not
     g = _from_edges(spark, [(1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)])
     prev = spark.conf.get(iterate.DRIVER_BUDGET_KEY, None)
@@ -352,10 +352,11 @@ def test_local_fixpoint_votes_like_fixpoint(spark):
 
 
 def test_reused_graph_derives_its_edges_once_per_call(spark, graph_tiers):
-    """Each call caches the graph's edges for its loop and derives them
-    exactly once, also after an earlier call over the same graph object
-    dropped its own cache: pagerank, sssp, then pagerank again on one
-    graph, on both tiers."""
+    """The distributed tier caches the graph's edges for each call's
+    loop and derives them exactly once per call, also after an earlier
+    call over the same graph object dropped its own cache; tier (a)
+    derives them once for its first call and reads its snapshot after:
+    pagerank, sssp, then pagerank again on one graph, on both tiers."""
     derived = spark.sparkContext.accumulator(0)
 
     def weight(src):
@@ -371,14 +372,143 @@ def test_reused_graph_derives_its_edges_once_per_call(spark, graph_tiers):
     # and would serve a re-derivation without running the udf
     g = PropertyGraph.from_edges(edges, prepartition=False)
     for tier in graph_tiers():
-        for name, run in (
+        for i, (name, run) in enumerate((
             ("pagerank", lambda: alg.pagerank(g, max_iter=3)),
             ("sssp", lambda: alg.sssp(g, source=0)),
             ("pagerank", lambda: alg.pagerank(g, max_iter=3)),
-        ):
+        )):
             before = derived.value
             run().collect()
-            assert derived.value - before == 6, (tier, name)
+            want = 6 if tier == "distributed" or i == 0 else 0
+            assert derived.value - before == want, (tier, name)
+
+
+def _jobs(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+@contextmanager
+def _budget(spark, value):
+    prev = spark.conf.get(iterate.DRIVER_BUDGET_KEY, None)
+    spark.conf.set(iterate.DRIVER_BUDGET_KEY, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(iterate.DRIVER_BUDGET_KEY)
+        else:
+            spark.conf.set(iterate.DRIVER_BUDGET_KEY, prev)
+
+
+@pytest.fixture
+def counted(monkeypatch):
+    """Calls of the snapshot's edge count, of ``Pregel.run`` and of
+    the local rank kernel, by name."""
+    calls = {"count_rows": 0, "pregel": 0, "rank_local": 0}
+
+    def wrap(obj, attr, name):
+        orig = getattr(obj, attr)
+
+        def counting(*a, **k):
+            calls[name] += 1
+            return orig(*a, **k)
+
+        monkeypatch.setattr(obj, attr, counting)
+
+    wrap(iterate, "count_rows", "count_rows")
+    wrap(pregel.Pregel, "run", "pregel")
+    wrap(alg, "_rank_local", "rank_local")
+    return calls
+
+
+def test_snapshot_serves_later_calls_with_no_job(spark):
+    """After ``pagerank`` collects a tier-(a) graph, ``sssp``, ``bfs``,
+    ``personalized_pagerank`` and ``connected_components`` on the same
+    graph submit no Spark job before their result is consumed."""
+    g = _from_edges(spark, [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (3, 4, 0.5)])
+    alg.pagerank(g).collect()
+    out = {}
+    for name, run in (
+        ("sssp", lambda: alg.sssp(g, 1)),
+        ("bfs", lambda: alg.bfs(g, 1)),
+        ("ppr", lambda: alg.personalized_pagerank(g, [1])),
+        ("wcc", lambda: alg.connected_components(g)),
+    ):
+        before = _jobs(spark)
+        df = run()
+        assert _jobs(spark) == before, name
+        out[name] = _by_id(df.collect())
+    assert out["sssp"] == {1: 0.0, 2: 1.0, 3: 3.0, 4: 3.5}
+    assert out["bfs"] == {1: 0, 2: 1, 3: 2, 4: 3}
+    assert out["wcc"] == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_snapshot_follows_the_budget(spark, counted):
+    """Budget 0 after a tier-(a) call sends the next call on the same
+    graph to the distributed tier; restoring the budget brings tier (a)
+    back from the kept snapshot, with no new collect."""
+    g = _from_edges(spark, [(1, 2, 1.0), (2, 3, 1.0), (5, 6, 1.0)])
+    want = {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    stats = {}
+    assert _by_id(alg.connected_components(g, stats=stats).collect()) == want
+    assert stats["path"] == "local" and counted["count_rows"] == 1
+    with _budget(spark, "0"):
+        stats = {}
+        assert _by_id(alg.connected_components(g, stats=stats).collect()) == want
+        assert stats["path"] == "minlabel"
+        assert _by_id(alg.sssp(g, 1).collect())[3] == 2.0
+        # min-label WCC and sssp each ran one Pregel loop
+        assert counted["pregel"] == 2
+    stats = {}
+    before = counted["count_rows"]
+    assert _by_id(alg.connected_components(g, stats=stats).collect()) == want
+    assert stats["path"] == "local" and counted["count_rows"] == before
+    # a budget the snapshot no longer fits goes distributed too
+    with _budget(spark, "2"):
+        alg.sssp(g, 1).collect()
+        assert counted["pregel"] == 3
+
+
+def test_reassigned_tables_recollect(spark, graph_tiers, counted):
+    """Reassigning ``g.edges`` or ``g.vertices`` takes a new snapshot,
+    and tier (a) answers as the distributed tier does for the new
+    tables: once ``edges`` is replaced, the derived vertex table still
+    holds the old endpoints."""
+    g = _from_edges(spark, [(1, 2, 1.0), (2, 3, 1.0)])
+
+    def both():
+        got = {}
+        for tier in graph_tiers():
+            got[tier] = _by_id(alg.sssp(g, 1).collect())
+        assert got["driver"] == got["distributed"]
+        return got["driver"]
+
+    assert both() == {1: 0.0, 2: 1.0, 3: 2.0}
+    assert _by_id(alg.bfs(g, 1).collect()) == {1: 0, 2: 1, 3: 2}
+    collects = counted["count_rows"]
+    g.edges = g.edges.unionByName(_edges(spark, [(3, 4, 1.0)]))
+    assert both() == {1: 0.0, 2: 1.0, 3: 2.0}
+    assert counted["count_rows"] == collects + 2
+    g.vertices = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "id long")
+    assert both() == {1: 0.0, 2: 1.0, 3: 2.0, 4: 3.0}
+    assert counted["count_rows"] == collects + 4
+
+
+def test_weights_are_checked_per_call(spark, counted):
+    """On one NaN-weighted graph, unweighted ``pagerank`` stays on tier
+    (a) and ``sssp`` goes distributed, in both call orders, from one
+    collect."""
+    for order in (("pagerank", "sssp"), ("sssp", "pagerank")):
+        for k in counted:
+            counted[k] = 0
+        g = _from_edges(spark, [(1, 2, float("nan")), (2, 1, 1.0)])
+        for name in order:
+            if name == "pagerank":
+                ranks = alg.pagerank(g, max_iter=3, threshold=0.0).collect()
+                assert _by_id(ranks) == pytest.approx({1: 0.5, 2: 0.5})
+            else:
+                assert _by_id(alg.sssp(g, 2).collect()) == {1: 1.0, 2: 0.0}
+        assert counted == {"count_rows": 1, "pregel": 1, "rank_local": 1}, order
 
 
 def _hash_broadcast_sides(plan):
