@@ -1,11 +1,14 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "stddev", "failed",
+"sf"}.
 
 Each query is materialized with the noop sink (full execution, no driver
 collect cost) — the number is end-to-end plan execution wall time.
 Mirrors the reference's instrumentation intent (per-phase wall times,
 ``gmr.h:369-380``; total time ``gmr.cpp:318-319``) at query granularity.
+``tools/perf.py`` imports the query list, session, warmup and timed pass
+from here, so its numbers are bench numbers.
 """
 
 from __future__ import annotations
@@ -59,50 +62,85 @@ HEADLINE = [
 ]
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(
-        app_name="gmr-spark-bench",
+def settings() -> tuple[str, str]:
+    """The scale-factor directory and core count every run reads."""
+    return (
+        os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+        os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    )
+
+
+def session(app_name: str = "gmr-spark-bench"):
+    """The benchmark session: local[cpus] with cpus shuffle partitions."""
+    _, cpus = settings()
+    return get_spark(
+        app_name=app_name,
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
     )
-    qs = workload.queries()
-    # session warmup: JVM JIT, codegen, parquet footer cache — so query
-    # times measure plan execution, not first-run compilation
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Session warmup: JVM JIT, codegen, parquet footer cache — so query
+    times measure plan execution, not first-run compilation."""
     try:
         spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-        workload.q01_pricing_summary(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        timed(spark, workload.q01_pricing_summary, sf_dir)
         # streaming-engine warmup: the first micro-batch run pays
         # engine/state-store/sink initialization that batch warmup
         # doesn't touch — one throwaway availableNow pass keeps q63's
         # timed passes inside the ±15% ambient band (its cross-round
         # stddev was warmup-dominated before)
-        workload.q63_streaming_tumbling(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        timed(spark, workload.q63_streaming_tumbling, sf_dir)
     except Exception as exc:  # warmup failure must not kill the run
         print(f"# warmup failed: {exc}", file=sys.stderr)
+
+
+def timed(spark, fn, sf_dir: str) -> float:
+    """Wall seconds to build one query's frame and run it into the noop
+    sink (full execution, no driver collect cost)."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def result_line(
+    times: dict[str, float | None],
+    spread: dict[str, float | None],
+    sf_dir: str,
+) -> str:
+    """The run's one JSON line."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    total = round(sum(t for t in times.values() if t is not None), 3)
+    return json.dumps(
+        {
+            "metric": "headline_total_wall",
+            "value": total,
+            "unit": "sec",
+            "queries": times,
+            "stddev": spread,
+            "failed": [k for k, v in times.items() if v is None],
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        }
+    )
+
+
+def main() -> int:
+    sf_dir, _ = settings()
+    spark = session()
+    qs = workload.queries()
+    warm_up(spark, sf_dir)
     times: dict[str, float | None] = {}
     spread: dict[str, float | None] = {}
     for name in HEADLINE:
-        fn = qs[name]
         # per-query isolation: one throwing query records null and the
         # run continues — the JSON line is ALWAYS emitted
         # best of 3: pass 1 includes per-query codegen compilation and
         # any ambient-load spike; the min is the repeatable warm number,
         # and the stddev of the LAST TWO (warm) passes is the ambient
         # noise band — a regression outside it is real, not load
-        runs: list[float] = []
         try:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+            runs = [timed(spark, qs[name], sf_dir) for _ in range(3)]
             times[name] = round(min(runs), 3)
             warm = runs[1:]
             mean = sum(warm) / len(warm)
@@ -118,20 +156,7 @@ def main() -> int:
             spread[name] = None
             print(f"# {name}: FAILED {type(exc).__name__}: {exc}",
                   file=sys.stderr)
-    total = round(sum(t for t in times.values() if t is not None), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "stddev": spread,
-                "failed": [k for k, v in times.items() if v is None],
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
-        )
-    )
+    print(result_line(times, spread, sf_dir))
     spark.stop()
     return 0
 

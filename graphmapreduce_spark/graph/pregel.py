@@ -56,6 +56,9 @@ from graphmapreduce_spark.graph.iterate import fixpoint, persisted
 
 THRESHOLD = 1e-4  # ref gmr.h:25
 MAX_ITERATION = 10_000  # ref gmr.h:28
+# Vertex-state rows from which a loop runs each convergence chunk as one
+# static-planned job (single_job_chunk) instead of the AQE path.
+SINGLE_JOB_MIN_VERTICES = 4096
 
 
 @contextmanager
@@ -81,6 +84,11 @@ def single_job_chunk(spark, enabled: bool = True):
     superstep shape; what AQE contributed — runtime broadcast of the
     tiny state side — is worth less than the per-superstep driver
     round-trips it costs (A/B in OPTIMIZATION_r08.md).
+
+    Assumes one driver thread per session: the two flips are
+    session-wide, so any query another thread plans on this session
+    while the chunk is open runs without AQE and without broadcast
+    joins.
     """
     prev = str(spark.conf.get("spark.sql.adaptive.enabled", "true"))
     if not enabled or prev.lower() == "false":
@@ -217,12 +225,6 @@ class Pregel:
         # avoid shuffling entirely (measured: the 500-vertex SCC pivot
         # loops regress 1.4× under static chunks).  The count is a
         # near-free job over the just-materialized init checkpoint.
-        min_single = int(
-            spark.conf.get(
-                "spark.graphmapreduce.iterative.singleJobMinVertices",
-                "4096",
-            )
-        )
         # broadcast_vertices asserts the state side is broadcast-small:
         # under a static chunk plan that explicit BroadcastExchange
         # would block the driver once per superstep (executeBroadcast is
@@ -230,7 +232,8 @@ class Pregel:
         # single-job chunk exists to remove — so those loops keep the
         # AQE path (measured: q33 sssp +8% under static chunks).
         use_single_job = (
-            not self.broadcast_vertices and v.count() >= min_single
+            not self.broadcast_vertices
+            and v.count() >= SINGLE_JOB_MIN_VERTICES
         )
         shuffle_deltas: list[dict[str, int]] = []
         tracker = None

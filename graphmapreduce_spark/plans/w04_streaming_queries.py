@@ -144,6 +144,10 @@ def _run_stream_to_table(spark, stream_df, name: str, output_mode: str = "update
     operators compute; never raised above the session value).  For
     corpus-scale state (e.g. a streaming dedup ingest whose state is
     the seen-hash set) size it up: ≈ expected state bytes / 64 MB.
+
+    Assumes one driver thread per session: the rescope is session-wide,
+    so any query another thread plans on this session while the stream
+    runs gets the stream's shuffle partition count.
     """
     import tempfile
     import uuid

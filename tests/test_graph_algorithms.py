@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from graphmapreduce_spark.graph import PropertyGraph
 from graphmapreduce_spark.graph import algorithms as alg
+from graphmapreduce_spark.graph import pregel
 
 
 def make_graph(spark, rows, default_value=0.0):
@@ -1168,30 +1169,28 @@ def test_cc_contract_drops_non_vertex_endpoints(
     assert stats["path"] == "contract" and got == want
 
 
-def test_pregel_single_job_chunk_equivalent(spark, distributed_tier):
+def test_pregel_single_job_chunk_equivalent(spark, distributed_tier,
+                                            monkeypatch):
     """The size-adaptive single-job chunk path (AQE suspended during
     chunk construction, shuffle-hash-hinted joins, one action per
     chunk) must land on the same fixpoint as the per-superstep AQE
     path.  Forced on via the vertex-count gate; both paths compared on
     SSSP (frontier, custom update) and WCC (min-label)."""
-    key = "spark.graphmapreduce.iterative.singleJobMinVertices"
     g = make_graph(spark, PATH5)
     g2 = make_graph(spark, TWO_CC)
     base_d = {r["id"]: r["distance"] for r in alg.sssp(g, source=1).collect()}
     base_c = {r["id"]: r["component"]
               for r in alg.connected_components(g2).collect()}
-    spark.conf.set(key, "1")  # force single-job chunks on tiny graphs
-    try:
-        got_d = {
-            r["id"]: r["distance"]
-            for r in alg.sssp(g, source=1, check_interval=3).collect()
-        }
-        got_c = {
-            r["id"]: r["component"]
-            for r in alg.connected_components(g2, check_interval=3).collect()
-        }
-    finally:
-        spark.conf.unset(key)
+    # force single-job chunks on tiny graphs
+    monkeypatch.setattr(pregel, "SINGLE_JOB_MIN_VERTICES", 1)
+    got_d = {
+        r["id"]: r["distance"]
+        for r in alg.sssp(g, source=1, check_interval=3).collect()
+    }
+    got_c = {
+        r["id"]: r["component"]
+        for r in alg.connected_components(g2, check_interval=3).collect()
+    }
     assert got_d == base_d
     assert got_c == base_c
     # the context must restore session confs afterwards
