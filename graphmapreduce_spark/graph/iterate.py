@@ -34,7 +34,9 @@ Loops run on one of two tiers:
   (``gmr.h:282-367``).  No Spark job, checkpoint or sever per
   superstep, and none at all for a later call on the same graph.
   ``pagerank``, ``personalized_pagerank``, ``sssp``, ``bfs`` and
-  ``connected_components`` (so ``dedup_clusters`` too) take it;
+  ``connected_components`` (so ``dedup_clusters`` too) take it, and
+  outside ``graph/`` so does ``minhash_lsh_near_dup_pairs``, whose
+  corpus is collected under the same gate with its text bytes capped;
 - (b)/(c) **distributed**: every other loop, and the same five above
   the budget — Spark supersteps through ``fixpoint`` and ``Rounds``.
 """
@@ -50,7 +52,7 @@ from typing import Any
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType, DoubleType, StructField, StructType
@@ -218,7 +220,15 @@ def driver_budget(spark: SparkSession) -> int:
     return int(spark.conf.get(DRIVER_BUDGET_KEY, "1000000"))
 
 
-def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
+def broadcast_bytes(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes: the relation
+    size the session already collects to the driver to broadcast."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def driver_local(
+    df: DataFrame, rows: int | None = None, payload: Column | None = None
+) -> pa.Table | None:
     """Tier (a)'s one gate: ``df`` collected to the driver via Arrow when
     its rows fit the driver budget, else ``None``.
 
@@ -228,11 +238,22 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     tier (a) off.  ``rows`` is ``df``'s row count when the caller has
     it (then only a frame that fits is collected); without it, at most
     budget + 1 rows are collected and a frame with more returns ``None``.
+    ``payload`` is a per-row byte count for frames whose rows are not
+    narrow (text): one aggregate action then counts the rows and sums
+    the payload, and ``df`` is collected only when the bytes also fit
+    ``spark.sql.autoBroadcastJoinThreshold``, the relation size the
+    session already collects to the driver to broadcast (``0`` or less
+    turns this use of tier (a) off too).
     A graph is collected once: ``LocalGraph.collect`` keeps the first
     fitting collect on the graph object and serves later calls from it
     while it still fits the budget, so tier (a) reads the graph as of
     that call, like a Spark cache; rebuild the graph to see changed
     input.
+
+    Tier (a)'s users: ``pagerank``, ``personalized_pagerank``, ``sssp``,
+    ``bfs`` and ``connected_components`` (so ``dedup_clusters``) in
+    ``graph/algorithms.py``, and ``operators/dedup.py::
+    minhash_lsh_near_dup_pairs`` (with ``payload``, the text bytes).
 
     The budget is a driver-memory cap, not a speed crossover.  At its
     edge tier (a) is faster over graph-bsp's whole cycle, though not
@@ -247,8 +268,18 @@ def driver_local(df: DataFrame, rows: int | None = None) -> pa.Table | None:
     graphs (2 pairs and 1 pair): 3.1 s vs 5.9 s and 8.2 s vs 8.8 s, at
     most 75 and 148 MiB of numpy during the call.
     """
-    cap = driver_budget(df.sparkSession)
-    if cap <= 0 or (rows is not None and rows > cap):
+    spark = df.sparkSession
+    cap = driver_budget(spark)
+    if cap <= 0:
+        return None
+    if payload is not None:
+        limit = broadcast_bytes(spark)
+        if limit <= 0:
+            return None
+        rows, size = df.agg(F.count(F.lit(1)), F.sum(payload)).first()
+        if (size or 0) > limit:
+            return None
+    if rows is not None and rows > cap:
         return None
     if rows is not None:
         return df.toArrow()
@@ -294,6 +325,18 @@ class _Snapshot:
 
     def fits(self, cap: int) -> bool:
         return 0 < cap and max(self.table.num_rows, len(self.ids)) <= cap
+
+    @staticmethod
+    def kept(graph) -> "_Snapshot | None":
+        """The snapshot kept on ``graph`` when it was taken from the
+        graph's current frames (a stale one is dropped) and still fits
+        the budget."""
+        snap = graph._local
+        if snap is not None and not snap.of(graph):
+            snap = graph._local = None
+        if snap is None or not snap.fits(driver_budget(graph.spark)):
+            return None
+        return snap
 
     @classmethod
     def take(cls, graph) -> "_Snapshot | None":
@@ -366,14 +409,26 @@ class LocalGraph:
         budget.  Graphs with duplicate vertex ids or, when ``weighted``,
         null or non-finite weights also return ``None`` — they stay on
         the distributed tier."""
-        snap = graph._local
-        if snap is not None and not snap.of(graph):
-            snap = graph._local = None
-        if snap is None or not snap.fits(driver_budget(graph.spark)):
+        snap = _Snapshot.kept(graph)
+        if snap is None:
             snap = _Snapshot.take(graph)
             if snap is None:
                 return None
             graph._local = snap
+        return cls._of(graph, snap, weighted)
+
+    @classmethod
+    def kept(cls, graph, weighted: bool) -> "LocalGraph | None":
+        """``graph`` on tier (a) from the snapshot an earlier call kept
+        on it, with no Spark job and no distributed set-up; ``None`` when
+        there is no snapshot of the current frames that fits the budget
+        (or the graph cannot run on tier (a)), and the caller takes the
+        count-and-gate path (``collect``)."""
+        snap = _Snapshot.kept(graph)
+        return None if snap is None else cls._of(graph, snap, weighted)
+
+    @classmethod
+    def _of(cls, graph, snap: _Snapshot, weighted: bool) -> "LocalGraph | None":
         ids = snap.ids
         key = pc.fill_null(ids, 0).to_numpy()
         valid = ids.is_valid().to_numpy(zero_copy_only=False)

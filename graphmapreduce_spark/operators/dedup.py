@@ -33,11 +33,22 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from graphmapreduce_spark.functions import text as T
 from graphmapreduce_spark.functions import vectors as V
-from graphmapreduce_spark.graph.iterate import count_rows, driver_budget
+from graphmapreduce_spark.graph.iterate import (
+    broadcast_bytes,
+    count_rows,
+    driver_budget,
+    driver_local,
+)
 from graphmapreduce_spark.operators._spread import spread_by
 
 # 31-bit Mersenne prime — modular universal hashing for MinHash.
@@ -123,7 +134,7 @@ def _minhash_batches(batches, n: int, hash_fn: str, a: np.ndarray, b: np.ndarray
         for i, t in enumerate(texts):
             if t is not None and len(t) >= n:
                 rows.append(i)
-                sets.append({t[j : j + n] for j in range(len(t) - n + 1)})
+                sets.append(_shingle_set(t, n))
                 size += len(sets[-1])
             if rows and (size >= block or i == len(texts) - 1):
                 yield pa.RecordBatch.from_arrays(
@@ -141,12 +152,7 @@ def _minhash_block(
     than a block spans several), each block's per-document minima
     taken by ``np.minimum.reduceat`` and folded into the signatures."""
     counts = np.fromiter(map(len, sets), dtype=np.int64, count=len(sets))
-    # each distinct shingle of the block is hashed once
-    shingles = pc.dictionary_encode(
-        pa.array(list(chain.from_iterable(sets)), pa.string())
-    )
-    h = T._hash_np(shingles.dictionary, hash_fn) % _MERSENNE
-    h = h[shingles.indices.to_numpy()]
+    h = _shingle_hashes(sets, hash_fn) % _MERSENNE
     doc = np.repeat(np.arange(len(sets)), counts)
     sig = np.full((len(a), len(sets)), _MERSENNE, dtype=np.int64)
     for lo in range(0, len(h), block):
@@ -160,6 +166,21 @@ def _minhash_block(
     k = len(a)
     offsets = np.arange(0, (len(sets) + 1) * k, k, dtype=np.int32)
     return pa.ListArray.from_arrays(offsets, pa.array(sig.T.ravel()))
+
+
+def _shingle_set(t: str, n: int) -> set:
+    """The distinct ``n``-character slices of ``t`` (code points, as
+    ``functions.text.char_shingles``)."""
+    return {t[j : j + n] for j in range(len(t) - n + 1)}
+
+
+def _shingle_hashes(sets: list, hash_fn: str) -> np.ndarray:
+    """The ``hash_fn`` hash of every shingle of ``sets``, set after set;
+    each distinct shingle is hashed once."""
+    shingles = pc.dictionary_encode(
+        pa.array(list(chain.from_iterable(sets)), pa.string())
+    )
+    return T._hash_np(shingles.dictionary, hash_fn)[shingles.indices.to_numpy()]
 
 
 def _band_rows(
@@ -314,6 +335,13 @@ def lsh_candidate_pairs(
     return pairs.distinct()
 
 
+# (element, pair) cells per block of tier (a)'s verify lookups and
+# signature comparisons: 8 MiB per int64 array
+_VERIFY_BLOCK = 1 << 20
+# shingles per block of tier (a)'s verify hashing: ~30 MiB of Python
+# strings and sets, as a signature block at 32 hashes
+_SHINGLE_BLOCK = 1 << 18
+
 # hash-mod sampled-verify prefilter margin: pairs whose sampled Jaccard
 # falls below threshold − this skip the full intersection
 _VERIFY_SAMPLE_MARGIN = 0.1
@@ -375,6 +403,340 @@ def _verify_jaccard(
     )
 
 
+def _lsh_local(
+    df: DataFrame, id_col: str, text_col: str, **knobs
+) -> DataFrame | None:
+    """``minhash_lsh_near_dup_pairs`` on tier (a), or ``None`` for the
+    distributed path.  ``(id, text)`` is collected when the id type is
+    integral and ``graph/iterate.py::driver_local`` admits it — one
+    aggregate action shows at most ``driver_budget`` rows and at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes of text — and the
+    collected ids are unique and non-null.  ``_lsh_pairs`` then runs
+    the whole stage as numpy; it gives up (``None``) when the candidate
+    pairs exceed the budget.  Spark rounds the Jaccard of the returned
+    (id_a, id_b, |A∩B|, |A∪B|) rows with the same expression as the
+    distributed verify, so both tiers return the same rows.
+
+    The byte cap is a driver-memory cap, not a speed crossover.
+    Measured on 4 cores with ``tools/perf.py ab`` (q576, md5, cap 64,
+    margins 0.2 and mod 4) at the byte edge: ``tools/make_scale.py
+    --factor 44`` of sf0.1, 220 000 documents and 66 MB of text (99% of
+    the session's 64 MiB threshold).  There the distributed plan took
+    150.4 s and tier (a) 187.8 s (one pair, the budget raised to 20M so
+    its 4.37M verified pairs fit).  Run alone on that corpus, the
+    kernel's tracemalloc peak was 832 MiB: 185 MiB while signing, 417
+    MiB while banding, and the rest in the verify, mostly arrays over
+    the candidate pairs, so the pair budget bounds it.  The verify's
+    hashes (8 bytes a shingle, up to 8× the text) are held in blocks of
+    at most the threshold, two at a time.  At the default budget that
+    corpus's candidate pairs overflow it, and the kernel gives up after
+    signing (9.9 s for its first 55 000 documents, run alone) and the
+    distributed plan runs.  At sf0.1 (5 000 documents, 1.5 MB of text;
+    3 pairs, best of each side) tier (a) took 2.85 s for q46 vs 10.33 s
+    distributed and 2.55 s for q576 vs 8.07 s, and the kernel alone
+    peaks at 158 MiB of tracemalloc."""
+    src = df.select(id_col, text_col)
+    id_field = src.schema[id_col]
+    if not isinstance(id_field.dataType, IntegralType):
+        return None
+    mod = knobs["verify_sample_mod"]
+    if mod is not None and int(mod) < 1:
+        return None
+    table = driver_local(src, payload=F.octet_length(text_col))
+    if table is None:
+        return None
+    ids = table.column(0)
+    if ids.null_count:
+        return None
+    key = ids.to_numpy()
+    if len(np.unique(key)) < len(key):
+        return None
+    spark = df.sparkSession
+    # the verify holds two blocks of hashes of at most these bytes each
+    pairs = _lsh_pairs(
+        table.column(1), key, driver_budget(spark), broadcast_bytes(spark), **knobs
+    )
+    if pairs is None:
+        return None
+    a, b, inter, union = pairs
+    schema = StructType(
+        [
+            StructField("id_a", id_field.dataType, id_field.nullable),
+            StructField("id_b", id_field.dataType, id_field.nullable),
+            StructField("_inter", LongType(), False),
+            StructField("_union", LongType(), False),
+        ]
+    )
+    out = pa.table(
+        [ids.take(a), ids.take(b), pa.array(inter), pa.array(union)],
+        names=schema.names,
+    )
+    jaccard = F.col("_inter").cast("double") / F.col("_union")
+    return spark.createDataFrame(out, schema).select(
+        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
+    )
+
+
+def _lsh_pairs(
+    texts: pa.ChunkedArray,
+    key: np.ndarray,
+    cap: int,
+    block_bytes: int,
+    *,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    seed: int,
+    hash_fn: str,
+    max_bucket_size: int | None,
+    est_margin: float | None,
+    verify_sample_mod: int | None,
+):
+    """Tier (a)'s kernel: the distributed stage's rows as numpy, on one
+    collected corpus of ``texts`` with unique ``key`` ids.  Returns
+    (row_a, row_b, |A∩B|, |A∪B|) of the verified pairs — rows of
+    ``texts``, ordered so ``key[row_a] < key[row_b]`` — or ``None`` when
+    the distinct candidate pairs exceed ``cap``.  ``block_bytes`` sizes
+    the verify's blocks of documents (``_verify``).
+
+    Each step is the numpy twin of one distributed step: signing
+    (``_minhash_batches``, the same kernel); banding on the band
+    contents (the distributed bucket is that content or its xxhash64);
+    all pairs within a bucket, or a star on the bucket's min id over
+    ``max_bucket_size`` signed rows; the ``est_margin`` agreement cut;
+    then the distinct hashed shingles of candidate documents only, the
+    ``verify_sample_mod`` prefilter and the exact Jaccard cut."""
+    a, b = _hash_coeffs(num_hashes, seed)
+    pos = pa.table({"_row": np.arange(len(texts)), "text": texts})
+    signed = list(_minhash_batches(pos.to_batches(), shingle_n, hash_fn, a, b))
+    rows = np.concatenate(
+        [np.zeros(0, np.int64)] + [s.column(0).to_numpy() for s in signed]
+    )
+    sig = np.concatenate(
+        [np.zeros((0, num_hashes), np.int64)]
+        + [
+            s.column(1).flatten().to_numpy().reshape(-1, num_hashes)
+            for s in signed
+        ]
+    )
+    idv = key[rows]
+    cands = _band_candidates(sig, idv, bands, max_bucket_size, cap)
+    if cands is None:
+        return None
+    u, v = cands
+    if est_margin is not None:
+        cut = max(0.0, threshold - est_margin) * num_hashes
+        keep = np.empty(len(u), dtype=bool)
+        step = max(1, _VERIFY_BLOCK // num_hashes)
+        for lo in range(0, len(u), step):
+            sl = slice(lo, lo + step)
+            keep[sl] = (sig[u[sl]] == sig[v[sl]]).sum(axis=1) >= cut
+        u, v = u[keep], v[keep]
+    docs, xy = np.unique(np.r_[u, v], return_inverse=True)
+    keep, inter, union = _verify(
+        texts.take(rows[docs]),
+        xy[: len(u)],
+        xy[len(u) :],
+        shingle_n,
+        hash_fn,
+        threshold,
+        verify_sample_mod,
+        block_bytes,
+    )
+    return rows[u[keep]], rows[v[keep]], inter[keep], union[keep]
+
+
+def _band_candidates(
+    sig: np.ndarray,
+    idv: np.ndarray,
+    bands: int,
+    max_bucket_size: int | None,
+    cap: int,
+) -> np.ndarray | None:
+    """``lsh_candidate_pairs`` on a signature matrix: the distinct
+    candidate pairs as two arrays of signature rows (lo, hi) with
+    ``idv[lo] < idv[hi]``, or ``None`` past ``cap`` pairs.  A bucket is
+    a band's rows with equal band contents; its size counts every
+    signed row, as the distributed ``count(lit(1))`` does."""
+    m, num_hashes = sig.shape
+    r = num_hashes // bands
+    cands = np.zeros(0, dtype=np.int64)
+    for band in range(bands):
+        cols = sig[:, band * r : (band + 1) * r]
+        order = np.lexsort(cols.T) if r else np.arange(m)
+        s = cols[order]
+        starts = np.flatnonzero(np.r_[True, (s[1:] != s[:-1]).any(axis=1)])
+        sizes = np.diff(np.r_[starts, m])
+        big = sizes > (m if max_bucket_size is None else max_bucket_size)
+        small = (sizes >= 2) & ~big
+        if (sizes[small] * (sizes[small] - 1) // 2).sum() + (sizes[big] - 1).sum() > cap:
+            return None
+        us, vs = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+        for size in np.unique(sizes[small]).tolist():
+            members = order[starts[small & (sizes == size)][:, None] + np.arange(size)]
+            i, j = np.triu_indices(size, 1)
+            us.append(members[:, i].ravel())
+            vs.append(members[:, j].ravel())
+        for lo, size in zip(starts[big].tolist(), sizes[big].tolist()):
+            # star: every member pairs with the bucket's min id only
+            members = order[lo : lo + size]
+            hub = members[np.argmin(idv[members])]
+            us.append(np.full(size - 1, hub))
+            vs.append(members[members != hub])
+        u, v = np.concatenate(us), np.concatenate(vs)
+        swap = idv[u] > idv[v]
+        codes = np.where(swap, v, u) * m + np.where(swap, u, v)
+        cands = np.union1d(cands, codes)
+        if len(cands) > cap:
+            return None
+    return np.divmod(cands, max(m, 1))
+
+
+def _verify(
+    texts: pa.Array,
+    x: np.ndarray,
+    y: np.ndarray,
+    n: int,
+    hash_fn: str,
+    threshold: float,
+    mod: int | None,
+    block_bytes: int,
+):
+    """The verify of candidate pairs (x, y) of ``texts``: (keep, |A∩B|,
+    |A∪B|) per pair, the counts set where ``keep``.  ``mod`` adds the
+    sampled prefilter ahead of the exact Jaccard cut, as the distributed
+    verify does.
+
+    The documents are hashed in blocks whose hashes (at most 8 bytes a
+    shingle) fit ``block_bytes``, and at most two blocks are held at a
+    time: each block once, and the later blocks it shares pairs with
+    once more each.  A corpus whose candidate hashes fit one block is
+    hashed once."""
+    shingles = pc.utf8_length(texts).to_numpy(zero_copy_only=False) - n + 1
+    most = 8 * np.maximum(shingles, 0)
+    blk = (np.cumsum(most) - most) // max(block_bytes, 1)
+    first = np.searchsorted(blk, np.arange(blk[-1] + 2) if len(blk) else [0])
+    bx, by = blk[x], blk[y]
+    lo_blk, hi_blk = np.minimum(bx, by), np.maximum(bx, by)
+    keep = np.zeros(len(x), dtype=bool)
+    inter = np.zeros(len(x), dtype=np.int64)
+    union = np.zeros(len(x), dtype=np.int64)
+
+    def hashed(b):
+        docs = texts.slice(first[b], first[b + 1] - first[b]).to_pylist()
+        full = _HashSets.of(docs, n, hash_fn)
+        # numpy's % of an int64 by a positive int is Spark's pmod
+        return full, None if mod is None else full.subset(full.values % mod == 0)
+
+    for i in np.unique(lo_blk).tolist():
+        held = hashed(i)
+        at_i = np.flatnonzero(lo_blk == i)
+        for j in np.unique(hi_blk[at_i]).tolist():
+            other = held if j == i else hashed(j)
+            sel = at_i[hi_blk[at_i] == j]
+            # each pair's document in block i, and its partner in block j
+            swap = bx[sel] != i
+            p = np.where(swap, y[sel], x[sel]) - first[i]
+            q = np.where(swap, x[sel], y[sel]) - first[j]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                if mod is not None:
+                    a, b = held[1], other[1]
+                    i_s = _intersections(a, p, b, q)
+                    u_s = a.size[p] + b.size[q] - i_s
+                    cut = max(0.0, threshold - _VERIFY_SAMPLE_MARGIN)
+                    ok = (u_s < 8 * mod) | (i_s / u_s >= cut)
+                    sel, p, q = sel[ok], p[ok], q[ok]
+                a, b = held[0], other[0]
+                inter[sel] = _intersections(a, p, b, q)
+                union[sel] = a.size[p] + b.size[q] - inter[sel]
+                keep[sel] = inter[sel] / union[sel] >= threshold
+    return keep, inter, union
+
+
+class _HashSets:
+    """Documents' distinct shingle hashes (``_shingle_ids``' values):
+    each document's hashes sorted in ``values``, document after
+    document, ``size`` of them each."""
+
+    def __init__(self, values: np.ndarray, size: np.ndarray):
+        self.values, self.size = values, size
+        self.off = np.r_[0, np.cumsum(size)]
+
+    @classmethod
+    def of(cls, texts: list, n: int, hash_fn: str) -> "_HashSets":
+        """The sets of ``texts``, shingled and hashed
+        ``_SHINGLE_BLOCK`` shingles at a time."""
+        # filled in place: a document has at most len - n + 1 hashes
+        values = np.empty(sum(max(len(t) - n + 1, 0) for t in texts), np.int64)
+        sizes = np.zeros(len(texts), np.int64)
+        sets, first, end, size = [], 0, 0, 0
+        for i, t in enumerate(texts):
+            sets.append(_shingle_set(t, n))
+            size += len(sets[-1])
+            if size >= _SHINGLE_BLOCK or i == len(texts) - 1:
+                h = _shingle_hashes(sets, hash_fn)
+                doc = np.repeat(np.arange(first, i + 1), [len(s) for s in sets])
+                order = np.lexsort((h, doc))
+                h, doc = h[order], doc[order]
+                # two shingles of a document with one hash count once
+                new = np.r_[True, (h[1:] != h[:-1]) | (doc[1:] != doc[:-1])]
+                values[end : end + new.sum()] = h[new]
+                end += new.sum()
+                sizes[first : i + 1] = np.bincount(doc[new] - first, minlength=len(sets))
+                sets, first, size = [], i + 1, 0
+        return cls(values[:end], sizes)
+
+    def subset(self, member: np.ndarray) -> "_HashSets":
+        """The sets restricted to the hashes where ``member``."""
+        at = np.flatnonzero(member)
+        doc = np.searchsorted(self.off, at, "right") - 1
+        return _HashSets(self.values[at], np.bincount(doc, minlength=len(self.size)))
+
+    def count_in(self, a: np.ndarray, other: "_HashSets", b: np.ndarray):
+        """|A∩B| for each pair of set ``a[k]`` here and ``b[k]`` of
+        ``other``: A's hashes are looked up in B's sorted segment,
+        ``_VERIFY_BLOCK`` hashes at a time, one search per B."""
+        order = np.argsort(b, kind="stable")
+        a, b = a[order], b[order]
+        n = self.size[a]
+        ends = np.cumsum(n)
+        inter = np.zeros(len(a), np.int64)
+        lo = 0
+        while lo < len(a):
+            base = ends[lo - 1] if lo else 0
+            hi = max(lo + 1, int(np.searchsorted(ends, base + _VERIFY_BLOCK, "right")))
+            cnt = n[lo:hi]
+            at = np.r_[0, np.cumsum(cnt)]
+            idx = np.repeat(self.off[a[lo:hi]] - at[:-1], cnt) + np.arange(at[-1])
+            h = self.values[idx]
+            hit = np.zeros(len(h), dtype=bool)
+            bb = b[lo:hi]
+            starts = np.flatnonzero(np.r_[True, bb[1:] != bb[:-1]]).tolist()
+            for s, e in zip(starts, starts[1:] + [hi - lo]):
+                seg = other.values[other.off[bb[s]] : other.off[bb[s] + 1]]
+                if len(seg):
+                    part = h[at[s] : at[e]]
+                    j = np.minimum(np.searchsorted(seg, part), len(seg) - 1)
+                    hit[at[s] : at[e]] = seg[j] == part
+            pair = np.repeat(np.arange(hi - lo), cnt)
+            inter[lo:hi] = np.bincount(pair[hit], minlength=hi - lo)
+            lo = hi
+        out = np.empty_like(inter)
+        out[order] = inter
+        return out
+
+
+def _intersections(A: _HashSets, a, B: _HashSets, b) -> np.ndarray:
+    """|A[a[k]] ∩ B[b[k]]| per pair; the smaller set of each pair is
+    looked up in the other."""
+    small = A.size[a] <= B.size[b]
+    out = np.empty(len(a), np.int64)
+    out[small] = A.count_in(a[small], B, b[small])
+    out[~small] = B.count_in(b[~small], A, a[~small])
+    return out
+
+
 def minhash_lsh_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -391,6 +753,17 @@ def minhash_lsh_near_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs with exact-Jaccard verification of LSH
     candidates.  Returns (id_a, id_b, jaccard) with id_a < id_b.
+
+    Two tiers, as in ``graph/`` (``graph/iterate.py::driver_local``): a
+    corpus with integral, unique, non-null ids, at most
+    ``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows and at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes of text is collected
+    once and the whole stage — signing, banding, the bucket cap, both
+    prefilters and the verify — runs as one numpy pass on the driver
+    (``_lsh_local``), with the same rows out.  It takes no Spark job
+    past the gate's aggregate and the collect; budget 0 turns it off.
+    Any other corpus, or one whose candidate pairs outgrow the budget,
+    runs the distributed plan below.
 
     ``verify_sample_mod`` (opt-in; e.g. 4) inserts a second
     DETERMINISTIC prefilter between the signature estimate and the full
@@ -445,6 +818,22 @@ def minhash_lsh_near_dup_pairs(
     """
     if bands is None:
         bands = _knee_bands(num_hashes, threshold)
+    local = _lsh_local(
+        df,
+        id_col,
+        text_col,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        seed=seed,
+        hash_fn=hash_fn,
+        max_bucket_size=max_bucket_size,
+        est_margin=est_margin,
+        verify_sample_mod=verify_sample_mod,
+    )
+    if local is not None:
+        return local
     # The production path (any of the candidate-thinning knobs set —
     # the q576 recipe) is STAGED: signatures and the surviving pair
     # table are each materialized once, and shingle sets are built for

@@ -1,6 +1,8 @@
 """Dedup + text-analysis operator tests with by-construction golden
 answers (FIXTURES.md §3: exact dups, near-dups ≥0.8 Jaccard, uniques)."""
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,81 +76,85 @@ def test_ngram_jaccard_max_df_bounds_hot_shingle_pairs(spark):
     assert capped_rows[(100, 101)] == exact
 
 
-def test_minhash_lsh_finds_exact_and_near(docs):
-    pairs = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
-    )
-    rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
-    assert rows[(1, 2)] == 1.0
-    assert (1, 3) in rows
-    assert not any(4 in p for p in rows)
+def test_minhash_lsh_finds_exact_and_near(docs, graph_tiers):
+    for _ in graph_tiers():
+        pairs = D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
+        )
+        rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+        assert rows[(1, 2)] == 1.0
+        assert (1, 3) in rows
+        assert not any(4 in p for p in rows)
 
 
-def test_minhash_lsh_est_margin_prefilter_keeps_true_pairs(docs):
+def test_minhash_lsh_est_margin_prefilter_keeps_true_pairs(docs, graph_tiers):
     """The signature-estimate prefilter (scale knob) must keep every
     clearly-above-threshold pair of the exact run: an exact dup (j=1)
     always agrees on all signature positions, and the (1,3) near-dup's
     agreement estimate concentrates far above threshold-margin."""
-    exact = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
-    )
-    pre = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
-        est_margin=0.2,
-    )
-    e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
-    p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
-    # prefilter can only drop pairs, never add or change scores
-    assert set(p) <= set(e)
-    assert all(e[k] == p[k] for k in p)
-    assert (1, 2) in p and p[(1, 2)] == 1.0
-    assert (1, 3) in p
+    for _ in graph_tiers():
+        exact = D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
+        )
+        pre = D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
+            est_margin=0.2,
+        )
+        e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
+        p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
+        # prefilter can only drop pairs, never add or change scores
+        assert set(p) <= set(e)
+        assert all(e[k] == p[k] for k in p)
+        assert (1, 2) in p and p[(1, 2)] == 1.0
+        assert (1, 3) in p
 
 
-def test_minhash_lsh_sampled_verify_prefilter(docs):
+def test_minhash_lsh_sampled_verify_prefilter(docs, graph_tiers):
     """The hash-mod sampled-shingle prefilter (second scale knob) must
     keep every clearly-above-threshold pair with unchanged exact
     scores — it only skips full verification for pairs whose sampled
     Jaccard is far below threshold."""
-    exact = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
-    )
-    pre = D.minhash_lsh_near_dup_pairs(
-        docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
-        verify_sample_mod=4,
-    )
-    e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
-    p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
-    assert set(p) <= set(e)
-    assert all(e[k] == p[k] for k in p)
-    assert (1, 2) in p and p[(1, 2)] == 1.0
-    assert (1, 3) in p
+    for _ in graph_tiers():
+        exact = D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
+        )
+        pre = D.minhash_lsh_near_dup_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
+            verify_sample_mod=4,
+        )
+        e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
+        p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pre.collect()}
+        assert set(p) <= set(e)
+        assert all(e[k] == p[k] for k in p)
+        assert (1, 2) in p and p[(1, 2)] == 1.0
+        assert (1, 3) in p
 
 
-def test_dedup_corpus_composed_recipe(spark):
+def test_dedup_corpus_composed_recipe(spark, graph_tiers):
     """pipeline.dedup_corpus end-to-end on a hand-checkable corpus:
     exact dups collapse to the min id, near-dups cluster transitively,
     unique docs map to themselves, and every input id appears exactly
     once in the mapping."""
-    from graphmapreduce_spark.pipeline import dedup_corpus
+    for _ in graph_tiers():
+        from graphmapreduce_spark.pipeline import dedup_corpus
 
-    base = "the quick brown fox jumps over the lazy dog " * 6
-    rows = [
-        (1, base),
-        (2, base),                          # exact dup of 1
-        (3, base + "EXTRA TAIL HERE"),      # near dup of 1
-        (4, "completely different content about spark physical plans "
-            * 6),
-        (5, base),                          # another exact dup of 1
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_corpus(
-            docs, "doc_id", "text", threshold=0.5, num_hashes=32,
-        ).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 1}
+        base = "the quick brown fox jumps over the lazy dog " * 6
+        rows = [
+            (1, base),
+            (2, base),                          # exact dup of 1
+            (3, base + "EXTRA TAIL HERE"),      # near dup of 1
+            (4, "completely different content about spark physical plans "
+                * 6),
+            (5, base),                          # another exact dup of 1
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup_corpus(
+                docs, "doc_id", "text", threshold=0.5, num_hashes=32,
+            ).collect()
+        }
+        assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 1}
 
 
 def test_dedup_by_pairs(docs):
@@ -462,36 +468,37 @@ def test_decontaminate_flags_and_drops(spark):
     assert lax.count() == 3
 
 
-def test_lsh_bucket_cap_star_expansion(spark):
+def test_lsh_bucket_cap_star_expansion(spark, graph_tiers):
     """A degenerate bucket (many identical docs -> every band bucket
     holds all of them) must not emit the O(n^2) all-pairs blowup: over
     the cap, members pair with the bucket's min id only (star), which
     keeps the connected component intact at O(n) pairs."""
-    n = 1000
-    docs = spark.range(n).selectExpr(
-        "id AS doc_id",
-        # identical text -> identical signature -> one bucket per band
-        "'the same boilerplate line repeated everywhere' AS text",
-    )
-    sigs = D.minhash_signatures(docs, "doc_id", "text", num_hashes=32)
-    capped = D.lsh_candidate_pairs(
-        sigs, "doc_id", "sig", num_hashes=32, bands=8, max_bucket_size=100
-    )
-    rows = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    # star: exactly n-1 pairs, all anchored at the min id
-    assert len(rows) == n - 1
-    assert all(a == 0 for a, _ in rows)
-    # transitive closure still recovers ONE group of n docs
-    groups = D.dedup_clusters(capped.selectExpr(
-        "id_a", "id_b"
-    ), "id_a", "id_b")
-    comp = {r[0]: r[1] for r in groups.collect()}
-    assert len(comp) == n and len(set(comp.values())) == 1
-    # under the cap the exact all-pairs semantics are untouched
-    uncapped = D.lsh_candidate_pairs(
-        sigs, "doc_id", "sig", num_hashes=32, bands=8, max_bucket_size=None
-    )
-    assert uncapped.count() == n * (n - 1) // 2
+    for _ in graph_tiers():
+        n = 1000
+        docs = spark.range(n).selectExpr(
+            "id AS doc_id",
+            # identical text -> identical signature -> one bucket per band
+            "'the same boilerplate line repeated everywhere' AS text",
+        )
+        sigs = D.minhash_signatures(docs, "doc_id", "text", num_hashes=32)
+        capped = D.lsh_candidate_pairs(
+            sigs, "doc_id", "sig", num_hashes=32, bands=8, max_bucket_size=100
+        )
+        rows = {(r["id_a"], r["id_b"]) for r in capped.collect()}
+        # star: exactly n-1 pairs, all anchored at the min id
+        assert len(rows) == n - 1
+        assert all(a == 0 for a, _ in rows)
+        # transitive closure still recovers ONE group of n docs
+        groups = D.dedup_clusters(capped.selectExpr(
+            "id_a", "id_b"
+        ), "id_a", "id_b")
+        comp = {r[0]: r[1] for r in groups.collect()}
+        assert len(comp) == n and len(set(comp.values())) == 1
+        # under the cap the exact all-pairs semantics are untouched
+        uncapped = D.lsh_candidate_pairs(
+            sigs, "doc_id", "sig", num_hashes=32, bands=8, max_bucket_size=None
+        )
+        assert uncapped.count() == n * (n - 1) // 2
 
 
 def test_dedup_lines_keeps_first_occurrence(spark):
@@ -574,41 +581,42 @@ def test_prepare_corpus_pipeline_stages(spark):
     assert rows[2]["bin"] == rows[2]["offset"] // 64
 
 
-def test_prepare_corpus_near_dup_collapses_clusters(spark):
+def test_prepare_corpus_near_dup_collapses_clusters(spark, graph_tiers):
     """near_dup=True swaps the exact-dedup stage for the full
     dedup_corpus recipe: near-dup variants that exact dedup keeps
     collapse to their cluster's min-id canonical, gating still applies,
     and the packing cumsum stays contiguous over the survivors."""
-    from graphmapreduce_spark.pipeline import prepare_corpus
+    for _ in graph_tiers():
+        from graphmapreduce_spark.pipeline import prepare_corpus
 
-    good = "the quick brown fox jumps over the lazy dog again and again "
-    docs = spark.createDataFrame(
-        [
-            (1, good * 5),
-            (2, good * 5 + "one tiny extra tail"),  # near dup of 1
-            (3, good.upper() * 5),                  # exact dup of 1 (norm)
-            (4, "an entirely different body of prose about the spark "
-                "engine with plenty of distinct and varied wording to "
-                "clear the word floor and the stopword gate easily"),
-            (5, "zz " * 60),                        # no stopwords -> gated
-        ],
-        "doc_id long, text string",
-    )
-    kwargs = dict(capacity=64, min_words=20, min_stopword_hits=1)
-    exact = prepare_corpus(docs, **kwargs).collect()
-    near = prepare_corpus(
-        docs,
-        near_dup=True,
-        near_kwargs=dict(threshold=0.5, hash_fn="md5"),
-        **kwargs,
-    ).collect()
-    # exact dedup keeps the near-dup doc 2; the recipe collapses it
-    assert sorted(r["doc_id"] for r in exact) == [1, 2, 4]
-    assert sorted(r["doc_id"] for r in near) == [1, 4]
-    rows = {r["doc_id"]: r for r in near}
-    assert rows[1]["offset"] == 0
-    assert rows[4]["offset"] == rows[1]["n_tokens"]
-    assert rows[4]["bin"] == rows[4]["offset"] // 64
+        good = "the quick brown fox jumps over the lazy dog again and again "
+        docs = spark.createDataFrame(
+            [
+                (1, good * 5),
+                (2, good * 5 + "one tiny extra tail"),  # near dup of 1
+                (3, good.upper() * 5),                  # exact dup of 1 (norm)
+                (4, "an entirely different body of prose about the spark "
+                    "engine with plenty of distinct and varied wording to "
+                    "clear the word floor and the stopword gate easily"),
+                (5, "zz " * 60),                        # no stopwords -> gated
+            ],
+            "doc_id long, text string",
+        )
+        kwargs = dict(capacity=64, min_words=20, min_stopword_hits=1)
+        exact = prepare_corpus(docs, **kwargs).collect()
+        near = prepare_corpus(
+            docs,
+            near_dup=True,
+            near_kwargs=dict(threshold=0.5, hash_fn="md5"),
+            **kwargs,
+        ).collect()
+        # exact dedup keeps the near-dup doc 2; the recipe collapses it
+        assert sorted(r["doc_id"] for r in exact) == [1, 2, 4]
+        assert sorted(r["doc_id"] for r in near) == [1, 4]
+        rows = {r["doc_id"]: r for r in near}
+        assert rows[1]["offset"] == 0
+        assert rows[4]["offset"] == rows[1]["n_tokens"]
+        assert rows[4]["bin"] == rows[4]["offset"] // 64
 
 
 def test_containment_detects_embedded_quote(spark):
@@ -712,38 +720,39 @@ def test_bigram_surprisal_hand_checked(spark):
     assert 3 not in out  # single-token docs carry no bigrams
 
 
-def test_dedup_corpus_bucket_cap_keeps_clusters_connected(spark):
+def test_dedup_corpus_bucket_cap_keeps_clusters_connected(spark, graph_tiers):
     """The 100 TB path: when a near-dup cluster exceeds
     max_bucket_size, star expansion verifies only hub pairs — LINEAR
     in bucket size — and transitive clustering must still map every
     member to one canonical id (connectivity through the hub), with
     the same kept-set as the uncapped run."""
-    from graphmapreduce_spark.pipeline import dedup_corpus
+    for _ in graph_tiers():
+        from graphmapreduce_spark.pipeline import dedup_corpus
 
-    base = "alpha beta gamma delta epsilon zeta eta theta " * 8
-    rows = [(i, base + f"tail{i % 3}") for i in range(1, 41)]
-    rows.append((99, "entirely different text about catalyst plans "
-                     * 8))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_corpus(
-            docs, "doc_id", "text", threshold=0.5, num_hashes=32,
-            max_bucket_size=None,
-        ).collect()
-    }
-    capped = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_corpus(
-            docs, "doc_id", "text", threshold=0.5, num_hashes=32,
-            max_bucket_size=8,
-        ).collect()
-    }
-    # the 40 near-dups form one cluster under both; 99 stays itself
-    assert len(set(uncapped.values())) == len(set(capped.values()))
-    assert capped[99] == 99
-    assert len({v for k, v in capped.items() if k != 99}) == 1
-    assert capped == uncapped
+        base = "alpha beta gamma delta epsilon zeta eta theta " * 8
+        rows = [(i, base + f"tail{i % 3}") for i in range(1, 41)]
+        rows.append((99, "entirely different text about catalyst plans "
+                         * 8))
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        uncapped = {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup_corpus(
+                docs, "doc_id", "text", threshold=0.5, num_hashes=32,
+                max_bucket_size=None,
+            ).collect()
+        }
+        capped = {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup_corpus(
+                docs, "doc_id", "text", threshold=0.5, num_hashes=32,
+                max_bucket_size=8,
+            ).collect()
+        }
+        # the 40 near-dups form one cluster under both; 99 stays itself
+        assert len(set(uncapped.values())) == len(set(capped.values()))
+        assert capped[99] == 99
+        assert len({v for k, v in capped.items() if k != 99}) == 1
+        assert capped == uncapped
 
 
 def test_incremental_near_dup_index_reuse(spark, docs, tmp_path):
@@ -895,7 +904,9 @@ def test_dedup_corpus_prefer_with_string_ids(spark):
     }
 
 
-def test_dedup_corpus_spreads_representatives_once(spark, monkeypatch):
+def test_dedup_corpus_spreads_representatives_once(
+    spark, monkeypatch, distributed_tier
+):
     """The representatives' (id, text) are spread by id once, by the
     signature pass, not also before their checkpoint (a checkpoint
     reports no partitioning, so that spread was shuffled again); the
@@ -908,7 +919,11 @@ def test_dedup_corpus_spreads_representatives_once(spark, monkeypatch):
     orig = cls.localCheckpoint
 
     def recording(self, eager=True):
-        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        # at budget 0 the clustering's supersteps checkpoint too; only
+        # the dedup stages' own checkpoints are recorded
+        caller = sys._getframe(1).f_globals["__name__"]
+        if not caller.startswith("graphmapreduce_spark.graph."):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
         return orig(self, eager)
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)

@@ -82,3 +82,38 @@ def test_plans_writes_one_dump_and_one_audit_line(tmp_path, sf_dir):
     scans = [ln for ln in lines if ln.startswith("scan[")]
     assert len(scans) == 1
     assert scans[0].startswith("scan[0]: pushed=[] read=struct<l_quantity")
+
+
+def test_ab_pairs_the_two_values_in_flipped_order(monkeypatch, capsys):
+    """``ab --values A B`` sets the conf to A and B in each pair, B
+    first in every other pair, and reports both values; without
+    ``--values`` it pairs false and true."""
+    key = "spark.graphmapreduce.clusterBroadcastMaxPairs"
+    sets = []
+
+    class Conf:
+        def set(self, k, v):
+            sets.append((k, v))
+
+    class Spark:
+        conf = Conf()
+
+    monkeypatch.setattr(perf.bench, "warm_up", lambda spark, sf_dir: None)
+    monkeypatch.setattr(perf.workload, "queries", lambda: {"q": None})
+    # tier (a) (budget 1000000) takes 1 s, the distributed tier 3 s
+    monkeypatch.setattr(
+        perf.bench, "timed",
+        lambda spark, q, sf_dir: 3.0 if sets[-1][1] == "0" else 1.0,
+    )
+    args = perf.parser().parse_args(
+        ["ab", "--conf", key, "--values", "0", "1000000", "-n", "3", "q"]
+    )
+    perf.ab(Spark(), "/data", args)
+    assert sets == [(key, v) for v in
+                    ("0", "1000000", "1000000", "0", "0", "1000000")]
+    out = capsys.readouterr().out
+    assert out.startswith("q: A(0) min=3.000 runs=3.00,3.00,3.00 | "
+                          "B(1000000) min=1.000 runs=1.00,1.00,1.00 | "
+                          "paired B-A median=-2.000s")
+    args = perf.parser().parse_args(["ab", "--conf", key, "q"])
+    assert args.values == ["false", "true"] and args.n == 5

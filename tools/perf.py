@@ -6,10 +6,11 @@ read as bench.py reads them.
 
   run [-n N] QUERY...
       Best-of-N noop-sink times per query after bench.py's warmup.
-  ab --conf KEY [-n N] QUERY...
-      Same-session A/B of a boolean conf: N false/true pairs per query,
-      the order flipped each pair, so monotone ambient drift cancels out
-      of the paired deltas (an A..A B..B block design aliases it into B).
+  ab --conf KEY [--values A B] [-n N] QUERY...
+      Same-session A/B of one conf: N pairs per query of the values A
+      and B (default false, true), the order flipped each pair, so
+      monotone ambient drift cancels out of the paired deltas (an A..A
+      B..B block design aliases it into B).
   cold --a TREE --b TREE [-n N] [--out PATH]
       N pairs of fresh-process (cold JVM, cold codegen) runs of each
       checkout's OWN bench.py, alternating which tree runs first, with
@@ -24,6 +25,8 @@ read as bench.py reads them.
 Usage:
   python tools/perf.py run -n 5 q46_minhash_lsh q54_winnowing
   python tools/perf.py ab --conf spark.sql.adaptive.enabled -n 5 q34_wcc
+  python tools/perf.py ab --conf spark.graphmapreduce.clusterBroadcastMaxPairs \
+      --values 0 1000000 q46_minhash_lsh q576_dedup_corpus
   python tools/perf.py cold --a /tmp/parent --b . -n 3 --out cold.json
   python tools/perf.py plans --out plans/r09 --suffix after q32_pagerank
 """
@@ -64,7 +67,7 @@ def ab(spark, sf_dir: str, args) -> None:
     for name in args.queries:
         a_runs, b_runs, pair_delta = [], [], []
         for i in range(args.n):
-            order = [("A", "false"), ("B", "true")]
+            order = [("A", args.values[0]), ("B", args.values[1])]
             if i % 2:
                 order.reverse()
             t = {}
@@ -76,8 +79,10 @@ def ab(spark, sf_dir: str, args) -> None:
             pair_delta.append(t["B"] - t["A"])
         med = sorted(pair_delta)[len(pair_delta) // 2]
         print(
-            f"{name}: A(false) min={min(a_runs):.3f} runs=" + _runs(a_runs)
-            + f" | B(true) min={min(b_runs):.3f} runs=" + _runs(b_runs)
+            f"{name}: A({args.values[0]}) min={min(a_runs):.3f} runs="
+            + _runs(a_runs)
+            + f" | B({args.values[1]}) min={min(b_runs):.3f} runs="
+            + _runs(b_runs)
             + f" | paired B-A median={med:+.3f}s "
             + ",".join(f"{x:+.2f}" for x in pair_delta),
             flush=True,
@@ -200,7 +205,7 @@ def cold(args) -> None:
     print(f"a_min={summary['a_min']} b_min={summary['b_min']} -> {args.out}")
 
 
-def main(argv: list[str] | None = None) -> int:
+def parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
@@ -210,6 +215,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("queries", nargs="+")
     p = sub.add_parser("ab")
     p.add_argument("--conf", required=True)
+    p.add_argument("--values", nargs=2, default=["false", "true"],
+                   metavar=("A", "B"))
     p.add_argument("-n", type=int, default=5)
     p.add_argument("queries", nargs="+")
     p = sub.add_parser("cold")
@@ -222,7 +229,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--suffix", default="before")
     p.add_argument("--full", action="store_true")
     p.add_argument("queries", nargs="*")
-    args = ap.parse_args(argv)
+    return ap
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parser().parse_args(argv)
     if args.cmd == "cold":
         cold(args)
         return 0
