@@ -281,30 +281,6 @@ def pagerank(
     """
     if reference_compat:
         damping = REFERENCE_DAMPING
-
-    def on_driver(lg: LocalGraph) -> DataFrame:
-        n = lg.n
-        out = lg.out_degree(weighted)
-        if n == 0:
-            return lg.frame("rank", out)
-        dangling = handle_dangling and bool((out == 0).any())
-        return _rank_local(
-            lg,
-            np.full(n, 1.0 / n),
-            out,
-            lambda mass: (1.0 - damping) / n + damping / n * mass,
-            damping=damping,
-            dangling=dangling,
-            weighted=weighted,
-            max_iter=max_iter,
-            threshold=threshold,
-            check_interval=check_interval,
-        )
-
-    # a graph an earlier call collected skips the distributed set-up
-    lg = LocalGraph.kept(graph, weighted)
-    if lg is not None:
-        return on_driver(lg)
     # materialize edges FIRST — the vertex-count, degree, and every
     # superstep job below all contain the edge plan as a subtree, so the
     # cache manager serves them all from this one materialization
@@ -324,7 +300,23 @@ def pagerank(
         deg = planned(deg)
         lg = LocalGraph.collect(graph, weighted)
         if lg is not None:
-            return on_driver(lg)
+            n = lg.n
+            out = lg.out_degree(weighted)
+            if n == 0:
+                return lg.frame("rank", out)
+            dangling = handle_dangling and bool((out == 0).any())
+            return _rank_local(
+                lg,
+                np.full(n, 1.0 / n),
+                out,
+                lambda mass: (1.0 - damping) / n + damping / n * mass,
+                damping=damping,
+                dangling=dangling,
+                weighted=weighted,
+                max_iter=max_iter,
+                threshold=threshold,
+                check_interval=check_interval,
+            )
         # one job builds the (id, out_degree) state; the vertex count is
         # then a near-free count() on the checkpointed RDD instead of a
         # separate scan of the vertex-derivation pipeline
@@ -540,20 +532,6 @@ def connected_components(
 
     ``stats`` receives ``path`` (``"local"``, ``"minlabel"`` or
     ``"contract"``) and the rounds or supersteps it took."""
-
-    def on_driver(lg: LocalGraph) -> DataFrame:
-        comp, rounds = _min_label_local(lg)
-        if stats is not None:
-            stats["path"] = "local"
-            stats["rounds"] = rounds
-        return lg.frame(
-            "component", comp, lg.id_field.dataType, lg.id_field.nullable
-        )
-
-    # a graph an earlier call collected skips the distributed set-up
-    lg = LocalGraph.kept(graph, weighted=False)
-    if lg is not None:
-        return on_driver(lg)
     sym = _both_ways(graph.edges)
     und = PropertyGraph(
         graph.vertices, sym, num_partitions=graph.num_partitions
@@ -569,7 +547,13 @@ def connected_components(
     with persisted(graph.edges), persisted(und.edges):
         lg = LocalGraph.collect(graph, weighted=False)
         if lg is not None:
-            return on_driver(lg)
+            comp, rounds = _min_label_local(lg)
+            if stats is not None:
+                stats["path"] = "local"
+                stats["rounds"] = rounds
+            return lg.frame(
+                "component", comp, lg.id_field.dataType, lg.id_field.nullable
+            )
         res = _min_label(
             und.vertices,
             und.edges,
@@ -1708,29 +1692,22 @@ def personalized_pagerank(
     srcs = sorted(set(int(s) for s in sources))
     e_v = 1.0 / len(srcs)
 
-    def on_driver(lg: LocalGraph) -> DataFrame:
-        restart = np.where(lg.valid & np.isin(lg.key, srcs), e_v, 0.0)
-        return _rank_local(
-            lg,
-            restart,
-            lg.out_degree(),
-            lambda mass: ((1.0 - damping) + damping * mass) * restart,
-            damping=damping,
-            dangling=True,
-            max_iter=max_iter,
-            threshold=threshold,
-            check_interval=check_interval,
-        )
-
-    # a graph an earlier call collected skips the distributed set-up
-    lg = LocalGraph.kept(graph, weighted=False)
-    if lg is not None:
-        return on_driver(lg)
     with persisted(graph.edges):
         deg = planned(graph.out_degrees())
         lg = LocalGraph.collect(graph, weighted=False)
         if lg is not None:
-            return on_driver(lg)
+            restart = np.where(lg.valid & np.isin(lg.key, srcs), e_v, 0.0)
+            return _rank_local(
+                lg,
+                restart,
+                lg.out_degree(),
+                lambda mass: ((1.0 - damping) + damping * mass) * restart,
+                damping=damping,
+                dangling=True,
+                max_iter=max_iter,
+                threshold=threshold,
+                check_interval=check_interval,
+            )
         deg = deg.localCheckpoint(eager=True)
         restart = F.when(F.col("id").isin(srcs), F.lit(e_v)).otherwise(0.0)
         return _rank_fixpoint(

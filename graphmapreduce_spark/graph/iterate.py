@@ -220,14 +220,11 @@ def driver_budget(spark: SparkSession) -> int:
     return int(spark.conf.get(DRIVER_BUDGET_KEY, "1000000"))
 
 
-def broadcast_bytes(spark: SparkSession) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes: the relation
-    size the session already collects to the driver to broadcast."""
-    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-
-
 def driver_local(
-    df: DataFrame, rows: int | None = None, payload: Column | None = None
+    df: DataFrame,
+    rows: int | None = None,
+    payload: Column | None = None,
+    max_bytes: int = 0,
 ) -> pa.Table | None:
     """Tier (a)'s one gate: ``df`` collected to the driver via Arrow when
     its rows fit the driver budget, else ``None``.
@@ -239,11 +236,14 @@ def driver_local(
     it (then only a frame that fits is collected); without it, at most
     budget + 1 rows are collected and a frame with more returns ``None``.
     ``payload`` is a per-row byte count for frames whose rows are not
-    narrow (text): one aggregate action then counts the rows and sums
-    the payload, and ``df`` is collected only when the bytes also fit
+    narrow (text): the payload of at most budget + 1 rows is taken
+    first, and ``df`` is collected only when its rows fit the budget
+    and its bytes fit both ``max_bytes`` and
     ``spark.sql.autoBroadcastJoinThreshold``, the relation size the
     session already collects to the driver to broadcast (``0`` or less
-    turns this use of tier (a) off too).
+    turns this use of tier (a) off too).  The take reads partitions
+    only until it has budget + 1 rows, so a frame far over the budget
+    costs a partition or so of payload, not a scan.
     A graph is collected once: ``LocalGraph.collect`` keeps the first
     fitting collect on the graph object and serves later calls from it
     while it still fits the budget, so tier (a) reads the graph as of
@@ -273,11 +273,13 @@ def driver_local(
     if cap <= 0:
         return None
     if payload is not None:
-        limit = broadcast_bytes(spark)
+        conf = spark._jsparkSession.sessionState().conf()
+        limit = min(max_bytes, conf.autoBroadcastJoinThreshold())
         if limit <= 0:
             return None
-        rows, size = df.agg(F.count(F.lit(1)), F.sum(payload)).first()
-        if (size or 0) > limit:
+        sizes = df.select(payload).limit(cap + 1).collect()
+        rows = len(sizes)
+        if rows <= cap and sum(b or 0 for (b,) in sizes) > limit:
             return None
     if rows is not None and rows > cap:
         return None
@@ -325,18 +327,6 @@ class _Snapshot:
 
     def fits(self, cap: int) -> bool:
         return 0 < cap and max(self.table.num_rows, len(self.ids)) <= cap
-
-    @staticmethod
-    def kept(graph) -> "_Snapshot | None":
-        """The snapshot kept on ``graph`` when it was taken from the
-        graph's current frames (a stale one is dropped) and still fits
-        the budget."""
-        snap = graph._local
-        if snap is not None and not snap.of(graph):
-            snap = graph._local = None
-        if snap is None or not snap.fits(driver_budget(graph.spark)):
-            return None
-        return snap
 
     @classmethod
     def take(cls, graph) -> "_Snapshot | None":
@@ -409,26 +399,14 @@ class LocalGraph:
         budget.  Graphs with duplicate vertex ids or, when ``weighted``,
         null or non-finite weights also return ``None`` — they stay on
         the distributed tier."""
-        snap = _Snapshot.kept(graph)
-        if snap is None:
+        snap = graph._local
+        if snap is not None and not snap.of(graph):
+            snap = graph._local = None
+        if snap is None or not snap.fits(driver_budget(graph.spark)):
             snap = _Snapshot.take(graph)
             if snap is None:
                 return None
             graph._local = snap
-        return cls._of(graph, snap, weighted)
-
-    @classmethod
-    def kept(cls, graph, weighted: bool) -> "LocalGraph | None":
-        """``graph`` on tier (a) from the snapshot an earlier call kept
-        on it, with no Spark job and no distributed set-up; ``None`` when
-        there is no snapshot of the current frames that fits the budget
-        (or the graph cannot run on tier (a)), and the caller takes the
-        count-and-gate path (``collect``)."""
-        snap = _Snapshot.kept(graph)
-        return None if snap is None else cls._of(graph, snap, weighted)
-
-    @classmethod
-    def _of(cls, graph, snap: _Snapshot, weighted: bool) -> "LocalGraph | None":
         ids = snap.ids
         key = pc.fill_null(ids, 0).to_numpy()
         valid = ids.is_valid().to_numpy(zero_copy_only=False)

@@ -44,7 +44,6 @@ from pyspark.sql.types import (
 from graphmapreduce_spark.functions import text as T
 from graphmapreduce_spark.functions import vectors as V
 from graphmapreduce_spark.graph.iterate import (
-    broadcast_bytes,
     count_rows,
     driver_budget,
     driver_local,
@@ -335,6 +334,9 @@ def lsh_candidate_pairs(
     return pairs.distinct()
 
 
+# text bytes up to which tier (a) runs the LSH stage: below the speed
+# crossover and the candidate-budget overflow measured in ``_lsh_local``
+_LSH_DRIVER_BYTES = 8 << 20
 # (element, pair) cells per block of tier (a)'s verify lookups and
 # signature comparisons: 8 MiB per int64 array
 _VERIFY_BLOCK = 1 << 20
@@ -404,61 +406,92 @@ def _verify_jaccard(
 
 
 def _lsh_local(
-    df: DataFrame, id_col: str, text_col: str, **knobs
-) -> DataFrame | None:
-    """``minhash_lsh_near_dup_pairs`` on tier (a), or ``None`` for the
-    distributed path.  ``(id, text)`` is collected when the id type is
-    integral and ``graph/iterate.py::driver_local`` admits it — one
-    aggregate action shows at most ``driver_budget`` rows and at most
-    ``spark.sql.autoBroadcastJoinThreshold`` bytes of text — and the
-    collected ids are unique and non-null.  ``_lsh_pairs`` then runs
-    the whole stage as numpy; it gives up (``None``) when the candidate
-    pairs exceed the budget.  Spark rounds the Jaccard of the returned
-    (id_a, id_b, |A∩B|, |A∪B|) rows with the same expression as the
-    distributed verify, so both tiers return the same rows.
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    num_hashes: int,
+    seed: int,
+    **knobs,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """``minhash_lsh_near_dup_pairs`` on tier (a): (pairs, None) on tier
+    (a); (None, sigs) when the candidate pairs outgrow the budget, with
+    ``sigs`` the driver's signatures as the distributed plan's ``(_id,
+    sig)`` frame, so the corpus is not signed twice; (None, None) for
+    any other corpus.  ``(id, text)`` is collected when the id type is
+    integral and ``graph/iterate.py::driver_local`` admits it — a take
+    of at most ``driver_budget`` + 1 text sizes shows the rows within
+    the budget and at most ``_LSH_DRIVER_BYTES`` (and
+    ``spark.sql.autoBroadcastJoinThreshold``) bytes of text — and the
+    collected ids are unique and non-null.  The corpus is signed with
+    ``_minhash_batches`` and ``_lsh_pairs`` runs the rest of the stage
+    as numpy.  Spark rounds the Jaccard of the returned (id_a, id_b,
+    |A∩B|, |A∪B|) rows with the same expression as the distributed
+    verify, so both tiers return the same rows.
 
-    The byte cap is a driver-memory cap, not a speed crossover.
-    Measured on 4 cores with ``tools/perf.py ab`` (q576, md5, cap 64,
-    margins 0.2 and mod 4) at the byte edge: ``tools/make_scale.py
-    --factor 44`` of sf0.1, 220 000 documents and 66 MB of text (99% of
-    the session's 64 MiB threshold).  There the distributed plan took
-    150.4 s and tier (a) 187.8 s (one pair, the budget raised to 20M so
-    its 4.37M verified pairs fit).  Run alone on that corpus, the
-    kernel's tracemalloc peak was 832 MiB: 185 MiB while signing, 417
-    MiB while banding, and the rest in the verify, mostly arrays over
-    the candidate pairs, so the pair budget bounds it.  The verify's
-    hashes (8 bytes a shingle, up to 8× the text) are held in blocks of
-    at most the threshold, two at a time.  At the default budget that
-    corpus's candidate pairs overflow it, and the kernel gives up after
-    signing (9.9 s for its first 55 000 documents, run alone) and the
-    distributed plan runs.  At sf0.1 (5 000 documents, 1.5 MB of text;
-    3 pairs, best of each side) tier (a) took 2.85 s for q46 vs 10.33 s
-    distributed and 2.55 s for q576 vs 8.07 s, and the kernel alone
-    peaks at 158 MiB of tracemalloc."""
+    ``_LSH_DRIVER_BYTES`` sits below the measured speed crossover and
+    below the corpora whose candidate pairs overflow the default budget.
+    q576 (md5, 32 hashes, cap 64, margins 0.2, mod 4) on
+    ``tools/make_scale.py`` copies of sf0.1, 4 cores, ``tools/perf.py
+    ab --values 0 20000000 -n 2`` (budget raised so the pairs fit; best
+    of each side), tier (a) vs distributed: 9.5 vs 20.3 s at 4× (20 000
+    documents, 6.0 MB of text), 21.5 vs 34.9 s at 8× (12.0 MB), 53.1 vs
+    65.6 s at 16× (24.0 MB), 101.7 vs 107.5 s at 24× (35.9 MB) and
+    187.8 vs 150.4 s at 44× (66 MB, one pair); q46 (uncapped) 27.3 vs
+    46.1 s at 4× and 104.7 vs 199.9 s at 8×.  The copies grow the pairs
+    with the square of the factor: at 8× the distinct candidates are
+    1.22M, over the default budget, and there the driver's signing
+    before the fallback cost q576 4 s end to end (fresh processes, 2
+    pairs: 41.4 and 39.9 s vs 37.4 and 36.0 s for the parent plan), even
+    with the signatures handed over.  Under a bucket cap of 64 a band
+    has at most 31.5 pairs a row: 882 000 for 8 MiB of documents of
+    sf0.1's length.  At 8 MiB (28 000 documents, 73 000 pairs, default
+    budget) the kernel's tracemalloc peak is 129 MiB while signing and
+    202 MiB in the verify, which holds every candidate document's
+    hashes at once."""
+    no = None, None
     src = df.select(id_col, text_col)
     id_field = src.schema[id_col]
     if not isinstance(id_field.dataType, IntegralType):
-        return None
+        return no
     mod = knobs["verify_sample_mod"]
     if mod is not None and int(mod) < 1:
-        return None
-    table = driver_local(src, payload=F.octet_length(text_col))
+        return no
+    table = driver_local(
+        src, payload=F.octet_length(text_col), max_bytes=_LSH_DRIVER_BYTES
+    )
     if table is None:
-        return None
-    ids = table.column(0)
+        return no
+    ids, texts = table.columns
     if ids.null_count:
-        return None
+        return no
     key = ids.to_numpy()
     if len(np.unique(key)) < len(key):
-        return None
+        return no
     spark = df.sparkSession
-    # the verify holds two blocks of hashes of at most these bytes each
+    a, b = _hash_coeffs(num_hashes, seed)
+    pos = pa.table({"_row": np.arange(len(texts)), "text": texts})
+    signed = pa.Table.from_batches(
+        _minhash_batches(pos.to_batches(), knobs["shingle_n"], knobs["hash_fn"], a, b),
+        pa.schema([("_row", pa.int64()), ("sig", pa.list_(pa.int64()))]),
+    )
+    rows = signed.column(0).to_numpy()
+    sig = signed.column(1).combine_chunks().flatten().to_numpy()
     pairs = _lsh_pairs(
-        table.column(1), key, driver_budget(spark), broadcast_bytes(spark), **knobs
+        texts, key, rows, sig.reshape(-1, num_hashes), driver_budget(spark), **knobs
     )
     if pairs is None:
-        return None
-    a, b, inter, union = pairs
+        # the distributed plan takes the signatures over instead of
+        # signing the corpus again
+        sigs = signed.set_column(0, "_id", ids.take(rows))
+        schema = StructType(
+            [
+                StructField("_id", id_field.dataType, id_field.nullable),
+                StructField("sig", ArrayType(LongType()), False),
+            ]
+        )
+        return None, spark.createDataFrame(sigs, schema)
+    ra, rb, inter, union = pairs
     schema = StructType(
         [
             StructField("id_a", id_field.dataType, id_field.nullable),
@@ -468,58 +501,45 @@ def _lsh_local(
         ]
     )
     out = pa.table(
-        [ids.take(a), ids.take(b), pa.array(inter), pa.array(union)],
+        [ids.take(ra), ids.take(rb), pa.array(inter), pa.array(union)],
         names=schema.names,
     )
     jaccard = F.col("_inter").cast("double") / F.col("_union")
     return spark.createDataFrame(out, schema).select(
         "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
-    )
+    ), None
 
 
 def _lsh_pairs(
     texts: pa.ChunkedArray,
     key: np.ndarray,
+    rows: np.ndarray,
+    sig: np.ndarray,
     cap: int,
-    block_bytes: int,
     *,
     threshold: float,
-    num_hashes: int,
     bands: int,
     shingle_n: int,
-    seed: int,
     hash_fn: str,
     max_bucket_size: int | None,
     est_margin: float | None,
     verify_sample_mod: int | None,
 ):
     """Tier (a)'s kernel: the distributed stage's rows as numpy, on one
-    collected corpus of ``texts`` with unique ``key`` ids.  Returns
+    collected corpus of ``texts`` with unique ``key`` ids, whose signed
+    ``rows`` have the signatures ``sig`` (one row each).  Returns
     (row_a, row_b, |A∩B|, |A∪B|) of the verified pairs — rows of
     ``texts``, ordered so ``key[row_a] < key[row_b]`` — or ``None`` when
-    the distinct candidate pairs exceed ``cap``.  ``block_bytes`` sizes
-    the verify's blocks of documents (``_verify``).
+    the distinct candidate pairs exceed ``cap``.
 
-    Each step is the numpy twin of one distributed step: signing
-    (``_minhash_batches``, the same kernel); banding on the band
-    contents (the distributed bucket is that content or its xxhash64);
-    all pairs within a bucket, or a star on the bucket's min id over
-    ``max_bucket_size`` signed rows; the ``est_margin`` agreement cut;
-    then the distinct hashed shingles of candidate documents only, the
-    ``verify_sample_mod`` prefilter and the exact Jaccard cut."""
-    a, b = _hash_coeffs(num_hashes, seed)
-    pos = pa.table({"_row": np.arange(len(texts)), "text": texts})
-    signed = list(_minhash_batches(pos.to_batches(), shingle_n, hash_fn, a, b))
-    rows = np.concatenate(
-        [np.zeros(0, np.int64)] + [s.column(0).to_numpy() for s in signed]
-    )
-    sig = np.concatenate(
-        [np.zeros((0, num_hashes), np.int64)]
-        + [
-            s.column(1).flatten().to_numpy().reshape(-1, num_hashes)
-            for s in signed
-        ]
-    )
+    Each step is the numpy twin of one distributed step: banding on the
+    band contents (the distributed bucket is that content or its
+    xxhash64); all pairs within a bucket, or a star on the bucket's min
+    id over ``max_bucket_size`` signed rows; the ``est_margin``
+    agreement cut; then the distinct hashed shingles of candidate
+    documents only, the ``verify_sample_mod`` prefilter and the exact
+    Jaccard cut."""
+    num_hashes = sig.shape[1]
     idv = key[rows]
     cands = _band_candidates(sig, idv, bands, max_bucket_size, cap)
     if cands is None:
@@ -542,7 +562,6 @@ def _lsh_pairs(
         hash_fn,
         threshold,
         verify_sample_mod,
-        block_bytes,
     )
     return rows[u[keep]], rows[v[keep]], inter[keep], union[keep]
 
@@ -601,56 +620,28 @@ def _verify(
     hash_fn: str,
     threshold: float,
     mod: int | None,
-    block_bytes: int,
 ):
     """The verify of candidate pairs (x, y) of ``texts``: (keep, |A∩B|,
     |A∪B|) per pair, the counts set where ``keep``.  ``mod`` adds the
     sampled prefilter ahead of the exact Jaccard cut, as the distributed
-    verify does.
-
-    The documents are hashed in blocks whose hashes (at most 8 bytes a
-    shingle) fit ``block_bytes``, and at most two blocks are held at a
-    time: each block once, and the later blocks it shares pairs with
-    once more each.  A corpus whose candidate hashes fit one block is
-    hashed once."""
-    shingles = pc.utf8_length(texts).to_numpy(zero_copy_only=False) - n + 1
-    most = 8 * np.maximum(shingles, 0)
-    blk = (np.cumsum(most) - most) // max(block_bytes, 1)
-    first = np.searchsorted(blk, np.arange(blk[-1] + 2) if len(blk) else [0])
-    bx, by = blk[x], blk[y]
-    lo_blk, hi_blk = np.minimum(bx, by), np.maximum(bx, by)
+    verify does."""
+    full = _HashSets.of(texts.to_pylist(), n, hash_fn)
     keep = np.zeros(len(x), dtype=bool)
     inter = np.zeros(len(x), dtype=np.int64)
     union = np.zeros(len(x), dtype=np.int64)
-
-    def hashed(b):
-        docs = texts.slice(first[b], first[b + 1] - first[b]).to_pylist()
-        full = _HashSets.of(docs, n, hash_fn)
-        # numpy's % of an int64 by a positive int is Spark's pmod
-        return full, None if mod is None else full.subset(full.values % mod == 0)
-
-    for i in np.unique(lo_blk).tolist():
-        held = hashed(i)
-        at_i = np.flatnonzero(lo_blk == i)
-        for j in np.unique(hi_blk[at_i]).tolist():
-            other = held if j == i else hashed(j)
-            sel = at_i[hi_blk[at_i] == j]
-            # each pair's document in block i, and its partner in block j
-            swap = bx[sel] != i
-            p = np.where(swap, y[sel], x[sel]) - first[i]
-            q = np.where(swap, x[sel], y[sel]) - first[j]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                if mod is not None:
-                    a, b = held[1], other[1]
-                    i_s = _intersections(a, p, b, q)
-                    u_s = a.size[p] + b.size[q] - i_s
-                    cut = max(0.0, threshold - _VERIFY_SAMPLE_MARGIN)
-                    ok = (u_s < 8 * mod) | (i_s / u_s >= cut)
-                    sel, p, q = sel[ok], p[ok], q[ok]
-                a, b = held[0], other[0]
-                inter[sel] = _intersections(a, p, b, q)
-                union[sel] = a.size[p] + b.size[q] - inter[sel]
-                keep[sel] = inter[sel] / union[sel] >= threshold
+    sel = np.arange(len(x))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        if mod is not None:
+            # numpy's % of an int64 by a positive int is Spark's pmod
+            sm = full.subset(full.values % mod == 0)
+            i_s = sm.intersections(x, y)
+            u_s = sm.size[x] + sm.size[y] - i_s
+            cut = max(0.0, threshold - _VERIFY_SAMPLE_MARGIN)
+            sel = np.flatnonzero((u_s < 8 * mod) | (i_s / u_s >= cut))
+        p, q = x[sel], y[sel]
+        inter[sel] = full.intersections(p, q)
+        union[sel] = full.size[p] + full.size[q] - inter[sel]
+        keep[sel] = inter[sel] / union[sel] >= threshold
     return keep, inter, union
 
 
@@ -693,10 +684,12 @@ class _HashSets:
         doc = np.searchsorted(self.off, at, "right") - 1
         return _HashSets(self.values[at], np.bincount(doc, minlength=len(self.size)))
 
-    def count_in(self, a: np.ndarray, other: "_HashSets", b: np.ndarray):
-        """|A∩B| for each pair of set ``a[k]`` here and ``b[k]`` of
-        ``other``: A's hashes are looked up in B's sorted segment,
-        ``_VERIFY_BLOCK`` hashes at a time, one search per B."""
+    def intersections(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        """|A∩B| for each pair of sets ``a[k]`` and ``b[k]``: the smaller
+        set's hashes are looked up in the other's sorted segment,
+        ``_VERIFY_BLOCK`` hashes at a time, one search per segment."""
+        swap = self.size[a] > self.size[b]
+        a, b = np.where(swap, b, a), np.where(swap, a, b)
         order = np.argsort(b, kind="stable")
         a, b = a[order], b[order]
         n = self.size[a]
@@ -714,7 +707,7 @@ class _HashSets:
             bb = b[lo:hi]
             starts = np.flatnonzero(np.r_[True, bb[1:] != bb[:-1]]).tolist()
             for s, e in zip(starts, starts[1:] + [hi - lo]):
-                seg = other.values[other.off[bb[s]] : other.off[bb[s] + 1]]
+                seg = self.values[self.off[bb[s]] : self.off[bb[s] + 1]]
                 if len(seg):
                     part = h[at[s] : at[e]]
                     j = np.minimum(np.searchsorted(seg, part), len(seg) - 1)
@@ -725,16 +718,6 @@ class _HashSets:
         out = np.empty_like(inter)
         out[order] = inter
         return out
-
-
-def _intersections(A: _HashSets, a, B: _HashSets, b) -> np.ndarray:
-    """|A[a[k]] ∩ B[b[k]]| per pair; the smaller set of each pair is
-    looked up in the other."""
-    small = A.size[a] <= B.size[b]
-    out = np.empty(len(a), np.int64)
-    out[small] = A.count_in(a[small], B, b[small])
-    out[~small] = B.count_in(b[~small], A, a[~small])
-    return out
 
 
 def minhash_lsh_near_dup_pairs(
@@ -757,13 +740,13 @@ def minhash_lsh_near_dup_pairs(
     Two tiers, as in ``graph/`` (``graph/iterate.py::driver_local``): a
     corpus with integral, unique, non-null ids, at most
     ``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows and at most
-    ``spark.sql.autoBroadcastJoinThreshold`` bytes of text is collected
-    once and the whole stage — signing, banding, the bucket cap, both
-    prefilters and the verify — runs as one numpy pass on the driver
-    (``_lsh_local``), with the same rows out.  It takes no Spark job
-    past the gate's aggregate and the collect; budget 0 turns it off.
-    Any other corpus, or one whose candidate pairs outgrow the budget,
-    runs the distributed plan below.
+    8 MiB of text (and ``spark.sql.autoBroadcastJoinThreshold``) is
+    collected once and the whole stage — signing, banding, the bucket
+    cap, both prefilters and the verify — runs as one numpy pass on the
+    driver (``_lsh_local``), with the same rows out.  It takes no Spark
+    job past the gate's take of text sizes and the collect; budget 0
+    turns it off.  Any other corpus, or one whose candidate pairs
+    outgrow the budget, runs the distributed plan below.
 
     ``verify_sample_mod`` (opt-in; e.g. 4) inserts a second
     DETERMINISTIC prefilter between the signature estimate and the full
@@ -818,7 +801,7 @@ def minhash_lsh_near_dup_pairs(
     """
     if bands is None:
         bands = _knee_bands(num_hashes, threshold)
-    local = _lsh_local(
+    local, sigs = _lsh_local(
         df,
         id_col,
         text_col,
@@ -849,9 +832,10 @@ def minhash_lsh_near_dup_pairs(
         or est_margin is not None
         or verify_sample_mod is not None
     )
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn
-    ).withColumnRenamed(id_col, "_id")
+    if sigs is None:
+        sigs = minhash_signatures(
+            df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn
+        ).withColumnRenamed(id_col, "_id")
     if staged:
         # materialize signatures ONCE: downstream they are scanned up to
         # four times (banding for the self-join — twice without exchange

@@ -125,10 +125,10 @@ def dedup_corpus(
          whose signature-estimated Jaccard is below
          threshold−margin before the shingle-set verify.  Both knobs
          are deterministic given the seed, hence oracle-replicable.
-         Representatives within the driver budget (rows, and text
-         bytes within ``spark.sql.autoBroadcastJoinThreshold``) run
-         this whole step as one numpy pass on the driver, with the
-         same pairs out; larger ones run it as Spark stages.
+         Representatives within the driver budget in rows and within
+         8 MiB of text (``operators/dedup.py::_lsh_local``) run this
+         whole step as one numpy pass on the driver, with the same
+         pairs out; larger ones run it as Spark stages.
       3. cluster: connected components over the verified pair graph
          (`dedup_clusters`, i.e. ``graph/algorithms.py::
          connected_components``), labeled by the component's min id.

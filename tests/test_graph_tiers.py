@@ -443,39 +443,6 @@ def test_snapshot_serves_later_calls_with_no_job(spark):
     assert out["wcc"] == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
-def test_snapshot_skips_the_distributed_set_up(spark, monkeypatch):
-    """A call on a graph whose kept snapshot fits the budget goes
-    straight to tier (a): ``pagerank`` and ``personalized_pagerank``
-    plan no degree frame and ``connected_components`` builds no
-    symmetrized edges, and none of them persists the edges.  Without a
-    snapshot that fits, the set-up still comes before the gate."""
-    g = _from_edges(spark, [(1, 2, 1.0), (2, 3, 1.0), (5, 6, 1.0)])
-    alg.pagerank(g).collect()
-    calls = []
-
-    def record(name):
-        orig = getattr(alg, name)
-
-        def recording(*a, **k):
-            calls.append(name)
-            return orig(*a, **k)
-
-        monkeypatch.setattr(alg, name, recording)
-
-    for name in ("persisted", "planned", "_both_ways"):
-        record(name)
-    ranks = _by_id(alg.pagerank(g).collect())
-    alg.personalized_pagerank(g, [1]).collect()
-    comp = _by_id(alg.connected_components(g).collect())
-    assert calls == []
-    assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-    with _budget(spark, "0"):
-        assert _by_id(alg.pagerank(g).collect()) == pytest.approx(ranks)
-        alg.connected_components(g).collect()
-    assert calls[:2] == ["persisted", "planned"]
-    assert "_both_ways" in calls
-
-
 def test_snapshot_follows_the_budget(spark, counted):
     """Budget 0 after a tier-(a) call sends the next call on the same
     graph to the distributed tier; restoring the budget brings tier (a)

@@ -7,8 +7,9 @@ import random
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
-from graphmapreduce_spark.graph.iterate import DRIVER_BUDGET_KEY
+from graphmapreduce_spark.graph.iterate import DRIVER_BUDGET_KEY, driver_local
 from graphmapreduce_spark.operators import dedup as D
 
 STAGED = dict(max_bucket_size=6, est_margin=0.2, verify_sample_mod=4)
@@ -116,24 +117,54 @@ def test_string_ids_fall_back(spark):
     assert _falls_back(spark, df) == [("a", "b", 1.0)]
 
 
-def test_text_bytes_over_the_broadcast_threshold_fall_back(spark):
+def test_text_bytes_over_the_bound_fall_back(spark, monkeypatch):
+    """Text over the byte bound or over the broadcast threshold, and a
+    threshold of -1, keep the corpus off tier (a)."""
     df = _corpus(spark, 3)
     threshold = "spark.sql.autoBroadcastJoinThreshold"
     with _conf(spark, threshold, "100"):
         got = _falls_back(spark, df)
     with _conf(spark, threshold, "-1"):
         assert _falls_back(spark, df) == got
+    with monkeypatch.context() as m:
+        m.setattr(D, "_LSH_DRIVER_BYTES", 100)
+        assert _falls_back(spark, df) == got
     assert _pairs(df)[::2] == ("driver", got)
 
 
-def test_pairs_over_the_budget_fall_back(spark):
-    # 8 copies of one text: 28 pairs from 8 rows
+@pytest.mark.parametrize("staged", [False, True], ids=["one_plan", "staged"])
+def test_pairs_over_the_budget_fall_back(spark, monkeypatch, staged):
+    """Candidate pairs over the budget send the corpus to the
+    distributed plan, which takes the driver's signatures over instead
+    of signing again."""
+    # 6 copies of one text, within the bucket cap: 15 pairs from 6 rows
     df = spark.createDataFrame(
-        [(i, "the same text in every row") for i in range(8)],
+        [(i, "the same text in every row") for i in range(6)],
         "doc_id long, text string",
     )
-    with _conf(spark, DRIVER_BUDGET_KEY, "20"):
-        assert len(_falls_back(spark, df)) == 28
-    with _conf(spark, DRIVER_BUDGET_KEY, "28"):
-        tier, _, got = _pairs(df)
-    assert tier == "driver" and len(got) == 28
+    kw = STAGED if staged else {}
+    with _conf(spark, DRIVER_BUDGET_KEY, "0"):
+        ref = _pairs(df, **kw)[2]
+    with _conf(spark, DRIVER_BUDGET_KEY, "10"), monkeypatch.context() as m:
+        m.setattr(D, "minhash_signatures", None)
+        tier, _, got = _pairs(df, **kw)
+    assert tier == "distributed" and got == ref and len(got) == 15
+    with _conf(spark, DRIVER_BUDGET_KEY, str(len(got))):
+        tier, _, got = _pairs(df, **kw)
+    assert tier == "driver" and got == ref
+
+
+def test_gate_reads_no_further_than_the_budget(spark):
+    """The gate takes the text bytes of budget + 1 rows instead of
+    scanning the corpus: a corpus over the budget is turned away after
+    the partition that holds them, and no later partition is read."""
+    df = spark.range(0, 100, numPartitions=4).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 25, F.lit("some text"))
+        .otherwise(F.raise_error(F.lit("read past the budget")))
+        .alias("text"),
+    )
+    with _conf(spark, DRIVER_BUDGET_KEY, "10"):
+        assert driver_local(
+            df, payload=F.octet_length("text"), max_bytes=1 << 20
+        ) is None
