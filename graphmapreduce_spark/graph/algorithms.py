@@ -576,20 +576,33 @@ def connected_components(
 
 def _min_label_local(lg: LocalGraph) -> tuple[pa.Array, int]:
     """Tier (a) of WCC: per vertex the min id that reaches it over the
-    edges taken both ways, and the rounds it took.  Min-hooking over
-    vertices ranked by id: each round every root with an edge to
-    another tree hooks onto the smallest such root (parents only point
-    to smaller ranks, so no cycle forms), then pointer jumping links
-    every vertex to its root.  Every tree with an edge out merges each
-    round, so the rounds are O(log n) whatever the diameter.  Edges with
-    a non-vertex endpoint carry nothing; a null id labels itself null.
+    edges taken both ways, and the rounds it took (``_min_label_roots``).
     Labels are taken from the Arrow ids, so they stay exact longs."""
-    order = np.lexsort((lg.key, ~lg.valid))  # ids ascending, null last
-    rank = np.empty(lg.n, dtype=np.int64)
-    rank[order] = np.arange(lg.n)
-    live = (lg.src >= 0) & (lg.dst >= 0)
-    u, v = rank[lg.src[live]], rank[lg.dst[live]]
-    parent = np.arange(lg.n)
+    roots, rounds = _min_label_roots(lg.key, lg.valid, lg.src, lg.dst)
+    return lg.ids.take(roots), rounds
+
+
+def _min_label_roots(
+    key: np.ndarray, valid: np.ndarray, src: np.ndarray, dst: np.ndarray
+) -> tuple[np.ndarray, int]:
+    """WCC on plain position arrays: vertex ``i`` has id ``key[i]`` (null
+    where not ``valid[i]``) and an edge joins positions ``src[k]`` and
+    ``dst[k]``, -1 for a non-vertex endpoint.  Returns per vertex the
+    position of the min id that reaches it over the edges taken both
+    ways, and the rounds it took.  Min-hooking over vertices ranked by
+    id: each round every root with an edge to another tree hooks onto
+    the smallest such root (parents only point to smaller ranks, so no
+    cycle forms), then pointer jumping links every vertex to its root.
+    Every tree with an edge out merges each round, so the rounds are
+    O(log n) whatever the diameter.  Edges with a non-vertex endpoint
+    carry nothing; a null id labels itself."""
+    n = len(key)
+    order = np.lexsort((key, ~valid))  # ids ascending, null last
+    rank = np.empty(n, dtype=np.int64)
+    rank[order] = np.arange(n)
+    live = (src >= 0) & (dst >= 0)
+    u, v = rank[src[live]], rank[dst[live]]
+    parent = np.arange(n)
     rounds = 0
     while (cross := parent[u] != parent[v]).any():
         # an edge inside one tree stays inside it: drop it for good
@@ -599,7 +612,7 @@ def _min_label_local(lg: LocalGraph) -> tuple[pa.Array, int]:
         while not np.array_equal(jumped := parent[parent], parent):
             parent = jumped
         rounds += 1
-    return lg.ids.take(order[parent[rank]]), rounds
+    return order[parent[rank]], rounds
 
 
 # ---------------------------------------------------------------------------

@@ -35,8 +35,9 @@ Loops run on one of two tiers:
   superstep, and none at all for a later call on the same graph.
   ``pagerank``, ``personalized_pagerank``, ``sssp``, ``bfs`` and
   ``connected_components`` (so ``dedup_clusters`` too) take it, and
-  outside ``graph/`` so does ``minhash_lsh_near_dup_pairs``, whose
-  corpus is collected under the same gate with its text bytes capped;
+  outside ``graph/`` so do ``minhash_lsh_near_dup_pairs`` and the whole
+  ``pipeline.dedup_corpus`` recipe, whose corpus is collected under the
+  same gate with its text bytes capped;
 - (b)/(c) **distributed**: every other loop, and the same five above
   the budget — Spark supersteps through ``fixpoint`` and ``Rounds``.
 """
@@ -253,7 +254,8 @@ def driver_local(
     Tier (a)'s users: ``pagerank``, ``personalized_pagerank``, ``sssp``,
     ``bfs`` and ``connected_components`` (so ``dedup_clusters``) in
     ``graph/algorithms.py``, and ``operators/dedup.py::
-    minhash_lsh_near_dup_pairs`` (with ``payload``, the text bytes).
+    minhash_lsh_near_dup_pairs`` and ``pipeline.dedup_corpus`` (with
+    ``payload``, the text bytes; both through ``dedup._driver_corpus``).
 
     The budget is a driver-memory cap, not a speed crossover.  At its
     edge tier (a) is faster over graph-bsp's whole cycle, though not

@@ -374,9 +374,11 @@ def _shingle_ids(shingles: Column, hash_fn: str) -> Column:
 
 
 def _jaccard(a: str, b: str) -> Column:
-    """Exact |A∩B| / |A∪B| of two array columns."""
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
-        F.array_union(a, b)
+    """Exact |A∩B| / |A∪B| of two array columns; null when the union is
+    empty (two rows without a shingle), which no Jaccard cut keeps."""
+    return F.try_divide(
+        F.size(F.array_intersect(a, b)).cast("double"),
+        F.size(F.array_union(a, b)),
     )
 
 
@@ -418,16 +420,51 @@ def _lsh_local(
     (a); (None, sigs) when the candidate pairs outgrow the budget, with
     ``sigs`` the driver's signatures as the distributed plan's ``(_id,
     sig)`` frame, so the corpus is not signed twice; (None, None) for
-    any other corpus.  ``(id, text)`` is collected when the id type is
-    integral and ``graph/iterate.py::driver_local`` admits it — a take
-    of at most ``driver_budget`` + 1 text sizes shows the rows within
-    the budget and at most ``_LSH_DRIVER_BYTES`` (and
-    ``spark.sql.autoBroadcastJoinThreshold``) bytes of text — and the
-    collected ids are unique and non-null.  The corpus is signed with
-    ``_minhash_batches`` and ``_lsh_pairs`` runs the rest of the stage
-    as numpy.  Spark rounds the Jaccard of the returned (id_a, id_b,
-    |A∩B|, |A∪B|) rows with the same expression as the distributed
-    verify, so both tiers return the same rows.
+    any other corpus.  ``_driver_corpus`` collects ``(id, text)`` and
+    ``_lsh_collected`` runs the stage on it.  Spark rounds the Jaccard
+    of the returned (id_a, id_b, |A∩B|, |A∪B|) rows with the same
+    expression as the distributed verify, so both tiers return the same
+    rows."""
+    table = _driver_corpus(df, id_col, text_col, knobs["verify_sample_mod"])
+    if table is None:
+        return None, None
+    ids, texts = table.columns
+    id_field = df.schema[id_col]
+    spark = df.sparkSession
+    pairs, sigs = _lsh_collected(
+        spark, ids, texts, id_field, num_hashes=num_hashes, seed=seed, **knobs
+    )
+    if pairs is None:
+        return None, sigs
+    ra, rb, inter, union = pairs
+    schema = StructType(
+        [
+            StructField("id_a", id_field.dataType, id_field.nullable),
+            StructField("id_b", id_field.dataType, id_field.nullable),
+            StructField("_inter", LongType(), False),
+            StructField("_union", LongType(), False),
+        ]
+    )
+    out = pa.table(
+        [ids.take(ra), ids.take(rb), pa.array(inter), pa.array(union)],
+        names=schema.names,
+    )
+    jaccard = F.col("_inter").cast("double") / F.col("_union")
+    return spark.createDataFrame(out, schema).select(
+        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
+    ), None
+
+
+def _driver_corpus(
+    df: DataFrame, id_col: str, text_col: str, verify_sample_mod: int | None
+) -> pa.Table | None:
+    """Tier (a)'s gate for the LSH stage (and for the whole
+    ``pipeline.dedup_corpus`` recipe): ``df``'s ``(id, text)`` collected
+    when the id type is integral, ``graph/iterate.py::driver_local``
+    admits it — a take of at most ``driver_budget`` + 1 text sizes
+    shows the rows within the budget and at most ``_LSH_DRIVER_BYTES``
+    (and ``spark.sql.autoBroadcastJoinThreshold``) bytes of text — and
+    the collected ids are unique and non-null; else ``None``.
 
     ``_LSH_DRIVER_BYTES`` sits below the measured speed crossover and
     below the corpora whose candidate pairs overflow the default budget.
@@ -449,26 +486,40 @@ def _lsh_local(
     budget) the kernel's tracemalloc peak is 129 MiB while signing and
     202 MiB in the verify, which holds every candidate document's
     hashes at once."""
-    no = None, None
     src = df.select(id_col, text_col)
-    id_field = src.schema[id_col]
-    if not isinstance(id_field.dataType, IntegralType):
-        return no
-    mod = knobs["verify_sample_mod"]
-    if mod is not None and int(mod) < 1:
-        return no
+    if not isinstance(src.schema[id_col].dataType, IntegralType):
+        return None
+    if verify_sample_mod is not None and int(verify_sample_mod) < 1:
+        return None
     table = driver_local(
         src, payload=F.octet_length(text_col), max_bytes=_LSH_DRIVER_BYTES
     )
     if table is None:
-        return no
-    ids, texts = table.columns
-    if ids.null_count:
-        return no
-    key = ids.to_numpy()
-    if len(np.unique(key)) < len(key):
-        return no
-    spark = df.sparkSession
+        return None
+    ids = table.column(0)
+    if ids.null_count or len(np.unique(ids.to_numpy())) < len(ids):
+        return None
+    return table
+
+
+def _lsh_collected(
+    spark,
+    ids: pa.ChunkedArray,
+    texts: pa.ChunkedArray,
+    id_field: StructField,
+    *,
+    num_hashes: int,
+    seed: int,
+    **knobs,
+):
+    """The LSH stage on a collected corpus (``ids`` unique and non-null,
+    of ``id_field``'s type): ``(pairs, None)`` with ``pairs`` the
+    verified (row_a, row_b, |A∩B|, |A∪B|) of ``_lsh_pairs``, rows being
+    positions in ``texts``; ``(None, sigs)`` when the candidate pairs
+    exceed the driver budget, ``sigs`` being the driver's signatures as
+    the distributed plan's ``(_id, sig)`` frame.  The corpus is signed
+    with ``_minhash_batches`` and ``_lsh_pairs`` runs the rest of the
+    stage as numpy."""
     a, b = _hash_coeffs(num_hashes, seed)
     pos = pa.table({"_row": np.arange(len(texts)), "text": texts})
     signed = pa.Table.from_batches(
@@ -478,36 +529,21 @@ def _lsh_local(
     rows = signed.column(0).to_numpy()
     sig = signed.column(1).combine_chunks().flatten().to_numpy()
     pairs = _lsh_pairs(
-        texts, key, rows, sig.reshape(-1, num_hashes), driver_budget(spark), **knobs
+        texts, ids.to_numpy(), rows, sig.reshape(-1, num_hashes),
+        driver_budget(spark), **knobs
     )
-    if pairs is None:
-        # the distributed plan takes the signatures over instead of
-        # signing the corpus again
-        sigs = signed.set_column(0, "_id", ids.take(rows))
-        schema = StructType(
-            [
-                StructField("_id", id_field.dataType, id_field.nullable),
-                StructField("sig", ArrayType(LongType()), False),
-            ]
-        )
-        return None, spark.createDataFrame(sigs, schema)
-    ra, rb, inter, union = pairs
+    if pairs is not None:
+        return pairs, None
+    # the distributed plan takes the signatures over instead of signing
+    # the corpus again
+    sigs = signed.set_column(0, "_id", ids.take(rows))
     schema = StructType(
         [
-            StructField("id_a", id_field.dataType, id_field.nullable),
-            StructField("id_b", id_field.dataType, id_field.nullable),
-            StructField("_inter", LongType(), False),
-            StructField("_union", LongType(), False),
+            StructField("_id", id_field.dataType, id_field.nullable),
+            StructField("sig", ArrayType(LongType()), False),
         ]
     )
-    out = pa.table(
-        [ids.take(ra), ids.take(rb), pa.array(inter), pa.array(union)],
-        names=schema.names,
-    )
-    jaccard = F.col("_inter").cast("double") / F.col("_union")
-    return spark.createDataFrame(out, schema).select(
-        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
-    ), None
+    return None, spark.createDataFrame(sigs, schema)
 
 
 def _lsh_pairs(
@@ -817,6 +853,41 @@ def minhash_lsh_near_dup_pairs(
     )
     if local is not None:
         return local
+    return _lsh_distributed(
+        df,
+        id_col,
+        text_col,
+        sigs,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        seed=seed,
+        hash_fn=hash_fn,
+        max_bucket_size=max_bucket_size,
+        est_margin=est_margin,
+        verify_sample_mod=verify_sample_mod,
+    )
+
+
+def _lsh_distributed(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sigs: DataFrame | None,
+    *,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    seed: int,
+    hash_fn: str,
+    max_bucket_size: int | None,
+    est_margin: float | None,
+    verify_sample_mod: int | None,
+) -> DataFrame:
+    """``minhash_lsh_near_dup_pairs``' distributed plan; ``sigs`` is
+    tier (a)'s ``(_id, sig)`` hand-over, ``None`` to sign ``df`` here."""
     # The production path (any of the candidate-thinning knobs set —
     # the q576 recipe) is STAGED: signatures and the surviving pair
     # table are each materialized once, and shingle sets are built for

@@ -13,8 +13,14 @@ cumsum shuffle.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from graphmapreduce_spark.functions import text as T
 from graphmapreduce_spark.operators.packing import packed_layout
@@ -112,7 +118,20 @@ def dedup_corpus(
     cluster).  A document is kept iff ``id_col == canonical_id``;
     ``count(distinct canonical_id)`` is the deduped corpus size.
 
-    Stage shapes, in order:
+    Two tiers, as in ``graph/`` (``graph/iterate.py::driver_local``).
+    A corpus with integral, unique, non-null ids and no null text,
+    within the driver budget
+    (``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows, default
+    1M) and within 8 MiB of text, is collected once and all four stages
+    below run as one numpy pass on the driver (``_dedup_local``), with
+    the same rows and schema out; ``prefer`` and ``emit_index`` then
+    run on its local frames.  If the representatives' candidate pairs
+    outgrow the budget, their driver signatures are handed to the
+    distributed LSH plan.  Every other corpus (budget 0 included) runs
+    the Spark stages.
+
+    Stage shapes, in order (the Spark tier's shapes; tier (a) runs the
+    same steps as arrays):
       1. exact: group on md5(text) (16-byte key, never the text) →
          min-id representative; the doc→rep mapping rides the same
          hash key, so the widest shuffle of the whole recipe carries
@@ -125,10 +144,11 @@ def dedup_corpus(
          whose signature-estimated Jaccard is below
          threshold−margin before the shingle-set verify.  Both knobs
          are deterministic given the seed, hence oracle-replicable.
-         Representatives within the driver budget in rows and within
-         8 MiB of text (``operators/dedup.py::_lsh_local``) run this
-         whole step as one numpy pass on the driver, with the same
-         pairs out; larger ones run it as Spark stages.
+         On the Spark tier, representatives within the driver budget
+         in rows and within 8 MiB of text (``operators/dedup.py::
+         _lsh_local``) still run this whole step as one numpy pass on
+         the driver, with the same pairs out; larger ones run it as
+         Spark stages.
       3. cluster: connected components over the verified pair graph
          (`dedup_clusters`, i.e. ``graph/algorithms.py::
          connected_components``), labeled by the component's min id.
@@ -146,7 +166,162 @@ def dedup_corpus(
     `operators.dedup.save_near_dup_index` and feed later batches to
     `incremental_near_dup_pairs(corpus_index=...)`.
     """
+    from graphmapreduce_spark.operators.dedup import _knee_bands
+
+    if bands is None:
+        bands = _knee_bands(num_hashes, threshold)
+    lsh = dict(
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        seed=seed,
+        hash_fn=hash_fn,
+        max_bucket_size=max_bucket_size,
+        est_margin=est_margin,
+        verify_sample_mod=verify_sample_mod,
+    )
+    base, rep_docs, sigs = _dedup_local(
+        docs, id_col, text_col, emit_index, **lsh
+    )
+    if base is None:
+        base, rep_docs = _dedup_distributed(
+            docs, id_col, text_col, sigs, max_iter, lsh
+        )
+    if prefer is None:
+        mapping = base
+        return _with_index(
+            mapping, None, docs, rep_docs, id_col, text_col, threshold,
+            num_hashes, bands, shingle_n, seed, hash_fn,
+        ) if emit_index else mapping
+    # quality-preferred canonical: within each cluster keep the member
+    # with the highest ``prefer`` value (smallest id on ties — the q77
+    # canonical_docs convention), and point EVERY member at it.  One
+    # max-struct agg on the cluster key + one broadcast-back join —
+    # the cluster-best table is one row per cluster.
+    # type-agnostic tiebreak (string / uuid doc ids work): pass 1 takes
+    # the cluster-max quality, pass 2 the MIN id among members at that
+    # quality — arithmetic id negation would be NULL for non-numeric
+    # ids and silently degrade the documented smallest-id-on-ties
+    # convention.  Null/non-numeric quality folds to -inf so clusters
+    # whose members all lack a score still keep a canonical.
+    q = F.coalesce(
+        F.col(prefer).cast("double"), F.lit(float("-inf"))
+    ).alias("_q")
+    members = base.join(docs.select(id_col, prefer), id_col).select(
+        id_col, "canonical_id", q
+    )
+    best_q = members.groupBy("canonical_id").agg(F.max("_q").alias("_mq"))
+    best = (
+        members.join(best_q, "canonical_id")
+        .filter(F.col("_q") == F.col("_mq"))
+        .groupBy("canonical_id")
+        .agg(F.min(id_col).alias("_best_id"))
+    )
+    mapping = base.join(best, "canonical_id").select(
+        id_col, F.col("_best_id").alias("canonical_id")
+    )
+    if not emit_index:
+        return mapping
+    return _with_index(
+        mapping, prefer, docs, rep_docs, id_col, text_col, threshold,
+        num_hashes, bands, shingle_n, seed, hash_fn,
+    )
+
+
+def _dedup_local(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    emit_index: bool,
+    *,
+    num_hashes: int,
+    seed: int,
+    **knobs,
+) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None]:
+    """``dedup_corpus`` on tier (a): ``(base, rep_docs, None)``, the
+    mapping and (with ``emit_index``) the representatives' ``(id,
+    text)`` as local frames; ``(None, None, sigs)`` when the
+    representatives' candidate pairs outgrow the budget, ``sigs`` being
+    their signatures for the distributed LSH plan; ``(None, None,
+    None)`` for any other corpus.
+
+    The gate is the LSH stage's (``operators/dedup.py::
+    _driver_corpus``: integral, unique, non-null ids within the driver
+    budget and 8 MiB of text), and a null text sends the corpus to the
+    distributed recipe too.  One numpy pass then runs every stage on
+    the collected table: the min id per md5 digest of the UTF-8 text
+    (the distributed groupBy key), the LSH stage over those
+    representatives only (``_lsh_collected``), min-label WCC over the
+    verified pairs (``graph/algorithms.py::_min_label_roots``) and the
+    map-back doc → representative → its cluster's min id."""
+    from graphmapreduce_spark.graph.algorithms import _min_label_roots
     from graphmapreduce_spark.operators.dedup import (
+        _driver_corpus,
+        _lsh_collected,
+    )
+
+    no = None, None, None
+    table = _driver_corpus(docs, id_col, text_col, knobs["verify_sample_mod"])
+    if table is None or table.column(1).null_count:
+        return no
+    ids = table.column(0)
+    key = ids.to_numpy()
+    digest = np.frombuffer(
+        b"".join(
+            hashlib.md5(t).digest()
+            for t in pc.cast(table.column(1), pa.binary()).to_pylist()
+        ),
+        "V16",
+    )
+    # in id order, a digest's first row is its min id
+    by_id = np.argsort(key, kind="stable")
+    _, first, group = np.unique(
+        digest[by_id], return_index=True, return_inverse=True
+    )
+    rep = by_id[first]
+    rep_of = np.empty(len(key), dtype=np.int64)
+    rep_of[by_id] = group
+    reps = table.take(rep)
+    spark = docs.sparkSession
+    id_field = docs.schema[id_col]
+    pairs, sigs = _lsh_collected(
+        spark, reps.column(0), reps.column(1), id_field,
+        num_hashes=num_hashes, seed=seed, **knobs
+    )
+    if pairs is None:
+        return None, None, sigs
+    roots, _ = _min_label_roots(
+        key[rep], np.ones(len(rep), dtype=bool), pairs[0], pairs[1]
+    )
+    schema = StructType(
+        [id_field, StructField("canonical_id", LongType(), True)]
+    )
+    out = pa.table(
+        [ids.combine_chunks(), pa.array(key[rep[roots[rep_of]]], pa.int64())],
+        names=schema.names,
+    )
+    rep_docs = None
+    if emit_index:
+        rep_docs = spark.createDataFrame(
+            reps, StructType([id_field, docs.schema[text_col]])
+        )
+    return spark.createDataFrame(out, schema), rep_docs, None
+
+
+def _dedup_distributed(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    sigs: DataFrame | None,
+    max_iter: int,
+    lsh: dict,
+) -> tuple[DataFrame, DataFrame]:
+    """``dedup_corpus``' Spark recipe: (base mapping, representatives'
+    ``(id, text)``).  ``sigs`` are the representatives' signatures
+    signed by ``_dedup_local`` before it gave up, else ``None``."""
+    from graphmapreduce_spark.operators.dedup import (
+        _lsh_distributed,
         dedup_clusters,
         minhash_lsh_near_dup_pairs,
     )
@@ -188,20 +363,12 @@ def dedup_corpus(
         # shuffle map stages below it as jobs of their own
         .localCheckpoint(eager=False)
     )
-    pairs = minhash_lsh_near_dup_pairs(
-        rep_docs,
-        id_col,
-        text_col,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        seed=seed,
-        hash_fn=hash_fn,
-        max_bucket_size=max_bucket_size,
-        est_margin=est_margin,
-        verify_sample_mod=verify_sample_mod,
-    )
+    if sigs is None:
+        pairs = minhash_lsh_near_dup_pairs(rep_docs, id_col, text_col, **lsh)
+    else:
+        # tier (a) signed the representatives before their candidate
+        # pairs outgrew the budget: the distributed plan takes them over
+        pairs = _lsh_distributed(rep_docs, id_col, text_col, sigs, **lsh)
     id_type = docs.schema[id_col].dataType.simpleString()
     if id_type in ("bigint", "int", "smallint", "tinyint"):
         clusters = dedup_clusters(pairs, max_iter=max_iter)
@@ -263,45 +430,7 @@ def dedup_corpus(
             F.coalesce("cluster", "_rep").alias("canonical_id"),
         )
     )
-    if prefer is None:
-        mapping = base
-        return _with_index(
-            mapping, None, docs, rep_docs, id_col, text_col, threshold,
-            num_hashes, bands, shingle_n, seed, hash_fn,
-        ) if emit_index else mapping
-    # quality-preferred canonical: within each cluster keep the member
-    # with the highest ``prefer`` value (smallest id on ties — the q77
-    # canonical_docs convention), and point EVERY member at it.  One
-    # max-struct agg on the cluster key + one broadcast-back join —
-    # the cluster-best table is one row per cluster.
-    # type-agnostic tiebreak (string / uuid doc ids work): pass 1 takes
-    # the cluster-max quality, pass 2 the MIN id among members at that
-    # quality — arithmetic id negation would be NULL for non-numeric
-    # ids and silently degrade the documented smallest-id-on-ties
-    # convention.  Null/non-numeric quality folds to -inf so clusters
-    # whose members all lack a score still keep a canonical.
-    q = F.coalesce(
-        F.col(prefer).cast("double"), F.lit(float("-inf"))
-    ).alias("_q")
-    members = base.join(docs.select(id_col, prefer), id_col).select(
-        id_col, "canonical_id", q
-    )
-    best_q = members.groupBy("canonical_id").agg(F.max("_q").alias("_mq"))
-    best = (
-        members.join(best_q, "canonical_id")
-        .filter(F.col("_q") == F.col("_mq"))
-        .groupBy("canonical_id")
-        .agg(F.min(id_col).alias("_best_id"))
-    )
-    mapping = base.join(best, "canonical_id").select(
-        id_col, F.col("_best_id").alias("canonical_id")
-    )
-    if not emit_index:
-        return mapping
-    return _with_index(
-        mapping, prefer, docs, rep_docs, id_col, text_col, threshold,
-        num_hashes, bands, shingle_n, seed, hash_fn,
-    )
+    return base, rep_docs
 
 
 def _with_index(

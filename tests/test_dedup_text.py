@@ -877,31 +877,32 @@ def test_sampled_verify_passes_short_docs_through(spark):
     assert all((2 * i, 2 * i + 1) in p for i in range(12))
 
 
-def test_dedup_corpus_prefer_with_string_ids(spark):
+def test_dedup_corpus_prefer_with_string_ids(spark, graph_tiers):
     """ADVICE r05: the prefer= tiebreak negated the id arithmetically,
     which is NULL for string ids — the quality-preferred canonical must
     work (highest quality, smallest id on ties) for non-numeric ids."""
-    from graphmapreduce_spark.pipeline import dedup_corpus
+    for _ in graph_tiers():
+        from graphmapreduce_spark.pipeline import dedup_corpus
 
-    base = "the quick brown fox jumps over the lazy dog " * 6
-    rows = [
-        ("doc-a", base, 0.1),
-        ("doc-b", base, 0.9),          # highest quality in cluster
-        ("doc-c", base + "TAIL", 0.9), # ties doc-b, larger id loses
-        ("doc-z", "unrelated corpus about catalyst plans " * 6, 0.5),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, text string, q double")
-    out = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_corpus(
-            docs, "doc_id", "text", threshold=0.5, num_hashes=32,
-            prefer="q",
-        ).collect()
-    }
-    assert out == {
-        "doc-a": "doc-b", "doc-b": "doc-b", "doc-c": "doc-b",
-        "doc-z": "doc-z",
-    }
+        base = "the quick brown fox jumps over the lazy dog " * 6
+        rows = [
+            ("doc-a", base, 0.1),
+            ("doc-b", base, 0.9),          # highest quality in cluster
+            ("doc-c", base + "TAIL", 0.9), # ties doc-b, larger id loses
+            ("doc-z", "unrelated corpus about catalyst plans " * 6, 0.5),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id string, text string, q double")
+        out = {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup_corpus(
+                docs, "doc_id", "text", threshold=0.5, num_hashes=32,
+                prefer="q",
+            ).collect()
+        }
+        assert out == {
+            "doc-a": "doc-b", "doc-b": "doc-b", "doc-c": "doc-b",
+            "doc-z": "doc-z",
+        }
 
 
 def test_dedup_corpus_spreads_representatives_once(
@@ -947,52 +948,53 @@ def test_dedup_corpus_spreads_representatives_once(
         assert plan.count(spread) == 1, (name, plan)
 
 
-def test_dedup_corpus_emit_index_roundtrip(spark, tmp_path):
+def test_dedup_corpus_emit_index_roundtrip(spark, tmp_path, graph_tiers):
     """dedup_corpus(emit_index=True): the byproduct index covers
     exactly the kept canonicals, parquet round-trips through
     save/load_near_dup_index, and screening a batch against it equals
     screening against the kept documents directly."""
-    from graphmapreduce_spark.pipeline import dedup_corpus
+    for _ in graph_tiers():
+        from graphmapreduce_spark.pipeline import dedup_corpus
 
-    base = "the quick brown fox jumps over the lazy dog " * 6
-    other = "completely different content about spark physical plans " * 6
-    corpus = spark.createDataFrame(
-        [(1, base), (2, base), (3, base + " EXTRA TAIL"), (4, other)],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, base + "!"), (101, "unrelated batch noise " * 10)],
-        "doc_id long, text string",
-    )
-    kw = dict(threshold=0.5, num_hashes=32, shingle_n=5, hash_fn="md5")
-    mapping, idx = dedup_corpus(corpus, "doc_id", "text",
-                                emit_index=True, **kw)
-    kept = {r["canonical_id"] for r in mapping.collect()}
-    assert kept == {1, 4}
-    assert {r["corpus_id"] for r in idx["shingles"].collect()} == kept
-    assert {r["corpus_id"] for r in idx["bands"].collect()} <= kept
-    p = str(tmp_path / "idx")
-    D.save_near_dup_index(idx, p)
-    loaded = D.load_near_dup_index(spark, p)
-    assert loaded["num_hashes"] == 32 and loaded["hash_fn"] == "md5"
-    via_index = {
-        (r["batch_id"], r["corpus_id"]): r["jaccard"]
-        for r in D.incremental_near_dup_pairs(
-            None, batch, "doc_id", "text", threshold=0.5,
-            corpus_index=loaded,
-        ).collect()
-    }
-    kept_docs = corpus.filter(corpus.doc_id.isin(*kept))
-    direct = {
-        (r["batch_id"], r["corpus_id"]): r["jaccard"]
-        for r in D.incremental_near_dup_pairs(
-            kept_docs, batch, "doc_id", "text", threshold=0.5, **{
-                k: v for k, v in kw.items() if k != "threshold"}
-        ).collect()
-    }
-    assert via_index == direct
-    assert (100, 1) in via_index  # the batch near-dup is caught
-    assert all(bid != 101 for bid, _ in via_index)
+        base = "the quick brown fox jumps over the lazy dog " * 6
+        other = "completely different content about spark physical plans " * 6
+        corpus = spark.createDataFrame(
+            [(1, base), (2, base), (3, base + " EXTRA TAIL"), (4, other)],
+            "doc_id long, text string",
+        )
+        batch = spark.createDataFrame(
+            [(100, base + "!"), (101, "unrelated batch noise " * 10)],
+            "doc_id long, text string",
+        )
+        kw = dict(threshold=0.5, num_hashes=32, shingle_n=5, hash_fn="md5")
+        mapping, idx = dedup_corpus(corpus, "doc_id", "text",
+                                    emit_index=True, **kw)
+        kept = {r["canonical_id"] for r in mapping.collect()}
+        assert kept == {1, 4}
+        assert {r["corpus_id"] for r in idx["shingles"].collect()} == kept
+        assert {r["corpus_id"] for r in idx["bands"].collect()} <= kept
+        p = str(tmp_path / "idx")
+        D.save_near_dup_index(idx, p)
+        loaded = D.load_near_dup_index(spark, p)
+        assert loaded["num_hashes"] == 32 and loaded["hash_fn"] == "md5"
+        via_index = {
+            (r["batch_id"], r["corpus_id"]): r["jaccard"]
+            for r in D.incremental_near_dup_pairs(
+                None, batch, "doc_id", "text", threshold=0.5,
+                corpus_index=loaded,
+            ).collect()
+        }
+        kept_docs = corpus.filter(corpus.doc_id.isin(*kept))
+        direct = {
+            (r["batch_id"], r["corpus_id"]): r["jaccard"]
+            for r in D.incremental_near_dup_pairs(
+                kept_docs, batch, "doc_id", "text", threshold=0.5, **{
+                    k: v for k, v in kw.items() if k != "threshold"}
+            ).collect()
+        }
+        assert via_index == direct
+        assert (100, 1) in via_index  # the batch near-dup is caught
+        assert all(bid != 101 for bid, _ in via_index)
 
 
 def test_lsh_bucket_cap_plan_has_no_window(spark):
