@@ -860,9 +860,9 @@ def strongly_connected_components(
 
 # ---------------------------------------------------------------------------
 # Triangle count — ref algorithms.h:97-180.  Canonical join formulation:
-# orient edges a<b, count closed wedges.  Counts each triangle a<b<c once
-# (the semantics the reference achieves via its exactly-2-lists reduce and
-# common-neighbor scan c>b, algorithms.h:138-155).
+# orient edges a<b, intersect the degree-oriented adjacency lists.  Counts
+# each triangle a<b<c once (the semantics the reference achieves via its
+# exactly-2-lists reduce and common-neighbor scan c>b, algorithms.h:138-155).
 # ---------------------------------------------------------------------------
 def _directed_canonical(graph: PropertyGraph) -> DataFrame:
     """Distinct undirected edges oriented small→large, self-loops dropped."""
@@ -872,13 +872,30 @@ def _directed_canonical(graph: PropertyGraph) -> DataFrame:
     return e.filter(F.col("a") < F.col("b")).distinct()
 
 
+def _adjacency(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(nbrs, deg) of a canonical edge set (``_directed_canonical``):
+    ``nbrs`` = (id, nbr), every edge taken both ways — the simple
+    undirected adjacency — and ``deg`` = (id, deg), its degree table.
+    Both directions come from one generator over ``und``, so ``nbrs``
+    keeps ``und``'s partitions (a union would double them, and the
+    matching and MIS loops checkpoint it)."""
+    nbrs = und.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a").alias("id"), F.col("b").alias("nbr")),
+                F.struct(F.col("b").alias("id"), F.col("a").alias("nbr")),
+            )
+        )
+    )
+    return nbrs, nbrs.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+
+
 def _degree_oriented(edges: DataFrame) -> DataFrame:
-    """(u, v, dv) — each distinct undirected edge of canonical ``(a, b)``
+    """(u, v) — each distinct undirected edge of canonical ``(a, b)``
     input oriented LOW-degree → HIGH-degree endpoint ((deg, id) lexical
-    tiebreak), carrying ``dv`` = the high endpoint's degree so joins can
-    compare the (deg, id) order without a global vertex rank (a
-    row_number over one unpartitioned window would single-thread at
-    scale; carrying the degree column costs 8 bytes/edge instead).
+    tiebreak), compared through two degree joins rather than a global
+    vertex rank (a row_number over one unpartitioned window would
+    single-thread at scale).
 
     This is the standard skew-killer for wedge enumeration: every
     vertex's OUT-degree under this orientation is O(sqrt(m)), so a
@@ -886,12 +903,7 @@ def _degree_oriented(edges: DataFrame) -> DataFrame:
     10¹² — the same concern the reference caps with MAX_NEIGHBORSIZE
     (``gmr.h:30``), solved by orientation instead of truncation.
     """
-    deg = (
-        edges.select(F.col("a").alias("id"))
-        .unionAll(edges.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    _, deg = _adjacency(edges)
     ed = edges.join(
         deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), "a"
     ).join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), "b")
@@ -901,39 +913,6 @@ def _degree_oriented(edges: DataFrame) -> DataFrame:
     return ed.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    )
-
-
-def _enumerate_triangles(edges: DataFrame) -> DataFrame:
-    """(a, b, c) with a < b < c (ids) — every triangle of the canonical
-    distinct edge set exactly once, enumerated on the degree-ordered
-    orientation (`_degree_oriented`): wedges pair the out-edges of the
-    LOWEST-degree corner (bounded O(sqrt m) per vertex), the closing
-    edge lookup is a plain equi-join.  For a triangle x ≺ y ≺ z in
-    (deg, id) order the only wedge is (x→y, x→z), closed by y→z, so no
-    dedup pass is needed; the output is re-canonicalized to id order so
-    downstream per-edge/per-vertex credit logic is orientation-free."""
-    # materialize the oriented table once: it is scanned THREE ways
-    # (both wedge sides + the closing-edge lookup), and each alias would
-    # otherwise re-run the degree agg + two degree joins from the edge
-    # set.  It is exactly as large as the (already materialized) edge
-    # input — 3 longs/row — so the checkpoint costs one narrow pass.
-    o = _degree_oriented(edges).localCheckpoint(eager=True)
-    w1, w2 = o.alias("w1"), o.alias("w2")
-    wedge_order = (F.col("w1.dv") < F.col("w2.dv")) | (
-        (F.col("w1.dv") == F.col("w2.dv")) & (F.col("w1.v") < F.col("w2.v"))
-    )
-    closed = (
-        w1.join(w2, (F.col("w1.u") == F.col("w2.u")) & wedge_order)
-        .join(
-            o.alias("w3"),
-            (F.col("w3.u") == F.col("w1.v")) & (F.col("w3.v") == F.col("w2.v")),
-        )
-    )
-    t = F.array_sort(F.array("w1.u", "w1.v", "w2.v"))
-    return closed.select(
-        t[0].alias("a"), t[1].alias("b"), t[2].alias("c")
     )
 
 
@@ -944,16 +923,16 @@ def _oriented_intersections(edges: DataFrame) -> DataFrame:
     (u, v), so every triangle of the canonical edge set appears in
     exactly one row's array.
 
-    This is the adjacency-intersection ("compact forward") counting
-    shape: compared to the wedge self-join (`_enumerate_triangles`) it
+    This is the adjacency-intersection ("compact forward") shape and
+    the one triangle enumerator: counting (`triangle_count`,
+    `triangles_per_vertex`) sums the arrays, and k-truss support
+    (`_triangle_support`) explodes them into (a, b, c) tuples.  It
     shuffles the m adjacency-list entries once instead of
     materializing Σ deg_out² wedge rows — on dense graphs the wedge
     table is orders of magnitude larger than the edge set (sf0.1's
     Z₅₀₀ graph: 20.3M wedges from 124k edges).  Out-degrees stay
     O(sqrt m) under the orientation, so no array exceeds ~sqrt(m)
-    entries and the per-row intersection is hub-safe.  Use the wedge
-    join only where the (a, b, c) triangle *tuples* are needed
-    (k-truss edge support)."""
+    entries and the per-row intersection is hub-safe."""
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # repartition BEFORE the checkpoint: a tiny edge table otherwise
     # checkpoints into one block and the per-row intersections run
@@ -962,7 +941,6 @@ def _oriented_intersections(edges: DataFrame) -> DataFrame:
     # exchange left is the v-side adjacency attach.
     o = (
         _degree_oriented(edges)
-        .select("u", "v")
         .repartition(n_part, "u")
         .localCheckpoint(eager=True)
     )
@@ -1796,7 +1774,12 @@ def _triangle_support(edges: DataFrame) -> DataFrame:
     """(a, b, support) for every canonical edge: the number of
     triangles of ``edges`` it closes (each triangle credits its three
     edges), eagerly checkpointed."""
-    tri = _enumerate_triangles(edges)
+    t = F.array_sort(F.array("u", "v", "c"))
+    tri = (
+        _oriented_intersections(edges)
+        .select("u", "v", F.explode("cs").alias("c"))
+        .select(t[0].alias("a"), t[1].alias("b"), t[2].alias("c"))
+    )
     support = (
         tri.select("a", "b")
         .unionAll(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
@@ -1813,28 +1796,22 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 50) -> DataFrame:
     """(a, b, support) — the canonical (a<b) edges of the k-truss with
     their triangle support inside the truss.
 
-    Triangles are enumerated once per recount on the degree-ordered
-    orientation (`_enumerate_triangles` — wedges pair the out-edges of
-    each triangle's lowest-degree corner, bounded O(sqrt m) per vertex,
-    so power-law hubs can't go quadratic; output re-canonicalized to
-    a<b<c ids), then each triangle credits its three edges; support is
-    one map-side-combinable count agg.  Rounds are bounded by the truss
+    Triangles are enumerated once per recount by the degree-oriented
+    adjacency intersection (`_oriented_intersections` — each triangle
+    once, in the array of its lowest-degree corner pair, out-degrees
+    bounded O(sqrt m) so power-law hubs can't go quadratic; exploded
+    and re-canonicalized to a<b<c ids by `_triangle_support`), then
+    each triangle credits its three edges; support is one
+    map-side-combinable count agg.  Rounds are bounded by the truss
     peeling depth — typically a handful on real graphs, since each
     round removes every under-supported edge at once.
     """
     if k < 2:
         raise ValueError("k-truss requires k >= 2")
     need = k - 2
-    edges = (
-        graph.edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # full triangle enumeration exactly ONCE (the expensive wedge join);
-    # every later round only touches triangles adjacent to removals
+    edges = _directed_canonical(graph).localCheckpoint(eager=True)
+    # full triangle enumeration exactly ONCE; every later round only
+    # touches triangles adjacent to removals
     scored = _triangle_support(edges)
     n_edges = scored.count()
     rounds = Rounds(scored.sparkSession, "ktruss")
@@ -1863,10 +1840,7 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 50) -> DataFrame:
         # on the triangle id so a triangle losing 2-3 edges at once
         # still decrements its surviving edges exactly once, then
         # subtract.  Cost O(removed x degree), not a full recount.
-        cur = scored.select("a", "b")
-        nbrs = cur.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
-            cur.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-        )
+        nbrs, _ = _adjacency(scored.select("a", "b"))
         na = nbrs.select(F.col("id").alias("a"), F.col("nbr").alias("w"))
         nb = nbrs.select(F.col("id").alias("b"), F.col("nbr").alias("w"))
         tri_r = (
@@ -1957,12 +1931,8 @@ def maximal_matching(
     the chain cliff; one O(1) driver emptiness probe.  Raises if
     ``max_iter`` rounds don't drain the edge set — a silently partial
     matching is not maximal."""
-    edges = (
-        _both_ways(graph.edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nbrs, _ = _adjacency(_directed_canonical(graph))
+    edges = nbrs.toDF("src", "dst").localCheckpoint(eager=True)
     matched_parts = []
     rounds = Rounds(edges.sparkSession, "matching")
     for rnd in range(max_iter):
@@ -2030,12 +2000,8 @@ def maximal_independent_set(graph: PropertyGraph, max_iter: int = 60) -> DataFra
     """
     from graphmapreduce_spark.functions.text import md5_hash60
 
-    edges = (
-        _both_ways(graph.edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nbrs, _ = _adjacency(_directed_canonical(graph))
+    edges = nbrs.toDF("src", "dst").localCheckpoint(eager=True)
     active = graph.vertices.select(
         "id", md5_hash60(F.concat(F.col("id").cast("string"), F.lit(":mis"))).alias("pri")
     ).localCheckpoint(eager=True)
@@ -2123,26 +2089,19 @@ def deterministic_walks(
 def clustering_coefficient(graph: PropertyGraph) -> DataFrame:
     """(id, degree, triangles, cc) for every vertex.
 
-    Scale shape: triangles come from the canonical-orientation wedge
-    join (`triangles_per_vertex`); degrees from one distinct-neighbor
-    agg over the symmetrized edge set; a final key join stitches them.
-    No driver loop, no UDF — all whole-stage-codegen expressions."""
-    sym = (
-        _directed_canonical(graph)
-        .select(F.col("a").alias("id"), F.col("b").alias("nbr"))
-        .unionByName(
-            _directed_canonical(graph).select(
-                F.col("b").alias("id"), F.col("a").alias("nbr")
-            )
-        )
-    )
-    deg = sym.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
+    Scale shape: triangles come from the degree-oriented adjacency
+    intersection (`triangles_per_vertex` over
+    `_oriented_intersections`); degrees from the simple undirected
+    adjacency's degree table (`_adjacency`); a final key join stitches
+    them.  No driver loop, no UDF — all whole-stage-codegen
+    expressions."""
+    _, deg = _adjacency(_directed_canonical(graph))
     tri = triangles_per_vertex(graph)
     return (
         tri.join(deg, "id", "left")
         .select(
             "id",
-            F.coalesce("degree", F.lit(0)).alias("degree"),
+            F.coalesce("deg", F.lit(0)).alias("degree"),
             "triangles",
         )
         .select(
@@ -2160,9 +2119,57 @@ def clustering_coefficient(graph: PropertyGraph) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Vertex-pair Jaccard similarity (common-neighbor overlap) — the link-
-# prediction / entity-resolution primitive.  Wedge-join formulation.
+# Common-neighbour pairs — the link-prediction / entity-resolution
+# primitive behind vertex Jaccard, Adamic-Adar and bipartite projection.
+# Inverted-index formulation.
 # ---------------------------------------------------------------------------
+def _common_neighbours(
+    inc: DataFrame,
+    max_degree: int | None = None,
+    min_common: int = 1,
+    weighted: bool = False,
+) -> DataFrame:
+    """(id_a, id_b, common) for the leaf pairs id_a < id_b of a distinct
+    incidence table ``inc`` = (c, leaf) that share at least
+    ``min_common`` centers c, ``common`` counting the shared centers;
+    ``weighted`` adds ``score`` = Σ 1/ln(deg c) over them (Adamic-Adar),
+    deg c being the center's number of leaves.
+
+    Pairs are generated ONLY through shared centers (a self-join on the
+    center, the same inverted-index blocking as
+    `ngram_jaccard_pairs`), never an all-pairs cross, so the cost is
+    Σ_c deg(c)².  A hub center of degree 10⁶ alone would make 10¹²
+    pairs; ``max_degree`` drops the centers above it from pair
+    generation.  The center degree is a window over the join key, so it
+    rides the self-join's hash partitioning; it is taken only when the
+    cap or the score needs it (uncapped, an unweighted call pays no sort
+    for it).  A center in a pair has at least two leaves, so the score
+    never divides by ln 1 = 0."""
+    if weighted or max_degree is not None:
+        inc = inc.withColumn(
+            "_deg", F.count(F.lit(1)).over(Window.partitionBy("c"))
+        )
+    if max_degree is not None:
+        inc = inc.filter(F.col("_deg") <= max_degree)
+    aggs = [F.count(F.lit(1)).alias("common")]
+    if weighted:
+        w = F.lit(1.0) / F.log(F.col("l._deg").cast("double"))
+        aggs.append(F.sum(w).alias("score"))
+    l, r = inc.alias("l"), inc.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.c") == F.col("r.c"))
+            & (F.col("l.leaf") < F.col("r.leaf")),
+        )
+        .groupBy(
+            F.col("l.leaf").alias("id_a"), F.col("r.leaf").alias("id_b")
+        )
+        .agg(*aggs)
+        .filter(F.col("common") >= min_common)
+    )
+
+
 def vertex_jaccard(
     graph: PropertyGraph,
     min_common: int = 1,
@@ -2172,38 +2179,12 @@ def vertex_jaccard(
     ``min_common`` neighbors, id_a < id_b, over the undirected simple
     graph.  jaccard = |N(a)∩N(b)| / |N(a)∪N(b)|.
 
-    Scale shape: pairs are generated ONLY through shared neighbors
-    (wedge join on the center vertex), never an all-pairs cross — the
-    same inverted-index blocking as `ngram_jaccard_pairs`.  A hub of
-    degree d fans out O(d²) wedges; ``max_degree`` drops hub centers
-    from pair GENERATION (their edges still count toward degrees), the
-    standard approximation for power-law graphs."""
-    und = _directed_canonical(graph)
-    sym = und.select(
-        F.col("a").alias("id"), F.col("b").alias("nbr")
-    ).unionByName(
-        und.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
-    deg = sym.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    centers = sym.select(F.col("nbr").alias("c"), F.col("id").alias("leaf"))
-    if max_degree is not None:
-        ok = deg.filter(F.col("deg") <= max_degree).select(
-            F.col("id").alias("c")
-        )
-        centers = centers.join(ok, "c", "left_semi")
-    l, r = centers.alias("l"), centers.alias("r")
-    common = (
-        l.join(
-            r,
-            (F.col("l.c") == F.col("r.c"))
-            & (F.col("l.leaf") < F.col("r.leaf")),
-        )
-        .groupBy(
-            F.col("l.leaf").alias("id_a"), F.col("r.leaf").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-        .filter(F.col("common") >= min_common)
-    )
+    Pairs come from `_common_neighbours` over the simple undirected
+    adjacency; ``max_degree`` drops hub centers from pair GENERATION
+    (their edges still count toward degrees), the standard
+    approximation for power-law graphs."""
+    nbrs, deg = _adjacency(_directed_canonical(graph))
+    common = _common_neighbours(nbrs.toDF("c", "leaf"), max_degree, min_common)
     da = deg.select(F.col("id").alias("id_a"), F.col("deg").alias("_da"))
     db = deg.select(F.col("id").alias("id_b"), F.col("deg").alias("_db"))
     return (
@@ -2282,50 +2263,16 @@ def adamic_adar(
     id_b and ≥ ``min_common`` shared neighbors; already-connected pairs
     are removed (that is the link-prediction contract).
 
-    Same wedge-join blocking as `vertex_jaccard`: pairs are generated
-    only through shared neighbors, the center's 1/ln(deg) weight rides
-    the wedge row (one broadcast join onto the centers table, summed in
-    the same agg that counts the pair), and the adjacency exclusion is
-    a left_anti against the canonical edge set.  ``max_degree`` drops
+    Same pair generation as `vertex_jaccard` (`_common_neighbours`,
+    whose weighted score is this measure), and the adjacency exclusion
+    is a left_anti against the canonical edge set.  ``max_degree`` drops
     hub centers from pair generation (their edges still count toward
     degrees) — degree-1 centers contribute nothing (ln 1 = 0 would
     divide by zero) and are excluded by definition of the measure."""
     und = _directed_canonical(graph)
-    sym = und.select(
-        F.col("a").alias("id"), F.col("b").alias("nbr")
-    ).unionByName(
-        und.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
-    deg = sym.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    centers = sym.select(F.col("nbr").alias("c"), F.col("id").alias("leaf"))
-    cw = deg.filter(F.col("deg") >= 2).select(
-        F.col("id").alias("c"),
-        (F.lit(1.0) / F.log(F.col("deg").cast("double"))).alias("w"),
-    )
-    if max_degree is not None:
-        cw = cw.join(
-            deg.filter(F.col("deg") <= max_degree).select(
-                F.col("id").alias("c")
-            ),
-            "c",
-            "left_semi",
-        )
-    centers = centers.join(cw, "c")
-    l, r = centers.alias("l"), centers.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.c") == F.col("r.c"))
-            & (F.col("l.leaf") < F.col("r.leaf")),
-        )
-        .groupBy(
-            F.col("l.leaf").alias("id_a"), F.col("r.leaf").alias("id_b")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.sum(F.col("l.w")).alias("score"),
-        )
-        .filter(F.col("common") >= min_common)
+    nbrs, _ = _adjacency(und)
+    pairs = _common_neighbours(
+        nbrs.toDF("c", "leaf"), max_degree, min_common, weighted=True
     )
     adj = und.select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
     return pairs.join(adj, ["id_a", "id_b"], "left_anti").select(
@@ -2350,18 +2297,12 @@ def degree_assortativity(graph: PropertyGraph) -> DataFrame:
     (every endpoint degree equal); this returns NULL there, matching
     SQL ``corr`` semantics (assortativity is undefined on regular
     graphs)."""
-    und = _directed_canonical(graph)
-    sym = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    da = deg.select(F.col("id").alias("a"), F.col("deg").alias("_da"))
-    db = deg.select(F.col("id").alias("b"), F.col("deg").alias("_db"))
+    nbrs, deg = _adjacency(_directed_canonical(graph))
+    da = deg.select("id", F.col("deg").alias("_da"))
+    db = deg.select(F.col("id").alias("nbr"), F.col("deg").alias("_db"))
     return (
-        sym.join(da, "a")
-        .join(db, "b")
+        nbrs.join(da, "id")
+        .join(db, "nbr")
         .agg(
             F.try_divide(
                 F.covar_samp("_da", "_db"),
@@ -2395,11 +2336,10 @@ def modularity(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
         .groupBy(F.col("_ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("e_c"))
     )
-    sym = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    nbrs, _ = _adjacency(und)
     degmass = (
-        sym.join(ca, "a")
+        nbrs.toDF("a", "b")
+        .join(ca, "a")
         .groupBy(F.col("_ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("a_c"))
     )
@@ -2541,42 +2481,62 @@ def multi_source_levels(
     max_depth: int = MAX_ITERATION,
 ) -> DataFrame:
     """(s, id, level): BFS level of ``id`` from each source ``s`` that
-    reaches it (level 0 = the source itself) — ALL sources advanced in
-    ONE tagged frontier, so the superstep count is the maximum depth,
-    not depth × |sources|.  The per-level state is (source, vertex)
-    pairs; with k sources that is ≤ k rows per vertex, and the
-    anti-join key (s, id) spreads every source's frontier across the
-    same hash partitioning — no per-source driver loop, |sources|×
-    fewer Spark jobs than sequential BFS runs."""
+    reaches it (level 0 = the source itself) — the level tables of the
+    tagged multi-source BFS (`_bfs_levels`, also Brandes' forward
+    phase), numbered by level.  ALL sources advance in ONE tagged
+    frontier, so the superstep count is the maximum depth, not depth ×
+    |sources|, and |sources|× fewer Spark jobs than sequential BFS
+    runs."""
+    with persisted(graph.edges):
+        levels = _bfs_levels(graph, sources, max_depth)
+    return reduce(
+        DataFrame.unionByName,
+        [
+            t.select("s", "id", F.lit(i).alias("level"))
+            for i, t in enumerate(levels)
+        ],
+    )
+
+
+def _bfs_levels(
+    graph: PropertyGraph, sources: Sequence[int], max_depth: int
+) -> list[DataFrame]:
+    """The level tables (s, id, sigma) of a tagged multi-source BFS over
+    ``graph.edges`` (which the caller keeps cached): table i holds the
+    (source, vertex) pairs first reached at depth i, with ``sigma`` the
+    number of shortest paths from s to the vertex; table 0 is the
+    sources.  State keyed (s, id) is ≤ |sources| rows per vertex, and
+    the anti-join key spreads every source's frontier across one hash
+    partitioning.  Each table is lazily checkpointed and materialized
+    by the emptiness probe (one job per level)."""
     edges = graph.edges.select("src", "dst")
     src_list = [int(s) for s in sources]
-    with persisted(edges, base=graph.edges):
-        frontier = (
-            graph.vertices.filter(F.col("id").isin(src_list))
-            .select(F.col("id").alias("s"), "id", F.lit(0).alias("level"))
-            .localCheckpoint(eager=True)
+    frontier = (
+        graph.vertices.filter(F.col("id").isin(src_list))
+        .select(F.col("id").alias("s"), "id", F.lit(1.0).alias("sigma"))
+        .localCheckpoint(eager=False)
+    )
+    level_tables = [frontier]
+    seen = frontier.select("s", "id")
+    for _ in range(max_depth):
+        # lazy checkpoint + count(): ONE job per level both materializes
+        # the level table (severing lineage) and answers the emptiness
+        # probe.  `seen` is a union of ≤ max_depth checkpointed leaves,
+        # already flat, so it is never re-checkpointed.
+        nxt = (
+            frontier.join(edges, frontier["id"] == edges["src"])
+            .select("s", F.col("dst").alias("id"), "sigma")
+            .join(seen, ["s", "id"], "left_anti")
+            .groupBy("s", "id")
+            .agg(F.sum("sigma").alias("sigma"))
+            .localCheckpoint(eager=False)
         )
-        out = [frontier]
-        seen = frontier.select("s", "id")
-        depth = 0
-        while depth < max_depth:
-            nxt = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("s", F.col("dst").alias("id"))
-                .distinct()
-                .join(seen, ["s", "id"], "left_anti")
-                .withColumn("level", F.lit(depth + 1))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            out.append(nxt)
-            seen = seen.unionByName(nxt.select("s", "id")).localCheckpoint(
-                eager=True
-            )
-            frontier = nxt
-            depth += 1
-    return reduce(DataFrame.unionByName, out)
+        if nxt.count() == 0:
+            break
+        level_tables.append(nxt)
+        seen = seen.unionByName(nxt.select("s", "id"))
+        frontier = nxt
+    return level_tables
 
 
 # ---------------------------------------------------------------------------
@@ -2597,12 +2557,13 @@ def betweenness_centrality(
     estimator at |sources|/|V| of the all-pairs cost; a fixed seed list
     is deterministic and oracle-checkable.
 
-    ALL sources advance in ONE tagged dataflow (state keyed (s, id), the
-    multi_source_levels trick), so both phases cost max-depth supersteps
-    total, not depth × |sources|.  The forward phase is a frontier BFS
-    whose messages carry σ (shortest-path counts) — one join + anti-join
-    + sum per level; the backward phase walks levels deepest-first, each
-    step one edges⋈next-level join + sum computing
+    ALL sources advance in ONE tagged dataflow (state keyed (s, id)), so
+    both phases cost max-depth supersteps total, not depth × |sources|.
+    The forward phase is the tagged BFS (`_bfs_levels`, shared with
+    `multi_source_levels`), whose messages carry σ (shortest-path
+    counts) — one join + anti-join + sum per level; the backward phase
+    walks levels deepest-first, each step one edges⋈next-level join +
+    sum computing
     δ(v) = Σ_{v→w, lvl(w)=lvl(v)+1} σ(v)/σ(w) · (1+δ(w)) per source tag.
     A source whose BFS exhausted earlier than the global depth simply
     has no rows at the deeper levels, so its own deepest level gets
@@ -2647,13 +2608,15 @@ def _brandes_sweep(
     max_depth: int,
     want: str = "vertex",
 ):
-    """Shared tagged multi-source Brandes core.  ``want='vertex'``
-    returns (id, betweenness) summing δ per non-source vertex;
-    ``want='edge'`` returns (src, dst, betweenness) summing the
-    per-edge dependency terms (the pre-aggregation rows of the same
-    backward sweep).  Returns None for an empty sweep.  The final agg
-    is materialized (eager checkpoint) BEFORE the edge cache drops, so
-    callers never re-execute the sweep."""
+    """Shared tagged multi-source Brandes core: the forward phase is
+    `_bfs_levels`' σ-carrying level tables, the backward sweep walks
+    them deepest-first.  ``want='vertex'`` returns (id, betweenness)
+    summing δ per non-source vertex; ``want='edge'`` returns (src, dst,
+    betweenness) summing the per-edge dependency terms (the
+    pre-aggregation rows of the same backward sweep).  Returns None
+    for an empty sweep.  The final agg is materialized (eager
+    checkpoint) BEFORE the edge cache drops, so callers never
+    re-execute the sweep."""
     if not sources:
         raise ValueError("the Brandes sweep needs at least one source")
     # persist graph.edges ITSELF, not a projection of it: the cache
@@ -2663,36 +2626,7 @@ def _brandes_sweep(
     # re-running the upstream scan + dedup.
     with persisted(graph.edges):
         edges = graph.edges.select("src", "dst")
-
-        src_list = [int(s) for s in sources]
-        frontier = (
-            graph.vertices.filter(F.col("id").isin(src_list))
-            .select(F.col("id").alias("s"), "id", F.lit(1.0).alias("sigma"))
-            .localCheckpoint(eager=False)
-        )
-        level_tables = [frontier]
-        seen = frontier.select("s", "id")
-        depth = 0
-        while depth < max_depth:
-            # lazy checkpoint + count(): ONE job per level both materializes
-            # the level table (severing lineage) and answers the emptiness
-            # probe — the eager-checkpoint + isEmpty pair cost two.  `seen`
-            # is a union of ≤ max_depth checkpointed leaves, already flat;
-            # re-checkpointing it per level was a third O(|seen|) job.
-            nxt = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("s", F.col("dst").alias("id"), "sigma")
-                .join(seen, ["s", "id"], "left_anti")
-                .groupBy("s", "id")
-                .agg(F.sum("sigma").alias("sigma"))
-                .localCheckpoint(eager=False)
-            )
-            if nxt.count() == 0:
-                break
-            level_tables.append(nxt)
-            seen = seen.unionByName(nxt.select("s", "id"))
-            frontier = nxt
-            depth += 1
+        level_tables = _bfs_levels(graph, sources, max_depth)
         # backward sweep: δ at each source's deepest level is 0 — those
         # vertices still belong in the output (reached; score 0)
         deltas = level_tables[-1].select(
@@ -2779,42 +2713,28 @@ def bipartite_project(
     """(a, b, common): pairs of left-side vertices sharing at least one
     right-side neighbor, weighted by the shared count, a < b.
 
-    Inverted-index shape, NOT an all-pairs join: the self-join key is
-    the right-side vertex, so cost is Σ_p df(p)² over right vertices.
+    `_common_neighbours` with the right-side vertices as centers, so
+    cost is Σ_p df(p)² over right vertices, NOT an all-pairs join.
     That sum is degree-distribution-driven — a single hub right-vertex
     with df=10⁶ alone generates 10¹² pairs — so ``max_df`` caps it by
-    dropping right vertices above the threshold (one partial-agg count
-    + broadcast semi-join), the same contract as the n-gram blocking
-    operators' document-frequency cap: hubs carry no pair signal
-    (everything co-occurs with everything through them) and their
-    removal is explicit, not silent.
+    dropping right vertices above the threshold, the same contract as
+    the n-gram blocking operators' document-frequency cap: hubs carry
+    no pair signal (everything co-occurs with everything through them)
+    and their removal is explicit, not silent.
     """
-    # partition by the join key FIRST, then dedup: equal (_l, _r) rows
-    # share _r, so the dedup is correct within partitions, and the df
-    # count agg, the semi-join, and the pair self-join below all reuse
-    # this one hash partitioning exchange-free (the _ps_graph trick)
-    e = (
+    # partition by the join key FIRST, then dedup: equal (c, leaf) rows
+    # share c, so the dedup is correct within partitions, and the df
+    # window and the pair self-join reuse this one hash partitioning
+    # exchange-free (the _ps_graph trick)
+    inc = (
         edges.select(
-            F.col(left_col).alias("_l"), F.col(right_col).alias("_r")
+            F.col(right_col).alias("c"), F.col(left_col).alias("leaf")
         )
-        .repartition("_r")
-        .dropDuplicates(["_l", "_r"])
+        .repartition("c")
+        .dropDuplicates(["c", "leaf"])
     )
-    if max_df is not None:
-        ok = (
-            e.groupBy("_r")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select("_r")
-        )
-        e = e.join(F.broadcast(ok), "_r", "left_semi")
-    a = e.select(F.col("_l").alias("a"), "_r")
-    b = e.select(F.col("_l").alias("b"), "_r")
-    return (
-        a.join(b, "_r")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
+    return _common_neighbours(inc, max_df).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b"), "common"
     )
 
 

@@ -116,19 +116,20 @@ def dedup_corpus(
     Returns (id_col, canonical_id): every input document mapped to the
     id of its surviving representative (the smallest id in its near-dup
     cluster).  A document is kept iff ``id_col == canonical_id``;
-    ``count(distinct canonical_id)`` is the deduped corpus size.
+    ``count(distinct canonical_id)`` is the deduped corpus size.  A
+    document whose text is null maps to its own id and enters neither
+    the exact nor the near-dup stage.
 
     Two tiers, as in ``graph/`` (``graph/iterate.py::driver_local``).
-    A corpus with integral, unique, non-null ids and no null text,
-    within the driver budget
-    (``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows, default
-    1M) and within 8 MiB of text, is collected once and all four stages
-    below run as one numpy pass on the driver (``_dedup_local``), with
-    the same rows and schema out; ``prefer`` and ``emit_index`` then
-    run on its local frames.  If the representatives' candidate pairs
-    outgrow the budget, their driver signatures are handed to the
-    distributed LSH plan.  Every other corpus (budget 0 included) runs
-    the Spark stages.
+    A corpus with integral, unique, non-null ids, within the driver
+    budget (``spark.graphmapreduce.clusterBroadcastMaxPairs`` rows,
+    default 1M) and within 8 MiB of text, is collected once and all
+    four stages below run as one numpy pass on the driver
+    (``_dedup_local``), with the same rows and schema out; ``prefer``
+    and ``emit_index`` then run on its local frames.  If the
+    representatives' candidate pairs outgrow the budget, their driver
+    signatures are handed to the distributed LSH plan.  Every other
+    corpus (budget 0 included) runs the Spark stages.
 
     Stage shapes, in order (the Spark tier's shapes; tier (a) runs the
     same steps as arrays):
@@ -248,40 +249,39 @@ def _dedup_local(
 
     The gate is the LSH stage's (``operators/dedup.py::
     _driver_corpus``: integral, unique, non-null ids within the driver
-    budget and 8 MiB of text), and a null text sends the corpus to the
-    distributed recipe too.  One numpy pass then runs every stage on
-    the collected table: the min id per md5 digest of the UTF-8 text
-    (the distributed groupBy key), the LSH stage over those
-    representatives only (``_lsh_collected``), min-label WCC over the
-    verified pairs (``graph/algorithms.py::_min_label_roots``) and the
-    map-back doc → representative → its cluster's min id."""
+    budget and 8 MiB of text).  One numpy pass then runs every stage on
+    the collected table's non-null texts: the min id per md5 digest of
+    the UTF-8 text (the distributed groupBy key), the LSH stage over
+    those representatives only (``_lsh_collected``), min-label WCC over
+    the verified pairs (``graph/algorithms.py::_min_label_roots``) and
+    the map-back doc → representative → its cluster's min id."""
     from graphmapreduce_spark.graph.algorithms import _min_label_roots
     from graphmapreduce_spark.operators.dedup import (
         _driver_corpus,
         _lsh_collected,
     )
 
-    no = None, None, None
     table = _driver_corpus(docs, id_col, text_col, knobs["verify_sample_mod"])
-    if table is None or table.column(1).null_count:
-        return no
+    if table is None:
+        return None, None, None
     ids = table.column(0)
     key = ids.to_numpy()
+    texts = table.column(1)
+    # a null text maps to itself and enters neither exact dedup nor LSH
+    has = np.flatnonzero(pc.is_valid(texts).to_numpy(zero_copy_only=False))
     digest = np.frombuffer(
         b"".join(
             hashlib.md5(t).digest()
-            for t in pc.cast(table.column(1), pa.binary()).to_pylist()
+            for t in pc.cast(texts.take(has), pa.binary()).to_pylist()
         ),
         "V16",
     )
     # in id order, a digest's first row is its min id
-    by_id = np.argsort(key, kind="stable")
+    by_id = np.argsort(key[has], kind="stable")
     _, first, group = np.unique(
         digest[by_id], return_index=True, return_inverse=True
     )
-    rep = by_id[first]
-    rep_of = np.empty(len(key), dtype=np.int64)
-    rep_of[by_id] = group
+    rep = has[by_id[first]]
     reps = table.take(rep)
     spark = docs.sparkSession
     id_field = docs.schema[id_col]
@@ -294,11 +294,13 @@ def _dedup_local(
     roots, _ = _min_label_roots(
         key[rep], np.ones(len(rep), dtype=bool), pairs[0], pairs[1]
     )
+    canon = key.astype(np.int64)
+    canon[has[by_id]] = key[rep[roots[group]]]
     schema = StructType(
         [id_field, StructField("canonical_id", LongType(), True)]
     )
     out = pa.table(
-        [ids.combine_chunks(), pa.array(key[rep[roots[rep_of]]], pa.int64())],
+        [ids.combine_chunks(), pa.array(canon, pa.int64())],
         names=schema.names,
     )
     rep_docs = None
@@ -327,12 +329,13 @@ def _dedup_distributed(
     )
 
     key = F.md5(F.col(text_col).cast("binary")).alias("_ck")
+    texts = docs.filter(F.col(text_col).isNotNull())
     # materialize the (content-hash → representative) table once: it is
     # scanned by the doc→rep mapping AND the representative semi-join,
     # and each would otherwise re-hash + re-shuffle the corpus.  The
     # table is (16-byte hash, id) — corpus-linear but payload-free.
     reps = (
-        docs.select(key, F.col(id_col))
+        texts.select(key, F.col(id_col))
         .groupBy("_ck")
         .agg(F.min(id_col).alias("_rep"))
         # lazy: the first downstream action (the LSH/cluster chain)
@@ -341,10 +344,11 @@ def _dedup_distributed(
         # also run the final stage here
         .localCheckpoint(eager=False)
     )
+    # a null text has a null key, joins nothing and maps to itself
     exact_map = (
         docs.select(F.col(id_col), key)
-        .join(reps, "_ck")
-        .select(id_col, "_rep")
+        .join(reps, "_ck", "left")
+        .select(id_col, F.coalesce("_rep", id_col).alias("_rep"))
     )
     # materialize once: the LSH stage scans representatives three ways
     # (signatures, sampled shingles, full shingles) — without the
@@ -354,7 +358,7 @@ def _dedup_distributed(
     # reports no partitioning, so a spread before it would be shuffled
     # again), and `_with_index` spreads what it reads.
     rep_docs = (
-        docs.join(
+        texts.join(
             reps.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
         )
         .select(id_col, text_col)

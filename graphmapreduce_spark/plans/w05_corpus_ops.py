@@ -2019,9 +2019,9 @@ def q123_incremental_agg(spark, sf_dir):
 )
 def q124_clustering_coefficient(spark, sf_dir):
     """Local clustering coefficient per vertex over the Z_500 lineitem
-    graph — `clustering_coefficient` composes the canonical-orientation
-    wedge join (triangles) with one distinct-neighbor degree agg; the
-    oracle replays both as plain SQL."""
+    graph — `clustering_coefficient` composes the degree-oriented
+    adjacency intersection (triangles) with one distinct-neighbor
+    degree agg; the oracle replays both as plain SQL."""
     from graphmapreduce_spark.graph.algorithms import clustering_coefficient
 
     g = _mod_graph(spark, sf_dir, 500)

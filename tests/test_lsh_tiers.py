@@ -190,7 +190,12 @@ def test_empty_unions_verify_as_no_pair(spark):
         }
         mapping = P.dedup_corpus(df, "doc_id", "text", threshold=0.5,
                                  num_hashes=32, shingle_n=5).collect()
-    assert {r["canonical_id"] for r in mapping} == {0}
+    # every row with a text joins 0's cluster; a null-text row maps to
+    # its own id, which is in that cluster for id 5 (the "ab" rows'
+    # representative) and no representative for id 6
+    assert sorted(tuple(r) for r in mapping) == (
+        [(i, 0) for i in range(6)] + [(5, 0), (5, 0), (6, 0), (6, 0), (6, 6)]
+    )
     unique = rows + [(5, bp), (6, None), (7, "ab"), (8, "ab")]
     df = spark.createDataFrame(unique, "doc_id long, text string")
     tier, _, got = _pairs(df)
@@ -310,15 +315,38 @@ def _recipe_falls_back(spark, monkeypatch, df):
         ([(1, "the same text in two rows"), (1, "another text of its own"),
           (2, "the same text in two rows")],
          "bigint", [(1, 1), (1, 1), (2, 1)]),
-        ([(1, "the same text in two rows"), (2, None),
-          (3, "the same text in two rows")],
-         "bigint", [(1, 1), (3, 1)]),
     ],
-    ids=["string_ids", "null_ids", "duplicate_ids", "null_texts"],
+    ids=["string_ids", "null_ids", "duplicate_ids"],
 )
 def test_recipe_falls_back(spark, monkeypatch, rows, schema, expected):
     df = spark.createDataFrame(rows, f"doc_id {schema}, text string")
     assert _recipe_falls_back(spark, monkeypatch, df) == expected
+
+
+def test_recipe_maps_null_texts_to_themselves(spark, monkeypatch):
+    """A document with a null text maps to its own id on both tiers, and
+    tier (a) takes such a corpus with one collect."""
+    df = spark.createDataFrame(
+        [(1, "the same text in two rows"), (2, None),
+         (3, "the same text in two rows")],
+        "doc_id bigint, text string",
+    )
+    collects = []
+    gate = D.driver_local
+
+    def counting(*args, **kwargs):
+        table = gate(*args, **kwargs)
+        collects.append(table is not None)
+        return table
+
+    monkeypatch.setattr(D, "driver_local", counting)
+    want = [(1, 1), (2, 2), (3, 1)]
+    assert _recipe(monkeypatch, df)[::2] == ("driver", want)
+    assert collects == [True]
+    collects.clear()
+    with _conf(spark, DRIVER_BUDGET_KEY, "0"):
+        assert _recipe(monkeypatch, df)[::2] == ("distributed", want)
+    assert not any(collects)
 
 
 def test_recipe_text_bytes_over_the_bound_fall_back(spark, monkeypatch):

@@ -318,3 +318,51 @@ def test_adamic_adar_matches_bruteforce(spark, edges):
     for k in want:
         assert got[k][0] == want[k][0], (k, sorted(edges))
         assert abs(got[k][1] - want[k][1]) < 1e-9, (k, sorted(edges))
+
+
+def _neighbours(edges):
+    """Each vertex's neighbour set in the simple undirected graph."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    return nbrs
+
+
+@given(edges=edge_sets)
+@SLOW
+def test_k_truss_matches_bruteforce_peel(spark, edges):
+    g = _graph(spark, edges)
+    for k in (3, 4):
+        und = {tuple(sorted(e)) for e in edges}
+        while True:
+            nbrs = _neighbours(und)
+            support = {(a, b): len(nbrs[a] & nbrs[b]) for a, b in und}
+            weak = {e for e, s in support.items() if s < k - 2}
+            if not weak:
+                break
+            und -= weak
+        got = {
+            (r["a"], r["b"]): r["support"] for r in alg.k_truss(g, k).collect()
+        }
+        assert got == support, (k, sorted(edges))
+
+
+@given(edges=edge_sets)
+@SLOW
+def test_vertex_jaccard_matches_bruteforce(spark, edges):
+    nbrs = _neighbours(edges)
+    want = {}
+    for a, b in itertools.combinations(sorted(nbrs), 2):
+        common = len(nbrs[a] & nbrs[b])
+        if common:
+            want[(a, b)] = (common, common / len(nbrs[a] | nbrs[b]))
+    g = _graph(spark, edges)
+    got = {
+        (r["id_a"], r["id_b"]): (r["common"], r["jaccard"])
+        for r in alg.vertex_jaccard(g).collect()
+    }
+    assert set(got) == set(want), (sorted(edges), got, want)
+    for k, (common, jaccard) in want.items():
+        assert got[k][0] == common, (k, sorted(edges))
+        assert abs(got[k][1] - jaccard) < 1e-12, (k, sorted(edges))
